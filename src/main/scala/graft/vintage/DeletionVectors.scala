@@ -141,6 +141,16 @@ object DeletionVectors {
 
   def hasDvs(files: Seq[AddFile]): Boolean = files.exists(_.hasDv)
 
+  /** Whether reads of `snap` must subtract deletion vectors. A SPILLED
+    * snapshot decides from the protocol instead of the file list (the
+    * per-file walk would materialize exactly what spilling avoids), so
+    * a DV-feature table conservatively answers true.
+    */
+  def mayHave(snap: Snapshot): Boolean = snap.spilled match {
+    case Some(_) => snap.protocol.readerFeatures.contains(Protocol.DeletionVectors)
+    case None => hasDvs(snap.files)
+  }
+
   /** Canonical file key used on BOTH join sides — the SQL mirror of
     * [[VintageTable.canonicalKey]]: local-FS URIs reduce to a plain
     * path (`file:///a`, `file:/a`, and authority-carrying

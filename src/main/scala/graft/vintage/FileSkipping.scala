@@ -3,6 +3,7 @@ package graft.vintage
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Stats-based file skipping: decide from `AddFile.stats` whether a
   * file can possibly contain a row matching a predicate. This is the
@@ -471,6 +472,19 @@ object FileSkipping {
     case DateType => Some(DateKind)
     case TimestampType => Some(TsKind)
     case TimestampNTZType => Some(NtzKind)
+    case _ => None
+  }
+
+  /** Stat string → Catalyst literal of column type `dt` (dates are
+    * stored as epoch days, timestamps as epoch micros); None for types
+    * the stats do not order or a string that does not parse.
+    */
+  private[vintage] def statLiteral(dt: DataType, s: String): Option[Literal] = dt match {
+    case StringType => Some(Literal(UTF8String.fromString(s), dt))
+    case DateType => s.toIntOption.map(Literal(_, dt))
+    case TimestampType | TimestampNTZType => s.toLongOption.map(Literal(_, dt))
+    case _: NumericType | BooleanType =>
+      Option(Cast(Literal(s), dt, None, EvalMode.TRY).eval()).map(Literal(_, dt))
     case _ => None
   }
 

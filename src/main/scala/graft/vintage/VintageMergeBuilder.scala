@@ -2,6 +2,7 @@ package graft.vintage
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.graftshim.ColumnExpr
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -19,8 +20,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Execution is two file-granular phases (SURVEY.md §3.2): a semi join
   * discovers the files containing matched rows; a full-outer join of
-  * only those files against the source produces the rewrite. Clause
-  * order is first-match-wins, as in Delta/SQL MERGE.
+  * only those files against the source produces the rewrite, written
+  * back key-clustered: as many files as were touched, ranged on the
+  * partition columns and the equi-join keys, so file stats stay narrow
+  * and a later small message touches few files. Clause order is
+  * first-match-wins, as in Delta/SQL MERGE.
   *
   * Schema evolution (README.md:327-388): when
   * `spark.vintage.schema.autoMerge.enabled` (the reference's
@@ -300,16 +304,19 @@ class VintageMergeBuilder private[vintage] (
         .as(RowTracking.MaterializedCol)
     val (rewritten, _) = IdentityColumns.fillNulls(
       withAct.select(allOutCols: _*), snap.properties)
-    // Small-file mitigation (reference README.md:394-397): with the
-    // flag on, the rewrite is coalesced to ~the number of touched input
-    // files instead of fanning out to shuffle.partitions output files.
-    val repartitionBeforeWrite =
-      spark.conf.getOption("spark.vintage.merge.repartitionBeforeWrite")
-        .orElse(spark.conf.getOption("spark.delta.merge.repartitionBeforeWrite"))
-        .exists(_.equalsIgnoreCase("true"))
+    // Key-clustered rewrite (see [[clustered]]): the next one-key
+    // message touches one narrow file, not everything this merge
+    // wrote. It also bounds the output file count by the touched
+    // inputs, the small-file mitigation of reference README.md:394-397,
+    // so its `repartitionBeforeWrite` flags are accepted and ignored.
+    // Skipped without equi-join keys, for insert-only merges, and on
+    // bucketed tables (writeFiles re-buckets every write).
     val toWrite =
-      if (repartitionBeforeWrite) rewritten.repartition(math.max(1, touched.size))
-      else rewritten
+      if (keyPairs.isEmpty || touched.isEmpty ||
+          Bucketing.spec(snap.properties).isDefined) rewritten
+      else clustered(rewritten, finalSchema,
+        snap.statFiles.filter(table.isIn(touched)),
+        snap.partitionColumns ++ keyPairs.map(_._1))
     val adds =
       if (touched.isEmpty && notMatchedClauses.isEmpty) Nil
       else VintageTable.writeFiles(spark, toWrite, table.path, dataChange = true,
@@ -342,6 +349,35 @@ class VintageMergeBuilder private[vintage] (
 
   private def aliased(df: DataFrame, a: Option[String]): DataFrame =
     a.fold(df)(df.as(_))
+
+  /** `df` in one partition per touched file, ranged on `cols` (the
+    * partition columns, then the join keys) with the touched files'
+    * log-stat minima as bounds: a row goes to partition (number of
+    * minima <= its key tuple) - 1, clamped. Key-contiguous touched
+    * files thus come back as the same number of key-disjoint files,
+    * with no sampling job. Without usable stats Spark's sampled range
+    * partitioning sets the bounds. Bounds shape only the layout.
+    */
+  private def clustered(df: DataFrame, schema: StructType,
+      touched: Seq[AddFile], cols: Seq[String]): DataFrame = {
+    val n = touched.size
+    val fields = cols.map(c => schema.fields.find(_.name.equalsIgnoreCase(c)).get).distinct
+    val minima = touched.map(f => fields.flatMap(fl => f.stats.get(fl.name)
+      .flatMap(_.min).flatMap(FileSkipping.statLiteral(fl.dataType, _))))
+    def colOf(name: String) = col(QuotingUtils.quoteIdentifier(name))
+    if (n <= 1) df.coalesce(1)
+    else if (minima.exists(_.size < fields.size))
+      df.repartitionByRange(n, fields.map(f => colOf(f.name)): _*)
+    else {
+      val key = struct(fields.map(f => colOf(f.name).as(f.name)): _*)
+      val atOrBelow = minima.map { m =>
+        val bound = struct(m.zip(fields).map { case (l, f) =>
+          ColumnExpr.column(l).as(f.name) }: _*)
+        when(key >= bound, 1).otherwise(0)
+      }.reduce(_ + _)
+      df.repartitionById(n, least(greatest(atOrBelow - 1, lit(0)), lit(n - 1)))
+    }
+  }
 }
 
 object VintageMergeBuilder {

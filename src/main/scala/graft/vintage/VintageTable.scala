@@ -5,7 +5,8 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.graftshim.ColumnExpr
+import org.apache.spark.sql.catalyst.util.QuotingUtils
+import org.apache.spark.sql.graftshim.{ColumnExpr, VintageRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -44,15 +45,33 @@ class VintageTable private (
   def snapshotAt(version: Long): Snapshot = VintageLog.replay(path, Some(version))
   def version: Long = VintageLog.latestVersion(path)
 
-  /** Current state as a DataFrame (README.md:136 `exrTable.toDF`). */
-  def toDF: DataFrame = dfForSnapshot(snapshot)
+  /** Current state as a DataFrame (README.md:136 `exrTable.toDF`), in
+    * the declared column order. A filter on it (the paper's confirm read
+    * `toDF.filter(CURRENCY = ...)`) opens only the files whose log stats
+    * may match.
+    */
+  def toDF: DataFrame = dfForRead(snapshot)
 
   /** State as of a past version (README.md:169 `versionAsOf`). */
-  def toDFAsOf(version: Long): DataFrame = dfForSnapshot(snapshotAt(version))
+  def toDFAsOf(version: Long): DataFrame = dfForRead(snapshotAt(version))
 
   /** State as of a timestamp (README.md:166,321 `timestampAsOf`). */
   def toDFAsOfTimestamp(ts: Long): DataFrame =
-    dfForSnapshot(snapshotAt(VintageLog.versionAtTimestamp(path, ts)))
+    dfForRead(snapshotAt(VintageLog.versionAtTimestamp(path, ts)))
+
+  /** The `format("vintage")` relation, which prunes files by stats at
+    * plan time, unless the snapshot may carry deletion vectors (those
+    * read through the DV anti-join plan). The relation puts partition
+    * columns last; the select restores the declared order.
+    */
+  private def dfForRead(s: Snapshot): DataFrame =
+    if (DeletionVectors.mayHave(s)) dfForSnapshot(s)
+    else {
+      val df = spark.baseRelationToDataFrame(VintageRelation(spark, path, s))
+      if (s.partitionColumns.isEmpty) df
+      else df.select(s.schema.fieldNames.toIndexedSeq
+        .map(n => df.col(QuotingUtils.quoteIdentifier(n))): _*)
+    }
 
   private[graft] def dfForSnapshot(s: Snapshot): DataFrame =
     dfForFiles(s, s.files)
@@ -1885,8 +1904,10 @@ class VintageTable private (
     * every touched-file consumer shares.
     */
   private[vintage] def filesIn(snap: Snapshot, rel: Set[String]): Seq[AddFile] =
-    snap.files.filter(f =>
-      rel.contains(f.path) || rel.contains(VintageTable.canonicalKey(f.path)))
+    snap.files.filter(isIn(rel))
+
+  private[vintage] def isIn(rel: Set[String])(f: AddFile): Boolean =
+    rel.contains(f.path) || rel.contains(VintageTable.canonicalKey(f.path))
 
   private[vintage] def readFiles(snap: Snapshot, rel: Set[String]): DataFrame =
     readFilesExact(snap, filesIn(snap, rel))

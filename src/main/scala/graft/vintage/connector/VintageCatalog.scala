@@ -545,15 +545,8 @@ class VintageSqlTable(
           // level anti-join, which the columnar native scan cannot
           // express — route through the V1 bridge until OPTIMIZE
           // purges the DVs (VintageAggregates stays in charge of the
-          // metadata-answerable cases either way). A SPILLED snapshot
-          // decides from the protocol instead of the file list (the
-          // per-file check would materialize it): DV-feature tables
-          // conservatively take the V1 bridge, others stay columnar.
-          else if (snapshot.spilled match {
-            case Some(_) => snapshot.protocol.readerFeatures
-              .contains("deletionVectors")
-            case None => graft.vintage.DeletionVectors.hasDvs(snapshot.files)
-          })
+          // metadata-answerable cases either way)
+          else if (graft.vintage.DeletionVectors.mayHave(snapshot))
             new DvRelations.DvV1Scan(tablePath, snapshot, required, pushed)
           else
             new VintageNativeScan(spark, tablePath, snapshot, required, pushed)

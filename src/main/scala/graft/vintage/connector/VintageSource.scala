@@ -164,14 +164,7 @@ class VintageSource extends DataSourceRegister
     // DV anti-join plan (still the vectorized parquet scan underneath;
     // file pruning via the pushed filters, residual re-check by Spark).
     // Compaction/OPTIMIZE purges DVs and restores the plain relation.
-    // SPILLED snapshots decide from the protocol, not the file list —
-    // the per-file walk would materialize exactly what spilling avoids.
-    val mayHaveDvs = snap.spilled match {
-      case Some(_) =>
-        snap.protocol.readerFeatures.contains("deletionVectors")
-      case None => graft.vintage.DeletionVectors.hasDvs(snap.files)
-    }
-    if (mayHaveDvs)
+    if (graft.vintage.DeletionVectors.mayHave(snap))
       return DvRelations.pruned(sqlContext, abs, snap)
     VintageRelation(sqlContext.sparkSession, abs, snap)
   }

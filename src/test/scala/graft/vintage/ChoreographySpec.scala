@@ -18,8 +18,12 @@ class ChoreographySpec extends AnyFunSuite {
   private val in = "/root/reference/in"
   private lazy val dir = Files.createTempDirectory("vintage-choreo").toString + "/exr"
 
+  // the reference CSVs when present, else generated ones with the
+  // same keys, counts and statuses
+  private lazy val inDir = GoldenSubmissions.dirOr(in)
+
   private def sub(i: Int, evolved: Boolean = false) =
-    Sdmx.readSubmission(spark, s"$in/data.$i.csv", evolved)
+    Sdmx.readSubmission(spark, s"$inDir/data.$i.csv", evolved)
 
   test("full choreography: counts, time travel, history, evolution") {
     // v0: initial load — 504 rows (README.md:64,100)

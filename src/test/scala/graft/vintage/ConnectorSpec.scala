@@ -20,8 +20,12 @@ class ConnectorSpec extends AnyFunSuite {
   import spark.implicits._
   private val in = "/root/reference/in"
 
+  // the reference CSVs when present, else generated ones with the
+  // same keys, counts and statuses
+  private lazy val inDir = GoldenSubmissions.dirOr(in)
+
   private def sub(i: Int, evolved: Boolean = false) =
-    Sdmx.readSubmission(spark, s"$in/data.$i.csv", evolved)
+    Sdmx.readSubmission(spark, s"$inDir/data.$i.csv", evolved)
 
   private def load(dir: String): DataFrame =
     spark.read.format("vintage").load(dir)
