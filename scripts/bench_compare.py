@@ -32,7 +32,7 @@ def main():
     best = {k: min(r[k] for r in runs if k in r) for k in keys}
     total = round(sum(best.values()), 3)
     json.dump({"metric": "best_of_%d_runs" % len(runs), "value": total,
-               "unit": "sec", "queries": best,
+               "unit": "sec", "queries": best, "partial_keys": partial,
                "runs": run_ps, "baseline": base_p},
               open(out_p, "w"), indent=1)
     dropped = [k for k in base if k in best and base[k] <= 0]

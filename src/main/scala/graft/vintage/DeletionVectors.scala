@@ -7,13 +7,21 @@ import org.apache.spark.sql.functions._
   * positions ([[AddFile.dv]] / [[AddFile.dvRef]]) from a scan WITHOUT
   * rewriting data files.
   *
-  * Read-side mechanics (the whole trick): Spark's parquet source
-  * exposes `_metadata.row_index` — the physical position of each row
-  * inside its file, kept correct under file splits and row-group/page
-  * skipping. A table's deletion state is therefore exactly an
-  * ANTI-JOIN of the scan against the (file, position) set from the
-  * log. The join is a plan-level wrapper: the vectorized parquet
-  * reader, pushed filters, and column pruning underneath are untouched.
+  * Read-side mechanics (the whole trick): Spark's parquet reader
+  * exposes each row's index — its physical position inside its file,
+  * kept correct under file splits and row-group/page skipping. A
+  * table's deletion state is therefore the (file, position) set from
+  * the log, subtracted from the scan in one of two ways:
+  *   - SQL-catalog scans (reads and the row-level DML scan) filter
+  *     positions per file inside the reader
+  *     ([[connector.VintageNativeScan]]): the task holds that file's
+  *     vector and drops the rows whose index is in it, reading a
+  *     sidecar itself ([[sidecarPositions]]);
+  *   - fluent, V1 `format("vintage")`, streaming and CDF reads keep an
+  *     ANTI-JOIN of the scan (`_metadata.row_index`) against the set
+  *     ([[applyTo]]) — a plan-level wrapper: the vectorized parquet
+  *     reader, pushed filters, and column pruning underneath are
+  *     untouched.
   *
   * DV storage is three-tier per file, graded by cardinality:
   *   - INLINE (<= `maxInline` positions AND within the commit-wide
@@ -217,6 +225,39 @@ object DeletionVectors {
           explode(sequence(col("__dv_run_s"), col("__dv_run_e"))).as(posCol))
       inline.unionByName(sidecars)
     }
+  }
+
+  /** Add the deleted positions `sidecarDir` holds for the file keyed
+    * `key` to `into`. Runs in the scan task, for that one file: the
+    * parquet reader skips row groups whose `file_key` range excludes
+    * the key, and the driver never sees the positions. Reads both the
+    * run-length rows `(pos_start, pos_end)` and the single-position
+    * rows `(pos)` of sidecars written before the run-length format.
+    */
+  private[vintage] def sidecarPositions(sidecarDir: String, key: String,
+      conf: org.apache.hadoop.conf.Configuration,
+      into: org.roaringbitmap.longlong.Roaring64Bitmap): Unit = {
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.io.api.Binary
+    val dir = new org.apache.hadoop.fs.Path(sidecarDir)
+    val filter = FilterCompat.get(FilterApi.eq(
+      FilterApi.binaryColumn("file_key"), Binary.fromString(key)))
+    dir.getFileSystem(conf).listStatus(dir)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .foreach { st =>
+        val reader = ParquetReader.builder(new GroupReadSupport, st.getPath)
+          .withConf(conf).withFilter(filter).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
+          def get(c: String) =
+            if (g.getType.containsField(c) && g.getFieldRepetitionCount(c) > 0)
+              Some(g.getLong(c, 0)) else None
+          val start = get("pos").orElse(get("pos_start")).get
+          into.addRange(start, get("pos_end").getOrElse(start) + 1)
+        } finally reader.close()
+      }
   }
 
   /** Longest run one sidecar row may encode. Bounds the array

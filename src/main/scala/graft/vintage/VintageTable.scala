@@ -77,8 +77,8 @@ class VintageTable private (
     dfForFiles(s, s.files)
 
   /** [[dfForSnapshot]] over an explicit (log-stats-PRUNED) file
-    * subset: the DV fallback and row-level scans pass the
-    * [[candidateFiles]] of their pushed filters, so a predicate scan
+    * subset: the `format("vintage")` DV fallback passes the
+    * [[candidateFiles]] of its pushed filters, so a predicate scan
     * of a DV-carrying 100 TB table opens the files whose stat range
     * may match — not every footer in the table. The DV anti-join set
     * is built from the same subset.
@@ -96,80 +96,6 @@ class VintageTable private (
       DeletionVectors.applyTo(
         readerFor(s).parquet(files.map(_.absolutePath(path)): _*),
         path, files, logicalCols(s))
-
-  /** [[dfForSnapshot]] plus the position row-id columns (canonical
-    * file key, physical row index) the native row-level operations
-    * identify rows by — deletion vectors applied, so only LIVE rows
-    * appear and their positions are the pre-DV physical ones (exactly
-    * what a DV grow commit needs).
-    */
-  private[vintage] def dfForSnapshotWithRowId(
-      s: Snapshot, fileColName: String, posColName: String): DataFrame =
-    dfForFilesWithRowId(s, s.files, fileColName, posColName)
-
-  private[vintage] def dfForFilesWithRowId(
-      s: Snapshot, files: Seq[AddFile],
-      fileColName: String, posColName: String): DataFrame =
-    if (files.isEmpty) {
-      val schema = org.apache.spark.sql.types.StructType(s.schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(fileColName,
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField(posColName,
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else
-      DeletionVectors.applyTo(
-        readerFor(s).parquet(files.map(_.absolutePath(path)): _*),
-        path, files,
-        logicalCols(s) :+
-          DeletionVectors.fileKeyExpr(col("_metadata.file_path")).as(fileColName) :+
-          col("_metadata.row_index").as(posColName))
-
-  /** [[dfForFilesWithRowId]] plus the row-tracking id as a third,
-    * NON-nullable metadata column (Spark's row-level rewrite rejects
-    * nullable row-id attrs): the materialized `_vintage_row_id` when
-    * the file carries one, else `baseRowId + row_index`, else `-1` for
-    * rows written before tracking was enabled (the delta writer maps
-    * the sentinel back to null). This is what lets the native SQL
-    * UPDATE/MERGE WriteDelta path preserve survivors' ids — the id
-    * read here rides the update verdict into the re-inserted row.
-    */
-  private[vintage] def dfForFilesWithRowIdTracked(
-      s: Snapshot, files: Seq[AddFile],
-      fileColName: String, posColName: String, idColName: String): DataFrame = {
-    val outSchema = org.apache.spark.sql.types.StructType(s.schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField(fileColName,
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField(posColName,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(idColName,
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    val readSchema = ColumnMapping.physicalSchema(s.schema)
-      .add(RowTracking.MaterializedCol,
-        org.apache.spark.sql.types.LongType, nullable = true)
-    val rd = spark.read.schema(readSchema)
-    val raw = (if (s.partitionColumns.nonEmpty) rd.option("basePath", path)
-               else rd)
-      .parquet(files.map(_.absolutePath(path)): _*)
-    val matC = "__rt_mat"; val keyC = "__rt_key"; val baseC = "__rt_base"
-    val live = DeletionVectors.applyTo(raw, path, files,
-      logicalCols(s) ++ Seq(
-        col(RowTracking.MaterializedCol).as(matC),
-        DeletionVectors.fileKeyExpr(col("_metadata.file_path")).as(fileColName),
-        col("_metadata.row_index").as(posColName)))
-    import spark.implicits._
-    val bases = files
-      .map(f => (DeletionVectors.fileKey(f.absolutePath(path)), f.baseRowId))
-      .toDF(keyC, baseC)
-    live.join(broadcast(bases), col(fileColName) === col(keyC), "left")
-      .withColumn(idColName,
-        coalesce(col(matC), col(baseC) + col(posColName), lit(-1L)))
-      .drop(keyC, matC, baseC)
-  }
 
   /** Version history, newest first — reproduces the operation log shape
     * at README.md:307-319.

@@ -2,25 +2,25 @@ package graft.vintage.connector
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
-import org.apache.spark.sql.connector.read.V1Scan
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, Filter, PrunedFilteredScan, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, Filter, PrunedFilteredScan}
 import org.apache.spark.sql.types.StructType
 
 import graft.vintage.{Snapshot, VintageTable}
 
-/** Read surfaces for snapshots that carry deletion vectors.
+/** The V1 `format("vintage")` read surface for snapshots that carry
+  * deletion vectors.
   *
   * The DV subtraction is a broadcast anti-join above the parquet scan
   * ([[graft.vintage.DeletionVectors.applyTo]]) — a DataFrame plan, so
-  * both the V1 `format("vintage")` relation and the DSv2 SQL-catalog
-  * scan deliver it through a row-producing fallback instead of the
-  * bare file relation / native columnar scan. Filter pushdown still
+  * the relation delivers it through a row-producing fallback instead
+  * of the bare file relation. (SQL-catalog scans apply DVs inside
+  * [[VintageNativeScan]]'s tasks instead.) Filter pushdown still
   * prunes files (the predicate is applied inside the wrapped plan,
   * where stats-based skipping and parquet row-group pushdown see it);
   * Spark re-applies every filter above, so correctness never depends
-  * on the pushdown. Tables without DVs never take these paths, and
-  * OPTIMIZE/compaction returns a DV table to the native scans.
+  * on the pushdown. Tables without DVs never take this path, and
+  * OPTIMIZE/compaction returns a DV table to the native scan.
   */
 private[connector] object DvRelations {
 
@@ -56,27 +56,4 @@ private[connector] object DvRelations {
           filters.toSeq.filter(f => Filters.toColumn(f).isDefined),
           requiredColumns.toSeq).rdd
     }
-
-  /** DSv2 scan for the SQL catalog: bridges to the same V1 plan via
-    * Spark's [[V1Scan]] seam.
-    */
-  final class DvV1Scan(tablePath: String, snap: Snapshot,
-      required: StructType, pushed: Array[Filter]) extends V1Scan {
-    override def readSchema(): StructType = required
-    override def description(): String =
-      s"VintageDvScan $tablePath v${snap.version} " +
-      s"dvFiles=${if (snap.spilled.isDefined) "spilled"
-                  else snap.files.count(_.hasDv).toString}"
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T = {
-      val rel: BaseRelation with TableScan = new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = required
-        override def buildScan(): RDD[Row] =
-          frame(context.sparkSession, tablePath, snap, pushed.toSeq,
-            required.fieldNames.toSeq).rdd
-      }
-      rel.asInstanceOf[T]
-    }
-  }
 }

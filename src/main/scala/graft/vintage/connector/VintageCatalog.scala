@@ -5,15 +5,14 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder}
-import org.apache.spark.sql.graftshim.VintageRelation
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -33,8 +32,9 @@ import graft.vintage.{Snapshot, VintageLog, VintageTable}
   *
   * Time travel lands on `loadTable(ident, version|timestamp)` (the SQL
   * `VERSION AS OF` surface of SURVEY §2.1 S4); reads go through the
-  * native columnar DSv2 scan ([[VintageNativeScan]], stat- and
-  * partition-pruned); writes and deletes commit through
+  * native DSv2 scan ([[VintageNativeScan]], stat- and partition-pruned;
+  * columnar, or row-wise with deletion vectors applied per file in the
+  * task when the snapshot has them); writes and deletes commit through
   * [[VintageTable]]. MERGE INTO and UPDATE SQL are resolved by the
   * injected [[VintageSqlExtension]] rule onto the fluent builders, and
   * OPTIMIZE / VACUUM / RESTORE / DESCRIBE HISTORY by its delegating
@@ -424,7 +424,9 @@ class VintageCatalog extends TableCatalog with StagingTableCatalog {
 }
 
 /** DSv2 Table over one snapshot: reads via [[VintageNativeScan]]
-  * (stats-pruned file list, vectorized columnar parquet batches),
+  * (stats-pruned file list, vectorized columnar parquet batches;
+  * deletion vectors and the row-id metadata columns are applied in the
+  * same scan's tasks),
   * writes via the native DSv2 batch write
   * ([[org.apache.spark.sql.graftshim.VintageWrite]]: executors write
   * final parquet files and report AddFiles with footer stats; the
@@ -534,22 +536,7 @@ class VintageSqlTable(
       override def build(): Scan = aggResult match {
         case Some(r) => new VintageMetadataScan(r, ident)
         case None =>
-          val wantsRowId = required.fieldNames.exists(n =>
-            n == VintageRowLevel.FileCol || n == VintageRowLevel.PosCol ||
-            n == VintageRowLevel.TrackIdCol)
-          // row-id metadata columns ride the same V1 frame the
-          // row-level operations scan through
-          if (wantsRowId)
-            new VintageRowLevel.RowIdV1Scan(tablePath, snapshot, required, pushed)
-          // merge-on-read: deletion vectors subtract rows via a plan-
-          // level anti-join, which the columnar native scan cannot
-          // express — route through the V1 bridge until OPTIMIZE
-          // purges the DVs (VintageAggregates stays in charge of the
-          // metadata-answerable cases either way)
-          else if (graft.vintage.DeletionVectors.mayHave(snapshot))
-            new DvRelations.DvV1Scan(tablePath, snapshot, required, pushed)
-          else
-            new VintageNativeScan(spark, tablePath, snapshot, required, pushed)
+          new VintageNativeScan(spark, tablePath, snapshot, required, pushed)
       }
     }
 

@@ -8,19 +8,18 @@ import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SparkSession, SQLContext}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.vintage.{AddFile, Snapshot, VintageTable}
+import graft.vintage.{Snapshot, VintageTable}
 
 /** Native Catalyst row-level operations (`SupportsRowLevelOperations` +
   * `SupportsDelta`) for SQL `DELETE` / `UPDATE` / `MERGE INTO` on
@@ -33,7 +32,8 @@ import graft.vintage.{AddFile, Snapshot, VintageTable}
   *    operation over this table's scan extended with the position
   *    row-id (`_vintage_file`, `_vintage_pos` — the canonical file key
   *    and physical row index the deletion-vector machinery is built
-  *    on);
+  *    on), which [[VintageNativeScan]] emits beside the live rows of
+  *    the stats-pruned candidate files;
   *  - the delta write receives per-row verdicts (DELETE id / INSERT
   *    row / UPDATE id→row) on EXECUTORS: deleted positions stream into
   *    per-task parquet files (never the driver), inserted rows stream
@@ -69,55 +69,6 @@ object VintageRowLevel {
     * SQL UPDATE/MERGE now preserves ids exactly like fluent rewrites.
     */
   val TrackIdCol = graft.vintage.RowTracking.MaterializedCol
-
-  /** The row-id frame: table columns plus canonical file key and
-    * physical row position, deletion-vectors applied — both the
-    * row-level scan and explicit metadata-column selects read it.
-    * Pushed filters (the DELETE/UPDATE condition's translatable
-    * conjuncts) prune the FILE LIST through log-stats skipping before
-    * any scan plan exists: a partition-scoped UPDATE of a 100 TB table
-    * reads the candidate files, not the table. Pruning by a conjunct
-    * SUBSET is sound (a file with no rows matching one conjunct has no
-    * rows matching the whole condition), and the rows of unscanned
-    * files are simply not modified — exactly the row-level contract.
-    */
-  private[connector] def rowIdFrame(
-      spark: SparkSession, tablePath: String, snap: Snapshot,
-      filters: Seq[Filter], columns: Seq[String]): RDD[Row] = {
-    val t = VintageTable.forPath(spark, tablePath)
-    val tracked = columns.contains(TrackIdCol)
-    def frame(files: Seq[AddFile]) =
-      if (tracked) t.dfForFilesWithRowIdTracked(snap, files, FileCol, PosCol,
-        TrackIdCol)
-      else t.dfForFilesWithRowId(snap, files, FileCol, PosCol)
-    val df = Filters.toColumnAll(filters) match {
-      case Some(cond) => frame(t.candidateFiles(snap, cond)).filter(cond)
-      case None => frame(snap.files)
-    }
-    df.select(columns.map(org.apache.spark.sql.functions.col): _*).rdd
-  }
-
-  /** V1 scan producing the row-id frame (same seam as
-    * [[DvRelations.DvV1Scan]] — the anti-join and the metadata columns
-    * are DataFrame plans, not columnar batches).
-    */
-  final class RowIdV1Scan(tablePath: String, snap: Snapshot,
-      required: StructType, pushed: Array[Filter]) extends V1Scan {
-    override def readSchema(): StructType = required
-    override def description(): String =
-      s"VintageRowIdScan $tablePath v${snap.version}"
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T = {
-      val rel: BaseRelation with TableScan = new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = required
-        override def buildScan(): RDD[Row] =
-          rowIdFrame(context.sparkSession, tablePath, snap, pushed.toSeq,
-            required.fieldNames.toSeq)
-      }
-      rel.asInstanceOf[T]
-    }
-  }
 }
 
 /** One row-level operation instance: shared between the scan side and
@@ -159,7 +110,7 @@ class VintageRowLevelOperation(
 
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
         // pruning only — every filter stays residual and Spark
-        // re-applies it above the scan (same contract as DvV1Scan)
+        // re-applies it above the scan (same contract as the SQL read)
         pushed = filters.filter(f => Filters.toColumn(f).isDefined)
         filters
       }
@@ -168,7 +119,8 @@ class VintageRowLevelOperation(
         if (requiredSchema.nonEmpty) required = requiredSchema
 
       override def build(): Scan =
-        new VintageRowLevel.RowIdV1Scan(tablePath, snap, required, pushed)
+        new VintageNativeScan(SparkSession.active, tablePath, snap, required,
+          pushed)
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
