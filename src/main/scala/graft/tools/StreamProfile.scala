@@ -3,6 +3,7 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.StreamingOps
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.SparkEntry
@@ -12,7 +13,8 @@ import graft.SparkEntry
   * StreamingQueryListener records every QueryProgressEvent's
   * `durationMs` map (triggerExecution, queryPlanning, walCommit,
   * commitOffsets, addBatch, getBatch, latestOffset) plus state-store
-  * metrics, so the driver-gap guess ("re-planning + WAL") becomes a
+  * metrics (rows updated in state per batch; the total is not
+  * tracked, RocksDB row counting being off), so the driver-gap guess ("re-planning + WAL") becomes a
   * measured number per phase. Guide §1: measure first.
   *
   * Usage: runMain graft.tools.StreamProfile <q1,q2,...> [sfDir] [cpus]
@@ -20,7 +22,7 @@ import graft.SparkEntry
   */
 object StreamProfile {
   private case class Batch(query: String, batchId: Long, numInputRows: Long,
-      durations: Map[String, Long], stateRows: Long, stateMemUsed: Long)
+      durations: Map[String, Long], stateRowsUpdated: Long, stateMemUsed: Long)
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
@@ -58,21 +60,21 @@ object StreamProfile {
           val p = e.progress
           val dur = p.durationMs
           import scala.jdk.CollectionConverters._
-          val stateRows = Option(p.stateOperators).toSeq.flatten
-            .map(_.numRowsTotal).sum
+          val stateRowsUpdated = Option(p.stateOperators).toSeq.flatten
+            .map(_.numRowsUpdated).sum
           val stateMem = Option(p.stateOperators).toSeq.flatten
             .map(_.memoryUsedBytes).sum
           batches += Batch(p.name, p.batchId, p.numInputRows,
             dur.asScala.map { case (k, v) => (k, v.longValue) }.toMap,
-            stateRows, stateMem)
+            stateRowsUpdated, stateMem)
         }
     }
     spark.streams.addListener(listener)
     val t0 = System.nanoTime()
     fn(spark, sfDir).count()
     val totalSec = (System.nanoTime() - t0) / 1e9
-    // listener bus is async; give tail events a moment
-    Thread.sleep(500)
+    // the listener bus is async: wait until it has delivered every event
+    StreamingOps.drainListenerBus(spark)
     spark.streams.removeListener(listener)
 
     val done = batches.synchronized(batches.toVector)
@@ -83,7 +85,7 @@ object StreamProfile {
     done.foreach { b =>
       println(f"${b.batchId}%5d ${b.numInputRows}%5d " +
         phases.map(p => f"${b.durations.getOrElse(p, -1L)}%16d").mkString +
-        f"  stateRows=${b.stateRows} stateMemKiB=${b.stateMemUsed / 1024}")
+        f"  stateRowsUpdated=${b.stateRowsUpdated} stateMemKiB=${b.stateMemUsed / 1024}")
     }
     val trig = done.map(_.durations.getOrElse("triggerExecution", 0L)).sum
     println(f"sum(triggerExecution)=${trig} ms over ${done.size} batches; " +

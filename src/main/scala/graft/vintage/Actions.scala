@@ -30,20 +30,21 @@ sealed trait Action
   *        (a merge-on-read deletion vector, stored inline in the log —
   *        Delta's DV concept sized for its sweet spot: sparse deletes,
   *        where rewriting a 1 GB file to drop 50 rows is the thing to
-  *        avoid at 100 TB). Empty = every physical row is live. Readers
-  *        subtract these positions via the parquet `_metadata.row_index`
-  *        column, which Spark keeps stable under splits and row-group
-  *        skipping. Vectors past the inline cap move to a parquet
-  *        SIDECAR file referenced by `dvRef` (mutually exclusive with
+  *        avoid at 100 TB). Empty = every physical row is live. Reads
+  *        subtract these positions in one place,
+  *        `connector.VintageNativeScan`, by parquet's row index, which
+  *        Spark keeps stable under splits and row-group skipping.
+  *        Vectors past the inline cap move to a parquet SIDECAR file
+  *        referenced by `dvRef` (mutually exclusive with
   *        `dv`); truly dense deletes rewrite the file (see
   *        `vintage.deletionVectors.maxInline` /
   *        `.maxDeletedFraction`).
   * @param dvRef external deletion-vector reference (sidecar parquet
-  *        under `_vintage_dv/`, rows `(file_key, pos)`) for vectors too
-  *        large to inline in the log — the wide-but-sparse GDPR-sweep
-  *        case: 1% of a 1 GB file is ~100k positions, which must cost
-  *        one small sidecar file, not a log line megabytes long and not
-  *        a 1 GB rewrite. Identity/conflict/restore semantics are the
+  *        under `_vintage_dv/`, run rows `(file_key, pos_start,
+  *        pos_end)`) for vectors too large to inline in the log — the
+  *        wide-but-sparse GDPR-sweep case: 1% of a 1 GB file is ~100k
+  *        positions, which must cost one small sidecar file, not a log
+  *        line megabytes long and not a 1 GB rewrite. Identity/conflict/restore semantics are the
   *        case-class equality of this field, exactly like inline `dv`.
   */
 case class AddFile(

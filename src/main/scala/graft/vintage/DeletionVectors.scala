@@ -1,7 +1,9 @@
 package graft.vintage
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.util.SerializableConfiguration
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** Merge-on-read deletion vectors: subtract per-file deleted row
   * positions ([[AddFile.dv]] / [[AddFile.dvRef]]) from a scan WITHOUT
@@ -11,22 +13,18 @@ import org.apache.spark.sql.functions._
   * exposes each row's index — its physical position inside its file,
   * kept correct under file splits and row-group/page skipping. A
   * table's deletion state is therefore the (file, position) set from
-  * the log, subtracted from the scan in one of two ways:
-  *   - SQL-catalog scans (reads and the row-level DML scan) filter
-  *     positions per file inside the reader
-  *     ([[connector.VintageNativeScan]]): the task holds that file's
-  *     vector and drops the rows whose index is in it, reading a
-  *     sidecar itself ([[sidecarPositions]]);
-  *   - fluent, V1 `format("vintage")`, streaming and CDF reads keep an
-  *     ANTI-JOIN of the scan (`_metadata.row_index`) against the set
-  *     ([[applyTo]]) — a plan-level wrapper: the vectorized parquet
-  *     reader, pushed filters, and column pruning underneath are
-  *     untouched.
+  * the log, subtracted in ONE place: [[connector.VintageNativeScan]]
+  * holds each file's vector in its task and drops the rows whose index
+  * is in it, reading a sidecar itself ([[sidecarPositions]]). Every
+  * read of a file with a DV goes through it — SQL, fluent, V1
+  * `format("vintage")`, streaming, change feed and the DML scans
+  * (`VintageTable.readFiles` makes the choice) — and it is also the
+  * only source of row positions and row ids.
   *
   * DV storage is three-tier per file, graded by cardinality:
   *   - INLINE (<= `maxInline` positions AND within the commit-wide
-  *     `maxInlineTotal` budget): positions live in the log line; the
-  *     lookup side is driver-local and broadcast. Both caps guard the
+  *     `maxInlineTotal` budget): positions live in the log line and
+  *     ride the scan's task description. Both caps guard the
   *     driver: the per-file cap bounds any one vector, the global
   *     budget bounds the sum a wide sweep could otherwise collect
   *     (overflow demotes to the sidecar tier, smallest vectors kept).
@@ -34,12 +32,11 @@ import org.apache.spark.sql.functions._
   *     to the inline tier (sidecar is sticky — its prior positions
   *     exist only distributed).
   *   - SIDECAR (> cap but sparse relative to the file): positions live
-  *     in a parquet sidecar under `_vintage_dv/`, read DISTRIBUTED and
-  *     never materialized on the driver — the wide-but-sparse GDPR
-  *     sweep (1% of every file of a 100 TB table) costs one small
-  *     sidecar per commit, not a rewrite of everything. No broadcast
-  *     hint on this path: the set's size is data-dependent, so the
-  *     join strategy is left to AQE.
+  *     in a parquet sidecar under `_vintage_dv/`, read only by the
+  *     tasks that scan or re-vector that file and never materialized on
+  *     the driver — the wide-but-sparse GDPR sweep (1% of every file of
+  *     a 100 TB table) costs one small sidecar per commit, not a
+  *     rewrite of everything.
   *   - REWRITE (>= `maxDeletedFraction` of the file's rows dead):
   *     copy-on-write — when most of a file dies, rewriting the
   *     survivors is the cheaper plan AND keeps the table small.
@@ -109,8 +106,8 @@ object DeletionVectors {
   /** Split per-file-cap-passing inline candidates into (kept inline,
     * demoted to sidecar) under the global [[MaxInlineTotalProp]]
     * budget. Smallest grown vectors are kept first (ties broken on the
-    * key for determinism), maximizing the number of files that stay on
-    * the broadcast-lookup path for a given driver-memory budget; the
+    * key for determinism), maximizing the number of files whose vector
+    * rides the log for a given driver-memory budget; the
     * demoted remainder rides the distributed sidecar writer, so driver
     * memory stays bounded regardless of how many files a sweep grazes.
     */
@@ -159,84 +156,23 @@ object DeletionVectors {
     case None => hasDvs(snap.files)
   }
 
-  /** Canonical file key used on BOTH join sides — the SQL mirror of
-    * [[VintageTable.canonicalKey]]: local-FS URIs reduce to a plain
-    * path (`file:///a`, `file:/a`, and authority-carrying
-    * `file://host/a` all → `/a`), other schemes pass through — so the
-    * log's AddFile paths and the scan's `_metadata.file_path` strings
-    * meet on equal terms.
+  /** Canonical file key — the `_vintage_file` value, and the key a
+    * sidecar's rows carry: [[VintageTable.canonicalKey]] of the file's
+    * absolute path.
     */
-  private[vintage] def fileKeyExpr(filePathCol: Column): Column =
-    regexp_replace(
-      regexp_replace(filePathCol, "^file://[^/]*/", "/"),
-      "^file:/+", "/")
-
   private[vintage] def fileKey(absPath: String): String =
     VintageTable.canonicalKey(absPath)
 
-  /** The deleted (fileKey, position) set of `files` as a DataFrame
-    * named (fileCol, posCol): the inline part is a driver-local
-    * broadcast frame (bounded by the per-file cap); sidecar parts are
-    * DISTRIBUTED parquet scans of the referenced `_vintage_dv/` dirs,
-    * semi-joined to the (sidecar, file) pairs the CURRENT files
-    * actually reference — a sidecar may also hold rows for files whose
-    * vector was superseded by a later commit, and those stale rows
-    * must not apply. When any sidecar is present the combined frame
-    * carries no broadcast hint (size is data-dependent; AQE picks).
-    */
-  private[vintage] def dvLookup(spark: SparkSession, tablePath: String,
-      files: Seq[AddFile], fileCol: String, posCol: String): DataFrame = {
-    import spark.implicits._
-    val inline = files.filter(_.dv.nonEmpty)
-      .flatMap(f => f.dv.map(p => (fileKey(f.absolutePath(tablePath)), p)))
-      .toDF(fileCol, posCol)
-    val refs = files.flatMap(f => f.dvRef.map(r =>
-      (fileKey(AddFile.resolve(tablePath, r.path)),
-       fileKey(f.absolutePath(tablePath)))))
-    if (refs.isEmpty) broadcast(inline)
-    else {
-      val scCol = s"${fileCol}_sc"
-      val valid = refs.toDF(scCol, fileCol)
-      // explicit schema makes the read format-flexible: current
-      // sidecars are run-length encoded (pos_start, pos_end), sidecars
-      // written before the RLE format carry single positions (pos);
-      // missing columns read as null and coalesce picks the run bounds
-      val scSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_key",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("pos_start",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("pos_end",
-          org.apache.spark.sql.types.LongType)))
-      val sidecars = spark.read.schema(scSchema)
-        .parquet(refs.map(_._1).distinct: _*)
-        .select(
-          // parent dir of the part file == the referenced sidecar dir
-          fileKeyExpr(regexp_replace(col("_metadata.file_path"), "/[^/]+$", ""))
-            .as(scCol),
-          col("file_key").as(fileCol),
-          coalesce(col("pos"), col("pos_start")).as("__dv_run_s"),
-          coalesce(col("pos_end"), col("pos")).as("__dv_run_e"))
-        // semi-join on the COMPRESSED rows first, expand runs after
-        .join(broadcast(valid), Seq(scCol, fileCol), "left_semi")
-        .select(col(fileCol),
-          explode(sequence(col("__dv_run_s"), col("__dv_run_e"))).as(posCol))
-      inline.unionByName(sidecars)
-    }
-  }
-
   /** Add the deleted positions `sidecarDir` holds for the file keyed
-    * `key` to `into`. Runs in the scan task, for that one file: the
+    * `key` to `into` — the one sidecar reader. Runs in a task (the scan
+    * reading that file, or the writer growing its vector): the
     * parquet reader skips row groups whose `file_key` range excludes
     * the key, and the driver never sees the positions. Reads both the
     * run-length rows `(pos_start, pos_end)` and the single-position
     * rows `(pos)` of sidecars written before the run-length format.
     */
   private[vintage] def sidecarPositions(sidecarDir: String, key: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      into: org.roaringbitmap.longlong.Roaring64Bitmap): Unit = {
+      conf: org.apache.hadoop.conf.Configuration, into: Roaring64Bitmap): Unit = {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
     import org.apache.parquet.hadoop.ParquetReader
@@ -260,55 +196,75 @@ object DeletionVectors {
       }
   }
 
-  /** Longest run one sidecar row may encode. Bounds the array
-    * `sequence(pos_start, pos_end)` materializes per row on the read
-    * side (8192 longs = 64 KiB) while still collapsing a clustered
-    * delete ~8000:1.
+  /** Longest run one sidecar row may encode: bounds the array a
+    * reader that expands runs materializes per row (8192 longs =
+    * 64 KiB) while still collapsing a clustered delete ~8000:1.
     */
   private val MaxRunLength = 8192L
 
-  /** Write the full deletion vector of each file in `positions`
-    * (schema: (file_key, pos)) as ONE parquet sidecar dir per commit,
-    * returning its table-relative path. Positions are RUN-LENGTH
+  /** A file's deletion vector as a commit finds it: the key the new
+    * sidecar's rows carry, its inline positions, and the (sidecar dir,
+    * key) its sidecar positions are read from.
+    */
+  private[vintage] final case class PriorVector(key: String, inline: Array[Long],
+      sidecar: Option[(String, String)])
+
+  private[vintage] object PriorVector {
+    def apply(tablePath: String, f: AddFile): PriorVector = {
+      val key = fileKey(f.absolutePath(tablePath))
+      PriorVector(key, f.dv.toArray,
+        f.dvRef.map(r => (AddFile.resolve(tablePath, r.path), key)))
+    }
+  }
+
+  /** Write the full deletion vector of each of `files` as ONE parquet
+    * sidecar dir per commit, returning its table-relative path. A
+    * file's vector is its prior positions plus its rows of `positions`
+    * (schema: (file_key, pos)); the task that writes the file's rows
+    * reads the prior ones itself ([[sidecarPositions]]), so a sidecar
+    * position never reaches the driver. Positions are RUN-LENGTH
     * encoded: each row is a contiguous `[pos_start, pos_end]` run, so
     * a clustered delete (a dropped partition's rows, a contiguous
     * ingest batch) costs one row per run instead of one per position —
-    * the roaring-bitmap trade expressed in plain parquet, still
-    * scannable by the same engine that reads everything else. Sparse
+    * the roaring-bitmap trade expressed in plain parquet. Sparse
     * vectors degrade gracefully to single-position runs.
     *
-    * Distributed end to end — the position set never touches the
-    * driver (the sidecar tier exists precisely because it can be too
-    * big to collect): one shuffle to cluster by file, an in-order
-    * per-partition pass to compress. Rows stay clustered by file for
+    * One shuffle clusters the positions by file; each task then holds
+    * one file's vector at a time. Rows stay clustered by file for
     * row-group skipping on the read side.
     */
-  private[vintage] def writeSidecar(positions: DataFrame, tablePath: String): String = {
+  private[vintage] def writeSidecar(positions: DataFrame, tablePath: String,
+      files: Seq[PriorVector]): String = {
     val spark = positions.sparkSession
     import spark.implicits._
     val rel = s"$SidecarDirName/${java.util.UUID.randomUUID().toString}"
+    val prior = files.map(p => p.key -> p).toMap
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(
+      spark.sessionState.newHadoopConf()))
     positions
       .select(col("file_key"), col("pos"))
       .as[(String, Long)]
+      // one -1 marker per file: a file with no new position keeps its
+      // prior vector (the clone re-keys sidecars this way)
+      .union(files.map(_.key -> -1L).toDS())
       .repartition(col("file_key"))
-      .sortWithinPartitions("file_key", "pos")
+      .sortWithinPartitions("file_key")
       .mapPartitions { it =>
-        // streaming run-compressor over the (file_key, pos)-sorted
-        // partition: O(1) memory regardless of vector size
-        new Iterator[(String, Long, Long)] {
-          private var cur: (String, Long) = if (it.hasNext) it.next() else null
-          def hasNext: Boolean = cur != null
-          def next(): (String, Long, Long) = {
-            val (k, start) = cur
-            var end = start
-            cur = if (it.hasNext) it.next() else null
-            while (cur != null && cur._1 == k && cur._2 == end + 1 &&
-                   end - start + 1 < MaxRunLength) {
-              end = cur._2
-              cur = if (it.hasNext) it.next() else null
+        val rows = it.buffered
+        Iterator.continually(rows).takeWhile(_.hasNext).flatMap { r =>
+          val key = r.head._1
+          val vector = new Roaring64Bitmap
+          prior.get(key).foreach { p =>
+            vector.add(p.inline: _*)
+            p.sidecar.foreach { case (dir, k) =>
+              sidecarPositions(dir, k, conf.value.value, vector)
             }
-            (k, start, end)
           }
+          while (r.hasNext && r.head._1 == key) {
+            val pos = r.next()._2
+            if (pos >= 0) vector.addLong(pos)
+          }
+          runs(vector).map { case (start, end) => (key, start, end) }
         }
       }
       .toDF("file_key", "pos_start", "pos_end")
@@ -316,54 +272,20 @@ object DeletionVectors {
     rel
   }
 
-  /** Fresh helper-column names per call: a table column named
-    * `__dv_file` must not break DV reads.
+  /** The `[start, end]` runs of `vector`, in order, each at most
+    * [[MaxRunLength]] long.
     */
-  private def freshNames(): (String, String) = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    (s"__dv_file_$tag", s"__dv_pos_$tag")
-  }
-
-  /** Scan columns + the canonical file key and in-file position. */
-  private def withKeys(df: DataFrame, outputCols: Seq[Column],
-      fileCol: String, posCol: String): DataFrame =
-    df.select(
-      (outputCols :+
-        fileKeyExpr(col("_metadata.file_path")).as(fileCol) :+
-        col("_metadata.row_index").as(posCol)): _*)
-
-  /** Wrap `df` (a scan over exactly `files`, any of which may carry a
-    * DV) so deleted positions vanish. No-op when no file has a DV. The
-    * input frame must still expose the parquet `_metadata` column —
-    * i.e. call this directly on the scan, before projections.
-    */
-  def applyTo(df: DataFrame, tablePath: String, files: Seq[AddFile],
-      outputCols: Seq[Column]): DataFrame = {
-    if (!hasDvs(files)) return df.select(outputCols: _*)
-    val (fileCol, posCol) = freshNames()
-    withKeys(df, outputCols, fileCol, posCol)
-      .join(dvLookup(df.sparkSession, tablePath, files, fileCol, posCol),
-        Seq(fileCol, posCol), "left_anti")
-      .drop(fileCol, posCol)
-  }
-
-  /** `(fileKey, position)` of the LIVE rows of `df` matching
-    * `condition` — the write-side primitive of a merge-on-read
-    * delete/update: rows already in a file's DV (inline or sidecar)
-    * are excluded first, so a repeated delete never double-counts a
-    * position. Output columns are named `fileCol`/`posCol` (pass fresh
-    * names via [[VintageTable]]'s merge-on-read planner).
-    */
-  private[vintage] def livePositionsMatching(
-      df: DataFrame, tablePath: String, files: Seq[AddFile],
-      outputCols: Seq[Column], condition: Column,
-      fileCol: String, posCol: String): DataFrame = {
-    val keyed = withKeys(df, outputCols, fileCol, posCol)
-    val live =
-      if (!hasDvs(files)) keyed
-      else keyed.join(
-        dvLookup(df.sparkSession, tablePath, files, fileCol, posCol),
-        Seq(fileCol, posCol), "left_anti")
-    live.filter(condition).select(col(fileCol), col(posCol))
+  private def runs(vector: Roaring64Bitmap): Iterator[(Long, Long)] = {
+    val it = vector.getLongIterator
+    var next = if (it.hasNext) it.next() else -1L
+    Iterator.continually(next).takeWhile(_ >= 0).map { start =>
+      var end = start
+      next = -1L
+      while (next < 0 && it.hasNext) {
+        val p = it.next()
+        if (p == end + 1 && p - start < MaxRunLength) end = p else next = p
+      }
+      (start, end)
+    }
   }
 }

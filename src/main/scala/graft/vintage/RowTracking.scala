@@ -6,8 +6,9 @@ package graft.vintage
   *
   *  - At commit time each fresh data file is assigned a contiguous
   *    `baseRowId` range from a log-level high-water mark
-  *    ([[RowIdHighWaterMark]]); a row's id is `baseRowId +
-  *    parquet row_index`. Assignment happens INSIDE the optimistic
+  *    ([[RowIdHighWaterMark]]); a row's id is `baseRowId +` the
+  *    row's parquet row index, derived only in
+  *    [[connector.VintageNativeScan]]. Assignment happens INSIDE the optimistic
   *    commit loop, so racing writers that lose the version race
   *    re-read the mark and re-assign — ranges never overlap and no
   *    metadata conflict is involved (appends stay concurrent).

@@ -177,18 +177,9 @@ class VintageMergeBuilder private[vintage] (
       case Some(rc) =>
         FileSkipping.candidates(snap.schema, snap.statFiles, ColumnExpr.expr(rc))
     }
-    val touchedMatched: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else {
-        val candDf = table.readerFor(snap)
-          .parquet(candidates.map(_.absolutePath(table.path)): _*)
-        val tRaw = candDf.select(
-          col("_metadata.file_path").as(VintageTable.FileCol) +: table.logicalCols(snap): _*)
-        aliased(tRaw, targetAlias)
-          .join(aliased(source, srcAlias), condition, "left_semi")
-          .select(VintageTable.FileCol).distinct()
-          .collect().map(r => table.relativize(r.getString(0))).toSet
-      }
+    // live rows only: a key deleted by a deletion vector matches nothing
+    val touchedMatched: Set[String] = table.touchedKeys(snap, candidates)(t =>
+      aliased(t, targetAlias).join(aliased(source, srcAlias), condition, "left_semi"))
     // NOT MATCHED BY SOURCE clauses act on target rows with NO match —
     // those can live in ANY file, so file selection prunes only by the
     // clause conditions (an unconditional clause reads every file; the
@@ -215,7 +206,7 @@ class VintageMergeBuilder private[vintage] (
           if (conds.exists(_.isEmpty)) snap.files
           else FileSkipping.candidates(snap.schema, snap.statFiles,
             ColumnExpr.expr(conds.flatten.reduce(_ || _)))
-        files.map(_.path).toSet
+        files.map(table.keyOf).toSet
       }
     val touched: Set[String] = touchedMatched ++ touchedBySource
 
@@ -231,8 +222,7 @@ class VintageMergeBuilder private[vintage] (
           else StructType(snap.schema.fields :+
             org.apache.spark.sql.types.StructField(RowTracking.MaterializedCol,
               org.apache.spark.sql.types.LongType)))
-      else if (tracked) table.rewriteSource(snap, touched)._1
-      else table.readFiles(snap, touched)
+      else table.rewriteSource(snap, touched)._1
     val tMarked = aliased(tBase.withColumn(TgtMark, lit(true)), targetAlias)
     val sMarked = aliased(source.withColumn(SrcMark, lit(true)), sourceAliasOf(source))
 
@@ -315,7 +305,7 @@ class VintageMergeBuilder private[vintage] (
       if (keyPairs.isEmpty || touched.isEmpty ||
           Bucketing.spec(snap.properties).isDefined) rewritten
       else clustered(rewritten, finalSchema,
-        snap.statFiles.filter(table.isIn(touched)),
+        snap.statFiles.filter(f => touched.contains(table.keyOf(f))),
         snap.partitionColumns ++ keyPairs.map(_._1))
     val adds =
       if (touched.isEmpty && notMatchedClauses.isEmpty) Nil

@@ -6,9 +6,13 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.QuotingUtils
-import org.apache.spark.sql.graftshim.{ColumnExpr, VintageRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftshim.{ColumnExpr, DatasetOps, VintageRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.vintage.connector.VintageRowLevel.{FileCol, PosCol, TrackIdCol}
+import graft.vintage.connector.VintageSqlTable
 
 /** A versioned Parquet table with Delta-style semantics, built purely
   * on public Spark APIs: every row-level operation is a declarative
@@ -60,12 +64,13 @@ class VintageTable private (
     dfForRead(snapshotAt(VintageLog.versionAtTimestamp(path, ts)))
 
   /** The `format("vintage")` relation, which prunes files by stats at
-    * plan time, unless the snapshot may carry deletion vectors (those
-    * read through the DV anti-join plan). The relation puts partition
+    * plan time, unless the snapshot may carry deletion vectors: those
+    * read through [[nativeFrame]], which prunes by the same stats from
+    * the filters Spark pushes into it. The relation puts partition
     * columns last; the select restores the declared order.
     */
   private def dfForRead(s: Snapshot): DataFrame =
-    if (DeletionVectors.mayHave(s)) dfForSnapshot(s)
+    if (DeletionVectors.mayHave(s)) nativeFrame(s)
     else {
       val df = spark.baseRelationToDataFrame(VintageRelation(spark, path, s))
       if (s.partitionColumns.isEmpty) df
@@ -74,28 +79,7 @@ class VintageTable private (
     }
 
   private[graft] def dfForSnapshot(s: Snapshot): DataFrame =
-    dfForFiles(s, s.files)
-
-  /** [[dfForSnapshot]] over an explicit (log-stats-PRUNED) file
-    * subset: the `format("vintage")` DV fallback passes the
-    * [[candidateFiles]] of its pushed filters, so a predicate scan
-    * of a DV-carrying 100 TB table opens the files whose stat range
-    * may match — not every footer in the table. The DV anti-join set
-    * is built from the same subset.
-    */
-  private[vintage] def dfForFiles(s: Snapshot, files: Seq[AddFile]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    else
-      // the select restores the declared column order, which partition
-      // discovery moves to the end, and maps physical file columns back
-      // to their logical names under column mapping; files carrying
-      // deletion vectors lose their deleted positions via the broadcast
-      // anti-join in [[DeletionVectors.applyTo]] (no-op wrapper when no
-      // file has one)
-      DeletionVectors.applyTo(
-        readerFor(s).parquet(files.map(_.absolutePath(path)): _*),
-        path, files, logicalCols(s))
+    readFiles(s, s.files)
 
   /** Version history, newest first — reproduces the operation log shape
     * at README.md:307-319.
@@ -148,20 +132,6 @@ class VintageTable private (
       adds, removesFor(snap, touched), None, scope)
   }
 
-  /** Merge-on-read delete (`vintage.deletionVectors.enabled`): instead
-    * of rewriting every touched file, record the matching rows' file
-    * positions as deletion vectors — commit cost is O(deleted rows),
-    * not O(touched bytes), the decisive difference for sparse deletes
-    * at 100 TB. Per-file three-tier hybrid, graded by cardinality:
-    * vectors within `vintage.deletionVectors.maxInline` inline in the
-    * log; wider-but-sparse vectors go to a parquet SIDECAR under
-    * `_vintage_dv/` (written distributed — positions never touch the
-    * driver); files with >= `maxDeletedFraction` of their rows dead
-    * rewrite copy-on-write (when most of a file dies, rewriting the
-    * survivors is the cheaper plan AND keeps the table small). Reads
-    * subtract DVs via [[DeletionVectors.applyTo]]; OPTIMIZE/compaction
-    * rewrites purge them.
-    */
   /** Shared planning of a merge-on-read row-level op: find the LIVE
     * rows matching `condition` in the stats-pruned candidate files,
     * then split the touched files into the three tiers — inline
@@ -173,28 +143,23 @@ class VintageTable private (
     * scanned once, and unpersisted before returning.
     */
   private case class MorPlan(marked: Seq[AddFile], sidecarMarked: Seq[AddFile],
-      dvFiles: Seq[AddFile], rewriteFiles: Seq[AddFile]) {
-    def touchedPaths: Set[String] = (dvFiles ++ rewriteFiles).map(_.path).toSet
-  }
+      dvFiles: Seq[AddFile], rewriteFiles: Seq[AddFile])
 
   private def planMergeOnRead(
       snap: Snapshot, cands: Seq[AddFile], condition: Column): Option[MorPlan] = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fileCol = s"__mor_file_$tag"; val posCol = s"__mor_pos_$tag"
-    // (fileKey, position) of LIVE rows matching the predicate — rows
-    // already in a DV are excluded so positions never double-count
-    val matches = DeletionVectors.livePositionsMatching(
-        readerFor(snap).parquet(cands.map(_.absolutePath(path)): _*),
-        path, cands, logicalCols(snap), coalesce(condition, lit(false)),
-        fileCol, posCol)
+    // (file key, position) of LIVE rows matching the predicate — the
+    // native scan drops rows already in a DV, so positions never
+    // double-count
+    val matches = readFiles(snap, cands, Seq(FileCol, PosCol))
+      .filter(coalesce(condition, lit(false)))
+      .select(FileCol, PosCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val counts = matches.groupBy(col(fileCol))
+      val counts = matches.groupBy(col(FileCol))
         .agg(count(lit(1)).as("__n")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       if (counts.isEmpty) return None
-      val byKey = cands.map(f =>
-        DeletionVectors.fileKey(f.absolutePath(path)) -> f).toMap
+      val byKey = cands.map(f => keyOf(f) -> f).toMap
       val cap = DeletionVectors.maxInline(snap.properties)
       val frac = DeletionVectors.maxDeletedFraction(snap.properties)
       // three-tier split on the GROWN vector size: inline under the
@@ -223,7 +188,7 @@ class VintageTable private (
         else {
           val dvKeySet = inlineKeys.toSet
           val newPositions = matches
-            .filter(col(fileCol).isInCollection(dvKeySet))
+            .filter(col(FileCol).isInCollection(dvKeySet))
             .collect()
             .map(r => (r.getString(0), r.getLong(1)))
             .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
@@ -236,18 +201,14 @@ class VintageTable private (
       val sidecarMarked =
         if (sidecarKeys.isEmpty) Nil
         else {
-          val scSet = sidecarKeys.toSet
-          val scFiles = sidecarKeys.map(byKey)
-          // full grown vector per file = prior positions (inline or
-          // sidecar — disjoint from the new matches by construction of
-          // livePositionsMatching) ++ new matches, written distributed
+          // full grown vector per file = prior positions (disjoint from
+          // the new matches, which are live rows) ++ new matches; the
+          // writer tasks read the prior ones
           val newPos = matches
-            .filter(col(fileCol).isInCollection(scSet))
-            .select(col(fileCol).as("file_key"), col(posCol).as("pos"))
-          val oldPos = DeletionVectors.dvLookup(
-            spark, path, scFiles, "file_key", "pos")
-          val rel = DeletionVectors.writeSidecar(
-            newPos.unionByName(oldPos), path)
+            .filter(col(FileCol).isInCollection(sidecarKeys.toSet))
+            .select(col(FileCol).as("file_key"), col(PosCol).as("pos"))
+          val rel = DeletionVectors.writeSidecar(newPos, path,
+            sidecarKeys.map(k => DeletionVectors.PriorVector(path, byKey(k))))
           sidecarKeys.map { k =>
             byKey(k).copy(dataChange = true, dv = Nil,
               dvRef = Some(DvRef(rel, grown(k))))
@@ -258,6 +219,20 @@ class VintageTable private (
     } finally matches.unpersist(blocking = false)
   }
 
+  /** Merge-on-read delete (`vintage.deletionVectors.enabled`): instead
+    * of rewriting every touched file, record the matching rows' file
+    * positions as deletion vectors — commit cost is O(deleted rows),
+    * not O(touched bytes), the decisive difference for sparse deletes
+    * at 100 TB. Per-file three-tier hybrid, graded by cardinality:
+    * vectors within `vintage.deletionVectors.maxInline` inline in the
+    * log; wider-but-sparse vectors go to a parquet SIDECAR under
+    * `_vintage_dv/` (written distributed — positions never touch the
+    * driver); files with >= `maxDeletedFraction` of their rows dead
+    * rewrite copy-on-write (when most of a file dies, rewriting the
+    * survivors is the cheaper plan AND keeps the table small). Reads
+    * subtract DVs in [[connector.VintageNativeScan]]; OPTIMIZE/compaction
+    * rewrites purge them.
+    */
   private def deleteWithDvs(snap: Snapshot, condition: Column): Unit = {
     val scope = PredicateRead(ColumnExpr.expr(condition))
     val params = Map("predicate" -> condition.toString, "mode" -> "merge-on-read")
@@ -724,18 +699,13 @@ class VintageTable private (
         // exact AddFiles, not just paths: a deletion-vector commit
         // re-adds the SAME path with a larger DV, and the diff below is
         // only position-exact if each side reads with ITS dv state
-        def readOrEmpty(files: Seq[AddFile]): DataFrame =
-          if (files.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapV.schema)
-          else readFilesExact(snapV, files)
         def tag(df: DataFrame, kind: String): DataFrame =
           df.withColumn("_change_type", lit(kind))
             .withColumn("_commit_version", lit(v))
         val tracked = RowTracking.enabled(snapV.properties)
         if (adds.isEmpty || removedFiles.isEmpty || !tracked) {
-          val a = readOrEmpty(adds)
-          val r = readOrEmpty(removedFiles)
+          val a = readFiles(snapV, adds)
+          val r = readFiles(snapV, removedFiles)
           val ins = if (removedFiles.isEmpty) a else a.exceptAll(r)
           val del = if (adds.isEmpty) r else r.exceptAll(a)
           Some(tag(ins, "insert").unionByName(tag(del, "delete")))
@@ -894,37 +864,16 @@ class VintageTable private (
         }
     }
     // sidecar vectors: one distributed rewrite into the clone's own
-    // _vintage_dv dir, old file keys mapped to the clone's
+    // _vintage_dv dir, each file's vector re-keyed to the clone's file
     val withRef = named.filter(_._1.dvRef.isDefined)
     val dvRel: Option[String] = if (withRef.isEmpty) None else {
       import spark.implicits._
-      val mapping = withRef.map { case (f, rel) =>
-        (DeletionVectors.fileKey(AddFile.resolve(path, f.dvRef.get.path)),
-         DeletionVectors.fileKey(f.absolutePath(path)),
-         DeletionVectors.fileKey(s"$abs/$rel"))
-      }
-      val scSchema = StructType(Seq(
-        StructField("file_key", org.apache.spark.sql.types.StringType,
-          nullable = false),
-        StructField("pos", org.apache.spark.sql.types.LongType),
-        StructField("pos_start", org.apache.spark.sql.types.LongType),
-        StructField("pos_end", org.apache.spark.sql.types.LongType)))
-      val rel =
-        s"${DeletionVectors.SidecarDirName}/${java.util.UUID.randomUUID()}"
-      spark.read.schema(scSchema).parquet(mapping.map(_._1).distinct: _*)
-        .select(
-          DeletionVectors.fileKeyExpr(
-            regexp_replace(col("_metadata.file_path"), "/[^/]+$", ""))
-            .as("__sc"),
-          col("file_key").as("__old"),
-          coalesce(col("pos_start"), col("pos")).as("pos_start"),
-          coalesce(col("pos_end"), col("pos")).as("pos_end"))
-        .join(broadcast(mapping.toDF("__sc", "__old", "__new")),
-          Seq("__sc", "__old"))
-        .select(col("__new").as("file_key"),
-          col("pos_start"), col("pos_end"))
-        .write.parquet(s"$abs/$rel")
-      Some(rel)
+      Some(DeletionVectors.writeSidecar(spark.emptyDataset[(String, Long)]
+          .toDF("file_key", "pos"), abs,
+        withRef.map { case (f, rel) =>
+          DeletionVectors.PriorVector(path, f)
+            .copy(key = DeletionVectors.fileKey(s"$abs/$rel"))
+        }))
     }
     val now = System.currentTimeMillis()
     val adds = named.map { case (f, rel) =>
@@ -1055,8 +1004,7 @@ class VintageTable private (
       commitOp(snap, op, params, Nil, Nil, None, FullRead): Unit
       return
     }
-    val byKey = snap.files.map(f =>
-      DeletionVectors.fileKey(f.absolutePath(path)) -> f).toMap
+    val byKey = snap.files.map(f => keyOf(f) -> f).toMap
     val unknown = countsByKey.keySet.filterNot(byKey.contains)
     require(unknown.isEmpty,
       s"row-level delta references files not in snapshot v$scanVersion: " +
@@ -1095,18 +1043,15 @@ class VintageTable private (
     val sidecarMarked =
       if (sidecarKeys.isEmpty) Nil
       else {
-        val set = sidecarKeys.toSet
-        val newPos = positions.filter(col("file_key").isInCollection(set))
-          .select(col("file_key"), col("pos"))
-        val oldPos = DeletionVectors.dvLookup(
-          spark, path, sidecarKeys.map(byKey), "file_key", "pos")
-        val rel = DeletionVectors.writeSidecar(newPos.unionByName(oldPos), path)
+        val newPos = positions.filter(col("file_key").isInCollection(sidecarKeys.toSet))
+        val rel = DeletionVectors.writeSidecar(newPos, path,
+          sidecarKeys.map(k => DeletionVectors.PriorVector(path, byKey(k))))
         sidecarKeys.map { k =>
           byKey(k).copy(dataChange = true, dv = Nil,
             dvRef = Some(DvRef(rel, grown(k))))
         }
       }
-    val dvPaths = (inlineKeys ++ sidecarKeys).map(byKey(_).path).toSet
+    val dvFiles = (inlineKeys ++ sidecarKeys).map(byKey)
     // SQL UPDATE/MERGE re-inserted rows may carry identity values past
     // the high-water mark (BY DEFAULT explicit inserts ride this path
     // too) — advance it in the same commit or later allocation collides
@@ -1117,10 +1062,10 @@ class VintageTable private (
       else Some(Metadata(snap.schema.json, snap.properties ++ idProps,
         snap.partitionColumns))
     commitOp(snap, op,
-      params + ("deletionVectors" -> dvPaths.size.toString,
+      params + ("deletionVectors" -> dvFiles.size.toString,
                 "insertedFiles" -> insertAdds.size.toString),
       marked ++ sidecarMarked ++ insertAdds,
-      removesFor(snap, dvPaths), meta, FullRead): Unit
+      removesForFiles(dvFiles), meta, FullRead): Unit
   }
 
   // --------------------------------------------------- maintenance utils
@@ -1134,7 +1079,7 @@ class VintageTable private (
     // bucketed tables: writeFiles re-buckets unconditionally (the
     // bucket count IS the file count), so the caller's repartition
     // would only add a dead shuffle
-    val rows = layoutRows(snap, None)
+    val rows = rewriteSourceExact(snap, snap.files)._1
     val arranged =
       if (Bucketing.spec(snap.properties).isDefined) rows
       else rows.repartition(numFiles)
@@ -1166,10 +1111,9 @@ class VintageTable private (
     val selected = snap.files.filter(f => f.size < minBytes || f.hasDv)
     // one small clean file alone cannot be packed any better
     if (selected.size < 2 && !selected.exists(_.hasDv)) return 0L
-    val sel = selected.map(_.path).toSet
     val numFiles = math.max(1,
       math.ceil(selected.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    val rows = layoutRows(snap, Some(sel))
+    val rows = rewriteSourceExact(snap, selected)._1
     // bucketed: skip the pre-shuffle, writeFiles re-buckets anyway
     val arranged =
       if (Bucketing.spec(snap.properties).isDefined) rows
@@ -1202,7 +1146,6 @@ class VintageTable private (
     toDF.filter(condition).queryExecution.analyzed
     val selected = candidateFiles(snap, condition)
     if (selected.isEmpty) return 0L
-    val sel = selected.map(_.path).toSet
     val numFiles = math.max(1,
       math.ceil(selected.map(_.size).sum.toDouble / targetFileBytes).toInt)
     // partitioned tables cluster by the partition columns, so each
@@ -1210,7 +1153,7 @@ class VintageTable private (
     // emits one file per partition value — a round-robin repartition
     // would spread every partition over every task and emit up to
     // numFiles × partitions files, fragmenting what it set out to fix
-    val rows = layoutRows(snap, Some(sel))
+    val rows = rewriteSourceExact(snap, selected)._1
     // bucketed: skip the pre-shuffle, writeFiles re-buckets anyway
     val arranged =
       if (Bucketing.spec(snap.properties).isDefined) rows
@@ -1242,7 +1185,7 @@ class VintageTable private (
   def cluster(numFiles: Int, cols: String*): Unit = {
     require(cols.nonEmpty, "cluster needs at least one column")
     val snap = snapshot
-    val df = layoutRows(snap, None)
+    val df = rewriteSourceExact(snap, snap.files)._1
     val clustered =
       if (cols.size == 1)
         df.repartitionByRange(numFiles, col(cols.head))
@@ -1803,40 +1746,35 @@ class VintageTable private (
     // predicates prune here exactly like data-column stats
     SnapshotPruning.candidates(spark, snap, ColumnExpr.expr(condition))
 
-  /** Files containing at least one row matching `condition` — the
-    * copy-on-write touch set. Stats pruning narrows the scan first, so
-    * a 1-key delete against a large table reads only the files whose
-    * stat range contains the key.
+  /** Canonical keys of the files containing at least one row matching
+    * `condition` — the copy-on-write touch set. Stats pruning narrows
+    * the scan first, so a 1-key delete against a large table reads only
+    * the files whose stat range contains the key.
     */
-  private[vintage] def touchedFiles(snap: Snapshot, condition: Column): Set[String] = {
-    val cands = candidateFiles(snap, condition)
-    if (cands.isEmpty) Set.empty
-    else {
-      readerFor(snap)
-        .parquet(cands.map(_.absolutePath(path)): _*)
-        .select(col("_metadata.file_path").as(FileCol) +: logicalCols(snap): _*)
-        .where(condition)
-        .select(col(FileCol))
-        .distinct()
-        .collect()
-        .map(r => relativize(r.getString(0)))
-        .toSet
-    }
-  }
+  private[vintage] def touchedFiles(snap: Snapshot, condition: Column): Set[String] =
+    touchedKeys(snap, candidateFiles(snap, condition))(_.where(condition))
 
-  /** Live files of `snap` named by `rel` — matching both the raw path
-    * and its canonical form (cloned absolute-path files meet scan
-    * `_metadata` paths on canonical terms). The ONE membership rule
-    * every touched-file consumer shares.
+  /** Canonical keys of the files among `files` holding a live row that
+    * `matching` keeps (a filter or a semi join over the rows of
+    * [[readFiles]] with [[FileCol]]). The key is canonicalized on the
+    * driver after `distinct`, one string per touched file: the plain
+    * reader yields `_metadata.file_path` URIs, the native scan keys
+    * that are canonical already.
     */
-  private[vintage] def filesIn(snap: Snapshot, rel: Set[String]): Seq[AddFile] =
-    snap.files.filter(isIn(rel))
+  private[vintage] def touchedKeys(snap: Snapshot, files: Seq[AddFile])(
+      matching: DataFrame => DataFrame): Set[String] =
+    if (files.isEmpty) Set.empty
+    else matching(readFiles(snap, files, Seq(FileCol)))
+      .select(FileCol).distinct().collect()
+      .map(r => canonicalKey(r.getString(0))).toSet
 
-  private[vintage] def isIn(rel: Set[String])(f: AddFile): Boolean =
-    rel.contains(f.path) || rel.contains(VintageTable.canonicalKey(f.path))
+  /** Canonical key of a file of this table: its `_vintage_file` value. */
+  private[vintage] def keyOf(f: AddFile): String =
+    DeletionVectors.fileKey(f.absolutePath(path))
 
-  private[vintage] def readFiles(snap: Snapshot, rel: Set[String]): DataFrame =
-    readFilesExact(snap, filesIn(snap, rel))
+  /** Live files of `snap` whose canonical keys are in `keys`. */
+  private[vintage] def filesIn(snap: Snapshot, keys: Set[String]): Seq[AddFile] =
+    snap.files.filter(f => keys.contains(keyOf(f)))
 
   /** Current rows plus their stable row ids as `_row_id` (row
     * tracking; see [[RowTracking]] for the stability contract). Rows
@@ -1849,92 +1787,79 @@ class VintageTable private (
     dfWithRowIds(snap, snap.files, RowTracking.RowIdCol)
   }
 
-  /** DV-subtracted rows of `files` with their row ids in `outName`:
-    * the materialized `_vintage_row_id` column when the file carries
-    * one (it was produced by a layout rewrite), else `baseRowId +
-    * parquet row_index`. The per-file base map rides a broadcast join
-    * — file METADATA, bounded, never data-sized.
+  /** Live rows of `files` with their row ids in `outName`: the native
+    * scan's `_vintage_row_id` (the materialized id, else the file's
+    * `baseRowId` + row index), whose `-1` for rows written before
+    * tracking was enabled reads as NULL here.
     */
   private def dfWithRowIds(snap: Snapshot, files: Seq[AddFile],
       outName: String): DataFrame = {
     require(RowTracking.enabled(snap.properties),
       s"row tracking is not enabled on $path (set ${RowTracking.EnabledProp})")
-    val outSchema = StructType(snap.schema.fields :+
-      StructField(outName, org.apache.spark.sql.types.LongType))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    val readSchema = ColumnMapping.physicalSchema(snap.schema)
-      .add(RowTracking.MaterializedCol,
-        org.apache.spark.sql.types.LongType, nullable = true)
-    val rd = spark.read.schema(readSchema)
-    val raw = (if (snap.partitionColumns.nonEmpty) rd.option("basePath", path)
-               else rd)
-      .parquet(files.map(_.absolutePath(path)): _*)
-    val keyC = "__rt_key"; val idxC = "__rt_idx"
-    val matC = "__rt_mat"; val baseC = "__rt_base"
-    val outputCols = logicalCols(snap) ++ Seq(
-      col(RowTracking.MaterializedCol).as(matC),
-      DeletionVectors.fileKeyExpr(col("_metadata.file_path")).as(keyC),
-      col("_metadata.row_index").as(idxC))
-    val live = DeletionVectors.applyTo(raw, path, files, outputCols)
-    import spark.implicits._
-    val bases = files
-      .map(f => (DeletionVectors.fileKey(f.absolutePath(path)), f.baseRowId))
-      .toDF(keyC, baseC)
-    live.join(broadcast(bases), Seq(keyC), "left")
-      .withColumn(outName, coalesce(col(matC), col(baseC) + col(idxC)))
-      .drop(keyC, idxC, matC, baseC)
+    val id = col(TrackIdCol)
+    readFiles(snap, files, Seq(TrackIdCol))
+      .select(snap.schema.fieldNames.toIndexedSeq.map(quoted) :+
+        when(id >= 0, id).as(outName): _*)
   }
 
-  /** Source rows of a DML REWRITE (update/delete/merge touched files),
-    * carrying the materialized row-id column when row tracking is on —
-    * Delta's stability contract: a rewritten survivor keeps its id, so
-    * the rewrite must write it physically (the new file's base range
-    * covers every row, but the read path prefers the materialized
-    * column; rows the rewrite INSERTS carry null there and fall back
-    * to base + index — disjoint from every materialized id because
-    * base ranges never overlap). Returns the frame plus the
+  /** Source rows of a REWRITE — DML (update/delete/merge touched files)
+    * and layout (compact / OPTIMIZE / cluster) alike — carrying the
+    * materialized row-id column when row tracking is on: Delta's
+    * stability contract. A rewritten survivor keeps its id, so the
+    * rewrite must write it physically (new file boundaries invalidate
+    * base + index; rows a DML rewrite INSERTS carry null there and fall
+    * back to base + index — disjoint from every materialized id because
+    * base ranges never overlap). Readers never see the column: it is
+    * not in the table schema they request. Returns the frame plus the
     * passthrough column to append to the rewrite projection.
     */
   private[vintage] def rewriteSourceExact(snap: Snapshot,
       files: Seq[AddFile]): (DataFrame, Seq[Column]) =
-    if (!RowTracking.enabled(snap.properties)) (readFilesExact(snap, files), Nil)
+    if (!RowTracking.enabled(snap.properties)) (readFiles(snap, files), Nil)
     else (dfWithRowIds(snap, files, RowTracking.MaterializedCol),
       Seq(col(RowTracking.MaterializedCol)))
 
   private[vintage] def rewriteSource(snap: Snapshot,
-      rel: Set[String]): (DataFrame, Seq[Column]) =
-    rewriteSourceExact(snap, filesIn(snap, rel))
+      keys: Set[String]): (DataFrame, Seq[Column]) =
+    rewriteSourceExact(snap, filesIn(snap, keys))
 
-  /** Source frame for LAYOUT rewrites (compact / OPTIMIZE / cluster):
-    * on a row-tracked table the rewritten files must physically CARRY
-    * their rows' ids — new file boundaries invalidate base+index — so
-    * the read appends the materialized column; readers never see it
-    * (it is not in the table schema they request).
+  /** Live rows of exactly these AddFiles (which need not be live in
+    * `snap` — the change feed reads a REMOVED file with the deletion
+    * vector it had before removal) in declared column order, plus the
+    * requested row-id columns ([[FileCol]], [[PosCol]], [[TrackIdCol]]).
+    * The ONE place an internal read chooses how deletion vectors
+    * apply: when no file carries a DV and at most the file key is
+    * asked for, the plain parquet reader reads (`_metadata.file_path`
+    * standing in for the key — see [[touchedKeys]]); otherwise
+    * [[nativeFrame]] does.
     */
-  private def layoutRows(snap: Snapshot, rel: Option[Set[String]]): DataFrame =
-    if (!RowTracking.enabled(snap.properties))
-      rel.fold(dfForSnapshot(snap))(readFiles(snap, _))
-    else dfWithRowIds(snap, rel.fold(snap.files)(filesIn(snap, _)),
-      RowTracking.MaterializedCol)
+  private[vintage] def readFiles(snap: Snapshot, files: Seq[AddFile],
+      rowIds: Seq[String] = Nil): DataFrame =
+    if (DeletionVectors.hasDvs(files) || rowIds.exists(_ != FileCol))
+      nativeFrame(snap.copy(files = files, spilled = None), rowIds)
+    else if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(snap.schema.fields ++ rowIds.map(StructField(_,
+          org.apache.spark.sql.types.StringType))))
+    else readerFor(snap).parquet(files.map(_.absolutePath(path)): _*)
+      // declared order under LOGICAL names (column mapping reads the
+      // physical ones)
+      .select(snap.schema.fields.toIndexedSeq.map(f =>
+          col(ColumnMapping.physicalName(f)).as(f.name)) ++
+        rowIds.map(_ => col("_metadata.file_path").as(FileCol)): _*)
 
-  /** Read exactly these AddFiles (which need not be live in `snap` —
-    * the change feed reads a REMOVED file with the deletion vector it
-    * had before removal), applying each file's DV.
+  /** Live rows of `s` through [[connector.VintageNativeScan]], the only
+    * code that applies deletion vectors and derives row positions and
+    * row ids: it drops deleted positions inside the task and serves
+    * `rowIds` as metadata columns. Filters on the frame push into the
+    * scan, which opens only their stats-pruned candidate files.
     */
-  private[vintage] def readFilesExact(snap: Snapshot, files: Seq[AddFile]): DataFrame =
-    DeletionVectors.applyTo(
-      readerFor(snap).parquet(files.map(_.absolutePath(path)): _*),
-      path, files, logicalCols(snap))
+  private[vintage] def nativeFrame(s: Snapshot, rowIds: Seq[String] = Nil): DataFrame =
+    DatasetOps.ofRows(spark, DataSourceV2Relation.create(
+        new VintageSqlTable(path, path, s, timeTravel = true), None, None))
+      .select((s.schema.fieldNames.toIndexedSeq ++ rowIds).map(quoted): _*)
 
-  /** Declared-order projection restoring LOGICAL names over a frame
-    * read with the snapshot's physical schema (identity rename when
-    * column mapping is off).
-    */
-  private[vintage] def logicalCols(snap: Snapshot): IndexedSeq[Column] =
-    snap.schema.fields.toIndexedSeq.map(f =>
-      col(ColumnMapping.physicalName(f)).as(f.name))
+  private def quoted(name: String): Column = col(QuotingUtils.quoteIdentifier(name))
 
   /** Parquet reader for this table's files — requests the PHYSICAL
     * schema (what is actually inside the files under column mapping;
@@ -1944,7 +1869,7 @@ class VintageTable private (
     * would reject — and partitioned tables never hold cloned absolute
     * files (shallowClone rejects them).
     */
-  private[vintage] def readerFor(snap: Snapshot): org.apache.spark.sql.DataFrameReader = {
+  private def readerFor(snap: Snapshot): org.apache.spark.sql.DataFrameReader = {
     val rd = spark.read.schema(ColumnMapping.physicalSchema(snap.schema))
     if (snap.partitionColumns.nonEmpty) rd.option("basePath", path) else rd
   }
@@ -1958,26 +1883,8 @@ class VintageTable private (
     files.map(f => RemoveFile(f.path, now, dataChange = true))
   }
 
-  private[vintage] def removesFor(snap: Snapshot, rel: Set[String]): Seq[RemoveFile] = {
-    val now = System.currentTimeMillis()
-    // canonicalKey bridges representations: a cloned AddFile may carry
-    // file:/abs while the scan's _metadata path relativized to /abs
-    filesIn(snap, rel).map(f => RemoveFile(f.path, now, dataChange = true))
-  }
-
-  private[vintage] def relativize(filePath: String): String = {
-    // _metadata.file_path yields a URI like file:/tmp/table/p=1/part-x.parquet;
-    // keep partition subdirectories in the relative path
-    val abs =
-      if (filePath.contains(":")) new java.net.URI(filePath).getPath
-      else filePath
-    val tableAbs = Option(new java.net.URI(path).getPath).getOrElse(path)
-    if (abs != null && abs.startsWith(tableAbs))
-      abs.substring(tableAbs.length).stripPrefix("/")
-    // outside the table root: a shallow-cloned file — produce the same
-    // canonical form removesFor/readFiles compare AddFile keys in
-    else VintageTable.canonicalKey(filePath)
-  }
+  private[vintage] def removesFor(snap: Snapshot, keys: Set[String]): Seq[RemoveFile] =
+    removesForFiles(filesIn(snap, keys))
 
   /** Commit with optimistic-concurrency retry: when another writer
     * wins the version race, re-read the log and re-commit at the next
@@ -2185,8 +2092,6 @@ object VintageTable {
     */
   private[graft] class MetadataConflictException(msg: String)
       extends java.util.ConcurrentModificationException(msg)
-
-  private[vintage] val FileCol = "__vintage_file"
 
   /** Staged-file count at or below which a commit finalizes its
     * renames + footer-stat reads on the DRIVER instead of a Spark job

@@ -39,8 +39,12 @@ import graft.vintage.{AddFile, ColumnMapping, DeletionVectors, FileSkipping, Par
   * index, drops rows whose index is in the file's vector and emits the
   * row ids beside the data ([[VintageDvReaderFactory]]). That path
   * reads rows instead of columnar batches; every other scan stays
-  * columnar. Both the SQL catalog's reads and the row-level
-  * DELETE/UPDATE/MERGE scan ([[VintageRowLevelOperation]]) plan here.
+  * columnar. This is the only code that applies deletion vectors or
+  * derives row positions and row ids: the SQL catalog's reads, the
+  * row-level DELETE/UPDATE/MERGE scan ([[VintageRowLevelOperation]])
+  * and every `VintageTable` read of a DV file or of a row id (fluent
+  * `toDF`, `format("vintage")`, streaming, change feed, fluent DML and
+  * layout rewrites) plan here.
   */
 class VintageNativeScan(
     spark: SparkSession, tablePath: String, snapshot: Snapshot,
@@ -329,8 +333,8 @@ private[connector] final class VintageDvReaderFactory(
             if (deleted.contains(pos)) dropped += 1
             else {
               ids.setLong(1, pos)
-              // same rule as the fluent reads: the materialized id, else
-              // the file's base range, else -1 (written before tracking)
+              // the materialized id, else the file's base range, else -1
+              // (written before tracking; fluent reads map it to NULL)
               if (matIndex >= 0) ids.setLong(2,
                 if (!r.isNullAt(matIndex)) r.getLong(matIndex)
                 else if (baseRowId >= 0) baseRowId + pos

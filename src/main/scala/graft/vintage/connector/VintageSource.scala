@@ -161,8 +161,8 @@ class VintageSource extends DataSourceRegister
       case (None, None) => VintageLog.replay(abs)
     }
     // merge-on-read: a snapshot with deletion vectors reads through the
-    // DV anti-join plan (still the vectorized parquet scan underneath;
-    // file pruning via the pushed filters, residual re-check by Spark).
+    // native scan, which drops deleted positions (file pruning via the
+    // pushed filters, residual re-check by Spark).
     // Compaction/OPTIMIZE purges DVs and restores the plain relation.
     if (graft.vintage.DeletionVectors.mayHave(snap))
       return DvRelations.pruned(sqlContext, abs, snap)

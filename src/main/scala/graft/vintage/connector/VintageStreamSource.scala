@@ -309,16 +309,18 @@ class VintageStreamSource(
     toStreamingDF(snap.copy(schema = schema, files = adds.result()))
   }
 
-  private def toStreamingDF(snap: Snapshot): DataFrame = {
-    val base = StreamingOps.ofRowsStreaming(spark,
-      VintageRelation(spark, tablePath, snap.copy(schema = schema)))
-    // deletion vectors: the initial snapshot (and a RESTORE-re-added
-    // file) must not emit deleted positions — a stream-static broadcast
-    // anti-join on (file, row_index), the same plan as batch reads
-    if (!graft.vintage.DeletionVectors.hasDvs(snap.files)) base
-    else graft.vintage.DeletionVectors.applyTo(base, tablePath, snap.files,
-      schema.fieldNames.toSeq.map(org.apache.spark.sql.functions.col))
-  }
+  /** Rows of the batch's files. Deletion vectors (the initial
+    * snapshot, a RESTORE-re-added file) must not emit deleted
+    * positions, so files with one read through the native scan, the
+    * same as batch reads.
+    */
+  private def toStreamingDF(snap: Snapshot): DataFrame =
+    if (!graft.vintage.DeletionVectors.hasDvs(snap.files))
+      StreamingOps.ofRowsStreaming(spark,
+        VintageRelation(spark, tablePath, snap.copy(schema = schema)))
+    else StreamingOps.ofComputedStreaming(spark,
+      graft.vintage.VintageTable.forPath(spark, tablePath)
+        .readFiles(snap.copy(schema = schema), snap.files))
 
   private def versionOf(o: Offset): Long = o match {
     case l: LongOffset       => l.offset

@@ -23,4 +23,10 @@ object StreamingOps {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
         isStreaming = true)
+
+  /** Block until the listener bus has delivered every posted event —
+    * streaming progress events included — to its listeners.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

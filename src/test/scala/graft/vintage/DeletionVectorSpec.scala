@@ -261,6 +261,28 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(t.toDF.count() == 10)
   }
 
+  test("merge matching only a DV-deleted key rewrites no file") {
+    val dir = newDir("merge-dead-key")
+    // three files with disjoint key ranges
+    val t = VintageTable.create(spark, dir,
+      (1L to 30L).map(i => (i, s"n$i")).toDF("id", "name")
+        .repartitionByRange(3, col("id")).sortWithinPartitions("id"),
+      properties = DvProps)
+    assert(t.snapshot.files.size == 3)
+    t.delete(col("id") === 5)
+    t.as("m").merge(Seq((5L, "back")).toDF("id", "name").as("s"), "m.id = s.id")
+      .whenMatched().updateAll()
+      .whenNotMatched().insertAll()
+      .execute()
+    // the deleted row is not a match: the merge only inserts
+    val actions = VintageLog.readVersion(dir, t.version)
+    assert(actions.collect { case r: RemoveFile => r }.isEmpty)
+    assert(actions.collect { case a: AddFile => a }.size == 1)
+    assert(t.toDF.filter(col("id") === 5).as[(Long, String)].collect().toSeq ==
+      Seq((5L, "back")))
+    assert(t.toDF.count() == 30)
+  }
+
   test("DV delete on a hive-partitioned table prunes and reads correctly") {
     val dir = newDir("part")
     val t = VintageTable.create(spark, dir,

@@ -4,16 +4,21 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.vintage.connector.VintageNativeScan
 
 /** The fluent read path: `toDF`, `toDFAsOf` and `toDFAsOfTimestamp`
   * read a snapshot without deletion vectors through the same file index
-  * as `format("vintage")`, so filters on the frame prune files by log
-  * stats; the rows and the declared column order are those of the
-  * plain snapshot read ([[VintageTable.dfForSnapshot]]).
+  * as `format("vintage")`, and one with them through the native scan;
+  * either way filters on the frame prune files by log stats. The rows
+  * and the declared column order are those of the plain snapshot read
+  * ([[VintageTable.dfForSnapshot]]), or, for deletion-vector tables,
+  * of the generator's rows minus the deleted ones.
   */
 class FluentReadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -64,9 +69,41 @@ class FluentReadSpec extends AnyFunSuite {
     t.delete(col("g") === 1)
     assert(DeletionVectors.hasDvs(t.snapshot.files))
     assert(t.toDF.count() == 27)
-    checkBoth(t, 0)
+    // oracle: the generator's rows, minus the deleted predicate
+    def generated(keep: Long => Boolean): Seq[String] =
+      (0L until 40L).filter(keep).map(i => s"$i|v$i|${i % 3}").sorted
+    def same(df: DataFrame, want: Seq[String]): Unit = {
+      assert(df.columns.toSeq == Seq("k", "v", "g"), "declared column order")
+      assert(df.schema.map(_.dataType) == Seq(LongType, StringType, LongType))
+      assert(df.collect().map(_.toSeq.mkString("|")).sorted.toSeq == want)
+    }
+    same(t.toDF, generated(_ % 3 != 1))
+    same(t.toDFAsOf(0), generated(_ => true))
     val ts = t.snapshot.commits.maxBy(_.version).timestamp
-    sameAsSnapshotRead(t, t.toDFAsOfTimestamp(ts), t.snapshot)
+    same(t.toDFAsOfTimestamp(ts), generated(_ % 3 != 1))
+  }
+
+  test("a filter on toDF of a deletion-vector table scans only the candidate files") {
+    val t = VintageTable.create(spark, newDir(),
+      (0L until 80L).map(i => (i, s"v$i")).toDF("k", "v")
+        .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
+      Map(DeletionVectors.EnabledProp -> "true"))
+    t.delete(col("k") % 10 === 0) // a deletion vector on every file
+    assert(t.snapshot.files.size == 4 && t.snapshot.files.forall(_.hasDv))
+    val cond = col("k") >= 25 && col("k") <= 35
+    assert(t.candidateFiles(t.snapshot, cond).size == 1)
+
+    val q = t.toDF.filter(cond)
+    // executes q's own plan → metrics populated
+    assert(q.collect().map(_.getLong(0)).sorted.toSeq == (25L to 35L).filterNot(_ == 30L))
+    val scans = q.queryExecution.executedPlan.collect {
+      case s: BatchScanExec if s.scan.isInstanceOf[VintageNativeScan] => s
+    }
+    assert(scans.size == 1, "expected one native scan")
+    def m(n: String) = scans.head.metrics(n).value
+    assert(m(VintageNativeScan.FilesTotal) == 4)
+    assert(m(VintageNativeScan.FilesCandidate) == 1,
+      s"scan must open the 1 candidate file, got ${m(VintageNativeScan.FilesCandidate)} of 4")
   }
 
   test("column-mapped table: renamed column reads under its logical name") {

@@ -14,8 +14,8 @@ import graft.vintage.connector.VintageNativeScan
 
 /** SQL reads of deletion-vector tables and of the row-id metadata
   * columns plan the native scan, which drops deleted positions per
-  * file inside the task: the rows are those of the fluent snapshot
-  * read ([[VintageTable.dfForSnapshot]], the broadcast anti-join) for
+  * file inside the task: the rows are the generator's rows minus the
+  * deleted ones, and the row ids those of a driver-side oracle, for
   * inline, sidecar (run-length and single-position), partitioned,
   * column-mapped, spilled and split-file tables.
   */
@@ -40,6 +40,13 @@ class NativeDvScanSpec extends AnyFunSuite with BeforeAndAfterAll
   private def rows(d: DataFrame): Seq[String] =
     d.collect().map(_.toSeq.mkString("|")).sorted.toSeq
 
+  /** The rows [[create]] writes, as [[rows]] formats them. */
+  private val generated: Seq[(Long, String)] = (1L to 300L).map(i => (i, s"$i|n$i|${i % 4}"))
+
+  /** The rows among `all` whose id `keep` accepts, as [[rows]] formats them. */
+  private def expect(all: Seq[(Long, String)])(keep: Long => Boolean): Seq[String] =
+    all.collect { case (i, r) if keep(i) => r }.sorted
+
   /** 300 rows over three files with disjoint id ranges. */
   private def create(name: String, props: Map[String, String] = DvProps,
       partitionBy: Seq[String] = Nil): VintageTable =
@@ -51,39 +58,56 @@ class NativeDvScanSpec extends AnyFunSuite with BeforeAndAfterAll
   private def scanOf(d: DataFrame): BatchScanExec =
     collect(d.queryExecution.executedPlan) { case b: BatchScanExec => b }.head
 
-  /** `SELECT *` equals the snapshot read, and only the native scan plans. */
-  private def sameAsSnapshot(name: String, t: VintageTable): Unit = {
+  /** `SELECT *` returns `want` in the declared columns, and only the
+    * native scan plans.
+    */
+  private def sameAsSnapshot(name: String, t: VintageTable, want: Seq[String]): Unit = {
     val q = spark.sql(s"SELECT * FROM ndv.$name")
     assert(q.columns.toSeq == t.snapshot.schema.fieldNames.toSeq)
-    assert(rows(q) == rows(t.dfForSnapshot(t.snapshot)))
+    assert(rows(q) == want)
     val plan = spark.sql(s"EXPLAIN SELECT * FROM ndv.$name").head().getString(0)
     assert(plan.contains("VintageNativeScan"), plan)
     assert(!plan.contains("VintageDvScan") && !plan.contains("VintageRowIdScan"), plan)
   }
 
-  /** The row-id frame of the retired V1 bridge: table columns plus the
-    * canonical file key and row index, deletion vectors applied by the
-    * anti-join.
+  /** Driver-side oracle of `_vintage_file, _vintage_pos, *` for a table
+    * of [[create]]'s columns: each file read raw with parquet's row
+    * index, minus the deleted positions collected from the log (inline)
+    * and from the sidecars (run rows or single positions).
     */
-  private def oldRowIdFrame(t: VintageTable): DataFrame = {
+  private def oldRowIdFrame(t: VintageTable): Seq[String] = {
     val s = t.snapshot
-    DeletionVectors.applyTo(
-      t.readerFor(s).parquet(s.files.map(_.absolutePath(t.path)): _*),
-      t.path, s.files,
-      Seq(DeletionVectors.fileKeyExpr(col("_metadata.file_path")).as("_vintage_file"),
-        col("_metadata.row_index").as("_vintage_pos")) ++ t.logicalCols(s))
+    s.files.flatMap { f =>
+      val key = DeletionVectors.fileKey(f.absolutePath(t.path))
+      val sidecar = f.dvRef.toSeq.flatMap { r =>
+        val sc = spark.read.parquet(AddFile.resolve(t.path, r.path))
+          .filter(col("file_key") === key)
+        if (sc.columns.contains("pos_start"))
+          sc.select("pos_start", "pos_end").as[(Long, Long)].collect().toSeq
+            .flatMap { case (a, b) => a to b }
+        else sc.select("pos").as[Long].collect().toSeq
+      }
+      val deleted = f.dv.toSet ++ sidecar
+      spark.read.parquet(f.absolutePath(t.path))
+        .select(col("_metadata.row_index"), col("id"), col("name"), col("p"))
+        .as[(Long, Long, String, Long)].collect().toSeq
+        .collect { case (pos, id, name, p) if !deleted(pos) => s"$key|$pos|$id|$name|$p" }
+    }.sorted
   }
 
   test("inline DVs: same rows as the snapshot read, row ids as the old frame") {
     val t = create("inl")
     t.delete(col("id") % 7 === 0)
     assert(t.snapshot.files.forall(f => f.dv.nonEmpty && f.dvRef.isEmpty))
-    sameAsSnapshot("inl", t)
+    sameAsSnapshot("inl", t, expect(generated)(_ % 7 != 0))
     assert(rows(spark.sql("SELECT _vintage_file, _vintage_pos, * FROM ndv.inl")) ==
-      rows(oldRowIdFrame(t)))
+      oldRowIdFrame(t))
     // row ids alone: the reader requests no data column at all
     assert(rows(spark.sql("SELECT _vintage_pos, _vintage_file FROM ndv.inl")) ==
-      rows(oldRowIdFrame(t).select("_vintage_pos", "_vintage_file")))
+      oldRowIdFrame(t).map { r =>
+        val Array(file, pos) = r.split('|').take(2)
+        s"$pos|$file"
+      }.sorted)
   }
 
   test("sidecar DVs, run-length and single-position, read inside the task") {
@@ -91,9 +115,10 @@ class NativeDvScanSpec extends AnyFunSuite with BeforeAndAfterAll
     t.delete(col("id") <= 40 || col("id") % 9 === 0)
     val refs = t.snapshot.files.flatMap(_.dvRef)
     assert(refs.nonEmpty && t.snapshot.files.forall(_.dv.isEmpty))
-    sameAsSnapshot("sc", t)
+    val live = expect(generated)(i => !(i <= 40 || i % 9 == 0))
+    sameAsSnapshot("sc", t, live)
     assert(rows(spark.sql("SELECT _vintage_file, _vintage_pos, * FROM ndv.sc")) ==
-      rows(oldRowIdFrame(t)))
+      oldRowIdFrame(t))
 
     // rewrite each sidecar in the format before run-length encoding:
     // one (file_key, pos) row per deleted position
@@ -106,25 +131,45 @@ class NativeDvScanSpec extends AnyFunSuite with BeforeAndAfterAll
       single.toDF("file_key", "pos").write.mode("overwrite").parquet(dir)
     }
     assert(!spark.read.parquet(dirs.head).columns.contains("pos_start"))
-    sameAsSnapshot("sc", t)
+    sameAsSnapshot("sc", t, live)
+    assert(rows(spark.sql("SELECT _vintage_file, _vintage_pos, * FROM ndv.sc")) ==
+      oldRowIdFrame(t))
     assert(spark.sql("SELECT count(*) FROM ndv.sc WHERE id <= 40").head().getLong(0) == 0)
+  }
+
+  test("row-level SQL DELETE grows a sidecar vector, keeping its prior positions") {
+    val t = create("scgrow", DvProps + (DeletionVectors.MaxInlineProp -> "5"))
+    t.delete(col("id") <= 40) // a sidecar on the first file
+    val first = t.snapshot.files.filter(_.dvRef.nonEmpty)
+    assert(first.size == 1 && first.head.dvCount == 40)
+    // the modulo is untranslatable: the row-level path commits
+    spark.sql("DELETE FROM ndv.scgrow WHERE id % 7 = 0 AND id < 150")
+    assert(t.history().head().getAs[Map[String, String]]("operationParameters")
+      .get("planner").contains("row-level"))
+    val grown = t.snapshot.files.filter(_.path == first.head.path)
+    assert(grown.size == 1 && grown.head.dvRef.exists(_ != first.head.dvRef.get))
+    val live = expect(generated)(i => i > 40 && !(i % 7 == 0 && i < 150))
+    sameAsSnapshot("scgrow", t, live)
+    assert(rows(spark.sql("SELECT _vintage_file, _vintage_pos, * FROM ndv.scgrow")) ==
+      oldRowIdFrame(t))
+    assert(t.snapshot.files.map(_.dvCount).sum == 300 - live.size)
   }
 
   test("partitioned and column-mapped DV tables") {
     val p = create("part", partitionBy = Seq("p"))
     p.delete(col("id") % 5 === 0)
-    sameAsSnapshot("part", p)
+    sameAsSnapshot("part", p, expect(generated)(_ % 5 != 0))
     assert(rows(spark.sql("SELECT id, p FROM ndv.part WHERE p = 2")) ==
-      rows(p.dfForSnapshot(p.snapshot).filter(col("p") === 2).select("id", "p")))
+      (1L to 300L).filter(i => i % 4 == 2 && i % 5 != 0).map(i => s"$i|2").sorted)
 
     val m = create("cm")
     m.enableColumnMapping()
     m.renameColumn("name", "label")
     m.delete(col("id") % 6 === 0)
     assert(ColumnMapping.mapped(m.snapshot.schema))
-    sameAsSnapshot("cm", m)
+    sameAsSnapshot("cm", m, expect(generated)(_ % 6 != 0))
     assert(rows(spark.sql("SELECT label FROM ndv.cm WHERE id > 290")) ==
-      rows(m.dfForSnapshot(m.snapshot).filter(col("id") > 290).select("label")))
+      (291L to 300L).filter(_ % 6 != 0).map(i => s"n$i").sorted)
   }
 
   test("spilled snapshot and a file split across partitions") {
@@ -136,7 +181,8 @@ class NativeDvScanSpec extends AnyFunSuite with BeforeAndAfterAll
       t.delete(col("id") % 3 === 0)
       VintageLog.clearSnapshotCache()
       assert(t.snapshot.spilled.isDefined)
-      sameAsSnapshot("spill", t)
+      sameAsSnapshot("spill", t, expect(generated ++
+        (1 to 10).map(c => (1000L + c, s"${1000 + c}|a$c|0")))(_ % 3 != 0))
     } finally {
       VintageLog.spillThreshold = prev
       VintageLog.clearSnapshotCache()
@@ -152,7 +198,7 @@ class NativeDvScanSpec extends AnyFunSuite with BeforeAndAfterAll
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
     try {
       val q = spark.sql("SELECT * FROM ndv.split")
-      assert(rows(q) == rows(t.dfForSnapshot(t.snapshot)))
+      assert(rows(q) == (1L to 20000L).filter(_ % 11 != 0).map(i => s"$i|name-$i").sorted)
       assert(scanOf(q).inputPartitions.size > 1, "the file must be split")
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
