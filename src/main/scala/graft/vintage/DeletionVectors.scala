@@ -196,12 +196,6 @@ object DeletionVectors {
       }
   }
 
-  /** Longest run one sidecar row may encode: bounds the array a
-    * reader that expands runs materializes per row (8192 longs =
-    * 64 KiB) while still collapsing a clustered delete ~8000:1.
-    */
-  private val MaxRunLength = 8192L
-
   /** A file's deletion vector as a commit finds it: the key the new
     * sidecar's rows carry, its inline positions, and the (sidecar dir,
     * key) its sidecar positions are read from.
@@ -272,9 +266,7 @@ object DeletionVectors {
     rel
   }
 
-  /** The `[start, end]` runs of `vector`, in order, each at most
-    * [[MaxRunLength]] long.
-    */
+  /** The maximal `[start, end]` runs of `vector`, in order. */
   private def runs(vector: Roaring64Bitmap): Iterator[(Long, Long)] = {
     val it = vector.getLongIterator
     var next = if (it.hasNext) it.next() else -1L
@@ -283,7 +275,7 @@ object DeletionVectors {
       next = -1L
       while (next < 0 && it.hasNext) {
         val p = it.next()
-        if (p == end + 1 && p - start < MaxRunLength) end = p else next = p
+        if (p == end + 1) end = p else next = p
       }
       (start, end)
     }

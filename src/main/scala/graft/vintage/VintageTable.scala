@@ -1756,17 +1756,20 @@ class VintageTable private (
 
   /** Canonical keys of the files among `files` holding a live row that
     * `matching` keeps (a filter or a semi join over the rows of
-    * [[readFiles]] with [[FileCol]]). The key is canonicalized on the
-    * driver after `distinct`, one string per touched file: the plain
-    * reader yields `_metadata.file_path` URIs, the native scan keys
-    * that are canonical already.
+    * [[readFiles]]). Files with a DV are read through the native scan,
+    * whose [[FileCol]] is the key; DV-free files keep the plain reader,
+    * whose `_metadata.file_path` URIs are resolved to keys on the driver
+    * after `distinct`, one string per touched file ([[scannedKeys]]).
     */
   private[vintage] def touchedKeys(snap: Snapshot, files: Seq[AddFile])(
       matching: DataFrame => DataFrame): Set[String] =
     if (files.isEmpty) Set.empty
-    else matching(readFiles(snap, files, Seq(FileCol)))
-      .select(FileCol).distinct().collect()
-      .map(r => canonicalKey(r.getString(0))).toSet
+    else if (DeletionVectors.hasDvs(files))
+      matching(readFiles(snap, files, Seq(FileCol)))
+        .select(FileCol).distinct().collect().map(_.getString(0)).toSet
+    else scannedKeys(path, files, matching(plainFrame(snap, files,
+        Seq(col("_metadata.file_path").as(ScannedUriCol))))
+      .select(ScannedUriCol).distinct().collect().map(_.getString(0)))
 
   /** Canonical key of a file of this table: its `_vintage_file` value. */
   private[vintage] def keyOf(f: AddFile): String =
@@ -1828,25 +1831,28 @@ class VintageTable private (
     * vector it had before removal) in declared column order, plus the
     * requested row-id columns ([[FileCol]], [[PosCol]], [[TrackIdCol]]).
     * The ONE place an internal read chooses how deletion vectors
-    * apply: when no file carries a DV and at most the file key is
-    * asked for, the plain parquet reader reads (`_metadata.file_path`
-    * standing in for the key — see [[touchedKeys]]); otherwise
-    * [[nativeFrame]] does.
+    * apply: when no file carries a DV and no row-id column is asked
+    * for, the plain parquet reader reads; otherwise [[nativeFrame]]
+    * does.
     */
   private[vintage] def readFiles(snap: Snapshot, files: Seq[AddFile],
       rowIds: Seq[String] = Nil): DataFrame =
-    if (DeletionVectors.hasDvs(files) || rowIds.exists(_ != FileCol))
+    if (DeletionVectors.hasDvs(files) || rowIds.nonEmpty)
       nativeFrame(snap.copy(files = files, spilled = None), rowIds)
     else if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(snap.schema.fields ++ rowIds.map(StructField(_,
-          org.apache.spark.sql.types.StringType))))
-    else readerFor(snap).parquet(files.map(_.absolutePath(path)): _*)
-      // declared order under LOGICAL names (column mapping reads the
-      // physical ones)
+        snap.schema)
+    else plainFrame(snap, files)
+
+  /** Rows of the DV-free `files` through the plain parquet reader in
+    * declared order under LOGICAL names (column mapping reads the
+    * physical ones), plus `extra` columns (of `_metadata`).
+    */
+  private def plainFrame(snap: Snapshot, files: Seq[AddFile],
+      extra: Seq[Column] = Nil): DataFrame =
+    readerFor(snap).parquet(files.map(_.absolutePath(path)): _*)
       .select(snap.schema.fields.toIndexedSeq.map(f =>
-          col(ColumnMapping.physicalName(f)).as(f.name)) ++
-        rowIds.map(_ => col("_metadata.file_path").as(FileCol)): _*)
+        col(ColumnMapping.physicalName(f)).as(f.name)) ++ extra: _*)
 
   /** Live rows of `s` through [[connector.VintageNativeScan]], the only
     * code that applies deletion vectors and derives row positions and
@@ -2125,6 +2131,31 @@ object VintageTable {
     * Delta's default week.
     */
   val MinSafeRetentionHours: Double = 168.0
+
+  /** Column of the plain reader's `_metadata.file_path` in
+    * [[touchedKeys]]' DV-free discovery.
+    */
+  private val ScannedUriCol = "_vintage_scanned_uri"
+
+  /** Canonical keys of `files` (of the table at `tablePath`) named by
+    * `uris`, the `_metadata.file_path` values of a plain scan of them.
+    * Such a URI is the FS-qualified, URL-encoded form of the path the
+    * scan was given, so it is compared by its decoded path: neither a
+    * default-FS authority (`hdfs://nn:8020/data/t/x` read from
+    * `/data/t/x`) nor an escaped character (`p=a%20b`) can hide a
+    * touched file. A URI naming none of `files` fails the operation
+    * rather than leaving its file out of the rewrite.
+    */
+  private[vintage] def scannedKeys(tablePath: String, files: Seq[AddFile],
+      uris: Iterable[String]): Set[String] = {
+    val byPath = files.map { f =>
+      val abs = f.absolutePath(tablePath)
+      new HPath(abs).toUri.getPath -> DeletionVectors.fileKey(abs)
+    }.toMap
+    uris.map(u => byPath.getOrElse(new java.net.URI(u).getPath,
+      throw new IllegalStateException(
+        s"scanned file $u is none of the ${files.size} files read"))).toSet
+  }
 
   /** Canonical comparison form of a log file path: local-FS URIs
     * (`file:/…`) reduce to their plain path so keys match whichever

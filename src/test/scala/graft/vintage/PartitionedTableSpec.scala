@@ -141,6 +141,54 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(removes3.map(_.path).forall(_.startsWith("day=2024-01-03")))
   }
 
+  test("scheme-qualified table path with a space in a partition dir: DML finds its files") {
+    // the log keeps `file:/…/key=a b/part-…`; the plain reader reports
+    // the URL-encoded `file:/…/key=a%20b/part-…` for the same file.
+    // Copy-on-write tables discover touched files through the plain
+    // reader, deletion-vector tables through the native scan.
+    Seq(false, true).foreach { dvs =>
+      val dir = "file:" + Files.createTempDirectory("vintage-part").toString + "/sp"
+      val t = VintageTable.create(spark, dir, Seq(
+          (1L, "a b", "x"), (2L, "a b", "y"), (3L, "a b", "z"), (4L, "plain", "w"))
+        .toDF("id", "key", "payload"), partitionBy = Seq("key"),
+        properties = Map(DeletionVectors.EnabledProp -> dvs.toString))
+      def rows = t.toDF.select("id", "payload").as[(Long, String)].collect().sorted.toSeq
+      def removed = VintageLog.readVersion(t.path, t.version)
+        .collect { case r: RemoveFile => r }
+
+      t.delete(col("id") === 1L)
+      assert(rows == Seq((2L, "y"), (3L, "z"), (4L, "w")), s"dvs=$dvs")
+      if (!dvs) assert(removed.nonEmpty && removed.forall(_.path.startsWith("key=a b/")))
+
+      t.update(col("id") === 2L, Map("payload" -> lit("u")))
+      assert(rows == Seq((2L, "u"), (3L, "z"), (4L, "w")), s"dvs=$dvs")
+
+      // a matched key updates in place: no duplicate of the old row
+      t.as("t").merge(Seq((3L, "a b", "m")).toDF("id", "key", "payload").as("s"),
+          "t.id = s.id")
+        .whenMatched().updateAll()
+        .whenNotMatched().insertAll()
+        .execute()
+      assert(rows == Seq((2L, "u"), (3L, "m"), (4L, "w")), s"dvs=$dvs")
+    }
+  }
+
+  test("scanned file URIs resolve to their files' keys by decoded path") {
+    // a table at `/data/t` on a default-FS cluster is scanned as
+    // `hdfs://nn:8020/data/t/…`, with escaped characters encoded
+    val files = Seq("key=a b/part-0.parquet", "key=plain/part-1.parquet")
+      .map(p => AddFile(p, 1L, 0L, dataChange = true))
+    assert(VintageTable.scannedKeys("/data/t", files,
+        Seq("hdfs://nn:8020/data/t/key=a%20b/part-0.parquet")) ==
+      Set("/data/t/key=a b/part-0.parquet"))
+    assert(VintageTable.scannedKeys("file:/data/t", files,
+        Seq("file:/data/t/key=plain/part-1.parquet")) ==
+      Set("/data/t/key=plain/part-1.parquet"))
+    intercept[IllegalStateException] {
+      VintageTable.scannedKeys("/data/t", files, Seq("hdfs://nn:8020/data/u/x.parquet"))
+    }
+  }
+
   test("SQL: CREATE TABLE PARTITIONED BY, INSERT, pruned SELECT, DESCRIBE shape") {
     val wh = Files.createTempDirectory("vintage-part-wh").toString
     spark.conf.set("spark.sql.catalog.vpart",
