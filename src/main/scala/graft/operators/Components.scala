@@ -162,11 +162,11 @@ object Components {
     // Converged edge set is a union of stars (v, center): every
     // non-center node points at its component min. Centers are added
     // back as their own component members. The result is materialized
-    // (see materializeSmall) so the last round's cache can be freed —
+    // (see checkpoint) so the last round's cache can be freed —
     // then re-bound to the CALLER's session (one leaf-RDD wrap; the
     // checkpointed data is not recomputed), so downstream evaluation
     // runs under the caller's own conf.
-    val out = Dedup.materializeSmall(
+    val out = Dedup.checkpoint(
       edges.select($"src".as("id"), $"dst".as("component"))
         .union(edges.select($"dst".as("id"), $"dst".as("component")))
         .groupBy("id").agg(min("component").as("component")))
@@ -291,10 +291,10 @@ object Components {
     // small extract
     val eps = edges.select(col("a").as("id"))
       .unionByName(edges.select(col("b").as("id"))).distinct()
-    val known = Dedup.materializeSmall(
+    val known = Dedup.checkpoint(
       labels.select(col("id"), col("component"))
         .join(broadcast(eps), Seq("id"), "left_semi"))
-    val epLab = Dedup.materializeSmall(
+    val epLab = Dedup.checkpoint(
       eps.join(broadcast(known), Seq("id"), "left")
         .select(col("id"), coalesce(col("component"), col("id")).as("lab")))
     val contracted = edges
@@ -347,10 +347,10 @@ object Components {
     // reused-exchange job tree) and are truncated every
     // `LabelCheckpointEvery` rounds so deep iteration counts keep a
     // bounded plan — the Pregel cadence.
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
+    val und = Dedup.checkpoint(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+        .distinct())
     var labels = und.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("lab"))
     for (i <- 1 to rounds) {
@@ -361,7 +361,7 @@ object Components {
         .select(col("v"), least(col("lab"), coalesce(col("nlab"), col("lab")))
           .as("lab"))
       if (i % LabelCheckpointEvery == 0 && i < rounds)
-        labels = labels.localCheckpoint()
+        labels = Dedup.checkpoint(labels)
     }
     labels
   }

@@ -27,8 +27,10 @@ object Dedup {
   /** Mersenne-ish prime > 2^32 for the minhash permutation ring. */
   private val P = 4294967311L
 
-  /** Materialize a (small) result set so heavyweight upstream persists
-    * can be freed immediately. Uses a RELIABLE checkpoint when the
+  /** Materialize `df` with its lineage truncated: a result set, so
+    * heavyweight upstream persists can be freed immediately, or the
+    * input or state of an iterative loop (PageRank, label propagation),
+    * so its plan stays bounded. Uses a RELIABLE checkpoint when the
     * session has a checkpoint dir configured — localCheckpoint blocks
     * live only on executor-local storage with lineage truncated, so an
     * executor loss (dynamic allocation, spot nodes) would make the
@@ -36,7 +38,7 @@ object Dedup {
     * pointed at durable storage the materialized set survives executor
     * churn. Falls back to localCheckpoint otherwise.
     */
-  private[operators] def materializeSmall(df: DataFrame): DataFrame = {
+  private[operators] def checkpoint(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (sc.getCheckpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
   }
@@ -211,7 +213,7 @@ object Dedup {
       // immediately instead of lingering for the caller's action.
       // NOTE: materialize=true executes the whole job EAGERLY at call
       // time — failures surface here, not at the caller's first action.
-      val out = materializeSmall(verified)
+      val out = checkpoint(verified)
       withSh.unpersist(blocking = false)
       eligible.unpersist(blocking = false)
       out
@@ -326,7 +328,7 @@ object Dedup {
       .distinct()
     if (!materialize) result
     else {
-      val out = materializeSmall(result)
+      val out = checkpoint(result)
       chunked.unpersist(blocking = false)
       eligible.unpersist(blocking = false)
       out
@@ -399,7 +401,7 @@ object Dedup {
       .distinct()
     if (!materialize) result
     else {
-      val out = materializeSmall(result)
+      val out = checkpoint(result)
       chunked.unpersist(blocking = false)
       eligible.unpersist(blocking = false)
       out
@@ -451,7 +453,7 @@ object Dedup {
       .select(col("corpus_id"), col("ref_id"), col("jaccard"))
     if (!materialize) verified
     else {
-      val out = materializeSmall(verified)
+      val out = checkpoint(verified)
       cSh.unpersist(blocking = false)
       rSh.unpersist(blocking = false)
       out
@@ -544,7 +546,7 @@ object Dedup {
       materialize, corpusScaleBatch = true)
     if (!materialize) verified
     else {
-      val out = materializeSmall(verified)
+      val out = checkpoint(verified)
       nSh.unpersist(blocking = false)
       out
     }
@@ -591,7 +593,7 @@ object Dedup {
       .distinct()
     // referenced twice below (candidate ids + verification rows):
     // batch-bounded, so materialize instead of re-running the index join
-    val cands = if (materialize) materializeSmall(cands0) else cands0
+    val cands = if (materialize) checkpoint(cands0) else cands0
     val candIds = cands.select(col("stored_id").as("__cand_id")).distinct()
     val storedCand = storedDocs
       .join(broadcast(candIds), col(indexIdCol) === col("__cand_id"),

@@ -261,7 +261,7 @@ object ImageHash {
       .distinct()
     if (!materialize) result
     else {
-      val out = Dedup.materializeSmall(result)
+      val out = Dedup.checkpoint(result)
       chunked.unpersist(blocking = false)
       eligible.unpersist(blocking = false)
       out
@@ -334,7 +334,7 @@ object ImageHash {
       .distinct()
     if (!materialize) result
     else {
-      val out = Dedup.materializeSmall(result)
+      val out = Dedup.checkpoint(result)
       chunked.unpersist(blocking = false)
       eligible.unpersist(blocking = false)
       out

@@ -151,7 +151,7 @@ object NearDupIndex {
     val nSh = Dedup.signatures(newDocs, idCol, textCol, shingleSize,
       numHashes).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val nB = Dedup.materializeSmall(
+      val nB = Dedup.checkpoint(
         Dedup.bandedBuckets(nSh, bands, r, minSize = 1, maxBucketSize))
       val keys = nB.select(col("__bucket")).distinct()
         .collect().map(_.getLong(0))
@@ -159,7 +159,7 @@ object NearDupIndex {
         if (keys.isEmpty) idx0.limit(0) // empty batch: schema-only
         else idx0.filter(col("bucket").isin(keys.map(java.lang.Long.valueOf)
           .toIndexedSeq: _*))
-      Dedup.materializeSmall(
+      Dedup.checkpoint(
         Dedup.verifyAgainstIndex(nSh, nB, idx, indexIdCol, storedDocs,
           storedTextCol, shingleSize, threshold, maxBucketSize,
           materialize = true))

@@ -47,8 +47,8 @@ object PageRank {
     // tree avoids), so ranks stay lazy and are truncated every
     // `CheckpointEvery` rounds — free at shallow iteration counts, a
     // bounded-plan guarantee for deep ones (the Pregel cadence).
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint()
+    val e = Dedup.checkpoint(
+      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
     val nodes = e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v"))).distinct()
     val nn = nodes.agg(count(lit(1)).as("n"))
@@ -64,7 +64,7 @@ object PageRank {
         .select(col("v"),
           (expr(s"(15 * $E12) div (100 * n)")
             + expr("(85 * coalesce(m, 0L)) div 100")).as("r"))
-      if (i % CheckpointEvery == 0 && i < iters) r = r.localCheckpoint()
+      if (i % CheckpointEvery == 0 && i < iters) r = Dedup.checkpoint(r)
     }
     r.select(col("v"), col("r").as("rank_e12"))
   }

@@ -321,7 +321,7 @@ object Similarity {
       .distinct() // a pair colliding in several tables reports once
     if (!materialize) result
     else {
-      val out = graft.operators.Dedup.materializeSmall(result)
+      val out = graft.operators.Dedup.checkpoint(result)
       withB.unpersist(blocking = false)
       eligible.unpersist(blocking = false)
       out
@@ -384,7 +384,7 @@ object Similarity {
       .filter(col("cosine_sim") >= threshold)
     if (!materialize) result
     else {
-      val out = graft.operators.Dedup.materializeSmall(result)
+      val out = graft.operators.Dedup.checkpoint(result)
       eligible.unpersist(blocking = false)
       assigned.unpersist(blocking = false)
       out

@@ -17,9 +17,10 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   * holds each file's vector in its task and drops the rows whose index
   * is in it, reading a sidecar itself ([[sidecarPositions]]). Every
   * read of a file with a DV goes through it — SQL, fluent, V1
-  * `format("vintage")`, streaming, change feed and the DML scans
-  * (`VintageTable.readFiles` makes the choice) — and it is also the
-  * only source of row positions and row ids.
+  * `format("vintage")`, streaming, change feed and the DML scans (every
+  * internal read of a file set is `VintageTable.readFiles`, which always
+  * plans it) — and it is also the only source of row positions and
+  * row ids. Commits grow vectors through one tier policy ([[grow]]).
   *
   * DV storage is three-tier per file, graded by cardinality:
   *   - INLINE (<= `maxInline` positions AND within the commit-wide
@@ -127,11 +128,10 @@ object DeletionVectors {
   /** Remaining table-wide inline budget for one commit: the cap minus
     * the UNTOUCHED files' existing inline positions — snapshot replay
     * materializes every inline vector, so the bound is table-wide, not
-    * per-commit. Shared by the fluent and SQL row-level paths so the
-    * budget rule cannot diverge between them.
+    * per-commit.
     */
-  private[vintage] def remainingInlineBudget(snap: Snapshot,
-      touched: Iterable[String], byKey: Map[String, AddFile]): Long = {
+  private def remainingInlineBudget(snap: Snapshot,
+      touched: Iterable[AddFile]): Long = {
     // spilled snapshots sum the table-wide inline total DISTRIBUTED
     // over the checkpoint rows instead of walking a driver file list
     val tableInline = snap.spilled match {
@@ -139,9 +139,54 @@ object DeletionVectors {
         ix.inlineDvTotal(org.apache.spark.sql.SparkSession.active)
       case None => snap.files.iterator.map(_.dv.size.toLong).sum
     }
-    val untouchedInline = tableInline -
-      touched.iterator.map(k => byKey(k).dv.size.toLong).sum
+    val untouchedInline = tableInline - touched.iterator.map(_.dv.size.toLong).sum
     math.max(0L, maxInlineTotal(snap.properties) - untouchedInline)
+  }
+
+  /** The grown AddFiles of one row-level commit that marks `positions`
+    * (rows `(file_key, pos)` of live rows, so disjoint from each file's
+    * prior vector) deleted, `counts` of them per file key — the one
+    * tier policy of the fluent and SQL row-level paths. `touched` holds
+    * every file the commit replaces by key: those of `counts` plus any
+    * the caller rewrites instead, which leave the table-wide budget.
+    * `positions` is read only where a vector grows. A grown vector
+    * stays inline when it is within the per-file cap and
+    * its file has no sidecar (sidecar is sticky: the prior positions of
+    * a sidecar exist only distributed, and inlining would read them
+    * onto the driver), unless the global budget demotes it; every other
+    * grown vector goes to one new sidecar.
+    */
+  private[vintage] def grow(snap: Snapshot, tablePath: String,
+      touched: Map[String, AddFile], positions: => DataFrame,
+      counts: Map[String, Long]): Seq[AddFile] = {
+    val grown = counts.map { case (k, c) => k -> (touched(k).dvCount + c) }
+    val cap = maxInline(snap.properties)
+    val (inlineCandidates, overCap) = counts.keys.toSeq
+      .partition(k => grown(k) <= cap && touched(k).dvRef.isEmpty)
+    val (inlineKeys, demoted) = applyInlineBudget(inlineCandidates, grown,
+      remainingInlineBudget(snap, touched.values))
+    val sidecarKeys = overCap ++ demoted
+    def of(keys: Seq[String]) = positions.filter(col("file_key").isInCollection(keys.toSet))
+    // bounded collect: <= cap positions per inline file
+    val inline =
+      if (inlineKeys.isEmpty) Map.empty[String, Array[Long]]
+      else of(inlineKeys).collect().map(r => (r.getString(0), r.getLong(1)))
+        .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
+    val marked = inlineKeys.map { k =>
+      val f = touched(k)
+      f.copy(dataChange = true,
+        dv = (f.dv ++ inline.getOrElse(k, Array.empty[Long])).distinct.sorted)
+    }
+    val sidecarMarked =
+      if (sidecarKeys.isEmpty) Nil
+      else {
+        val rel = writeSidecar(of(sidecarKeys), tablePath,
+          sidecarKeys.map(k => PriorVector(tablePath, touched(k))))
+        sidecarKeys.map { k =>
+          touched(k).copy(dataChange = true, dv = Nil, dvRef = Some(DvRef(rel, grown(k))))
+        }
+      }
+    marked ++ sidecarMarked
   }
 
   def hasDvs(files: Seq[AddFile]): Boolean = files.exists(_.hasDv)

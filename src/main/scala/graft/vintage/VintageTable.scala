@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftshim.{ColumnExpr, DatasetOps, VintageRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.vintage.connector.VintageRowLevel.{FileCol, PosCol, TrackIdCol}
 import graft.vintage.connector.VintageSqlTable
@@ -134,16 +134,16 @@ class VintageTable private (
 
   /** Shared planning of a merge-on-read row-level op: find the LIVE
     * rows matching `condition` in the stats-pruned candidate files,
-    * then split the touched files into the three tiers — inline
-    * DV-marked AddFiles (`marked`), sidecar-referencing AddFiles
-    * (`sidecarMarked`, whose shared sidecar this writes), and
-    * copy-on-write rewrites (`rewriteFiles`). `None` = nothing
-    * matched. The matches frame is persisted for the jobs that reuse
-    * it (counts, inline positions, sidecar write) so candidates are
-    * scanned once, and unpersisted before returning.
+    * then split the touched files into copy-on-write rewrites
+    * (`rewriteFiles`) and files whose deletion vectors grow
+    * ([[DeletionVectors.grow]]): `dvFiles` as they are, `grown` with
+    * the new vectors. `None` = nothing matched. The matches frame is
+    * persisted for the jobs that reuse it (counts, inline positions,
+    * sidecar write) so candidates are scanned once, and unpersisted
+    * before returning.
     */
-  private case class MorPlan(marked: Seq[AddFile], sidecarMarked: Seq[AddFile],
-      dvFiles: Seq[AddFile], rewriteFiles: Seq[AddFile])
+  private case class MorPlan(grown: Seq[AddFile], dvFiles: Seq[AddFile],
+      rewriteFiles: Seq[AddFile])
 
   private def planMergeOnRead(
       snap: Snapshot, cands: Seq[AddFile], condition: Column): Option[MorPlan] = {
@@ -152,70 +152,28 @@ class VintageTable private (
     // double-count
     val matches = readFiles(snap, cands, Seq(FileCol, PosCol))
       .filter(coalesce(condition, lit(false)))
-      .select(FileCol, PosCol)
+      .select(col(FileCol).as("file_key"), col(PosCol).as("pos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val counts = matches.groupBy(col(FileCol))
+      val counts = matches.groupBy(col("file_key"))
         .agg(count(lit(1)).as("__n")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       if (counts.isEmpty) return None
       val byKey = cands.map(f => keyOf(f) -> f).toMap
+      val touched = counts.keys.map(k => k -> byKey(k)).toMap
       val cap = DeletionVectors.maxInline(snap.properties)
       val frac = DeletionVectors.maxDeletedFraction(snap.properties)
-      // three-tier split on the GROWN vector size: inline under the
-      // cap; past the cap, rewrite only when the file is dense-dead
-      // (fraction known and reached), else sidecar
-      val grown = counts.keys.toSeq
-        .map(k => k -> (byKey(k).dvCount + counts(k))).toMap
-      // sidecar is sticky: a file whose vector already lives in a
-      // sidecar stays on that tier even when grown <= cap (its prior
-      // positions exist only distributed; inlining would mean reading
-      // the sidecar onto the driver)
-      val (inlineCandidates, overCap) = counts.keys.toSeq
-        .partition(k => grown(k) <= cap && byKey(k).dvRef.isEmpty)
-      val (rewriteKeys, overCapSidecar) = overCap.partition { k =>
-        byKey(k).numRecords.exists(n => grown(k) >= frac * n)
+      // a file whose grown vector leaves the inline tier rewrites when
+      // it is dense-dead (fraction known and reached)
+      val rewriteKeys = counts.keySet.filter { k =>
+        val f = byKey(k)
+        val n = f.dvCount + counts(k)
+        (n > cap || f.dvRef.nonEmpty) && f.numRecords.exists(rows => n >= frac * rows)
       }
-      // global budget: per-file-cap survivors still demote to the
-      // distributed sidecar tier when the TABLE-WIDE inline total
-      // would flood the driver
-      val (inlineKeys, demoted) = DeletionVectors.applyInlineBudget(
-        inlineCandidates, grown,
-        DeletionVectors.remainingInlineBudget(snap, counts.keys, byKey))
-      val sidecarKeys = overCapSidecar ++ demoted
-      val marked =
-        if (inlineKeys.isEmpty) Nil
-        else {
-          val dvKeySet = inlineKeys.toSet
-          val newPositions = matches
-            .filter(col(FileCol).isInCollection(dvKeySet))
-            .collect()
-            .map(r => (r.getString(0), r.getLong(1)))
-            .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
-          inlineKeys.map { k =>
-            val f = byKey(k)
-            f.copy(dataChange = true,
-              dv = (f.dv ++ newPositions(k)).distinct.sorted)
-          }
-        }
-      val sidecarMarked =
-        if (sidecarKeys.isEmpty) Nil
-        else {
-          // full grown vector per file = prior positions (disjoint from
-          // the new matches, which are live rows) ++ new matches; the
-          // writer tasks read the prior ones
-          val newPos = matches
-            .filter(col(FileCol).isInCollection(sidecarKeys.toSet))
-            .select(col(FileCol).as("file_key"), col(PosCol).as("pos"))
-          val rel = DeletionVectors.writeSidecar(newPos, path,
-            sidecarKeys.map(k => DeletionVectors.PriorVector(path, byKey(k))))
-          sidecarKeys.map { k =>
-            byKey(k).copy(dataChange = true, dv = Nil,
-              dvRef = Some(DvRef(rel, grown(k))))
-          }
-        }
-      Some(MorPlan(marked, sidecarMarked,
-        (inlineKeys ++ sidecarKeys).map(byKey), rewriteKeys.map(byKey)))
+      val grown = DeletionVectors.grow(snap, path, touched, matches,
+        counts -- rewriteKeys)
+      Some(MorPlan(grown, grown.map(f => byKey(keyOf(f))),
+        rewriteKeys.toSeq.map(byKey)))
     } finally matches.unpersist(blocking = false)
   }
 
@@ -256,7 +214,7 @@ class VintageTable private (
         commitOp(snap, "DELETE",
           params + ("deletionVectors" -> p.dvFiles.size.toString,
                     "rewrittenFiles" -> p.rewriteFiles.size.toString),
-          p.marked ++ p.sidecarMarked ++ rewriteAdds,
+          p.grown ++ rewriteAdds,
           removesForFiles(p.dvFiles ++ p.rewriteFiles), None, scope)
     }
   }
@@ -316,7 +274,7 @@ class VintageTable private (
     plan match {
       case None => commitOp(snap, "UPDATE", params, Nil, Nil, None, scope): Unit
       case Some(p) =>
-        // DV side: old positions are marked deleted (p.marked); append
+        // DV side: old positions are marked deleted (p.grown); append
         // the matched LIVE rows with the SET applied as new files
         // (row ids materialize through the rewrite — stability)
         val updatedAdds =
@@ -345,7 +303,7 @@ class VintageTable private (
         commitOp(snap, "UPDATE",
           params + ("deletionVectors" -> p.dvFiles.size.toString,
                     "rewrittenFiles" -> p.rewriteFiles.size.toString),
-          p.marked ++ p.sidecarMarked ++ updatedAdds ++ rewriteAdds,
+          p.grown ++ updatedAdds ++ rewriteAdds,
           removesForFiles(p.dvFiles ++ p.rewriteFiles), None, scope)
     }
   }
@@ -1009,49 +967,12 @@ class VintageTable private (
     require(unknown.isEmpty,
       s"row-level delta references files not in snapshot v$scanVersion: " +
       unknown.take(3).mkString(","))
-    val cap = DeletionVectors.maxInline(snap.properties)
-    val grown = countsByKey.map { case (k, c) => k -> (byKey(k).dvCount + c) }
-    // sidecar is sticky here too (see planMergeOnRead)
-    val (inlineCandidates, overCap) = countsByKey.keys.toSeq
-      .partition(k => grown(k) <= cap && byKey(k).dvRef.isEmpty)
-    // same TABLE-WIDE global budget as the fluent path (planMergeOnRead)
-    val (inlineKeys, demoted) = DeletionVectors.applyInlineBudget(
-      inlineCandidates, grown,
-      DeletionVectors.remainingInlineBudget(snap, countsByKey.keys, byKey))
-    val sidecarKeys = overCap ++ demoted
-    def positions: DataFrame = spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_key",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    def positions = spark.read
+      .schema(StructType(Seq(StructField("file_key", StringType, nullable = false),
+        StructField("pos", LongType, nullable = false))))
       .parquet(positionFiles: _*)
-    val marked =
-      if (inlineKeys.isEmpty) Nil
-      else {
-        val set = inlineKeys.toSet
-        // bounded collect: <= cap positions per inline file
-        val perKey = positions.filter(col("file_key").isInCollection(set))
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-          .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
-        inlineKeys.map { k =>
-          val f = byKey(k)
-          f.copy(dataChange = true,
-            dv = (f.dv ++ perKey.getOrElse(k, Array.empty[Long])).distinct.sorted)
-        }
-      }
-    val sidecarMarked =
-      if (sidecarKeys.isEmpty) Nil
-      else {
-        val newPos = positions.filter(col("file_key").isInCollection(sidecarKeys.toSet))
-        val rel = DeletionVectors.writeSidecar(newPos, path,
-          sidecarKeys.map(k => DeletionVectors.PriorVector(path, byKey(k))))
-        sidecarKeys.map { k =>
-          byKey(k).copy(dataChange = true, dv = Nil,
-            dvRef = Some(DvRef(rel, grown(k))))
-        }
-      }
-    val dvFiles = (inlineKeys ++ sidecarKeys).map(byKey)
+    val grown = DeletionVectors.grow(snap, path,
+      countsByKey.keys.map(k => k -> byKey(k)).toMap, positions, countsByKey)
     // SQL UPDATE/MERGE re-inserted rows may carry identity values past
     // the high-water mark (BY DEFAULT explicit inserts ride this path
     // too) — advance it in the same commit or later allocation collides
@@ -1062,10 +983,10 @@ class VintageTable private (
       else Some(Metadata(snap.schema.json, snap.properties ++ idProps,
         snap.partitionColumns))
     commitOp(snap, op,
-      params + ("deletionVectors" -> dvFiles.size.toString,
+      params + ("deletionVectors" -> grown.size.toString,
                 "insertedFiles" -> insertAdds.size.toString),
-      marked ++ sidecarMarked ++ insertAdds,
-      removesForFiles(dvFiles), meta, FullRead): Unit
+      grown ++ insertAdds,
+      removesForFiles(grown), meta, FullRead): Unit
   }
 
   // --------------------------------------------------- maintenance utils
@@ -1756,20 +1677,14 @@ class VintageTable private (
 
   /** Canonical keys of the files among `files` holding a live row that
     * `matching` keeps (a filter or a semi join over the rows of
-    * [[readFiles]]). Files with a DV are read through the native scan,
-    * whose [[FileCol]] is the key; DV-free files keep the plain reader,
-    * whose `_metadata.file_path` URIs are resolved to keys on the driver
-    * after `distinct`, one string per touched file ([[scannedKeys]]).
+    * [[readFiles]]): the distinct [[FileCol]] values of the matching
+    * rows, which the native scan serves as the log's key of each file.
     */
   private[vintage] def touchedKeys(snap: Snapshot, files: Seq[AddFile])(
       matching: DataFrame => DataFrame): Set[String] =
     if (files.isEmpty) Set.empty
-    else if (DeletionVectors.hasDvs(files))
-      matching(readFiles(snap, files, Seq(FileCol)))
-        .select(FileCol).distinct().collect().map(_.getString(0)).toSet
-    else scannedKeys(path, files, matching(plainFrame(snap, files,
-        Seq(col("_metadata.file_path").as(ScannedUriCol))))
-      .select(ScannedUriCol).distinct().collect().map(_.getString(0)))
+    else matching(readFiles(snap, files, Seq(FileCol)))
+      .select(FileCol).distinct().collect().map(_.getString(0)).toSet
 
   /** Canonical key of a file of this table: its `_vintage_file` value. */
   private[vintage] def keyOf(f: AddFile): String =
@@ -1829,35 +1744,19 @@ class VintageTable private (
   /** Live rows of exactly these AddFiles (which need not be live in
     * `snap` — the change feed reads a REMOVED file with the deletion
     * vector it had before removal) in declared column order, plus the
-    * requested row-id columns ([[FileCol]], [[PosCol]], [[TrackIdCol]]).
-    * The ONE place an internal read chooses how deletion vectors
-    * apply: when no file carries a DV and no row-id column is asked
-    * for, the plain parquet reader reads; otherwise [[nativeFrame]]
-    * does.
+    * requested row-id columns ([[FileCol]], [[PosCol]], [[TrackIdCol]]):
+    * the one internal read of a file set, through [[nativeFrame]].
     */
   private[vintage] def readFiles(snap: Snapshot, files: Seq[AddFile],
       rowIds: Seq[String] = Nil): DataFrame =
-    if (DeletionVectors.hasDvs(files) || rowIds.nonEmpty)
-      nativeFrame(snap.copy(files = files, spilled = None), rowIds)
-    else if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        snap.schema)
-    else plainFrame(snap, files)
-
-  /** Rows of the DV-free `files` through the plain parquet reader in
-    * declared order under LOGICAL names (column mapping reads the
-    * physical ones), plus `extra` columns (of `_metadata`).
-    */
-  private def plainFrame(snap: Snapshot, files: Seq[AddFile],
-      extra: Seq[Column] = Nil): DataFrame =
-    readerFor(snap).parquet(files.map(_.absolutePath(path)): _*)
-      .select(snap.schema.fields.toIndexedSeq.map(f =>
-        col(ColumnMapping.physicalName(f)).as(f.name)) ++ extra: _*)
+    nativeFrame(snap.copy(files = files, spilled = None), rowIds)
 
   /** Live rows of `s` through [[connector.VintageNativeScan]], the only
     * code that applies deletion vectors and derives row positions and
     * row ids: it drops deleted positions inside the task and serves
-    * `rowIds` as metadata columns. Filters on the frame push into the
+    * `rowIds` as metadata columns. [[FileCol]] is the log's key of each
+    * file ([[keyOf]]), a per-file constant that keeps a scan without a
+    * DV or a position columnar. Filters on the frame push into the
     * scan, which opens only their stats-pruned candidate files.
     */
   private[vintage] def nativeFrame(s: Snapshot, rowIds: Seq[String] = Nil): DataFrame =
@@ -1866,19 +1765,6 @@ class VintageTable private (
       .select((s.schema.fieldNames.toIndexedSeq ++ rowIds).map(quoted): _*)
 
   private def quoted(name: String): Column = col(QuotingUtils.quoteIdentifier(name))
-
-  /** Parquet reader for this table's files — requests the PHYSICAL
-    * schema (what is actually inside the files under column mapping;
-    * identical to the logical one otherwise). `basePath` (hive
-    * partition inference) is set only for partitioned tables: a
-    * shallow clone's files live OUTSIDE the table root, which basePath
-    * would reject — and partitioned tables never hold cloned absolute
-    * files (shallowClone rejects them).
-    */
-  private def readerFor(snap: Snapshot): org.apache.spark.sql.DataFrameReader = {
-    val rd = spark.read.schema(ColumnMapping.physicalSchema(snap.schema))
-    if (snap.partitionColumns.nonEmpty) rd.option("basePath", path) else rd
-  }
 
   /** Removes for AddFiles the caller already holds (pruned DML plans)
     * — never walks the snapshot file list, so merge-on-read DML on a
@@ -2131,31 +2017,6 @@ object VintageTable {
     * Delta's default week.
     */
   val MinSafeRetentionHours: Double = 168.0
-
-  /** Column of the plain reader's `_metadata.file_path` in
-    * [[touchedKeys]]' DV-free discovery.
-    */
-  private val ScannedUriCol = "_vintage_scanned_uri"
-
-  /** Canonical keys of `files` (of the table at `tablePath`) named by
-    * `uris`, the `_metadata.file_path` values of a plain scan of them.
-    * Such a URI is the FS-qualified, URL-encoded form of the path the
-    * scan was given, so it is compared by its decoded path: neither a
-    * default-FS authority (`hdfs://nn:8020/data/t/x` read from
-    * `/data/t/x`) nor an escaped character (`p=a%20b`) can hide a
-    * touched file. A URI naming none of `files` fails the operation
-    * rather than leaving its file out of the rewrite.
-    */
-  private[vintage] def scannedKeys(tablePath: String, files: Seq[AddFile],
-      uris: Iterable[String]): Set[String] = {
-    val byPath = files.map { f =>
-      val abs = f.absolutePath(tablePath)
-      new HPath(abs).toUri.getPath -> DeletionVectors.fileKey(abs)
-    }.toMap
-    uris.map(u => byPath.getOrElse(new java.net.URI(u).getPath,
-      throw new IllegalStateException(
-        s"scanned file $u is none of the ${files.size} files read"))).toSet
-  }
 
   /** Canonical comparison form of a log file path: local-FS URIs
     * (`file:/…`) reduce to their plain path so keys match whichever

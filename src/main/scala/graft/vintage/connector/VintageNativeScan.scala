@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionRea
 import org.apache.spark.sql.graftshim.ColumnExpr
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.parquet.hadoop.ParquetInputFormat
@@ -30,21 +30,26 @@ import graft.vintage.{AddFile, ColumnMapping, DeletionVectors, FileSkipping, Par
   * File pruning reuses [[FileSkipping]] over `Snapshot.statFiles`
   * (partition values included as synthetic stats); large files are
   * split at the session's maxPartitionBytes and packed with Spark's
-  * own bin-packing, identical to the DSv1 scan path.
+  * own bin-packing. Unlike the DSv1 scan, the split size does not
+  * shrink toward the input's bytes per core, so small files share
+  * fewer tasks.
   *
   * Deletion vectors and the row-id metadata columns (`_vintage_file`,
   * `_vintage_pos`, `_vintage_row_id`) are served by the same scan, per
-  * file inside the task: when a candidate file carries a DV or the
-  * query asks for a row id, the reader also requests parquet's row
-  * index, drops rows whose index is in the file's vector and emits the
-  * row ids beside the data ([[VintageDvReaderFactory]]). That path
-  * reads rows instead of columnar batches; every other scan stays
-  * columnar. This is the only code that applies deletion vectors or
-  * derives row positions and row ids: the SQL catalog's reads, the
-  * row-level DELETE/UPDATE/MERGE scan ([[VintageRowLevelOperation]])
-  * and every `VintageTable` read of a DV file or of a row id (fluent
-  * `toDF`, `format("vintage")`, streaming, change feed, fluent DML and
-  * layout rewrites) plan here.
+  * file inside the task. The file key is a per-file constant, passed to
+  * the parquet reader as one more partition value, so a scan that asks
+  * only for it stays columnar. When a candidate file carries a DV or
+  * the query asks for a row position or row id, the reader also
+  * requests parquet's row index, drops rows whose index is in the
+  * file's vector and emits the positions and ids beside the data
+  * ([[VintageDvReaderFactory]]); that path reads rows instead of
+  * columnar batches. This is the only code that applies deletion
+  * vectors or derives row positions and row ids: the SQL catalog's
+  * reads, the row-level DELETE/UPDATE/MERGE scan
+  * ([[VintageRowLevelOperation]]) and every internal `VintageTable`
+  * read of a file set (fluent `toDF` of a DV snapshot,
+  * `format("vintage")` and streaming reads of DV files, change feed,
+  * fluent DML touch discovery and rewrites, layout rewrites) plan here.
   */
 class VintageNativeScan(
     spark: SparkSession, tablePath: String, snapshot: Snapshot,
@@ -70,6 +75,13 @@ class VintageNativeScan(
     StructType(requiredSchema.filter(f => isPartCol(f.name)))
   private val rowIdSchema =
     StructType(requiredSchema.filter(f => isRowIdCol(f.name)))
+  private val fileKeyWanted = rowIdSchema.fieldNames.contains(VintageRowLevel.FileCol)
+  /** Per-file constants handed to the parquet reader: the partition
+    * columns, then the file key when the query asks for it.
+    */
+  private val constSchema =
+    if (!fileKeyWanted) readPartitionSchema
+    else readPartitionSchema.add(VintageRowLevel.FileCol, StringType, nullable = false)
 
   // the reader emits data columns, partition columns, then row ids;
   // Spark's scan relation projects back to the order the query asked for
@@ -100,9 +112,10 @@ class VintageNativeScan(
   private lazy val dvFiles = pruned.count(_.hasDv)
 
   /** Whether the tasks need parquet's row index: to drop deleted
-    * positions, or to emit the row ids.
+    * positions, or to emit row positions and row ids.
     */
-  private lazy val positional = dvFiles > 0 || rowIdSchema.nonEmpty
+  private lazy val positional =
+    dvFiles > 0 || rowIdSchema.fieldNames.exists(_ != VintageRowLevel.FileCol)
 
   override def supportedCustomMetrics(): Array[CustomMetric] = Array(
     new VintageScanMetric(FilesTotal, "files in the snapshot"),
@@ -140,7 +153,7 @@ class VintageNativeScan(
       val pv = InternalRow.fromSeq(readPartitionSchema.map { field =>
         f.partitionValues.get(field.name)
           .map(PartitionPaths.castValue(_, field.dataType)).orNull
-      })
+      } ++ (if (fileKeyWanted) Seq(UTF8String.fromString(keyOf(f))) else Nil))
       (0L until math.max(f.size, 1L) by maxSplit).map { off =>
         PartitionedFile(pv, path, off, math.min(maxSplit, f.size - off),
           Array.empty, f.modificationTime, f.size)
@@ -155,11 +168,19 @@ class VintageNativeScan(
     }
   }
 
+  private def keyOf(f: AddFile): String =
+    DeletionVectors.fileKey(f.absolutePath(tablePath))
+
   private def fileDv(f: AddFile): FileDv =
-    FileDv(DeletionVectors.fileKey(f.absolutePath(tablePath)), f.dv.toArray,
+    FileDv(keyOf(f), f.dv.toArray,
       f.dvRef.map(r => AddFile.resolve(tablePath, r.path)), f.baseRowId)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  /** Built once per scan: each copy of the planned `BatchScanExec`
+    * asks for a factory, and every build broadcasts the Hadoop conf.
+    */
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  private lazy val readerFactory: PartitionReaderFactory = {
     // column mapping: the parquet reader is the ONE seam that must see
     // PHYSICAL names — schemas are renamed field-for-field (positions,
     // hence row layout, unchanged) and filter references translated;
@@ -218,23 +239,25 @@ class VintageNativeScan(
       spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)),
       physDataSchema,
       physReadDataSchema,
-      readPartitionSchema,
+      constSchema,
       dataFilters,
       None,
       new ParquetOptions(Map.empty[String, String], conf))
     if (!positional) inner
     else {
-      // inner rows: data, [materialized id], row index, partition values;
-      // the row ids follow them in the joined row the projection reads
+      // inner rows: data, [materialized id], row index, partition values,
+      // [file key]; position and tracking id follow them in the joined
+      // row the projection reads
       val nData = readDataSchema.size
-      val innerWidth = nData + extras.size + readPartitionSchema.size
-      val idIndex = nData + extras.size - 1
+      val nConst = nData + extras.size
+      val innerWidth = nConst + constSchema.size
+      val idIndex = nConst - 1
       val ordinals = (0 until nData) ++
-        readPartitionSchema.indices.map(nData + extras.size + _) ++
+        readPartitionSchema.indices.map(nConst + _) ++
         rowIdSchema.fieldNames.map {
-          case VintageRowLevel.FileCol => innerWidth
-          case VintageRowLevel.PosCol => innerWidth + 1
-          case _ => innerWidth + 2
+          case VintageRowLevel.FileCol => innerWidth - 1
+          case VintageRowLevel.PosCol => innerWidth
+          case _ => innerWidth + 1
         }
       new VintageDvReaderFactory(inner, readSchema(), ordinals.toArray,
         idIndex, if (materializedId) nData else -1)
@@ -264,9 +287,9 @@ class VintageScanMetric(metricName: String, desc: String) extends CustomSumMetri
   override def description(): String = desc
 }
 
-/** What a task needs to know of one data file: its canonical DV key
-  * (also the `_vintage_file` value), its inline deleted positions, the
-  * absolute sidecar directory holding the rest, and its row-id base.
+/** What a task needs to know of one data file: its canonical key
+  * (the `file_key` of its sidecar rows), its inline deleted positions,
+  * the absolute sidecar directory holding the rest, and its row-id base.
   */
 private[connector] final case class FileDv(key: String, dv: Array[Long],
     sidecar: Option[String], baseRowId: Option[Long])
@@ -281,9 +304,10 @@ private[connector] final case class VintageFilePartition(
   * wrapped parquet reader, drops rows whose row index is in the file's
   * deletion vector, and projects data, partition values and the row
   * ids (file key, row index, tracking id) through one projection
-  * compiled per task. `ordinals` index the joined row (inner row, then
-  * file key, position, tracking id); `matIndex` is the materialized
-  * tracking id's inner ordinal, or -1 when the query needs no id.
+  * compiled per task. `ordinals` index the joined row (inner row,
+  * whose partition values end with the file key, then position and
+  * tracking id); `matIndex` is the materialized tracking id's inner
+  * ordinal, or -1 when the query needs no id.
   */
 private[connector] final class VintageDvReaderFactory(
     inner: ParquetPartitionReaderFactory, outSchema: StructType,
@@ -293,7 +317,7 @@ private[connector] final class VintageDvReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val p = partition.asInstanceOf[VintageFilePartition]
-      private val ids = new GenericInternalRow(3)
+      private val ids = new GenericInternalRow(2)
       private val joined = new JoinedRow
       private val project = UnsafeProjection.create(
         ordinals.toSeq.zip(outSchema.fields).map { case (o, f) =>
@@ -318,7 +342,6 @@ private[connector] final class VintageDvReaderFactory(
           f.sidecar.foreach(DeletionVectors.sidecarPositions(
             _, f.key, inner.broadcastedConf.value.value, deleted))
           baseRowId = f.baseRowId.getOrElse(-1L)
-          ids.update(0, UTF8String.fromString(f.key))
           cur = inner.buildReader(p.part.files(i))
           true
         }
@@ -332,10 +355,10 @@ private[connector] final class VintageDvReaderFactory(
             val pos = r.getLong(idIndex)
             if (deleted.contains(pos)) dropped += 1
             else {
-              ids.setLong(1, pos)
+              ids.setLong(0, pos)
               // the materialized id, else the file's base range, else -1
               // (written before tracking; fluent reads map it to NULL)
-              if (matIndex >= 0) ids.setLong(2,
+              if (matIndex >= 0) ids.setLong(1,
                 if (!r.isNullAt(matIndex)) r.getLong(matIndex)
                 else if (baseRowId >= 0) baseRowId + pos
                 else -1L)

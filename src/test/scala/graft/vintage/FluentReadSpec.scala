@@ -16,9 +16,10 @@ import graft.vintage.connector.VintageNativeScan
   * read a snapshot without deletion vectors through the same file index
   * as `format("vintage")`, and one with them through the native scan;
   * either way filters on the frame prune files by log stats. The rows
-  * and the declared column order are those of the plain snapshot read
-  * ([[VintageTable.dfForSnapshot]]), or, for deletion-vector tables,
-  * of the generator's rows minus the deleted ones.
+  * and the declared column order are those of the snapshot's file read
+  * ([[VintageTable.dfForSnapshot]], a native scan of every file), or,
+  * for deletion-vector tables, of the generator's rows minus the
+  * deleted ones.
   */
 class FluentReadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark

@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.vintage.connector.VintageNativeScan
+import graft.vintage.connector.{VintageNativeScan, VintageRowLevel}
 
 /** SQL reads of deletion-vector tables and of the row-id metadata
   * columns plan the native scan, which drops deleted positions per
@@ -230,6 +230,31 @@ class NativeDvScanSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(plain.collect().length == 300)
     assert(scanOf(plain).supportsColumnar)
     assert(scanOf(plain).scan.description().contains("files=3/3 dvFiles=0"))
+  }
+
+  test("a scan of only _vintage_file over DV-free files stays columnar") {
+    val plain = create("fkplain", Map.empty)
+    val pcm = create("fkpcm", Map.empty, partitionBy = Seq("p"))
+    pcm.enableColumnMapping()
+    pcm.renameColumn("id", "ident")
+    assert(ColumnMapping.mapped(pcm.snapshot.schema))
+    Seq(plain -> "id", pcm -> "ident").foreach { case (t, id) =>
+      val s = t.snapshot
+      assert(s.files.size > 1 && !DeletionVectors.hasDvs(s.files))
+      val idCol = ColumnMapping.physicalName(s.schema(id))
+      // each file read on its own: (id, the log key of its file)
+      val want = s.files.flatMap { f =>
+        spark.read.parquet(f.absolutePath(t.path)).select(idCol).as[Long]
+          .collect().map(i => s"$i|${t.keyOf(f)}")
+      }.sorted
+      val frame = t.nativeFrame(s, Seq(VintageRowLevel.FileCol))
+      val only = frame.select(VintageRowLevel.FileCol)
+      assert(scanOf(only).supportsColumnar, id)
+      assert(rows(only) == want.map(_.split('|')(1)).sorted, id)
+      val withId = frame.select(id, VintageRowLevel.FileCol)
+      assert(scanOf(withId).supportsColumnar, id)
+      assert(rows(withId) == want, id)
+    }
   }
 
   test("row-tracked SQL UPDATE and MERGE keep _vintage_row_id") {

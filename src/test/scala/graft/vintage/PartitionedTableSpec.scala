@@ -142,10 +142,10 @@ class PartitionedTableSpec extends AnyFunSuite {
   }
 
   test("scheme-qualified table path with a space in a partition dir: DML finds its files") {
-    // the log keeps `file:/…/key=a b/part-…`; the plain reader reports
-    // the URL-encoded `file:/…/key=a%20b/part-…` for the same file.
-    // Copy-on-write tables discover touched files through the plain
-    // reader, deletion-vector tables through the native scan.
+    // the log keeps `file:/…/key=a b/part-…`, which Spark's parquet
+    // reader would report URL-encoded as `file:/…/key=a%20b/part-…`.
+    // Copy-on-write and deletion-vector tables both discover touched
+    // files through the native scan, whose `_vintage_file` is the key.
     Seq(false, true).foreach { dvs =>
       val dir = "file:" + Files.createTempDirectory("vintage-part").toString + "/sp"
       val t = VintageTable.create(spark, dir, Seq(
@@ -170,22 +170,6 @@ class PartitionedTableSpec extends AnyFunSuite {
         .whenNotMatched().insertAll()
         .execute()
       assert(rows == Seq((2L, "u"), (3L, "m"), (4L, "w")), s"dvs=$dvs")
-    }
-  }
-
-  test("scanned file URIs resolve to their files' keys by decoded path") {
-    // a table at `/data/t` on a default-FS cluster is scanned as
-    // `hdfs://nn:8020/data/t/…`, with escaped characters encoded
-    val files = Seq("key=a b/part-0.parquet", "key=plain/part-1.parquet")
-      .map(p => AddFile(p, 1L, 0L, dataChange = true))
-    assert(VintageTable.scannedKeys("/data/t", files,
-        Seq("hdfs://nn:8020/data/t/key=a%20b/part-0.parquet")) ==
-      Set("/data/t/key=a b/part-0.parquet"))
-    assert(VintageTable.scannedKeys("file:/data/t", files,
-        Seq("file:/data/t/key=plain/part-1.parquet")) ==
-      Set("/data/t/key=plain/part-1.parquet"))
-    intercept[IllegalStateException] {
-      VintageTable.scannedKeys("/data/t", files, Seq("hdfs://nn:8020/data/u/x.parquet"))
     }
   }
 
