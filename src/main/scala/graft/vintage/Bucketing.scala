@@ -6,11 +6,13 @@ import org.apache.spark.sql.types.StructType
   *
   * A table created with
   * `vintage.bucketing.columns = "k"` and `vintage.bucketing.buckets = "8"`
-  * has every data file pinned to one of 8 hash buckets of `k`:
-  * [[VintageTable.writeFiles]] repartitions each write by Spark's own
-  * `HashPartitioning` (so the task partition index IS the bucket id —
-  * the identical `pmod(murmur3(k), n)` Spark's planner assumes for
-  * bucketed relations) and names the file with the `_NNNNN` suffix
+  * has every data file pinned to one of 8 hash buckets of `k`: the
+  * table writer ([[org.apache.spark.sql.graftshim.VintageWrite]])
+  * requires a clustered distribution on `k` with exactly 8 partitions,
+  * which Spark plans as its own `HashPartitioning` (so the task
+  * partition index IS the bucket id — the identical
+  * `pmod(murmur3(k), n)` Spark's planner assumes for bucketed
+  * relations), and names each file with the `_NNNNN` suffix
   * `BucketingUtils` parses. The read path then declares a `BucketSpec`
   * on its `HadoopFsRelation`, and Spark plans joins/aggregations on
   * the bucket columns WITHOUT an Exchange on the table's side — at
@@ -21,21 +23,18 @@ import org.apache.spark.sql.types.StructType
   *  - Bucketing is fixed at CREATE (see [[VintageTable.setProperties]]):
   *    flipping it on later would claim a layout the existing files
   *    don't have.
-  *  - EVERY write path funnels through [[VintageTable.writeFiles]],
-  *    which re-buckets unconditionally — appends, overwrites, MERGE /
-  *    UPDATE / DELETE copy-on-write rewrites, and compaction all emit
-  *    bucket-aligned files (an UPDATE that changes a bucket column
-  *    simply re-buckets the row). Z-order clustering degrades to
-  *    bucket-partitioned layout (the bucket hash overrides the range
-  *    partitioning; correctness unaffected).
-  *  - The `bucketing` WRITER feature gates foreign writers that would
-  *    break the alignment; readers ignoring the layout stay correct.
-  *  - The DSv2 native-SQL paths re-bucket too: INSERT/CTAS and the
-  *    row-level WriteDelta (UPDATE/MERGE) request a clustered
-  *    distribution on the bucket columns with exactly numBuckets
-  *    partitions, so their task partition index is the bucket id.
+  *  - EVERY batch write goes through that writer, which re-buckets
+  *    unconditionally — fluent appends, overwrites, MERGE / UPDATE /
+  *    DELETE rewrites and compaction, SQL INSERT/CTAS, and the
+  *    row-level WriteDelta (UPDATE/MERGE), which requests the same
+  *    distribution, all emit bucket-aligned files (an UPDATE that
+  *    changes a bucket column simply re-buckets the row). Z-order
+  *    clustering degrades to bucket-partitioned layout (the bucket
+  *    hash overrides the range partitioning; correctness unaffected).
   *    Only the STREAMING sink refuses (epochs honor no distribution
   *    requirement).
+  *  - The `bucketing` WRITER feature gates foreign writers that would
+  *    break the alignment; readers ignoring the layout stay correct.
   *  - While a row-level op's deletion vectors are outstanding, reads
   *    go through the DV merge-on-read relation, which does not claim
   *    the BucketSpec — joins shuffle again until OPTIMIZE purges the
@@ -89,16 +88,6 @@ object Bucketing {
       s"$SortProp requires $ColumnsProp/$BucketsProp")
     sorts.foreach(c => require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
       s"bucket sort column '$c' not in schema"))
-  }
-
-  private val StagedName = """part-(\d+)-.*""".r
-
-  /** Task partition index out of a staged `part-NNNNN-uuid…` name —
-    * under bucket repartitioning this IS the bucket id.
-    */
-  def stagedTaskId(name: String): Option[Int] = name match {
-    case StagedName(id) => Some(id.toInt)
-    case _ => None
   }
 
   private val CommittedName = """.*_(\d+)(?:\..*)?$""".r

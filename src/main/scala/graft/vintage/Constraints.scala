@@ -1,14 +1,15 @@
 package graft.vintage
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** CHECK constraints, Delta-style: stored as table properties
   * (`vintage.constraints.<name> = <sql predicate>`), validated against
   * existing data when added, and enforced INLINE on every data-changing
-  * write — a codegen'd per-row predicate inside the write plan, never a
-  * separate validation pass over the data (at 100 TB a second pass
-  * would double every ingest).
+  * write — a compiled per-row predicate in the table writer's tasks
+  * ([[org.apache.spark.sql.graftshim.VintageWrite]]), never a separate
+  * validation pass over the data (at 100 TB a second pass would double
+  * every ingest).
   *
   * Null semantics follow the SQL standard for CHECK: a row violates
   * only when the predicate evaluates to FALSE; NULL passes.
@@ -26,21 +27,4 @@ object Constraints {
   /** The row-keeps condition of one constraint (null-safe). */
   def passes(predicateSql: String): Column =
     coalesce(expr(predicateSql), lit(true))
-
-  /** Wrap `df` so every row is checked against every constraint as it
-    * flows to the writer: a filter whose condition raises on violation
-    * and passes otherwise — zero extra pass, stays inside whole-stage
-    * codegen, and cannot be pruned away (the filter's value depends on
-    * the check).
-    */
-  def enforce(df: DataFrame, props: Map[String, String]): DataFrame = {
-    val cs = fromProperties(props)
-    if (cs.isEmpty) df
-    else cs.toSeq.sortBy(_._1).foldLeft(df) { case (d, (name, sql)) =>
-      d.filter(
-        when(passes(sql), lit(true)).otherwise(raise_error(concat(
-          lit(s"CHECK constraint $name ($sql) violated by row "),
-          to_json(struct(df.columns.toIndexedSeq.map(col): _*))))))
-    }
-  }
 }

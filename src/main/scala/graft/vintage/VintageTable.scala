@@ -1,13 +1,11 @@
 package graft.vintage
 
-import java.util.UUID
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.AppendData
 import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.graftshim.{ColumnExpr, DatasetOps, VintageRelation}
+import org.apache.spark.sql.graftshim.{ColumnExpr, DatasetOps, VintageFileSink, VintageRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -1564,10 +1562,10 @@ class VintageTable private (
             }
           }
         } else if (name.startsWith(".tmp-")) {
-          // staging litter from crashed writes (data staging,
-          // row-level position files): reclaimable whole once older
-          // than the cutoff — an in-flight write is protected by the
-          // same retention guard as everything else
+          // staging litter from crashed writes (row-level position
+          // files; data staging dirs of earlier writers): reclaimable
+          // whole once older than the cutoff — an in-flight write is
+          // protected by the same retention guard as everything else
           if (dirExpired(s))
             dvDirsToDelete += s.getPath.toString
         } else if (name != VintageLog.LogDirName)
@@ -1763,8 +1761,6 @@ class VintageTable private (
     DatasetOps.ofRows(spark, DataSourceV2Relation.create(
         new VintageSqlTable(path, path, s, timeTravel = true), None, None))
       .select((s.schema.fieldNames.toIndexedSeq ++ rowIds).map(quoted): _*)
-
-  private def quoted(name: String): Column = col(QuotingUtils.quoteIdentifier(name))
 
   /** Removes for AddFiles the caller already holds (pruned DML plans)
     * — never walks the snapshot file list, so merge-on-read DML on a
@@ -1985,15 +1981,6 @@ object VintageTable {
   private[graft] class MetadataConflictException(msg: String)
       extends java.util.ConcurrentModificationException(msg)
 
-  /** Staged-file count at or below which a commit finalizes its
-    * renames + footer-stat reads on the DRIVER instead of a Spark job
-    * (see writeFiles): the distributed wave exists for corpus-scale
-    * commits staging hundreds of files, where per-file footer reads
-    * dominate; below this the job fixed cost (schedule + conf
-    * broadcast + collect) exceeds the work by an order of magnitude.
-    */
-  private[vintage] val DriverCommitFiles = 8
-
   /** Open an existing table (README.md:125 `DeltaTable.forPath`). */
   def forPath(spark: SparkSession, path: String): VintageTable = {
     require(VintageLog.exists(path), s"not a vintage table: $path")
@@ -2012,6 +1999,8 @@ object VintageTable {
   }
 
   def isVintageTable(path: String): Boolean = VintageLog.exists(path)
+
+  private def quoted(name: String): Column = col(QuotingUtils.quoteIdentifier(name))
 
   /** Minimum vacuum retention (hours) the duration check allows —
     * Delta's default week.
@@ -2213,168 +2202,54 @@ object VintageTable {
       val t = forPath(spark, path); t.overwrite(df); t
     } else create(spark, path, df)
 
-  /** Write `df`'s partitions as Parquet files into the table directory
-    * and return their AddFile actions with per-column min/max/null-count
-    * stats from the Parquet footers. Files are staged in a temp subdir,
-    * then a distributed job renames each into place and reads its
-    * footer — the driver never serializes per-file IO, so a
-    * thousand-file commit costs one task wave, not a driver loop.
-    *
-    * With `partitionBy` set the stage writes hive-style
-    * `p1=v1/.../part-*.parquet` layout; each file keeps its partition
-    * subpath when renamed into the table and records its
-    * partitionValues in the AddFile.
+  /** Write `df` as data files of the table at `tableDir` and return
+    * their AddFiles, uncommitted. The frame is planned as Spark's
+    * `AppendData` into a [[VintageFileSink]], so executors write final
+    * parquet files through the table's one writer,
+    * [[org.apache.spark.sql.graftshim.VintageWrite]] (bucket clustering
+    * and in-bucket sort, hive partition directories, physical column
+    * names, CHECK constraints, bloom filters), and each task reports its
+    * files with their footer stats. Columns resolve by name against the
+    * table schema (`tableSchema`, else the log's), plus
+    * `_vintage_row_id` when a row-tracked table's frame carries it;
+    * types and nullability stay the frame's. Identity values are
+    * completed by the callers, and layout-only rewrites
+    * (`dataChange = false`) skip the constraint check: their rows were
+    * validated when first written.
     */
   private[vintage] def writeFiles(
       spark: SparkSession, df: DataFrame, tableDir: String,
       dataChange: Boolean, partitionBy: Seq[String] = Nil,
       tableProps: Map[String, String] = null,
       tableSchema: StructType = null): Seq[AddFile] = {
-    val dir = new HPath(tableDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new HPath(tableDir, s".tmp-${UUID.randomUUID().toString.take(8)}")
+    lazy val logged = VintageLog.replay(tableDir)
     val props =
       if (tableProps != null) tableProps
-      else if (VintageLog.exists(tableDir)) VintageLog.replay(tableDir).properties
+      else if (VintageLog.exists(tableDir)) logged.properties
       else Map.empty[String, String]
-    // column mapping: the incoming frame is in LOGICAL names (that is
-    // what constraints and callers speak); the files must store
-    // PHYSICAL names. The mapping source is the table schema — passed
-    // by schema-evolving callers, replayed otherwise.
-    val mapSchema =
+    val schema =
       if (tableSchema != null) tableSchema
-      else if (VintageLog.exists(tableDir)) VintageLog.replay(tableDir).schema
-      else null
-    val mappingOn = mapSchema != null && ColumnMapping.mapped(mapSchema)
-    def phys(c: String): String =
-      if (mappingOn) ColumnMapping.toPhysical(mapSchema, c) else c
-    // CHECK constraints ride inside the write plan (codegen'd filter
-    // that raises on violation) — layout-only rewrites (compaction,
-    // clustering) skip the check: their rows were validated when first
-    // written
-    val checked = if (dataChange) Constraints.enforce(df, props) else df
-    val physDf0 =
-      if (!mappingOn) checked
-      else checked.select(checked.schema.fieldNames.toIndexedSeq
-        .map(c => col(c).as(phys(c))): _*)
-    // bucketed table: hash-repartition so the task partition index IS
-    // the bucket id (repartition's HashPartitioning is the identical
-    // pmod(murmur3, n) the bucketed-scan planner assumes); the rename
-    // below then stamps that id into the committed file name. Applies
-    // to EVERY write path — appends, CoW rewrites, compaction — so the
-    // layout invariant survives arbitrary DML (see [[Bucketing]]).
-    val bucketing = Bucketing.spec(props)
-    val physDf = bucketing match {
-      case Some((cols, n)) =>
-        val parted = physDf0.repartition(n, cols.map(c => col(phys(c))): _*)
-        // declared in-bucket sort order: written sorted so a fresh
-        // (one-file-per-bucket) layout serves merge joins with no Sort
-        Bucketing.sortCols(props) match {
-          case Nil => parted
-          case sorts => parted.sortWithinPartitions(
-            sorts.map(c => col(phys(c))): _*)
-        }
-      case None => physDf0
+      else if (VintageLog.exists(tableDir)) logged.schema
+      else df.schema
+    // row-tracked rewrites carry each row's preserved id in a trailing
+    // `_vintage_row_id`, the shape the row-level delta write writes
+    val target = schema.fields ++ df.schema.find(_.name ==
+      RowTracking.MaterializedCol).filter(_ => RowTracking.enabled(props))
+    val frame = df.select(target.toIndexedSeq.map(f => quoted(f.name)): _*)
+    val writeSchema = StructType(target.zip(frame.schema.fields).map {
+      case (t, f) => f.copy(name = t.name, metadata = t.metadata)
+    })
+    val writeProps = props.filterNot { case (k, _) =>
+      k.startsWith(IdentityColumns.Prefix) ||
+        (!dataChange && k.startsWith(Constraints.Prefix))
     }
-    val physPartitionBy = partitionBy.map(phys)
-    var writer = physDf.write.mode("overwrite")
-    // `vintage.bloom.columns` table property: write parquet bloom
-    // filters for the listed columns — at 100 TB min/max stats cannot
-    // prune point lookups on high-cardinality unsorted keys, but the
-    // parquet reader's row-group bloom check can (applied automatically
-    // under pushed equality filters)
-    bloomColumns(props).foreach { c =>
-      writer = writer.option(s"parquet.bloom.filter.enabled#${phys(c)}", "true")
-    }
-    // on ANY staging failure (constraint violation is a routine one)
-    // the tmp dir must go: vacuum deliberately skips .tmp- dirs, so a
-    // leak here would never be reclaimed
-    try {
-      (if (physPartitionBy.nonEmpty) writer.partitionBy(physPartitionBy: _*) else writer)
-        .parquet(tmp.toString)
-    } catch { case e: Throwable =>
-      try fs.delete(tmp, true) catch { case _: java.io.IOException => () }
-      throw e
-    }
-    // collect staged files (recursively under partition dirs), keeping
-    // each file's partition subpath
-    val tmpUri = fs.makeQualified(tmp).toUri
-    def staged(d: HPath): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(d).toSeq.flatMap {
-        case s if s.isDirectory && s.getPath.getName.contains("=") => staged(s.getPath)
-        case s if s.isFile && s.getPath.getName.startsWith("part-") &&
-                  s.getPath.getName.endsWith(".parquet") => Seq(s)
-        case _ => Nil
-      }
-    val moves: Seq[(String, String)] = staged(tmp).map { s =>
-      val relDir = tmpUri.relativize(fs.makeQualified(s.getPath.getParent).toUri)
-        .getPath.stripSuffix("/")
-      val prefix = if (relDir.isEmpty) "" else s"$relDir/"
-      // bucketed: carry the staged task index (== bucket id under the
-      // repartition above) into the committed name as the `_NNNNN`
-      // suffix Spark's BucketingUtils parses on the scan side
-      val bucketSuffix = bucketing.flatMap { _ =>
-        Bucketing.stagedTaskId(s.getPath.getName)
-      }.map(id => f"_$id%05d").getOrElse("")
-      (s.getPath.toString,
-       s"${prefix}part-${UUID.randomUUID().toString}$bucketSuffix.snappy.parquet")
-    }
-    val statCols = ParquetStats.statsColumns(physDf.schema)
-    // log-level per-file blooms for the opted-in columns (PHYSICAL
-    // names — stats are keyed physical in the log, remapped to logical
-    // on read like min/max)
-    val bloomPhysCols = bloomColumns(props).map(phys)
-    val bloomBits = props.getOrElse("vintage.bloom.bits",
-      StatsBloom.DefaultBits.toString).toInt
-    val tableDirStr = tableDir
-    // rename one staged file into place and read back its footer
-    // stats; runs on the driver or in an executor task with the same
-    // (session) Hadoop conf — object stores and custom filesystems are
-    // configured there (credentials, fs.* impls), so a default
-    // Configuration() would break either path
-    def commitOne(conf: Configuration)(move: (String, String)): AddFile = {
-      val (src, name) = move
-      val srcPath = new HPath(src)
-      val efs = srcPath.getFileSystem(conf)
-      val target = new HPath(tableDirStr, name)
-      if (name.contains('/')) efs.mkdirs(target.getParent)
-      if (!efs.rename(srcPath, target))
-        throw new java.io.IOException(s"rename $srcPath -> $target failed")
-      val (numRecords, stats) = ParquetStats.read(target, conf, statCols)
-      val blooms =
-        if (bloomPhysCols.isEmpty) Map.empty[String, String]
-        else ParquetStats.bloomStats(target, conf, bloomPhysCols, bloomBits)
-      val withBlooms = blooms.foldLeft(stats) { case (m, (c, b)) =>
-        m.updated(c, m.getOrElse(c, ColStats(None, None, None))
-          .copy(bloom = Some(b)))
-      }
-      val st = efs.getFileStatus(target)
-      AddFile(name, st.getLen, st.getModificationTime, dataChange,
-        Some(numRecords), withBlooms,
-        PartitionPaths.parsePartitionValues(name))
-    }
-    try {
-      if (moves.isEmpty) Nil
-      // a one-digit file count as a distributed job is pure fixed cost
-      // (schedule + conf broadcast + collect, ~100-300 ms, for a few
-      // sub-ms renames and footer reads): finalize on the driver. The
-      // threshold is per-COMMIT file count, not cluster size — a
-      // corpus-scale rewrite stages hundreds+ of files and keeps the
-      // parallel wave below; a 3-row MERGE or streaming epoch commits
-      // in driver time on any cluster.
-      else if (moves.size <= VintageTable.DriverCommitFiles)
-        moves.map(commitOne(spark.sessionState.newHadoopConf()))
-      else {
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        spark.sparkContext
-          .parallelize(moves, math.min(moves.size, 256))
-          .map(m => commitOne(confBc.value.value)(m))
-          .collect().toSeq
-      }
-      // a failure mid-rename-wave leaves already-renamed files at final
-      // part-* paths: never committed → vacuum reclaims them by age
-    } finally fs.delete(tmp, true)
+    val parts = partitionBy.map(c =>
+      schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(c))
+    var adds = Seq.empty[AddFile]
+    val sink = new VintageFileSink(tableDir, writeSchema, parts, writeProps,
+      written => adds = written)
+    DatasetOps.ofRows(spark, AppendData.byName(
+      DataSourceV2Relation.create(sink, None, None), frame.queryExecution.analyzed))
+    adds.map(_.copy(dataChange = dataChange))
   }
 }

@@ -35,10 +35,10 @@ import graft.vintage.{Snapshot, VintageLog, VintageTable}
   * native DSv2 scan ([[VintageNativeScan]], stat- and partition-pruned;
   * columnar, or row-wise with deletion vectors applied per file in the
   * task when the snapshot has them); writes and deletes commit through
-  * [[VintageTable]]. MERGE INTO and UPDATE SQL are resolved by the
-  * injected [[VintageSqlExtension]] rule onto the fluent builders, and
-  * OPTIMIZE / VACUUM / RESTORE / DESCRIBE HISTORY by its delegating
-  * parser ([[VintageMaintenance]]).
+  * [[VintageTable]]. MERGE INTO and UPDATE SQL plan natively through
+  * the table's row-level operation ([[VintageRowLevelOperation]]), and
+  * OPTIMIZE / VACUUM / RESTORE / DESCRIBE HISTORY parse through the
+  * delegating parser of [[VintageSqlExtension]] ([[VintageMaintenance]]).
   */
 class VintageCatalog extends TableCatalog with StagingTableCatalog {
   private var catalogName: String = _
@@ -430,8 +430,11 @@ class VintageCatalog extends TableCatalog with StagingTableCatalog {
   * writes via the native DSv2 batch write
   * ([[org.apache.spark.sql.graftshim.VintageWrite]]: executors write
   * final parquet files and report AddFiles with footer stats; the
-  * driver folds them into one optimistic log commit), SQL DELETE via
-  * SupportsDelete (copy-on-write with file skipping).
+  * driver folds them into one optimistic log commit). A SQL DELETE
+  * whose predicate translates to source filters goes through
+  * SupportsDelete to the fluent [[VintageTable.delete]] (file-skipped
+  * copy-on-write, or deletion vectors on a DV-enabled table); other
+  * SQL DELETE, UPDATE and MERGE plan the native row-level operation.
   */
 class VintageSqlTable(
     val tablePath: String, ident: String,

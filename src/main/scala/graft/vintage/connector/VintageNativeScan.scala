@@ -28,11 +28,9 @@ import graft.vintage.{AddFile, ColumnMapping, DeletionVectors, FileSkipping, Par
   * end-to-end, so a SQL-catalog `SELECT` keeps whole-stage codegen.
   *
   * File pruning reuses [[FileSkipping]] over `Snapshot.statFiles`
-  * (partition values included as synthetic stats); large files are
-  * split at the session's maxPartitionBytes and packed with Spark's
-  * own bin-packing. Unlike the DSv1 scan, the split size does not
-  * shrink toward the input's bytes per core, so small files share
-  * fewer tasks.
+  * (partition values included as synthetic stats); files are split
+  * and packed with Spark's own split size and bin-packing, as in the
+  * DSv1 scan.
   *
   * Deletion vectors and the row-id metadata columns (`_vintage_file`,
   * `_vintage_pos`, `_vintage_row_id`) are served by the same scan, per
@@ -146,7 +144,9 @@ class VintageNativeScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      pruned.map(_.size + openCost).sum)
     val files = pruned.map(f =>
       SparkPath.fromPathString(f.absolutePath(tablePath)) -> f)
     val splits = files.flatMap { case (path, f) =>

@@ -218,10 +218,8 @@ class VintageDeltaBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: VintageDeltaCommitMessage => m }
-    val insertAdds = msgs.flatMap(_.inner match {
-      case org.apache.spark.sql.graftshim.VintageCommitMessage(adds, _) => adds
-      case _ => Nil
-    })
+    val insertAdds =
+      org.apache.spark.sql.graftshim.VintageCommitMessage.adds(msgs.map(_.inner))
     val posFiles = msgs.flatMap(_.positionFile)
     val counts = msgs.flatMap(_.counts.toSeq)
       .groupMapReduce(_._1)(_._2)(_ + _)

@@ -8,10 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{StagedTable, SupportsWrite, TableCapability}
-import org.apache.spark.sql.connector.distributions.Distribution
-import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Transform}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.graftshim.{VintageCommitMessage, VintageWrite}
+import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder}
+import org.apache.spark.sql.graftshim.{VintageCollectWrite, VintageWrite}
 import org.apache.spark.sql.types.StructType
 
 import graft.vintage.{AddFile, VintageLog, VintageTable}
@@ -56,33 +55,12 @@ class VintageStagedTable(
       // the staged table is empty by definition — truncation is the
       // replace itself, performed at commitStagedChanges
       override def truncate(): WriteBuilder = this
-      override def build(): Write = new StagedWrite(
+      // the data files and the (create or replace) log entry appear
+      // as one atomic unit: the write only collects the AddFiles
+      override def build(): Write = new VintageCollectWrite(
         new VintageWrite(path, tableSchema, partCols, overwrite = false,
-          tableProperties, info.queryId()))
+          tableProperties, info.queryId()), staged ++= _)
     }
-
-  /** Same executor write as every native path; the driver-side commit
-    * only COLLECTS the task-reported AddFiles — publication waits for
-    * [[commitStagedChanges]], so the data files and the (create or
-    * replace) log entry appear as one atomic unit.
-    */
-  private class StagedWrite(inner: VintageWrite)
-      extends Write with RequiresDistributionAndOrdering {
-    override def requiredDistribution(): Distribution = inner.requiredDistribution()
-    override def requiredOrdering(): Array[SortOrder] = inner.requiredOrdering()
-    override def toBatch: BatchWrite = new BatchWrite {
-      private val delegate = inner.toBatch
-      override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
-        delegate.createBatchWriterFactory(p)
-      override def commit(messages: Array[WriterCommitMessage]): Unit =
-        staged ++= messages.flatMap {
-          case VintageCommitMessage(adds, _) => adds
-          case _ => Nil
-        }
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        delegate.abort(messages)
-    }
-  }
 
   override def commitStagedChanges(): Unit = {
     if (VintageLog.exists(path)) {

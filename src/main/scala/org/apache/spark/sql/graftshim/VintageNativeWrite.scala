@@ -9,32 +9,33 @@ import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Coalesce, Expression, Literal, Predicate, UnsafeProjection}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Cast, Coalesce, Expression, Literal, Predicate, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.connector.{distributions, expressions}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.vintage.{AddFile, ColumnMapping, ParquetStats, PartitionPaths, VintageTable}
 
-/** Native DSv2 write path for vintage tables — the write-side twin of
-  * [[VintageNativeScan]].
-  *
-  * The previous seam was a `V1Write`/`InsertableRelation` fallback:
-  * Spark planned a V1 command node, the DataFrame was re-written
-  * through `df.write.parquet` into a staging directory, and a second
-  * task wave renamed files into the table and re-opened their footers
-  * for stats. This path cuts both seams: executors stream
+/** The writer of every vintage table data file, the write-side twin of
+  * [[VintageNativeScan]]: SQL INSERT and INSERT OVERWRITE, CTAS/RTAS
+  * staging, the inserts of the row-level DELETE/UPDATE/MERGE, streaming
+  * `toTable`, and every fluent write
+  * ([[graft.vintage.VintageTable.writeFiles]]: create, append,
+  * overwrite, copy-on-write DML, compaction). Executors stream
   * `InternalRow`s straight into final parquet files via Spark's own
   * parquet `OutputWriter` (same encoder the scan reads back
-  * vectorized), each task reports its `AddFile`s — footer stats
-  * included — in its commit message, and the driver folds them into
-  * ONE optimistic log commit. One task wave, no staging rename, no V1
-  * row-conversion node in the plan.
+  * vectorized), and each task reports its `AddFile`s — footer stats
+  * included — in its commit message. The driver folds them into ONE
+  * optimistic log commit, or, through [[VintageCollectWrite]], hands
+  * them to a caller that commits them itself. One task wave, no
+  * staging directory, no rename.
   *
   * Hive-partitioned tables write dynamically: each task routes rows to
   * per-partition-value open writers (no clustering shuffle is forced —
@@ -103,7 +104,7 @@ class VintageWrite(
     require(bucketing.isEmpty,
       s"bucketed vintage table $tablePath: the streaming sink cannot " +
       "produce bucket-aligned files; stream into an unbucketed table")
-    new VintageStreamingWrite(prepared, tablePath, overwrite, queryId)
+    new VintageStreamingWrite(prepared, queryId)
   }
 
   private lazy val prepared: VintageBatchWrite = {
@@ -117,9 +118,14 @@ class VintageWrite(
     val physDataSchema = ColumnMapping.physicalSchema(dataSchema)
     val physPartitionCols = partitionCols.map(ColumnMapping.toPhysical(tableSchema, _))
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    // honor the vintage.bloom.columns table property on the native
-    // path too (see VintageTable.writeFiles); properties come from the
-    // enclosing table's snapshot — no extra log replay per write
+    // partition directory names cast values to strings in this zone
+    job.getConfiguration.set(SQLConf.SESSION_LOCAL_TIMEZONE.key,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    // `vintage.bloom.columns` table property: write parquet bloom
+    // filters for the listed columns — at 100 TB min/max stats cannot
+    // prune point lookups on high-cardinality unsorted keys, but the
+    // parquet reader's row-group bloom check can (applied automatically
+    // under pushed equality filters)
     graft.vintage.VintageTable.bloomColumns(tableProperties)
       .foreach(c => job.getConfiguration.set(
         s"parquet.bloom.filter.enabled#${ColumnMapping.toPhysical(tableSchema, c)}", "true"))
@@ -161,8 +167,9 @@ class VintageWrite(
           else Some((c, ord, spec.nextBase(
             graft.vintage.IdentityColumns.hwm(tableProperties, c)), spec.step))
       }
-    // log-level per-file bloom stats (physical names), mirroring
-    // VintageTable.writeFiles
+    // log-level per-file bloom stats for the same columns (PHYSICAL
+    // names — stats are keyed physical in the log, remapped to logical
+    // on read like min/max)
     val logBloomCols = graft.vintage.VintageTable.bloomColumns(tableProperties)
       .map(c => ColumnMapping.toPhysical(tableSchema, c))
     val logBloomBits = tableProperties.getOrElse("vintage.bloom.bits",
@@ -182,12 +189,19 @@ class VintageWrite(
 case class VintageCommitMessage(adds: Seq[AddFile], idFilled: Boolean = false)
     extends WriterCommitMessage
 
+object VintageCommitMessage {
+  /** Every `AddFile` the tasks reported. */
+  def adds(messages: Seq[WriterCommitMessage]): Seq[AddFile] =
+    messages.flatMap {
+      case VintageCommitMessage(a, _) => a
+      case _ => Nil
+    }
+}
+
 /** Per-epoch streaming commit over the shared native write machinery;
   * see [[VintageWrite.toStreaming]] for the idempotence contract.
   */
-class VintageStreamingWrite(
-    delegate: VintageBatchWrite, tablePath: String, overwrite: Boolean,
-    queryId: String)
+class VintageStreamingWrite(delegate: VintageBatchWrite, queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
@@ -195,21 +209,8 @@ class VintageStreamingWrite(
     new VintageStreamingWriterFactory(delegate.createBatchWriterFactory(info))
 
   override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.toSeq
-    val adds = msgs.flatMap {
-      case VintageCommitMessage(a, _) => a
-      case _ => Nil
-    }
-    val filled = msgs.exists {
-      case VintageCommitMessage(_, f) => f
-      case _ => false
-    }
-    VintageTable.forPath(SparkSession.active, tablePath)
-      .commitFiles(adds, overwrite,
-        txn = Some((s"vintage-streaming-$queryId", epochId)),
-        idFilledBases = if (filled) delegate.idFillBases else Map.empty)
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    delegate.commit(messages, Some((s"vintage-streaming-$queryId", epochId)))
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
@@ -221,6 +222,54 @@ case class VintageStreamingWriterFactory(delegate: DataWriterFactory)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     delegate.createWriter(partitionId, taskId)
+}
+
+/** A [[VintageWrite]] whose batch commit hands the task-reported
+  * `AddFile`s to `collect` instead of committing them: CTAS/RTAS
+  * staging publishes them at `commitStagedChanges`, fluent writes in
+  * their own log commit. Distribution, partition count and ordering
+  * are the inner write's, so bucket layout and sort order hold.
+  */
+class VintageCollectWrite(inner: VintageWrite, collect: Seq[AddFile] => Unit)
+    extends Write with RequiresDistributionAndOrdering {
+  override def requiredDistribution(): distributions.Distribution =
+    inner.requiredDistribution()
+  override def requiredNumPartitions(): Int = inner.requiredNumPartitions()
+  override def requiredOrdering(): Array[expressions.SortOrder] =
+    inner.requiredOrdering()
+  override def toBatch: BatchWrite = new BatchWrite {
+    private val delegate = inner.toBatch
+    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+      delegate.createBatchWriterFactory(info)
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      collect(VintageCommitMessage.adds(messages.toSeq))
+    override def abort(messages: Array[WriterCommitMessage]): Unit =
+      delegate.abort(messages)
+  }
+}
+
+/** The write-only table a fluent write plans Spark's `AppendData`
+  * against ([[graft.vintage.VintageTable.writeFiles]]): its write is a
+  * [[VintageCollectWrite]] into the table directory. The caller
+  * resolves the frame by name against `writeSchema`, which carries the
+  * frame's own types, so `ACCEPT_ANY_SCHEMA` keeps the analyzer from
+  * adding casts or null checks.
+  */
+class VintageFileSink(
+    tablePath: String, writeSchema: StructType, partitionCols: Seq[String],
+    tableProperties: Map[String, String], collect: Seq[AddFile] => Unit)
+    extends Table with SupportsWrite {
+  override def name(): String = tablePath
+  override def schema(): StructType = writeSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_WRITE,
+      TableCapability.ACCEPT_ANY_SCHEMA)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder {
+      override def build(): Write = new VintageCollectWrite(new VintageWrite(
+        tablePath, writeSchema, partitionCols, overwrite = false,
+        tableProperties), collect)
+    }
 }
 
 class VintageBatchWrite(
@@ -239,7 +288,7 @@ class VintageBatchWrite(
   /** (column -> allocation base) of this write's identity fills — the
     * collision horizon the commit retry checks a raced mark against.
     */
-  private[graftshim] def idFillBases: Map[String, Long] =
+  private def idFillBases: Map[String, Long] =
     idFills.map(f => f._1 -> f._3).toMap
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
@@ -247,30 +296,29 @@ class VintageBatchWrite(
       physDataSchemaJson, partitionCols, physPartitionCols, factory, conf,
       constraints, idFills, logBloomCols, logBloomBits, bucketed)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.toSeq
-    val adds = msgs.flatMap {
-      case VintageCommitMessage(a, _) => a
-      case _ => Nil
-    }
-    val filled = msgs.exists {
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commit(messages, None)
+
+  /** One log commit of the tasks' files, under transaction watermark
+    * `txn` when given (a streaming epoch).
+    */
+  private[graftshim] def commit(messages: Array[WriterCommitMessage],
+      txn: Option[(String, Long)]): Unit = {
+    val filled = messages.exists {
       case VintageCommitMessage(_, f) => f
       case _ => false
     }
     VintageTable.forPath(SparkSession.active, tablePath)
-      .commitFiles(adds, overwrite,
+      .commitFiles(VintageCommitMessage.adds(messages.toSeq), overwrite, txn,
         idFilledBases = if (filled) idFillBases else Map.empty)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val hconf = conf.value
-    messages.foreach {
-      case VintageCommitMessage(adds, _) => adds.foreach { a =>
-        val p = new HPath(tablePath, a.path)
-        try p.getFileSystem(hconf).delete(p, false)
-        catch { case _: java.io.IOException => () }
-      }
-      case _ => ()
+    VintageCommitMessage.adds(messages.toSeq).foreach { a =>
+      val p = new HPath(tablePath, a.path)
+      try p.getFileSystem(hconf).delete(p, false)
+      catch { case _: java.io.IOException => () }
     }
   }
 }
@@ -327,8 +375,14 @@ class VintageDataWriter(
       val i = tableSchema.fieldIndex(f.name)
       BoundReference(i, tableSchema(i).dataType, tableSchema(i).nullable)
     }.toIndexedSeq)
-  private val partFields = partitionCols.map(c =>
-    tableSchema.fieldIndex(c) -> tableSchema(tableSchema.fieldIndex(c)).dataType)
+  // hive directory value of each partition column by Spark's own rule
+  // (what `df.write.partitionBy` writes): the value cast to a string in
+  // the session time zone, escaped by `ExternalCatalogUtils`
+  private val partStrings = UnsafeProjection.create(partitionCols.map { c =>
+    val i = tableSchema.fieldIndex(c)
+    Cast(BoundReference(i, tableSchema(i).dataType, nullable = true), StringType,
+      Option(hconf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))): Expression
+  })
 
   // relPath -> open writer
   private val writers = mutable.LinkedHashMap[String, OutputWriter]()
@@ -337,42 +391,6 @@ class VintageDataWriter(
     val attemptId = new TaskAttemptID(
       new TaskID(new JobID("vintage", 0), TaskType.MAP, partitionId), taskId.toInt)
     new TaskAttemptContextImpl(hconf, attemptId)
-  }
-
-  /** Hive path segment value of a partition column (Spark's own
-    * formatting: dates as ISO local dates, everything else toString).
-    */
-  private def partitionValueString(row: InternalRow, i: Int, dt: DataType): String = {
-    if (row.isNullAt(i)) return PartitionPaths.HiveDefaultPartition
-    dt match {
-      case StringType =>
-        val s = row.getUTF8String(i).toString
-        if (s.isEmpty) PartitionPaths.HiveDefaultPartition else escapePathName(s)
-      case DateType =>
-        java.time.LocalDate.ofEpochDay(row.getInt(i).toLong).toString
-      case BooleanType => row.getBoolean(i).toString
-      case ByteType => row.getByte(i).toString
-      case ShortType => row.getShort(i).toString
-      case IntegerType => row.getInt(i).toString
-      case LongType => row.getLong(i).toString
-      case FloatType => row.getFloat(i).toString
-      case DoubleType => row.getDouble(i).toString
-      case d: DecimalType => row.getDecimal(i, d.precision, d.scale).toString
-      case other => throw new UnsupportedOperationException(
-        s"unsupported partition column type ${other.sql}")
-    }
-  }
-
-  /** Escape characters illegal in hive path segments with %XX (the
-    * inverse of [[PartitionPaths.unescapePathName]]).
-    */
-  private def escapePathName(s: String): String = {
-    val needs = s.exists(c => c < ' ' || "\"#%'*/:=?\\{}[]^".indexOf(c) >= 0)
-    if (!needs) s
-    else s.flatMap { c =>
-      if (c < ' ' || "\"#%'*/:=?\\{}[]^".indexOf(c) >= 0) f"%%${c.toInt}%02X"
-      else c.toString
-    }
   }
 
   // partition prefix ("" when unpartitioned) -> file path relative to
@@ -397,10 +415,14 @@ class VintageDataWriter(
 
   private def writerFor(row: InternalRow): OutputWriter = {
     val key =
-      if (partFields.isEmpty) ""
-      else partFields.zip(physPartitionCols).map { case ((i, dt), c) =>
-        s"${escapePathName(c)}=${partitionValueString(row, i, dt)}"
-      }.mkString("/")
+      if (partitionCols.isEmpty) ""
+      else {
+        val vs = partStrings(row)
+        physPartitionCols.indices.map { j =>
+          ExternalCatalogUtils.getPartitionPathString(physPartitionCols(j),
+            if (vs.isNullAt(j)) null else vs.getUTF8String(j).toString)
+        }.mkString("/")
+      }
     writers.get(key) match {
       case Some(w) =>
         // refresh LRU position

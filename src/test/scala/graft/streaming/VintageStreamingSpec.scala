@@ -166,11 +166,15 @@ class VintageStreamingSpec extends AnyFunSuite {
     val cp = Files.createTempDirectory("vintage-src-cp").toString
 
     // 3 commits x 2 files = 6 files; maxFilesPerTrigger=2 must split
-    // the backfill into >= 3 non-empty micro-batches before stopping
-    VintageTable.create(spark, dir, Seq(1, 2).toDF("id").repartition(2))
+    // the backfill into >= 3 non-empty micro-batches before stopping.
+    // Each commit writes ids a and a+1 from two one-row partitions, so
+    // each of its two files holds one row
+    def twoFiles(a: Int) =
+      spark.range(a, a + 2, 1, 2).select(col("id").cast("int").as("id"))
+    VintageTable.create(spark, dir, twoFiles(1))
     val t = VintageTable.forPath(spark, dir)
-    t.append(Seq(3, 4).toDF("id").repartition(2))
-    t.append(Seq(5, 6).toDF("id").repartition(2))
+    t.append(twoFiles(3))
+    t.append(twoFiles(5))
 
     // foreachBatch, not the memory sink: the memory sink refuses to
     // recover from an existing checkpoint, and the RESUME half is the
@@ -210,7 +214,7 @@ class VintageStreamingSpec extends AnyFunSuite {
     // the post-checkpoint commit (exactly-once across the stop — the
     // standard backfill-then-stop deployment shape)
     delivered.clear()
-    t.append(Seq(7, 8).toDF("id").repartition(2))
+    t.append(twoFiles(7))
     val p2 = drain()
     assert(delivered.toArray(Array.empty[Integer]).map(_.toInt).sorted.toSeq
         == Seq(7, 8),

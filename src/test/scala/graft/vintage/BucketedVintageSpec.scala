@@ -97,6 +97,18 @@ class BucketedVintageSpec extends AnyFunSuite {
       .filter(col("id") % 5 =!= 0)
     assert(readV(p).exceptAll(expect).isEmpty &&
       expect.exceptAll(readV(p)).isEmpty)
+    // compaction and a fluent MERGE keep the layout too: every row of
+    // every file hashes to the bucket id in the file's name
+    t.compact(1)
+    t.as("t").merge(fact(20).withColumn("v", lit(-1.0)).as("s"), "t.id = s.id")
+      .whenMatched().updateAll().whenNotMatched().insertAll().execute()
+    VintageLog.replay(p).files.foreach { f =>
+      val id = Bucketing.bucketId(new org.apache.hadoop.fs.Path(f.path).getName)
+      val hashed = spark.read.parquet(f.absolutePath(p))
+        .select(pmod(hash(col("key")), lit(8))).distinct().as[Int].collect().toSeq
+      assert(id.isDefined && hashed == id.toSeq, s"${f.path} holds buckets $hashed")
+    }
+    assert(readV(p).filter(col("v") === -1.0).count() == 20)
   }
 
   test("UPDATE that moves a row across buckets re-buckets it") {

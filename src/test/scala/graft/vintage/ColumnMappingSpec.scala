@@ -81,6 +81,11 @@ class ColumnMappingSpec extends AnyFunSuite {
     assert(t.toDF.orderBy("id").collect().map(_.getDouble(1)).toSeq ==
       Seq(20.0, 31.0))
     assert(t.snapshot.files.size == 1)
+    // the rewritten file stores the physical name, not the logical one
+    val stored = spark.read.parquet(t.snapshot.files.head.absolutePath(t.path))
+      .schema.fieldNames.toSeq
+    assert(stored.contains(ColumnMapping.toPhysical(t.snapshot.schema, "price")) &&
+      !stored.contains("price"), s"file columns: $stored")
   }
 
   test("merge on a renamed key column") {

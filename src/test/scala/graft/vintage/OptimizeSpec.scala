@@ -87,5 +87,13 @@ class OptimizeSpec extends AnyFunSuite {
       "optimize must materialize deletions and drop the vectors")
     assert(t.toDF.count() == 90)
     assert(t.toDFAsOf(1).count() == 90)
+    // layout-only rewrites add their files with dataChange = false
+    def added = VintageLog.readVersion(t.path, t.version).collect {
+      case a: AddFile => a
+    }
+    assert(added.nonEmpty && added.forall(!_.dataChange), "OPTIMIZE adds")
+    t.compact(2)
+    assert(added.nonEmpty && added.forall(!_.dataChange), "compaction adds")
+    assert(t.toDF.count() == 90)
   }
 }

@@ -198,6 +198,35 @@ class PartitionedTableSpec extends AnyFunSuite {
     }
   }
 
+  test("SQL INSERT and fluent append name a TIMESTAMP/escaped partition's directory alike") {
+    val wh = Files.createTempDirectory("vintage-part-wh").toString
+    spark.conf.set("spark.sql.catalog.vpts",
+      "graft.vintage.connector.VintageCatalog")
+    spark.conf.set("spark.sql.catalog.vpts.warehouse", wh)
+    try {
+      spark.sql("CREATE TABLE vpts.t (id BIGINT, ts TIMESTAMP, tag STRING) " +
+        "PARTITIONED BY (ts, tag)")
+      // `}` and DEL are where a hand-written escape set can differ from
+      // Spark's, which escapes DEL and leaves `}`
+      val row = "TIMESTAMP '2024-01-02 03:04:05' AS ts, " +
+        "concat('a}b', char(127)) AS tag"
+      spark.sql(s"INSERT INTO vpts.t SELECT 1L AS id, $row")
+      val t = VintageTable.forPath(spark, s"$wh/t")
+      t.append(spark.sql(s"SELECT 2L AS id, $row"))
+      val files = t.snapshot.files
+      assert(files.size == 2)
+      val dirs = files.map(f => f.path.substring(0, f.path.lastIndexOf('/'))).toSet
+      assert(dirs.size == 1, s"one value, one directory: $dirs")
+      assert(dirs.head.startsWith("ts=2024-01-02 03%3A04%3A05/tag=a}b%7F"), dirs.head)
+      assert(spark.sql("SELECT id, ts, tag FROM vpts.t WHERE " +
+        "ts = TIMESTAMP '2024-01-02 03:04:05' AND tag = concat('a}b', char(127))")
+        .count() == 2)
+    } finally {
+      spark.conf.unset("spark.sql.catalog.vpts")
+      spark.conf.unset("spark.sql.catalog.vpts.warehouse")
+    }
+  }
+
   test("partition values survive checkpoint replay and special characters") {
     val dir = Files.createTempDirectory("vintage-part").toString + "/cp"
     val weird = Seq((1L, "a b/c:d", "x"), (2L, "plain", "y"))

@@ -75,6 +75,11 @@ class StatsSkippingSpec extends AnyFunSuite {
     val post = t.snapshot.files
     assert(post.exists(f => f.stats("id").min.contains("1")))
     assert(post.exists(f => f.stats("id").min.contains("201")))
+    // a delete that removes every row of its touched files adds no file
+    t.delete(col("id") >= 0)
+    assert(t.toDF.count() == 0)
+    val left = t.snapshot.files
+    assert(left.isEmpty, s"0-row files committed: ${left.map(_.numRecords)}")
   }
 
   test("small merge touches only the file intersecting the source key range") {
