@@ -131,12 +131,24 @@ object ColumnMapping {
     * columns). Identity — no copies — when the schema has no mapping.
     */
   def statsToLogical(schema: StructType, files: Seq[AddFile]): Seq[AddFile] =
+    rekey(schema, files, f => physicalName(f) -> f.name)
+
+  /** The inverse remap, logical→physical: files pruned in logical space
+    * back as the log keys them, fit to read, re-add or remove.
+    */
+  def statsToPhysical(schema: StructType, files: Seq[AddFile]): Seq[AddFile] =
+    rekey(schema, files, f => f.name -> physicalName(f))
+
+  private def rekey(schema: StructType, files: Seq[AddFile],
+      fromTo: StructField => (String, String)): Seq[AddFile] =
     if (!mapped(schema)) files
     else {
-      val p2l: Map[String, String] = schema.fields
-        .map(f => physicalName(f).toLowerCase -> f.name).toMap
+      val to: Map[String, String] = schema.fields.map { f =>
+        val (from, name) = fromTo(f)
+        from.toLowerCase -> name
+      }.toMap
       def remap[V](m: Map[String, V]): Map[String, V] =
-        m.flatMap { case (k, v) => p2l.get(k.toLowerCase).map(_ -> v) }
+        m.flatMap { case (k, v) => to.get(k.toLowerCase).map(_ -> v) }
       files.map { f =>
         if (f.stats.isEmpty && f.partitionValues.isEmpty) f
         else f.copy(stats = remap(f.stats), partitionValues = remap(f.partitionValues))

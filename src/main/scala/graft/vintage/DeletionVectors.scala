@@ -51,7 +51,15 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   */
 object DeletionVectors {
 
-  /** Table property enabling merge-on-read deletes. */
+  /** Table property choosing how the fluent row-level ops change the
+    * files they touch: fluent DELETE and UPDATE, and a SQL DELETE whose
+    * predicate translates to source filters (it runs the fluent
+    * delete), grow deletion vectors when it is true and rewrite every
+    * touched file copy-on-write when it is not. SQL UPDATE, SQL MERGE
+    * and other SQL DELETE always commit deletion vectors, and the
+    * fluent MERGE always rewrites. Read once, by the fluent row-level
+    * planner (`VintageTable.planRowLevel`).
+    */
   val EnabledProp = "vintage.deletionVectors.enabled"
 
   /** Table property bounding the inline DV size per file; a vector

@@ -171,14 +171,18 @@ class VintageMergeBuilder private[vintage] (
           else col(t) >= lit(mn) && col(t) <= lit(mx)
         }.reduce(_ && _))
       }
+    // pruned in logical space, kept as the log keys them (to read and
+    // remove)
+    def pruned(cond: Column): Seq[AddFile] = ColumnMapping.statsToPhysical(
+      snap.schema, FileSkipping.candidates(snap.schema, snap.statFiles,
+        ColumnExpr.expr(cond)))
     val candidates: Seq[AddFile] = rangeCond match {
       case _ if snap.files.isEmpty => Nil
       case None => snap.files
-      case Some(rc) =>
-        FileSkipping.candidates(snap.schema, snap.statFiles, ColumnExpr.expr(rc))
+      case Some(rc) => pruned(rc)
     }
     // live rows only: a key deleted by a deletion vector matches nothing
-    val touchedMatched: Set[String] = table.touchedKeys(snap, candidates)(t =>
+    val matchedKeys: Set[String] = table.touchedKeys(snap, candidates)(t =>
       aliased(t, targetAlias).join(aliased(source, srcAlias), condition, "left_semi"))
     // NOT MATCHED BY SOURCE clauses act on target rows with NO match —
     // those can live in ANY file, so file selection prunes only by the
@@ -198,17 +202,16 @@ class VintageMergeBuilder private[vintage] (
         case _ => ()
       }
     }
-    val touchedBySource: Set[String] =
-      if (bySourceClauses.isEmpty) Set.empty
+    val touchedBySource: Seq[AddFile] =
+      if (bySourceClauses.isEmpty) Nil
       else {
         val conds = bySourceClauses.map(_._1.cond)
-        val files =
-          if (conds.exists(_.isEmpty)) snap.files
-          else FileSkipping.candidates(snap.schema, snap.statFiles,
-            ColumnExpr.expr(conds.flatten.reduce(_ || _)))
-        files.map(table.keyOf).toSet
+        if (conds.exists(_.isEmpty)) snap.files
+        else pruned(conds.flatten.reduce(_ || _))
       }
-    val touched: Set[String] = touchedMatched ++ touchedBySource
+    val touched: Seq[AddFile] =
+      (candidates.filter(f => matchedKeys(table.keyOf(f))) ++ touchedBySource)
+        .distinctBy(_.path)
 
     // ---- phase 2: rewrite touched files + inserts via one full outer join
     // (row-tracked tables read the touched rows WITH their ids and the
@@ -222,7 +225,7 @@ class VintageMergeBuilder private[vintage] (
           else StructType(snap.schema.fields :+
             org.apache.spark.sql.types.StructField(RowTracking.MaterializedCol,
               org.apache.spark.sql.types.LongType)))
-      else table.rewriteSource(snap, touched)._1
+      else table.rewriteSourceExact(snap, touched)._1
     val tMarked = aliased(tBase.withColumn(TgtMark, lit(true)), targetAlias)
     val sMarked = aliased(source.withColumn(SrcMark, lit(true)), sourceAliasOf(source))
 
@@ -304,9 +307,12 @@ class VintageMergeBuilder private[vintage] (
     val toWrite =
       if (keyPairs.isEmpty || touched.isEmpty ||
           Bucketing.spec(snap.properties).isDefined) rewritten
-      else clustered(rewritten, finalSchema,
-        snap.statFiles.filter(f => touched.contains(table.keyOf(f))),
-        snap.partitionColumns ++ keyPairs.map(_._1))
+      else {
+        val touchedPaths = touched.map(_.path).toSet
+        clustered(rewritten, finalSchema,
+          snap.statFiles.filter(f => touchedPaths(f.path)),
+          snap.partitionColumns ++ keyPairs.map(_._1))
+      }
     val adds =
       if (touched.isEmpty && notMatchedClauses.isEmpty) Nil
       else VintageTable.writeFiles(spark, toWrite, table.path, dataChange = true,
@@ -334,7 +340,7 @@ class VintageMergeBuilder private[vintage] (
         .getOrElse(FullRead)
     table.commitOp(snap, "MERGE",
       Map("predicate" -> s"(${condition.toString})"),
-      adds, table.removesFor(snap, touched), meta, scope, txn = txnAction)
+      adds, table.removesForFiles(touched), meta, scope, txn = txnAction)
   }
 
   private def aliased(df: DataFrame, a: Option[String]): DataFrame =

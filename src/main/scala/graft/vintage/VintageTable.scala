@@ -22,12 +22,13 @@ import graft.vintage.connector.VintageSqlTable
   * travel (169, 202), schema evolution (327-388), compaction (403-412),
   * vacuum (415).
   *
-  * Scale design: row-level ops are file-granular copy-on-write — phase
-  * 1 discovers the touched files with a semi join (broadcast when the
+  * Scale design: row-level ops are file-granular — phase 1 discovers
+  * the touched files (a semi join for merge, broadcast when the
   * submission is small, which is the common case for merge messages),
-  * phase 2 rewrites only those files. Untouched files are never read
-  * twice nor rewritten, so merge cost is proportional to the touched
-  * data, not the table size.
+  * phase 2 rewrites only those files, or for DELETE/UPDATE on a
+  * deletion-vector table grows their vectors. Untouched files are never
+  * read twice nor rewritten, so merge cost is proportional to the
+  * touched data, not the table size.
   */
 class VintageTable private (
     val spark: SparkSession,
@@ -108,114 +109,7 @@ class VintageTable private (
     */
   def delete(condition: String): Unit = delete(expr(condition))
 
-  def delete(condition: Column): Unit = {
-    val snap = snapshot
-    if (DeletionVectors.enabled(snap.properties)) {
-      deleteWithDvs(snap, condition)
-      return
-    }
-    val touched = touchedFiles(snap, condition)
-    val scope = PredicateRead(ColumnExpr.expr(condition))
-    if (touched.isEmpty) {
-      commitOp(snap, "DELETE", Map("predicate" -> condition.toString),
-        Nil, Nil, None, scope)
-      return
-    }
-    val (delSrc, delIdCols) = rewriteSource(snap, touched)
-    val remaining = delSrc.filter(!coalesce(condition, lit(false)))
-      .select(snap.schema.fieldNames.toIndexedSeq.map(col) ++ delIdCols: _*)
-    val adds = writeFiles(spark, remaining, path, dataChange = true,
-      snap.partitionColumns)
-    commitOp(snap, "DELETE", Map("predicate" -> condition.toString),
-      adds, removesFor(snap, touched), None, scope)
-  }
-
-  /** Shared planning of a merge-on-read row-level op: find the LIVE
-    * rows matching `condition` in the stats-pruned candidate files,
-    * then split the touched files into copy-on-write rewrites
-    * (`rewriteFiles`) and files whose deletion vectors grow
-    * ([[DeletionVectors.grow]]): `dvFiles` as they are, `grown` with
-    * the new vectors. `None` = nothing matched. The matches frame is
-    * persisted for the jobs that reuse it (counts, inline positions,
-    * sidecar write) so candidates are scanned once, and unpersisted
-    * before returning.
-    */
-  private case class MorPlan(grown: Seq[AddFile], dvFiles: Seq[AddFile],
-      rewriteFiles: Seq[AddFile])
-
-  private def planMergeOnRead(
-      snap: Snapshot, cands: Seq[AddFile], condition: Column): Option[MorPlan] = {
-    // (file key, position) of LIVE rows matching the predicate — the
-    // native scan drops rows already in a DV, so positions never
-    // double-count
-    val matches = readFiles(snap, cands, Seq(FileCol, PosCol))
-      .filter(coalesce(condition, lit(false)))
-      .select(col(FileCol).as("file_key"), col(PosCol).as("pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts = matches.groupBy(col("file_key"))
-        .agg(count(lit(1)).as("__n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.isEmpty) return None
-      val byKey = cands.map(f => keyOf(f) -> f).toMap
-      val touched = counts.keys.map(k => k -> byKey(k)).toMap
-      val cap = DeletionVectors.maxInline(snap.properties)
-      val frac = DeletionVectors.maxDeletedFraction(snap.properties)
-      // a file whose grown vector leaves the inline tier rewrites when
-      // it is dense-dead (fraction known and reached)
-      val rewriteKeys = counts.keySet.filter { k =>
-        val f = byKey(k)
-        val n = f.dvCount + counts(k)
-        (n > cap || f.dvRef.nonEmpty) && f.numRecords.exists(rows => n >= frac * rows)
-      }
-      val grown = DeletionVectors.grow(snap, path, touched, matches,
-        counts -- rewriteKeys)
-      Some(MorPlan(grown, grown.map(f => byKey(keyOf(f))),
-        rewriteKeys.toSeq.map(byKey)))
-    } finally matches.unpersist(blocking = false)
-  }
-
-  /** Merge-on-read delete (`vintage.deletionVectors.enabled`): instead
-    * of rewriting every touched file, record the matching rows' file
-    * positions as deletion vectors — commit cost is O(deleted rows),
-    * not O(touched bytes), the decisive difference for sparse deletes
-    * at 100 TB. Per-file three-tier hybrid, graded by cardinality:
-    * vectors within `vintage.deletionVectors.maxInline` inline in the
-    * log; wider-but-sparse vectors go to a parquet SIDECAR under
-    * `_vintage_dv/` (written distributed — positions never touch the
-    * driver); files with >= `maxDeletedFraction` of their rows dead
-    * rewrite copy-on-write (when most of a file dies, rewriting the
-    * survivors is the cheaper plan AND keeps the table small). Reads
-    * subtract DVs in [[connector.VintageNativeScan]]; OPTIMIZE/compaction
-    * rewrites purge them.
-    */
-  private def deleteWithDvs(snap: Snapshot, condition: Column): Unit = {
-    val scope = PredicateRead(ColumnExpr.expr(condition))
-    val params = Map("predicate" -> condition.toString, "mode" -> "merge-on-read")
-    val cands = candidateFiles(snap, condition)
-    val plan = if (cands.isEmpty) None else planMergeOnRead(snap, cands, condition)
-    plan match {
-      case None => commitOp(snap, "DELETE", params, Nil, Nil, None, scope): Unit
-      case Some(p) =>
-        // over-cap side: classic copy-on-write rewrite of the survivors
-        // (row ids materialize through it — stability)
-        val rewriteAdds =
-          if (p.rewriteFiles.isEmpty) Nil
-          else {
-            val (src, idCols) = rewriteSourceExact(snap, p.rewriteFiles)
-            writeFiles(spark,
-              src.filter(!coalesce(condition, lit(false)))
-                .select(snap.schema.fieldNames.toIndexedSeq.map(col) ++
-                  idCols: _*),
-              path, dataChange = true, snap.partitionColumns)
-          }
-        commitOp(snap, "DELETE",
-          params + ("deletionVectors" -> p.dvFiles.size.toString,
-                    "rewrittenFiles" -> p.rewriteFiles.size.toString),
-          p.grown ++ rewriteAdds,
-          removesForFiles(p.dvFiles ++ p.rewriteFiles), None, scope)
-    }
-  }
+  def delete(condition: Column): Unit = rowLevel(snapshot, "DELETE", condition, None)
 
   /** Conditional column update (README.md:290
     * `exrTable.update(col("CURRENCY") === "CHF", Map("DECIMALS" -> lit(5)))`).
@@ -225,85 +119,106 @@ class VintageTable private (
     val bad = set.keySet.filterNot(snap.schema.fieldNames.contains)
     require(bad.isEmpty, s"update of unknown columns: $bad")
     IdentityColumns.validateAssignments(set.keys, snap.properties)
-    if (DeletionVectors.enabled(snap.properties)) {
-      updateWithDvs(snap, condition, set)
-      return
-    }
-    val touched = touchedFiles(snap, condition)
-    val scope = PredicateRead(ColumnExpr.expr(condition))
-    if (touched.isEmpty) {
-      commitOp(snap, "UPDATE", Map("predicate" -> condition.toString),
-        Nil, Nil, None, scope)
-      return
-    }
-    val (updSrc, updIdCols) = rewriteSource(snap, touched)
-    val updated = updSrc.select(
-      updateProjection(snap, condition, set) ++ updIdCols: _*)
-    val adds = writeFiles(spark, updated, path, dataChange = true,
-      snap.partitionColumns)
-    commitOp(snap, "UPDATE", Map("predicate" -> condition.toString),
-      adds, removesFor(snap, touched), None, scope)
+    rowLevel(snap, "UPDATE", condition, Some(set))
   }
 
-  /** `when(cond, set).otherwise(col)` per column, in declared order. */
-  private def updateProjection(snap: Snapshot, condition: Column,
-      set: Map[String, Column]): IndexedSeq[Column] =
-    snap.schema.fieldNames.toIndexedSeq.map { c =>
-      set.get(c) match {
+  /** The touched files of a fluent row-level op, split by how each
+    * changes: `dvFiles` keep their data and are re-added as `grown`,
+    * with deletion vectors over their matched rows; `rewriteFiles` are
+    * rewritten whole. Copy-on-write is the plan in which every touched
+    * file rewrites; `mergeOnRead` records which policy planned it.
+    */
+  private case class RowLevelPlan(mergeOnRead: Boolean, grown: Seq[AddFile],
+      dvFiles: Seq[AddFile], rewriteFiles: Seq[AddFile]) {
+    def touched: Seq[AddFile] = dvFiles ++ rewriteFiles
+  }
+
+  /** Plan a fluent row-level op over the stats-pruned candidates of
+    * `condition`. Without `vintage.deletionVectors.enabled` every file
+    * holding a live match rewrites, and touch discovery reads only
+    * [[FileCol]], so its scan stays columnar. With it, touch discovery
+    * reads the LIVE matches' positions (the native scan drops rows
+    * already in a DV, so positions never double-count) and
+    * [[DeletionVectors.grow]] tiers each touched file: an inline or
+    * sidecar vector, or a copy-on-write rewrite once a file leaving the
+    * inline tier is dense-dead (`maxDeletedFraction` of its rows, when
+    * its row count is known). The matches frame is persisted for the
+    * jobs that reuse it (counts, inline positions, sidecar write) so
+    * the candidates are scanned once.
+    */
+  private def planRowLevel(snap: Snapshot, condition: Column): RowLevelPlan = {
+    val mergeOnRead = DeletionVectors.enabled(snap.properties)
+    val cands = candidateFiles(snap, condition)
+    if (cands.isEmpty) RowLevelPlan(mergeOnRead, Nil, Nil, Nil)
+    else if (!mergeOnRead) {
+      val keys = touchedKeys(snap, cands)(_.where(condition))
+      RowLevelPlan(mergeOnRead, Nil, Nil, cands.filter(f => keys(keyOf(f))))
+    } else {
+      val matches = readFiles(snap, cands, Seq(FileCol, PosCol))
+        .filter(coalesce(condition, lit(false)))
+        .select(col(FileCol).as("file_key"), col(PosCol).as("pos"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val counts = matches.groupBy(col("file_key"))
+          .agg(count(lit(1)).as("__n")).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val byKey = cands.map(f => keyOf(f) -> f).toMap
+        val cap = DeletionVectors.maxInline(snap.properties)
+        val frac = DeletionVectors.maxDeletedFraction(snap.properties)
+        val rewriteKeys = counts.keySet.filter { k =>
+          val f = byKey(k)
+          val n = f.dvCount + counts(k)
+          (n > cap || f.dvRef.nonEmpty) && f.numRecords.exists(rows => n >= frac * rows)
+        }
+        val grown =
+          if (counts.isEmpty) Nil
+          else DeletionVectors.grow(snap, path,
+            counts.keys.map(k => k -> byKey(k)).toMap, matches, counts -- rewriteKeys)
+        RowLevelPlan(mergeOnRead, grown, grown.map(f => byKey(keyOf(f))),
+          rewriteKeys.toSeq.map(byKey))
+      } finally matches.unpersist(blocking = false)
+    }
+  }
+
+  /** The one executor of fluent DELETE (`set` = None) and UPDATE: plan
+    * ([[planRowLevel]]), write, commit. A rewritten file keeps its
+    * unmatched rows (DELETE) or all its rows under the SET projection
+    * (UPDATE); an UPDATE also writes the SET projection of the matched
+    * rows of its DV files, whose old positions the grown vectors
+    * delete. Row ids pass through the rewrite ([[rewriteSourceExact]]).
+    * One commit, whose parameters name the merge-on-read mode and, when
+    * a file was touched, its DV and rewrite counts.
+    */
+  private def rowLevel(snap: Snapshot, op: String, condition: Column,
+      set: Option[Map[String, Column]]): Unit = {
+    val plan = planRowLevel(snap, condition)
+    val matched = coalesce(condition, lit(false))
+    val projection = snap.schema.fieldNames.toIndexedSeq.map { c =>
+      set.flatMap(_.get(c)) match {
         case Some(e) =>
-          when(coalesce(condition, lit(false)), e.cast(snap.schema(c).dataType))
-            .otherwise(col(c)).as(c)
+          when(matched, e.cast(snap.schema(c).dataType)).otherwise(col(c)).as(c)
         case None => col(c)
       }
     }
-
-  /** Merge-on-read UPDATE (`vintage.deletionVectors.enabled`): DV-mark
-    * the matched rows' positions and append their updated copies as new
-    * files — write cost O(matched rows), never O(touched bytes). The
-    * same per-file inline cap as [[deleteWithDvs]] sends densely-
-    * matched files down the classic whole-file rewrite instead.
-    */
-  private def updateWithDvs(snap: Snapshot, condition: Column,
-      set: Map[String, Column]): Unit = {
-    val scope = PredicateRead(ColumnExpr.expr(condition))
-    val params = Map("predicate" -> condition.toString, "mode" -> "merge-on-read")
-    val cands = candidateFiles(snap, condition)
-    val plan = if (cands.isEmpty) None else planMergeOnRead(snap, cands, condition)
-    plan match {
-      case None => commitOp(snap, "UPDATE", params, Nil, Nil, None, scope): Unit
-      case Some(p) =>
-        // DV side: old positions are marked deleted (p.grown); append
-        // the matched LIVE rows with the SET applied as new files
-        // (row ids materialize through the rewrite — stability)
-        val updatedAdds =
-          if (p.dvFiles.isEmpty) Nil
-          else {
-            val (src, idCols) = rewriteSourceExact(snap, p.dvFiles)
-            writeFiles(spark,
-              src.filter(coalesce(condition, lit(false)))
-                .select(snap.schema.fieldNames.toIndexedSeq.map { c =>
-                  set.get(c) match {
-                    case Some(e) => e.cast(snap.schema(c).dataType).as(c)
-                    case None => col(c)
-                  }
-                } ++ idCols: _*),
-              path, dataChange = true, snap.partitionColumns)
-          }
-        // dense side: classic whole-file rewrite
-        val rewriteAdds =
-          if (p.rewriteFiles.isEmpty) Nil
-          else {
-            val (src, idCols) = rewriteSourceExact(snap, p.rewriteFiles)
-            writeFiles(spark,
-              src.select(updateProjection(snap, condition, set) ++ idCols: _*),
-              path, dataChange = true, snap.partitionColumns)
-          }
-        commitOp(snap, "UPDATE",
-          params + ("deletionVectors" -> p.dvFiles.size.toString,
-                    "rewrittenFiles" -> p.rewriteFiles.size.toString),
-          p.grown ++ updatedAdds ++ rewriteAdds,
-          removesForFiles(p.dvFiles ++ p.rewriteFiles), None, scope)
-    }
+    def write(files: Seq[AddFile])(rows: DataFrame => DataFrame): Seq[AddFile] =
+      if (files.isEmpty) Nil
+      else {
+        val (src, idCols) = rewriteSourceExact(snap, files)
+        writeFiles(spark, rows(src).select(projection ++ idCols: _*), path,
+          dataChange = true, snap.partitionColumns)
+      }
+    val updatedAdds =
+      if (set.isEmpty) Nil else write(plan.dvFiles)(_.filter(matched))
+    val rewriteAdds =
+      write(plan.rewriteFiles)(src => if (set.isEmpty) src.filter(!matched) else src)
+    val params = Map("predicate" -> condition.toString) ++
+      (if (!plan.mergeOnRead) Nil
+       else Seq("mode" -> "merge-on-read") ++
+         (if (plan.touched.isEmpty) Nil
+          else Seq("deletionVectors" -> plan.dvFiles.size.toString,
+                   "rewrittenFiles" -> plan.rewriteFiles.size.toString)))
+    commitOp(snap, op, params, plan.grown ++ updatedAdds ++ rewriteAdds,
+      removesForFiles(plan.touched), None, PredicateRead(ColumnExpr.expr(condition)))
   }
 
   // ------------------------------------------------------------ overwrite
@@ -995,20 +910,8 @@ class VintageTable private (
     */
   def compact(numFiles: Int): Unit = {
     val snap = snapshot
-    // bucketed tables: writeFiles re-buckets unconditionally (the
-    // bucket count IS the file count), so the caller's repartition
-    // would only add a dead shuffle
-    val rows = rewriteSourceExact(snap, snap.files)._1
-    val arranged =
-      if (Bucketing.spec(snap.properties).isDefined) rows
-      else rows.repartition(numFiles)
-    val adds = writeFiles(spark, arranged,
-      path, dataChange = false, snap.partitionColumns)
-    commitOp(snap, "WRITE",
-      Map("mode" -> "Overwrite", "dataChange" -> "false"),
-      adds, snap.files.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = false)),
-      None, LayoutOnly)
+    rewriteLayout(snap, snap.files, "WRITE",
+      Map("mode" -> "Overwrite", "dataChange" -> "false"))(_.repartition(numFiles))
   }
 
   /** Bin-packing compaction — Delta's actual OPTIMIZE semantics:
@@ -1030,22 +933,10 @@ class VintageTable private (
     val selected = snap.files.filter(f => f.size < minBytes || f.hasDv)
     // one small clean file alone cannot be packed any better
     if (selected.size < 2 && !selected.exists(_.hasDv)) return 0L
-    val numFiles = math.max(1,
-      math.ceil(selected.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    val rows = rewriteSourceExact(snap, selected)._1
-    // bucketed: skip the pre-shuffle, writeFiles re-buckets anyway
-    val arranged =
-      if (Bucketing.spec(snap.properties).isDefined) rows
-      else if (snap.partitionColumns.isEmpty) rows.repartition(numFiles)
-      else rows.repartition(numFiles, snap.partitionColumns.map(col): _*)
-    val adds = writeFiles(spark, arranged, path,
-      dataChange = false, snap.partitionColumns)
-    commitOp(snap, "OPTIMIZE",
+    rewriteLayout(snap, selected, "OPTIMIZE",
       Map("dataChange" -> "false", "filesRewritten" -> selected.size.toString,
-          "targetFileBytes" -> targetFileBytes.toString),
-      adds, selected.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = false)),
-      None, LayoutOnly)
+          "targetFileBytes" -> targetFileBytes.toString))(
+      packed(snap, selected, targetFileBytes))
     selected.size.toLong
   }
 
@@ -1065,28 +956,26 @@ class VintageTable private (
     toDF.filter(condition).queryExecution.analyzed
     val selected = candidateFiles(snap, condition)
     if (selected.isEmpty) return 0L
-    val numFiles = math.max(1,
-      math.ceil(selected.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    // partitioned tables cluster by the partition columns, so each
-    // selected hive partition's rows land in ONE task and the write
-    // emits one file per partition value — a round-robin repartition
-    // would spread every partition over every task and emit up to
-    // numFiles × partitions files, fragmenting what it set out to fix
-    val rows = rewriteSourceExact(snap, selected)._1
-    // bucketed: skip the pre-shuffle, writeFiles re-buckets anyway
-    val arranged =
-      if (Bucketing.spec(snap.properties).isDefined) rows
-      else if (snap.partitionColumns.isEmpty) rows.repartition(numFiles)
-      else rows.repartition(numFiles, snap.partitionColumns.map(col): _*)
-    val adds = writeFiles(spark, arranged, path,
-      dataChange = false, snap.partitionColumns)
-    commitOp(snap, "WRITE",
+    rewriteLayout(snap, selected, "WRITE",
       Map("mode" -> "Overwrite", "dataChange" -> "false",
-          "predicate" -> condition.toString),
-      adds, selected.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = false)),
-      None, LayoutOnly)
+          "predicate" -> condition.toString))(
+      packed(snap, selected, targetFileBytes))
     selected.size.toLong
+  }
+
+  /** Bin-packing arrangement of `files`' rows into ~`targetFileBytes`
+    * outputs. Partitioned tables cluster by the partition columns, so
+    * each hive partition's rows land in ONE task and the write emits
+    * one file per partition value — a round-robin repartition would
+    * spread every partition over every task and emit up to numFiles ×
+    * partitions files, fragmenting what it set out to fix.
+    */
+  private def packed(snap: Snapshot, files: Seq[AddFile],
+      targetFileBytes: Long)(rows: DataFrame): DataFrame = {
+    val numFiles = math.max(1,
+      math.ceil(files.map(_.size).sum.toDouble / targetFileBytes).toInt)
+    if (snap.partitionColumns.isEmpty) rows.repartition(numFiles)
+    else rows.repartition(numFiles, snap.partitionColumns.map(col): _*)
   }
 
   /** Z-order clustering: rewrite the table laid out along a
@@ -1104,8 +993,8 @@ class VintageTable private (
   def cluster(numFiles: Int, cols: String*): Unit = {
     require(cols.nonEmpty, "cluster needs at least one column")
     val snap = snapshot
-    val df = rewriteSourceExact(snap, snap.files)._1
-    val clustered =
+    rewriteLayout(snap, snap.files, "CLUSTER",
+      Map("by" -> cols.mkString(","), "dataChange" -> "false")) { df =>
       if (cols.size == 1)
         df.repartitionByRange(numFiles, col(cols.head))
           .sortWithinPartitions(col(cols.head))
@@ -1117,13 +1006,26 @@ class VintageTable private (
           .sortWithinPartitions(col(zName))
           .drop(zName)
       }
-    val adds = writeFiles(spark, clustered, path, dataChange = false,
+    }
+  }
+
+  /** The tail of every layout-only rewrite (compact, OPTIMIZE, scoped
+    * compaction, cluster): the live rows of `files` with their row ids,
+    * laid out by `arrange`, written with `dataChange = false` and
+    * committed as `op` in place of `files`. Bucketed tables skip
+    * `arrange`: the writer re-buckets every write (the bucket count IS
+    * the file count), so a pre-shuffle would be dead work.
+    */
+  private def rewriteLayout(snap: Snapshot, files: Seq[AddFile], op: String,
+      params: Map[String, String])(arrange: DataFrame => DataFrame): Unit = {
+    val rows = rewriteSourceExact(snap, files)._1
+    val arranged =
+      if (Bucketing.spec(snap.properties).isDefined) rows else arrange(rows)
+    val adds = writeFiles(spark, arranged, path, dataChange = false,
       snap.partitionColumns)
-    commitOp(snap, "CLUSTER",
-      Map("by" -> cols.mkString(","), "dataChange" -> "false"),
-      adds, snap.files.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = false)),
-      None, LayoutOnly)
+    val now = System.currentTimeMillis()
+    commitOp(snap, op, params, adds,
+      files.map(f => RemoveFile(f.path, now, dataChange = false)), None, LayoutOnly)
   }
 
   /** Re-establish a past version as the current state
@@ -1657,21 +1559,16 @@ class VintageTable private (
   // ------------------------------------------------------------ internals
 
   /** Files whose min/max stat range may contain predicate matches —
-    * the stats-pruned candidate set consulted before any scan runs.
+    * the stats-pruned candidate set consulted before any scan runs —
+    * as the log holds them (physical column names), so they can be
+    * read, re-added and removed.
     */
   private[graft] def candidateFiles(snap: Snapshot, condition: Column): Seq[AddFile] =
     // spilled snapshots prune DISTRIBUTED (SnapshotPruning routes);
     // statFiles carry synthetic partition-column stats, so partition
     // predicates prune here exactly like data-column stats
-    SnapshotPruning.candidates(spark, snap, ColumnExpr.expr(condition))
-
-  /** Canonical keys of the files containing at least one row matching
-    * `condition` — the copy-on-write touch set. Stats pruning narrows
-    * the scan first, so a 1-key delete against a large table reads only
-    * the files whose stat range contains the key.
-    */
-  private[vintage] def touchedFiles(snap: Snapshot, condition: Column): Set[String] =
-    touchedKeys(snap, candidateFiles(snap, condition))(_.where(condition))
+    ColumnMapping.statsToPhysical(snap.schema,
+      SnapshotPruning.candidates(spark, snap, ColumnExpr.expr(condition)))
 
   /** Canonical keys of the files among `files` holding a live row that
     * `matching` keeps (a filter or a semi join over the rows of
@@ -1687,10 +1584,6 @@ class VintageTable private (
   /** Canonical key of a file of this table: its `_vintage_file` value. */
   private[vintage] def keyOf(f: AddFile): String =
     DeletionVectors.fileKey(f.absolutePath(path))
-
-  /** Live files of `snap` whose canonical keys are in `keys`. */
-  private[vintage] def filesIn(snap: Snapshot, keys: Set[String]): Seq[AddFile] =
-    snap.files.filter(f => keys.contains(keyOf(f)))
 
   /** Current rows plus their stable row ids as `_row_id` (row
     * tracking; see [[RowTracking]] for the stability contract). Rows
@@ -1735,10 +1628,6 @@ class VintageTable private (
     else (dfWithRowIds(snap, files, RowTracking.MaterializedCol),
       Seq(col(RowTracking.MaterializedCol)))
 
-  private[vintage] def rewriteSource(snap: Snapshot,
-      keys: Set[String]): (DataFrame, Seq[Column]) =
-    rewriteSourceExact(snap, filesIn(snap, keys))
-
   /** Live rows of exactly these AddFiles (which need not be live in
     * `snap` — the change feed reads a REMOVED file with the deletion
     * vector it had before removal) in declared column order, plus the
@@ -1770,9 +1659,6 @@ class VintageTable private (
     val now = System.currentTimeMillis()
     files.map(f => RemoveFile(f.path, now, dataChange = true))
   }
-
-  private[vintage] def removesFor(snap: Snapshot, keys: Set[String]): Seq[RemoveFile] =
-    removesForFiles(filesIn(snap, keys))
 
   /** Commit with optimistic-concurrency retry: when another writer
     * wins the version race, re-read the log and re-commit at the next
@@ -1814,10 +1700,17 @@ class VintageTable private (
         s"table $path requires writer features ${unwritable.mkString(", ")} " +
         s"this engine does not support")
     // metadata changes may ACTIVATE features (DV property set, column
-    // mapping enabled, first identity column…): grow the protocol in
-    // the same commit so a lesser reader/writer stops at the gate
-    val protoGrown: Seq[Action] = meta.toSeq.flatMap { m =>
-      val req = snap.protocol.union(Protocol.required(m.schema, m.properties))
+    // mapping enabled, first identity column…), and so may the adds:
+    // a deletion vector needs its feature whatever the properties say
+    // (SQL row-level DML always commits DVs). Grow the protocol in the
+    // same commit so a lesser reader/writer stops at the gate
+    val protoGrown: Seq[Action] = {
+      val fromMeta = meta.map(m => Protocol.required(m.schema, m.properties))
+      val fromAdds =
+        if (adds.exists(_.hasDv)) Some(Protocol(Seq(Protocol.DeletionVectors),
+          Seq(Protocol.DeletionVectors)))
+        else None
+      val req = (fromMeta ++ fromAdds).foldLeft(snap.protocol)(_ union _)
       if (req == snap.protocol) Nil else Seq(req)
     }
     var readVersion = snap.version

@@ -432,9 +432,11 @@ class VintageCatalog extends TableCatalog with StagingTableCatalog {
   * final parquet files and report AddFiles with footer stats; the
   * driver folds them into one optimistic log commit). A SQL DELETE
   * whose predicate translates to source filters goes through
-  * SupportsDelete to the fluent [[VintageTable.delete]] (file-skipped
-  * copy-on-write, or deletion vectors on a DV-enabled table); other
-  * SQL DELETE, UPDATE and MERGE plan the native row-level operation.
+  * SupportsDelete to the fluent [[VintageTable.delete]], so
+  * `vintage.deletionVectors.enabled` picks file-skipped copy-on-write
+  * or deletion vectors for it; other SQL DELETE, UPDATE and MERGE plan
+  * the native row-level operation ([[VintageRowLevel]]), which always
+  * commits deletion vectors.
   */
 class VintageSqlTable(
     val tablePath: String, ident: String,

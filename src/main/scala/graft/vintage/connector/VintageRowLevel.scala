@@ -44,14 +44,13 @@ import graft.vintage.{Snapshot, VintageTable}
   *    adds the new files — commit cost O(changed rows), never
   *    O(touched bytes), at any condition complexity.
   *
-  * Versus the previous injected-resolution-rule design, the gains are
-  * plan-level: UPDATE/MERGE are planned by Spark's own row-level
-  * rules (`WriteDelta` appears in EXPLAIN), WHEN NOT MATCHED BY SOURCE
-  * works, and no session extension is needed for DML (the extension
-  * still carries OPTIMIZE/VACUUM parsing and SQL function
-  * registration). Filter-translatable SQL DELETE keeps taking the
-  * metadata path (`SupportsDeleteV2` → [[VintageTable.delete]]), which
-  * Spark's `OptimizeMetadataOnlyDeleteFromTable` prefers — row-level
+  * These plans commit deletion vectors whatever
+  * `vintage.deletionVectors.enabled` says; the commit grows the
+  * table's protocol by the deletion-vector feature. A filter-
+  * translatable SQL DELETE takes the metadata path instead
+  * (`SupportsDeleteV2` → [[VintageTable.delete]], which Spark's
+  * `OptimizeMetadataOnlyDeleteFromTable` prefers): the fluent delete,
+  * copy-on-write or deletion vectors as the property says. Row-level
   * plans engage exactly when the condition is beyond filters.
   */
 object VintageRowLevel {

@@ -123,6 +123,29 @@ class ColumnMappingSpec extends AnyFunSuite {
     assert(t.toDF.filter(col("region") === "eu").count() == 3)
   }
 
+  test("fluent DML and scoped compaction on a renamed partition column, copy-on-write and DV") {
+    Seq(false, true).foreach { dvs =>
+      val t = VintageTable.create(spark, dir(s"dml-part-$dvs"),
+        Seq((1L, "eu", 1.0), (2L, "us", 2.0), (3L, "eu", 3.0), (4L, "eu", 4.0))
+          .toDF("id", "ctry", "v"),
+        partitionBy = Seq("ctry"),
+        properties = Map(DeletionVectors.EnabledProp -> dvs.toString))
+      t.enableColumnMapping()
+      t.renameColumn("ctry", "region")
+      t.delete(col("region") === "eu" && col("id") === 1L)
+      t.update(col("region") === "eu" && col("id") === 3L, Map("v" -> lit(30.0)))
+      t.as("t").merge(Seq((4L, "eu", 40.0)).toDF("id", "region", "v").as("s"),
+          "t.id = s.id AND t.region = s.region")
+        .whenMatched().updateAll().whenNotMatched().insertAll().execute()
+      // a scoped compaction selects by the renamed partition column too
+      assert(t.compactWhere(col("region") === "eu") > 0)
+      val rows = t.toDF.orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+      assert(rows == Seq((2L, "us", 2.0), (3L, "eu", 30.0), (4L, "eu", 40.0)),
+        s"deletionVectors=$dvs")
+    }
+  }
+
   test("format(\"vintage\") read path translates physical names (filter + pruned projection)") {
     val d = dir("conn")
     val t = VintageTable.create(spark, d,

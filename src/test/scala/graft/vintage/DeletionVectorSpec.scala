@@ -341,6 +341,38 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(t.toDF.count() == 60)
   }
 
+  test("merge-on-read UPDATE: dense file rewrites, sparse file gains a DV, one commit") {
+    val dir = newDir("mor-update-hybrid")
+    // file A holds k=0 (50 rows), file B holds k=1 (50 rows)
+    val df = (1L to 100L).map(i => (i, i % 2, "x")).toDF("id", "k", "v")
+      .repartitionByRange(2, col("k"))
+    val t = VintageTable.create(spark, dir, df,
+      properties = DvProps + (DeletionVectors.MaxInlineProp -> "10"))
+    val before = t.snapshot.files
+    val dense = before.filter(_.stats("k").min.contains("0")).map(_.path)
+    val sparse = before.filter(_.stats("k").min.contains("1")).map(_.path)
+    assert(dense.size == 1 && sparse.size == 1)
+    // 50 matches in file A (over the 10-position cap, all its rows:
+    // rewrite) and 1 in file B (DV)
+    t.update(col("k") === 0 || col("id") === 1, Map("v" -> lit("y")))
+    assert(t.version == 1, "the update is one commit")
+    val expected = (1L to 100L).map(i =>
+      (i, i % 2, if (i % 2 == 0 || i == 1) "y" else "x")).toSet
+    assert(t.toDF.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+      .toSet == expected)
+    assert(t.toDF.count() == 100)
+    val snap = t.snapshot
+    val paths = snap.files.map(_.path).toSet
+    assert(!paths.contains(dense.head), "the dense file must be rewritten")
+    val kept = snap.files.filter(_.path == sparse.head)
+    assert(kept.size == 1 && kept.head.dv.size == 1,
+      "the sparse file keeps its path and gains a one-position DV")
+    val params = t.history().filter(col("operation") === "UPDATE")
+      .collect()(0).getAs[Map[String, String]]("operationParameters")
+    assert(params.get("deletionVectors").contains("1"))
+    assert(params.get("rewrittenFiles").contains("1"))
+  }
+
   // ------------------------------------------------ external DV sidecars
 
   private val SidecarProps =

@@ -15,8 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * keys, row positions and deletion vectors itself. A second writer
   * (`df.write.parquet` into the table) or a read through the file
   * source's `_metadata` columns would bring back the paths these
-  * replaced, so both fail here. Reads `src/main` only; comment lines
-  * are ignored.
+  * replaced, so both fail here. The table property that picks
+  * copy-on-write or deletion vectors is read by the fluent row-level
+  * planner alone, so the choice cannot fork again. Reads `src/main`
+  * only; comment lines are ignored.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -59,6 +61,13 @@ class SourceGuardSpec extends AnyFunSuite {
     val byFile = found.groupBy(s => s.substring(0, s.lastIndexOf(':')))
     val extra = byFile.filter { case (f, ss) => ss.size > allowed.getOrElse(f, 0) }
     assert(extra.isEmpty, s"writer sites beyond the allowed ones: ${extra.values.flatten}")
+  }
+
+  test("one site chooses between copy-on-write and deletion vectors") {
+    // the fluent row-level planner: every other caller runs its plan
+    val found = sites("""DeletionVectors\s*\.\s*enabled\s*\(""")
+    assert(found.size == 1 && found.head.startsWith("scala/graft/vintage/VintageTable.scala:"),
+      s"DeletionVectors.enabled( sites: $found")
   }
 
   test("no read uses the file source's _metadata columns") {

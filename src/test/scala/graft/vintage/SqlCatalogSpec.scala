@@ -583,4 +583,36 @@ class SqlCatalogSpec extends AnyFunSuite {
     spark.sql("INSERT INTO vin.cyc VALUES (7)")
     assert(spark.sql("SELECT x FROM vin.cyc").collect().map(_.getInt(0)).toSeq == Seq(7))
   }
+  test("row-level SQL DML commits grow the deletionVectors feature; spilled reads stay exact") {
+    val wh = spark.conf.get("spark.sql.catalog.vin.warehouse")
+    // no vintage.deletionVectors.enabled: SQL UPDATE and a SQL DELETE
+    // beyond filters still commit deletion vectors
+    spark.sql("CREATE TABLE vin.rlproto (id BIGINT, v STRING)")
+    (0 until 11).foreach { i =>
+      spark.sql(s"INSERT INTO vin.rlproto SELECT id, 'a' FROM range(${i * 10}, ${i * 10 + 10})")
+    }
+    spark.sql("UPDATE vin.rlproto SET v = 'u' WHERE id % 7 = 3")
+    spark.sql("DELETE FROM vin.rlproto WHERE id % 9 = 4")
+    val expected = (0L until 110L).count(_ % 9 != 4).toLong
+    val snap = VintageLog.replay(s"$wh/rlproto")
+    assert(snap.files.exists(_.hasDv), "the row-level DML must have committed DVs")
+    assert(snap.protocol.readerFeatures.contains(Protocol.DeletionVectors) &&
+      snap.protocol.writerFeatures.contains(Protocol.DeletionVectors),
+      s"a commit adding DVs must grow the protocol: ${snap.protocol}")
+    val prev = VintageLog.spillThreshold
+    VintageLog.spillThreshold = 1
+    VintageLog.clearSnapshotCache()
+    try {
+      val t = VintageTable.forPath(spark, s"$wh/rlproto")
+      assert(t.snapshot.spilled.isDefined, "the snapshot must spill at threshold 1")
+      assert(t.toDF.count() == expected)
+      assert(spark.read.format("vintage").load(s"$wh/rlproto").count() == expected)
+      assert(spark.sql("SELECT * FROM vin.rlproto").collect().length == expected)
+      assert(t.toDF.filter("v = 'u'").count() == (0L until 110L)
+        .count(i => i % 7 == 3 && i % 9 != 4))
+    } finally {
+      VintageLog.spillThreshold = prev
+      VintageLog.clearSnapshotCache()
+    }
+  }
 }
