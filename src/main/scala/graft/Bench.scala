@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints one JSON line. Failures are recorded explicitly (negative
   * time + "failed" list) — a broken query must never read as a fast
@@ -20,6 +19,12 @@ import org.apache.spark.sql.SparkSession
   * best-of-2 baseline.
   */
 object Bench {
+  /** The scale-factor dir of the bench and the query tool:
+    * `SPARK_GRAFT_SF_DIR`, else sf0.1.
+    */
+  def defaultSfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   private def r3(v: Double): Double = math.rint(v * 1000) / 1000
 
   private def deleteTreeQuiet(f: java.io.File): Unit = {
@@ -47,17 +52,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions",
-        "graft.vintage.connector.VintageSqlExtension")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = defaultSfDir
+    val spark = GraftSession("graft-bench")
     val envBefore = hostEvidence()
     // JVM/codegen warmup outside the timed region so the first queries
     // don't absorb classloading + codegen compilation costs. Half the

@@ -1,37 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each `SparkEntry.queries` result → parquet
+  * (`<outDir>/<name>`), plus `oracle_sql.json`, for the DuckDB compare
+  * of `scripts/check_oracle.py`.
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir>`. To dump a few
+  * queries, name them: `GRAFT_VERIFY_ONLY=q1_pricing_summary,q28_ann_ivf
+  * runMain graft.Verify <sfDir> <outDir>` writes only their parquet and
+  * oracle entries, and then `python3 scripts/check_oracle.py <outDir>
+  * <sfDir>` compares just those. An unknown name fails before any query
+  * runs.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions",
-        "graft.vintage.connector.VintageSqlExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
+    val selected = sys.env.get("GRAFT_VERIFY_ONLY")
+      .map(v => SparkEntry.named(v.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
+      .getOrElse(SparkEntry.queries.toSeq)
     new java.io.File(outDir).mkdirs()
-    // GRAFT_VERIFY_ONLY=q103_pq_portable,q28_ann_ivf: dump (and list in
-    // oracle_sql.json) only the named queries — the single-query
-    // iteration loop while authoring a new gate (the Verify twin of
-    // SPARK_GRAFT_BENCH_ONLY). Unset = the full driver contract.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name must fail LOUDLY, not "verify" zero queries green
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"GRAFT_VERIFY_ONLY names no registered query: ${unknown.mkString(", ")}")
-    }
-    def keep(name: String): Boolean = only.forall(_.contains(name))
+    val keep = selected.map(_._1).toSet
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

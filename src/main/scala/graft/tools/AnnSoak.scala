@@ -58,14 +58,8 @@ object AnnSoak {
 
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_SOAK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-ann-soak-$n")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(s"graft-ann-soak-$n", ScaleSoak.master,
+      Map("spark.sql.shuffle.partitions" -> 64))
     def r1s(v: Double): Double = math.rint(v * 10) / 10
 
     val emb = corpus(spark, n)

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Regenerate `graft/lang_profiles.dat` from `graft/lang_samples.dat`
   * through the engine's own gram/bucket pipeline
@@ -18,13 +18,7 @@ object GenLangProfiles {
   def main(args: Array[String]): Unit = {
     val out = Paths.get(args.headOption
       .getOrElse("src/main/resources/graft/lang_profiles.dat"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_GEN_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-gen-lang-profiles")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-gen-lang-profiles", sys.env.get("GRAFT_GEN_MASTER"))
     try {
       val content = graft.operators.LangProfiles.renderProfiles(spark)
       Files.createDirectories(out.getParent)

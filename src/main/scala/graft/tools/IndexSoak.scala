@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the STORED-LSH-INDEX refresh tier
@@ -33,10 +32,10 @@ import org.apache.spark.sql.functions._
   *     other tenth is novel text).
   *
   * Run forked with the ScaleSoak JVM discipline (2 GB heap,
-  * ParallelGC, raised GCLocker retries); session sizing mirrors
-  * [[ScaleSoak]]'s measured rules (partitions sized to the exploded
-  * band frame, AQE coalescing off, zstd shuffle, row-bounded
-  * force-spill).
+  * ParallelGC, raised GCLocker retries) and [[ScaleSoak.conf]]'s
+  * session (partitions sized to the exploded band frame, AQE
+  * coalescing off, zstd shuffle, row-bounded force-spill, broadcast
+  * joins off).
   */
 object IndexSoak {
 
@@ -67,23 +66,9 @@ object IndexSoak {
     require(n % 100 == 0 && n >= 10000, s"n must be a multiple of 100 >= 10000, got $n")
     val warehouse =
       java.nio.file.Files.createTempDirectory("graft-idxsoak").toString
-    val partitions: Int = sys.env.get("GRAFT_SOAK_PARTITIONS")
-      .map(v => v.toIntOption.filter(_ > 0).getOrElse(
-        sys.error(s"GRAFT_SOAK_PARTITIONS must be a positive int, got '$v'")))
-      .getOrElse(math.max(64L, 16L * n / 250000L).toInt)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_SOAK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.cleaner.periodicGC.interval", "3min")
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "1000000")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-index-soak-$n")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val partitions = ScaleSoak.partitions(n)
+    val spark = graft.GraftSession(s"graft-index-soak-$n", ScaleSoak.master,
+      ScaleSoak.conf(partitions) + ("spark.sql.warehouse.dir" -> warehouse))
     def r1s(v: Double): Double = math.rint(v * 10) / 10
     val groups = n / 100L
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -56,15 +55,10 @@ object LogStress {
     require(n >= 10, s"need at least 10 files, got $n")
     val root = java.nio.file.Files.createTempDirectory("graft-logstress")
     val dir = root.resolve("t").toString
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_LOGSTRESS_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.warehouse.dir", root.resolve("wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-log-stress-$n")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(s"graft-log-stress-$n",
+      Some(sys.env.getOrElse("GRAFT_LOGSTRESS_MASTER", "local[8]")),
+      Map("spark.sql.shuffle.partitions" -> 32,
+        "spark.sql.warehouse.dir" -> root.resolve("wh").toString))
 
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))

@@ -1,27 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Prints the physical plan of the soak's lazy LSH count with the
-  * soak's session conf (keep in sync with [[ScaleSoak]]'s builder —
-  * currently: exploded-volume-sized shuffle partitions, AQE partition
-  * coalescing DISABLED, broadcast joins off) — the "which SMJ sorts
-  * what, above which exchange" diagnostic behind the 50M heap
-  * forensics. Row count is irrelevant to plan SHAPE, so this runs in
-  * seconds.
+/** Prints the physical plan of the soak's lazy LSH count under the
+  * soak's session ([[ScaleSoak.conf]], partitions sized for 50M rows)
+  * — the "which SMJ sorts what, above which exchange" diagnostic
+  * behind the 50M heap forensics. Row count is irrelevant to plan
+  * SHAPE, so this runs in seconds.
   */
 object PlanPeek {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 3200)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .appName("plan-peek").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession("plan-peek", Some("local[2]"),
+      ScaleSoak.conf(ScaleSoak.partitions(50000000L)))
     val verified = graft.operators.Dedup.nearDupPairs(
       ScaleSoak.corpus(spark, 5000L), "id", "text",
       shingleSize = 5, numHashes = 128, bands = 16, threshold = 0.8,

@@ -74,85 +74,91 @@ object ScaleSoak {
         "else concat('w', pmod(xxhash64(gid, j), 50000)) end), ' ')"))
   }
 
+  /** The soaks' master: `GRAFT_SOAK_MASTER`, else local[8]. */
+  def master: Option[String] = Some(sys.env.getOrElse("GRAFT_SOAK_MASTER", "local[8]"))
+
+  // Partitions SCALE WITH THE LARGEST INTERMEDIATE, not the input —
+  // the refinement of the r10 "size shuffle partitions to data
+  // volume" rule that closed the LAST 50M OOM cause. Two layers,
+  // both found by measurement (r12 heap dump + event log):
+  //  1. the LSH band explode multiplies the frame by bands (16), so
+  //     at 50M rows the banded (__id, __band, __bucket) shuffle is
+  //     800M rows — pushed through input-sized partitions (n/250k),
+  //     each window-sort task buffered ~4M rows and its pointer
+  //     array doubled into a ~128 MB humongous allocation (r11:
+  //     "GCLocker … allocating 16777218 words"). Hence ×16:
+  //     ~250k rows/task in the widest frame at any n.
+  //  2. with enough partitions configured, AQE's partition
+  //     COALESCING re-created the same failure on the NARROW frames
+  //     (id-only and id-pair rows): coalescing targets compressed
+  //     BYTES, and delta-compressed sorted longs pack ~3M rows into
+  //     a "16 MB" partition, each of which then costs ~16 B of sort
+  //     pointer array — the 5M event log shows such stages coalesced
+  //     to 8 tasks × 1.3M rows (→ ×10 at 50M: exactly the two
+  //     long[16M] pointer arrays in the OOM heap dump). Bytes-based
+  //     coalescing cannot see row counts, so under a hard 2 GB cap
+  //     it is disabled outright and every stage runs at the full
+  //     count (tiny-task scheduling overhead is minutes at 50M; an
+  //     executor-sized cluster would keep coalescing and raise the
+  //     per-task memory share instead).
+  // Parsed to Int up front: the value is interpolated unquoted into
+  // the SOAK JSON line, so a junk override must fail HERE, not as
+  // invalid JSON in ScaleSoakSpec's parser (ADVICE r12).
+  def partitions(n: Long): Int = sys.env.get("GRAFT_SOAK_PARTITIONS")
+    .map(v => v.toIntOption.filter(_ > 0).getOrElse(
+      sys.error(s"GRAFT_SOAK_PARTITIONS must be a positive int, got '$v'")))
+    .getOrElse(math.max(64L, 16L * n / 250000L).toInt)
+
+  /** The session conf every soak shares (and [[PlanPeek]], which prints
+    * the soak's plan): `partitions` shuffle partitions, AQE coalescing
+    * off (see [[partitions]]), zstd, periodic GC, the row-bounded
+    * spill, broadcast joins off.
+    */
+  def conf(partitions: Int): Map[String, Any] = Map(
+    "spark.sql.shuffle.partitions" -> partitions,
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    // With the heap fixed, the NEXT 50M bottleneck was shuffle DISK
+    // (measured: the first full-depth run ENOSPC'd ~70 GB in on this
+    // host — the LSH leg shuffles the 800M-row banded frame plus the
+    // shingle-carrying verify frames). zstd ~halves shuffle bytes vs
+    // the lz4 default at a few % CPU — the standard codec choice for
+    // shuffle-heavy jobs at cluster scale — and a short periodic-GC
+    // interval lets ContextCleaner drop the previous legs' shuffle
+    // files while a later leg is still writing.
+    "spark.io.compression.codec" -> "zstd",
+    "spark.cleaner.periodicGC.interval" -> "3min",
+    // THE r12→r13 50M OOM FIX (judge-reproduced failure, root-caused
+    // from the preserved hprof + fail log with tools/HprofScan): the
+    // corpus generates at n/250k range slices, so the banded explode
+    // hands each MAP task bands× its rows (16 × 250k = 4M) and the
+    // shuffle-write sorter's pointer array doubles into a 128 MiB
+    // allocation (16777218 words — the exact figure in the log).
+    // 128 MiB is a humongous object in a 2 GB G1 heap; zstd-jni holds
+    // JNI critical sections (GCLocker) around every shuffle block, and
+    // JDK 17 G1 retries a GCLocker-stalled allocation only
+    // GCLockerRetryAllocationCount(=2) times before throwing a REAL
+    // OutOfMemoryError — so the normal acquire-fail→spill path never
+    // ran. Fix layer 1 (here): bound sorter buffering by ROWS — spill
+    // any sort/shuffle buffer at 1M records, capping pointer arrays at
+    // ~16-32 MiB no matter how coarse a stage's effective partitioning
+    // is (the 100 TB rule: under tightly-capped executors, budget sort
+    // memory per ROW; partition counts and AQE byte targets cannot see
+    // row counts). Layer 2 lives in ScaleSoakSpec's fork flags.
+    "spark.shuffle.spill.numElementsForceSpillThreshold" -> "1000000",
+    // the bucketed-join leg must exercise the bucketed (shuffle-free
+    // sort-merge) path, not a planner-chosen broadcast of the small
+    // distinct-gid side (as BucketedSpec pins it) — and AQE must not
+    // convert it back either
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
     val warehouse =
       java.nio.file.Files.createTempDirectory("graft-soak-wh").toString
-    // Partitions SCALE WITH THE LARGEST INTERMEDIATE, not the input —
-    // the refinement of the r10 "size shuffle partitions to data
-    // volume" rule that closed the LAST 50M OOM cause. Two layers,
-    // both found by measurement (r12 heap dump + event log):
-    //  1. the LSH band explode multiplies the frame by bands (16), so
-    //     at 50M rows the banded (__id, __band, __bucket) shuffle is
-    //     800M rows — pushed through input-sized partitions (n/250k),
-    //     each window-sort task buffered ~4M rows and its pointer
-    //     array doubled into a ~128 MB humongous allocation (r11:
-    //     "GCLocker … allocating 16777218 words"). Hence ×16:
-    //     ~250k rows/task in the widest frame at any n.
-    //  2. with enough partitions configured, AQE's partition
-    //     COALESCING re-created the same failure on the NARROW frames
-    //     (id-only and id-pair rows): coalescing targets compressed
-    //     BYTES, and delta-compressed sorted longs pack ~3M rows into
-    //     a "16 MB" partition, each of which then costs ~16 B of sort
-    //     pointer array — the 5M event log shows such stages coalesced
-    //     to 8 tasks × 1.3M rows (→ ×10 at 50M: exactly the two
-    //     long[16M] pointer arrays in the OOM heap dump). Bytes-based
-    //     coalescing cannot see row counts, so under a hard 2 GB cap
-    //     it is disabled outright and every stage runs at the full
-    //     count (tiny-task scheduling overhead is minutes at 50M; an
-    //     executor-sized cluster would keep coalescing and raise the
-    //     per-task memory share instead).
-    // Parsed to Int up front: the value is interpolated unquoted into
-    // the SOAK JSON line, so a junk override must fail HERE, not as
-    // invalid JSON in ScaleSoakSpec's parser (ADVICE r12).
-    val partitions: Int = sys.env.get("GRAFT_SOAK_PARTITIONS")
-      .map(v => v.toIntOption.filter(_ > 0).getOrElse(
-        sys.error(s"GRAFT_SOAK_PARTITIONS must be a positive int, got '$v'")))
-      .getOrElse(math.max(64L, 16L * n / 250000L).toInt)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_SOAK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // With the heap fixed, the NEXT 50M bottleneck was shuffle DISK
-      // (measured: the first full-depth run ENOSPC'd ~70 GB in on this
-      // host — the LSH leg shuffles the 800M-row banded frame plus the
-      // shingle-carrying verify frames). zstd ~halves shuffle bytes vs
-      // the lz4 default at a few % CPU — the standard codec choice for
-      // shuffle-heavy jobs at cluster scale — and a short periodic-GC
-      // interval lets ContextCleaner drop the previous legs' shuffle
-      // files while a later leg is still writing.
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.cleaner.periodicGC.interval", "3min")
-      // THE r12→r13 50M OOM FIX (judge-reproduced failure, root-caused
-      // from the preserved hprof + fail log with tools/HprofScan): the
-      // corpus generates at n/250k range slices, so the banded explode
-      // hands each MAP task bands× its rows (16 × 250k = 4M) and the
-      // shuffle-write sorter's pointer array doubles into a 128 MiB
-      // allocation (16777218 words — the exact figure in the log).
-      // 128 MiB is a humongous object in a 2 GB G1 heap; zstd-jni holds
-      // JNI critical sections (GCLocker) around every shuffle block, and
-      // JDK 17 G1 retries a GCLocker-stalled allocation only
-      // GCLockerRetryAllocationCount(=2) times before throwing a REAL
-      // OutOfMemoryError — so the normal acquire-fail→spill path never
-      // ran. Fix layer 1 (here): bound sorter buffering by ROWS — spill
-      // any sort/shuffle buffer at 1M records, capping pointer arrays at
-      // ~16-32 MiB no matter how coarse a stage's effective partitioning
-      // is (the 100 TB rule: under tightly-capped executors, budget sort
-      // memory per ROW; partition counts and AQE byte targets cannot see
-      // row counts). Layer 2 lives in ScaleSoakSpec's fork flags.
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "1000000")
-      // the bucketed-join leg must exercise the bucketed (shuffle-free
-      // sort-merge) path, not a planner-chosen broadcast of the small
-      // distinct-gid side (as BucketedSpec pins it) — and AQE must not
-      // convert it back either
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-scale-soak-$n")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val partitions = ScaleSoak.partitions(n)
+    val spark = graft.GraftSession(s"graft-scale-soak-$n", master,
+      conf(partitions) + ("spark.sql.warehouse.dir" -> warehouse))
 
     def r1s(v: Double): Double = math.rint(v * 10) / 10
 

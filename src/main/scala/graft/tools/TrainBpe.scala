@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Bpe
 
 /** Dev/ops CLI: train a BPE merge table over a documents dir and print
@@ -13,13 +11,7 @@ object TrainBpe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val n = if (args.length > 1) args(1).toInt else 128
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-train-bpe")
     val merges = Bpe.train(Tables.documents(spark, sfDir), "text", n)
     println("== scala ==")
     println(merges.map { case (a, b) => s"""("$a", "$b")""" }.mkString(", "))

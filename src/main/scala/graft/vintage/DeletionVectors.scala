@@ -200,12 +200,15 @@ object DeletionVectors {
   def hasDvs(files: Seq[AddFile]): Boolean = files.exists(_.hasDv)
 
   /** Whether reads of `snap` must subtract deletion vectors. A SPILLED
-    * snapshot decides from the protocol instead of the file list (the
-    * per-file walk would materialize exactly what spilling avoids), so
-    * a DV-feature table conservatively answers true.
+    * snapshot does not walk its file list (that would materialize
+    * exactly what spilling avoids): a DV-feature table conservatively
+    * answers true, and any other asks the index in one distributed
+    * pass, because row-level SQL commits once added deletion vectors
+    * without growing the protocol.
     */
   def mayHave(snap: Snapshot): Boolean = snap.spilled match {
-    case Some(_) => snap.protocol.readerFeatures.contains(Protocol.DeletionVectors)
+    case Some(ix) => snap.protocol.readerFeatures.contains(Protocol.DeletionVectors) ||
+      ix.hasDvs(org.apache.spark.sql.SparkSession.active)
     case None => hasDvs(snap.files)
   }
 

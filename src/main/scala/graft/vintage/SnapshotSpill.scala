@@ -2,6 +2,8 @@ package graft.vintage
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -89,23 +91,36 @@ final case class SpilledIndex(
         cond)
   }
 
-  /** Table-wide INLINE deletion-vector position total, computed
-    * distributed (feeds the global inline budget without a driver
-    * walk). Superseded checkpoint rows are excluded; the bounded tail
-    * adds its own.
+  /** `f` folded with `op` over the live checkpoint adds, one value per
+    * partition, computed distributed. Superseded rows are excluded.
     */
-  def inlineDvTotal(spark: SparkSession): Long = {
+  private def foldCheckpointAdds[T: ClassTag](spark: SparkSession, zero: T)(
+      f: Iterator[AddFile] => T, op: (T, T) => T): T = {
     val dead = supersededPaths
-    val fromCheckpoint = spark.read.parquet(checkpointPaths: _*)
+    spark.read.parquet(checkpointPaths: _*)
       .filter(col("action_type") === "add").select("json", "path")
       .rdd.mapPartitions { it =>
-        Iterator.single(
+        Iterator.single(f(
           it.filter(r => !dead(r.getString(1)))
             .flatMap(r => Action.fromJsonLineLenient(r.getString(0)))
-            .collect { case a: AddFile => a.dv.size.toLong }.sum)
-      }.fold(0L)(_ + _)
-    fromCheckpoint + tailAdds.iterator.map(_.dv.size.toLong).sum
+            .collect { case a: AddFile => a }))
+      }.fold(zero)(op)
   }
+
+  /** Table-wide INLINE deletion-vector position total, computed
+    * distributed (feeds the global inline budget without a driver
+    * walk). The bounded tail adds its own.
+    */
+  def inlineDvTotal(spark: SparkSession): Long =
+    foldCheckpointAdds(spark, 0L)(_.map(_.dv.size.toLong).sum, _ + _) +
+      tailAdds.iterator.map(_.dv.size.toLong).sum
+
+  /** Whether any live file carries a deletion vector, inline or
+    * sidecar: the tail, else one distributed pass over the checkpoint.
+    */
+  def hasDvs(spark: SparkSession): Boolean =
+    tailAdds.exists(_.hasDv) ||
+      foldCheckpointAdds(spark, false)(_.exists(_.hasDv), _ || _)
 
   /** Approximate table size for plan statistics (sum of live add
     * sizes from the typed checkpoint column; tail adjustments applied,

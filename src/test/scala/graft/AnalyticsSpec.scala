@@ -3,19 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The one session of the forked test JVM; every suite uses it. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.vintage.connector.VintageSqlExtension")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession("graft-test", Some("local[8]"),
+    Map("spark.sql.shuffle.partitions" -> 8))
 }
 
 /** Smoke + shape tests for the analytics query suite; exact-value

@@ -1,16 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class ComponentsSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("components-spec")
-    .getOrCreate()
+  private lazy val spark = graft.SparkTestSession.spark
 
   /** localThreshold = 0 forces the distributed large-star/small-star
     * loop — the algorithm under test; the small-graph fast path is

@@ -17,28 +17,32 @@ import org.scalatest.funsuite.AnyFunSuite
   * source's `_metadata` columns would bring back the paths these
   * replaced, so both fail here. The table property that picks
   * copy-on-write or deletion vectors is read by the fluent row-level
-  * planner alone, so the choice cannot fork again. Reads `src/main`
-  * only; comment lines are ignored.
+  * planner alone, so the choice cannot fork again. Every session is
+  * built by `graft.GraftSession`, so session configs cannot drift
+  * apart again. Reads `src/main` (and `src/test` for the session
+  * builder); comment lines are ignored.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = new File("src/main")
 
-  /** (path under src/main, source with comment lines blanked). */
-  private lazy val sources: Seq[(String, String)] =
-    Files.walk(root.toPath).iterator().asScala
+  /** (path under `dir`, source with comment lines blanked). */
+  private def load(dir: File): Seq[(String, String)] =
+    Files.walk(dir.toPath).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
       .map { p =>
         val code = Files.readAllLines(p).asScala.map { l =>
           val t = l.trim
           if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) "" else l
         }.mkString("\n")
-        root.toPath.relativize(p).toString -> code
+        dir.toPath.relativize(p).toString -> code
       }.toSeq
 
+  private lazy val sources = load(root)
+
   /** "file:line" of every match of `pattern`. */
-  private def sites(pattern: String): Seq[String] =
-    sources.flatMap { case (file, code) =>
+  private def sites(pattern: String, in: Seq[(String, String)] = sources): Seq[String] =
+    in.flatMap { case (file, code) =>
       pattern.r.findAllMatchIn(code).map(m =>
         s"$file:${code.substring(0, m.start).count(_ == '\n') + 1}")
     }
@@ -51,11 +55,10 @@ class SourceGuardSpec extends AnyFunSuite {
   test("the DataFrame parquet writer writes no table data file") {
     // per file, the sites allowed: the deletion-vector sidecar writer,
     // and writers of files that belong to no table (query results
-    // written by the verify and run-one tools, media test-data metadata)
+    // written by Verify, media test-data metadata)
     val allowed = Map(
       "scala/graft/vintage/DeletionVectors.scala" -> 1,
       "scala/graft/Verify.scala" -> 1,
-      "scala/graft/tools/RunOne.scala" -> 1,
       "scala/graft/sources/MediaSource.scala" -> 2)
     val found = sites("""\.write\s*\.\s*(parquet|mode)\s*\(""")
     val byFile = found.groupBy(s => s.substring(0, s.lastIndexOf(':')))
@@ -68,6 +71,15 @@ class SourceGuardSpec extends AnyFunSuite {
     val found = sites("""DeletionVectors\s*\.\s*enabled\s*\(""")
     assert(found.size == 1 && found.head.startsWith("scala/graft/vintage/VintageTable.scala:"),
       s"DeletionVectors.enabled( sites: $found")
+  }
+
+  test("one SparkSession builder: GraftSession") {
+    val builder = """SparkSession\s*\.\s*builder\s*\("""
+    val found = sites(builder)
+    assert(found.size == 1 && found.head.startsWith("scala/graft/GraftSession.scala:"),
+      s"src/main session builder sites: $found")
+    val inTests = sites(builder, load(new File("src/test")))
+    assert(inTests.isEmpty, s"src/test session builder sites: $inTests")
   }
 
   test("no read uses the file source's _metadata columns") {

@@ -615,4 +615,37 @@ class SqlCatalogSpec extends AnyFunSuite {
       VintageLog.clearSnapshotCache()
     }
   }
+
+  test("spilled reads subtract deletion vectors committed under a protocol without the feature") {
+    val wh = spark.conf.get("spark.sql.catalog.vin.warehouse")
+    val dir = s"$wh/rlold"
+    spark.sql("CREATE TABLE vin.rlold (id BIGINT, v STRING)")
+    (0 until 11).foreach { i =>
+      spark.sql(s"INSERT INTO vin.rlold SELECT id, 'a' FROM range(${i * 10}, ${i * 10 + 10})")
+    }
+    spark.sql("UPDATE vin.rlold SET v = 'u' WHERE id % 7 = 3")
+    spark.sql("DELETE FROM vin.rlold WHERE id % 9 = 4")
+    // the log an engine that did not grow the protocol on DV commits
+    // left: the same files and vectors under a protocol without the
+    // feature, all of them in the checkpoint a spilled replay reads
+    val v = VintageLog.replay(dir).version + 1
+    VintageLog.commit(dir, v, Seq(Protocol.base))
+    VintageLog.checkpoint(dir, v)
+    val expected = (0L until 110L).count(_ % 9 != 4).toLong
+    val prev = VintageLog.spillThreshold
+    VintageLog.spillThreshold = 1
+    VintageLog.clearSnapshotCache()
+    try {
+      val t = VintageTable.forPath(spark, dir)
+      val snap = t.snapshot
+      assert(snap.spilled.exists(_.tailAdds.isEmpty), "the snapshot must spill with every add checkpointed")
+      assert(!snap.protocol.readerFeatures.contains(Protocol.DeletionVectors))
+      assert(t.toDF.count() == expected)
+      assert(spark.read.format("vintage").load(dir).count() == expected)
+      assert(spark.sql("SELECT * FROM vin.rlold").collect().length == expected)
+    } finally {
+      VintageLog.spillThreshold = prev
+      VintageLog.clearSnapshotCache()
+    }
+  }
 }
