@@ -97,10 +97,10 @@ object RowLevelQueries {
     *
     * Identity values are gap-py by contract (per-partition spacing),
     * which would be hash-poison — so every append here is a
-    * SINGLE-PARTITION frame in a deterministic sort order:
-    * `monotonically_increasing_id` then counts 0..n-1 and the
-    * allocated ids are exactly `mark+1 .. mark+n` in row order, which
-    * plain `row_number()` reproduces on the oracle side.
+    * SINGLE-PARTITION frame in a deterministic sort order: the
+    * writer's one task then fills slots 0..n-1 and the allocated ids
+    * are exactly `mark+1 .. mark+n` in row order, which plain
+    * `row_number()` reproduces on the oracle side.
     *
     * Choreography (table versions in parens): CREATE with GENERATED
     * ALWAYS id (v0) → append nations sorted by key, ids 1..25 (v1) →

@@ -52,7 +52,10 @@ object LogStress {
 
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
-    require(n >= 10, s"need at least 10 files, got $n")
+    // the checkpoint must spill, or the spilled-tier steps measure nothing
+    require(n >= VintageLog.spillThreshold,
+      s"need at least VintageLog.spillThreshold = ${VintageLog.spillThreshold} " +
+      s"files, got $n")
     val root = java.nio.file.Files.createTempDirectory("graft-logstress")
     val dir = root.resolve("t").toString
     val spark = graft.GraftSession(s"graft-log-stress-$n",

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 import org.apache.spark.sql.graftshim.StreamingOps
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
@@ -20,8 +20,9 @@ import graft.{Bench, GraftSession, SparkEntry}
   *    spans and scan lines (PushedFilters, CartesianProduct) of the
   *    formatted plan, greppable in bulk;
   *  - `jobs`: per-job wall breakdown of a warm run — each job's
-  *    duration and call site, and the gaps between jobs (driver-side
-  *    planning, commit protocol, file IO) that job timings alone hide;
+  *    duration and SQL execution (else call site), and the gaps
+  *    between jobs (driver-side planning, commit protocol, file IO)
+  *    that job timings alone hide;
   *  - `stream`: per-micro-batch phases of a warm run — every progress
   *    event's `durationMs` and state rows updated.
   *
@@ -100,8 +101,13 @@ object Query {
     val jobs = mutable.ArrayBuffer.empty[Job]
     val batches = mutable.ArrayBuffer.empty[StreamingQueryProgress]
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      // a SQL job is labelled by its execution: AQE stage and broadcast
+      // jobs start from a pool thread, so their call site names only
+      // CompletableFuture
       val props = Option(e.properties)
-      val site = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+      val site = props.flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .map(id => s"sql execution $id")
+        .orElse(props.flatMap(p => Option(p.getProperty("spark.job.description"))))
         .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
         .orElse(e.stageInfos.lastOption.map(_.name))
         .getOrElse("?")

@@ -1,6 +1,6 @@
 package graft.vintage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, Metadata => FieldMetadata, MetadataBuilder, StructType}
 
@@ -12,17 +12,26 @@ import org.apache.spark.sql.types.{LongType, Metadata => FieldMetadata, Metadata
   *  - `vintage.identity.<col>` = `start,step,allowExplicitInsert`
   *  - `vintage.identity.<col>.hwm` = the HIGH WATER MARK: the most
   *    extreme value ever allocated or accepted, carried in the commit
-  *    that wrote past it (so allocation is transactional: a racing
-  *    writer that read the same mark hits the metadata-conflict rule
-  *    in the commit loop and re-allocates from the fresh snapshot).
+  *    that wrote past it.
   *
   * Allocation contract (Delta's documented semantics): values are
   * UNIQUE and move strictly away from `start` in the direction of
   * `step`, but are NOT guaranteed consecutive — parallel writers and
-  * per-partition allocation leave gaps. Each generated row gets
-  * `base + step * monotonically_increasing_id()` where `base` is one
-  * step past the high water mark; the id packs (partition, row) so
-  * uniqueness needs no coordination inside the write.
+  * per-partition allocation leave gaps. Two owners keep it:
+  *
+  *  - the table writer (`graftshim.VintageDataWriter`) fills every
+  *    NULL identity slot of every write — fluent writes add a missing
+  *    identity column as NULL — with `base + step * (partition +
+  *    partitions * row)`, where `base` is one step past the mark when
+  *    the write's tasks are planned (each streaming epoch anew), so
+  *    uniqueness needs no coordination inside the write, and fails the
+  *    task when a value would leave BIGINT;
+  *  - `VintageTable.commitOp` moves the mark past the values its adds
+  *    hold ([[advance]], [[marked]]). A racing commit that moved only
+  *    the mark is retried over the winner's mark, unless the winner's
+  *    mark reached a base this commit allocated from ([[reached]]):
+  *    that fails with `VintageTable.IdentityConflictException`, and
+  *    fluent writes re-run from the fresh mark.
   *
   * GENERATED ALWAYS rejects writer-supplied values; BY DEFAULT
   * (`allowExplicitInsert`) accepts them and advances the mark past
@@ -32,12 +41,6 @@ object IdentityColumns {
 
   val Prefix = "vintage.identity."
   private val HwmSuffix = ".hwm"
-
-  /** Per-partition id spacing of `monotonically_increasing_id` (upper
-    * 31 bits partition, lower 33 bits row) — documented so the gap
-    * arithmetic in scaladoc/tests has a name.
-    */
-  val RowsPerPartition: Long = 1L << 33
 
   case class IdentitySpec(start: Long, step: Long, allowExplicit: Boolean) {
     require(step != 0, "identity INCREMENT must be non-zero")
@@ -109,54 +112,6 @@ object IdentityColumns {
     b.build()
   }
 
-  /** Ingest-side allocation: add each identity column MISSING from
-    * `df` as generated values from one step past the mark; reject a
-    * PRESENT column on a GENERATED ALWAYS spec. Returns the completed
-    * frame plus the columns actually generated (the caller's cue to
-    * carry a mark update and to re-allocate on commit conflict).
-    */
-  def complete(df: DataFrame, props: Map[String, String]): (DataFrame, Seq[String]) = {
-    val id = specs(props)
-    if (id.isEmpty) return (df, Nil)
-    var out = df
-    val generated = scala.collection.mutable.Buffer[String]()
-    id.foreach { case (c, spec) =>
-      if (df.schema.fieldNames.exists(_.equalsIgnoreCase(c))) {
-        require(spec.allowExplicit,
-          s"identity column $c is GENERATED ALWAYS — writers cannot supply " +
-          s"it (declare it GENERATED BY DEFAULT to allow explicit values)")
-      } else {
-        val base = spec.nextBase(hwm(props, c))
-        out = out.withColumn(c,
-          lit(base) + lit(spec.step) * monotonically_increasing_id())
-        generated += c
-      }
-    }
-    (out, generated.toSeq)
-  }
-
-  /** MERGE-side allocation: the merge projection yields NULL for an
-    * identity column on inserted rows whose clause did not supply it —
-    * fill exactly those with generated values (existing target rows
-    * keep their ids through `coalesce`). Returns the filled frame plus
-    * the columns that had an allocation expression attached.
-    */
-  def fillNulls(df: DataFrame, props: Map[String, String]): (DataFrame, Seq[String]) = {
-    val id = specs(props)
-    if (id.isEmpty) return (df, Nil)
-    var out = df
-    val generated = scala.collection.mutable.Buffer[String]()
-    id.foreach { case (c, spec) =>
-      if (df.schema.fieldNames.exists(_.equalsIgnoreCase(c))) {
-        val base = spec.nextBase(hwm(props, c))
-        out = out.withColumn(c, coalesce(col(c),
-          lit(base) + lit(spec.step) * monotonically_increasing_id()))
-        generated += c
-      }
-    }
-    (out, generated.toSeq)
-  }
-
   /** Observed (min, max, nullCount) of `col` across the written files:
     * from log stats when every non-empty file carries them, else one
     * bounded scan of exactly the written files (stats cap wide tables
@@ -188,52 +143,56 @@ object IdentityColumns {
     }
   }
 
-  /** Mark updates for one commit's written files: for each identity
-    * column, the property map advancing its high water mark past every
-    * observed value (empty when nothing moved). `generated` columns
-    * additionally get an allocation-sanity check: every value must lie
-    * at-or-beyond this write's base in step direction — a violation
-    * means arithmetic overflow wrapped the allocation, and the commit
-    * must fail rather than record colliding ids. Explicit values must
-    * be non-null (an identity column holds allocated ids, not NULLs).
+  /** The value each identity column's mark must reach to cover the
+    * written files `adds`: their most extreme value in step direction
+    * (no entry when they hold none). The writer fills every NULL slot,
+    * so a NULL here means a file bypassed it and is rejected.
     */
   def advance(
       spark: SparkSession, tableDir: String, tableSchema: StructType,
-      props: Map[String, String], adds: Seq[AddFile],
-      generated: Seq[String]): Map[String, String] = {
-    val id = specs(props)
-    if (id.isEmpty) return Map.empty
-    val genSet = generated.map(_.toLowerCase).toSet
-    id.flatMap { case (c, spec) =>
+      props: Map[String, String], adds: Seq[AddFile]): Map[String, Long] =
+    specs(props).flatMap { case (c, spec) =>
       val phys = if (ColumnMapping.mapped(tableSchema))
         ColumnMapping.toPhysical(tableSchema, c) else c
-      observedRange(spark, tableDir, adds, phys).flatMap {
-        case (mn, mx, nulls) =>
-          require(nulls == 0,
-            s"identity column $c contains $nulls NULLs — identity values " +
-            s"must be allocated or explicitly supplied, never null")
-          if (genSet(c.toLowerCase)) {
-            val base = spec.nextBase(hwm(props, c))
-            val inRange =
-              if (spec.step > 0) mn >= base else mx <= base
-            require(inRange,
-              s"identity allocation for $c overflowed BIGINT (observed " +
-              s"[$mn,$mx] vs base $base) — the id space is exhausted")
-          }
-          val observedEdge = if (spec.step > 0) mx else mn
-          val current = hwm(props, c)
-          if (current.forall(h => spec.beyond(observedEdge, h)) &&
-              (current.nonEmpty || spec.beyond(observedEdge, spec.start) ||
-               observedEdge == spec.start))
-            Some(s"$Prefix$c$HwmSuffix" -> observedEdge.toString)
-          else None
+      observedRange(spark, tableDir, adds, phys).map { case (mn, mx, nulls) =>
+        require(nulls == 0,
+          s"identity column $c contains $nulls NULLs — identity values " +
+          s"must be allocated or explicitly supplied, never null")
+        c -> (if (spec.step > 0) mx else mn)
       }
     }
-  }
+
+  /** `props` with each identity column's mark at the most extreme of
+    * its own, `floor`'s and the observed `edges` — a mark only moves
+    * away from `start`. A first edge short of `start` (an explicit
+    * value behind the allocation range) sets no mark.
+    */
+  def marked(props: Map[String, String], edges: Map[String, Long],
+      floor: Map[String, String]): Map[String, String] =
+    props ++ specs(props).flatMap { case (c, spec) =>
+      val candidates = hwm(props, c) ++ hwm(floor, c) ++ edges.get(c).filter(e =>
+        !spec.beyond(spec.start, e))
+      candidates.reduceOption((a, b) => if (spec.beyond(b, a)) b else a)
+        .map(hwmKey(c) -> _.toString)
+    }
+
+  /** `props` without the marks: what two commits compare to tell a
+    * mark-only race from a real metadata change.
+    */
+  def unmarked(props: Map[String, String]): Map[String, String] =
+    props.filterNot { case (k, _) => k.startsWith(Prefix) && k.endsWith(HwmSuffix) }
+
+  /** The columns of `bases` (column -> first value a write allocated)
+    * whose mark in `props` already reached that base: their allocated
+    * ids may collide with ids another commit recorded.
+    */
+  def reached(bases: Map[String, Long], props: Map[String, String]): Seq[String] =
+    bases.toSeq.collect { case (c, base) if specs(props).get(c).exists(spec =>
+      hwm(props, c).exists(h => !spec.beyond(base, h))) => c }
 
   /** Carry identity properties through RENAME COLUMN (`to = Some`) or
     * remove them on DROP COLUMN (`to = None`) — orphaned
-    * `vintage.identity.<old>` entries would make [[complete]] add a
+    * `vintage.identity.<old>` entries would make fluent writes add a
     * phantom column under the old name and brick every append.
     */
   def rewriteProps(props: Map[String, String], from: String,

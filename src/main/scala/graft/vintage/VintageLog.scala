@@ -27,12 +27,15 @@ case class Snapshot(
     * feed THESE to [[FileSkipping]] so partition predicates prune with
     * the same machinery as data stats.
     */
-  lazy val statFiles: Seq[AddFile] = {
+  lazy val statFiles: Seq[AddFile] = statView(files)
+
+  /** `fs`, files of this table, as [[statFiles]] presents them. */
+  def statView(fs: Seq[AddFile]): Seq[AddFile] = {
     // under column mapping, file stats and partition values are keyed
     // by PHYSICAL names — remap to logical once here so every pruning
     // consumer (file skipping, partition pruning, metadata aggregates)
     // keeps operating in logical space
-    val logical = ColumnMapping.statsToLogical(schema, files)
+    val logical = ColumnMapping.statsToLogical(schema, fs)
     if (partitionColumns.isEmpty) logical
     else logical.map(PartitionPaths.augment(schema, _))
   }

@@ -106,10 +106,10 @@ class VintageMergeBuilder private[vintage] (
     // identity columns: no clause may assign a GENERATED ALWAYS id —
     // not SET (matched or insert), and not UPDATE ALL/INSERT ALL when
     // the SOURCE carries the column (that is an explicit value too).
-    // BY DEFAULT columns pass, and the mark advances past what they
-    // supply. Inserted rows that omit the column get allocated ids
-    // (the projection below yields NULL exactly there; fillNulls
-    // replaces those with the allocation expression).
+    // BY DEFAULT columns pass, and the commit moves the mark past what
+    // they supply. Inserted rows that omit the column get allocated ids
+    // (the projection below yields NULL exactly there, and the writer
+    // fills those slots).
     val idSpecs = IdentityColumns.specs(snap.properties)
     if (idSpecs.nonEmpty) clauses.foreach { cl =>
       cl.action match {
@@ -171,16 +171,10 @@ class VintageMergeBuilder private[vintage] (
           else col(t) >= lit(mn) && col(t) <= lit(mx)
         }.reduce(_ && _))
       }
-    // pruned in logical space, kept as the log keys them (to read and
-    // remove)
-    def pruned(cond: Column): Seq[AddFile] = ColumnMapping.statsToPhysical(
-      snap.schema, FileSkipping.candidates(snap.schema, snap.statFiles,
-        ColumnExpr.expr(cond)))
-    val candidates: Seq[AddFile] = rangeCond match {
-      case _ if snap.files.isEmpty => Nil
-      case None => snap.files
-      case Some(rc) => pruned(rc)
-    }
+    // stats-pruned (distributed on a spilled snapshot), kept as the log
+    // keys them (to read and remove)
+    val candidates: Seq[AddFile] =
+      rangeCond.fold(snap.files)(table.candidateFiles(snap, _))
     // live rows only: a key deleted by a deletion vector matches nothing
     val matchedKeys: Set[String] = table.touchedKeys(snap, candidates)(t =>
       aliased(t, targetAlias).join(aliased(source, srcAlias), condition, "left_semi"))
@@ -207,7 +201,7 @@ class VintageMergeBuilder private[vintage] (
       else {
         val conds = bySourceClauses.map(_._1.cond)
         if (conds.exists(_.isEmpty)) snap.files
-        else pruned(conds.flatten.reduce(_ || _))
+        else table.candidateFiles(snap, conds.flatten.reduce(_ || _))
       }
     val touched: Seq[AddFile] =
       (candidates.filter(f => matchedKeys(table.keyOf(f))) ++ touchedBySource)
@@ -295,8 +289,7 @@ class VintageMergeBuilder private[vintage] (
         .map(a => col(s"$a.${RowTracking.MaterializedCol}"))
         .getOrElse(tMarked(RowTracking.MaterializedCol))
         .as(RowTracking.MaterializedCol)
-    val (rewritten, _) = IdentityColumns.fillNulls(
-      withAct.select(allOutCols: _*), snap.properties)
+    val rewritten = withAct.select(allOutCols: _*)
     // Key-clustered rewrite (see [[clustered]]): the next one-key
     // message touches one narrow file, not everything this merge
     // wrote. It also bounds the output file count by the touched
@@ -307,27 +300,15 @@ class VintageMergeBuilder private[vintage] (
     val toWrite =
       if (keyPairs.isEmpty || touched.isEmpty ||
           Bucketing.spec(snap.properties).isDefined) rewritten
-      else {
-        val touchedPaths = touched.map(_.path).toSet
-        clustered(rewritten, finalSchema,
-          snap.statFiles.filter(f => touchedPaths(f.path)),
-          snap.partitionColumns ++ keyPairs.map(_._1))
-      }
-    val adds =
-      if (touched.isEmpty && notMatchedClauses.isEmpty) Nil
+      else clustered(rewritten, finalSchema, snap.statView(touched),
+        snap.partitionColumns ++ keyPairs.map(_._1))
+    val (adds, idBases) =
+      if (touched.isEmpty && notMatchedClauses.isEmpty) (Nil, Map.empty[String, Long])
       else VintageTable.writeFiles(spark, toWrite, table.path, dataChange = true,
-        snap.partitionColumns, tableSchema = finalSchema)
-    // mark advance only (generated = Nil skips the allocation-range
-    // check: a merge rewrite mixes freshly allocated ids with the
-    // touched files' OLD ids, so "everything beyond base" cannot hold)
-    val idProps =
-      if (idSpecs.isEmpty) Map.empty[String, String]
-      else IdentityColumns.advance(spark, table.path, finalSchema,
-        snap.properties, adds, generated = Nil)
+        snap.partitionColumns, snap.properties, finalSchema)
     val meta =
-      if (finalSchema != snap.schema || idProps.nonEmpty)
-        Some(Metadata(finalSchema.json, snap.properties ++ idProps,
-          snap.partitionColumns))
+      if (finalSchema != snap.schema)
+        Some(Metadata(finalSchema.json, snap.properties, snap.partitionColumns))
       else None
     // read/write conflict scope: the merge read every target row whose
     // key falls in the source's key range; without extractable equi-join
@@ -340,7 +321,8 @@ class VintageMergeBuilder private[vintage] (
         .getOrElse(FullRead)
     table.commitOp(snap, "MERGE",
       Map("predicate" -> s"(${condition.toString})"),
-      adds, table.removesForFiles(touched), meta, scope, txn = txnAction)
+      adds, table.removesForFiles(touched), meta, scope, txn = txnAction,
+      idBases = idBases): Unit
   }
 
   private def aliased(df: DataFrame, a: Option[String]): DataFrame =

@@ -200,16 +200,18 @@ class VintageTable private (
         case None => col(c)
       }
     }
-    def write(files: Seq[AddFile])(rows: DataFrame => DataFrame): Seq[AddFile] =
-      if (files.isEmpty) Nil
+    def write(files: Seq[AddFile])(rows: DataFrame => DataFrame): (Seq[AddFile], Map[String, Long]) =
+      if (files.isEmpty) (Nil, Map.empty)
       else {
         val (src, idCols) = rewriteSourceExact(snap, files)
         writeFiles(spark, rows(src).select(projection ++ idCols: _*), path,
-          dataChange = true, snap.partitionColumns)
+          dataChange = true, snap.partitionColumns, snap.properties)
       }
-    val updatedAdds =
-      if (set.isEmpty) Nil else write(plan.dvFiles)(_.filter(matched))
-    val rewriteAdds =
+    // an UPDATE may SET a BY DEFAULT identity column to NULL, which the
+    // writer fills
+    val (updatedAdds, updatedBases) =
+      if (set.isEmpty) (Nil, Map.empty[String, Long]) else write(plan.dvFiles)(_.filter(matched))
+    val (rewriteAdds, rewriteBases) =
       write(plan.rewriteFiles)(src => if (set.isEmpty) src.filter(!matched) else src)
     val params = Map("predicate" -> condition.toString) ++
       (if (!plan.mergeOnRead) Nil
@@ -218,7 +220,8 @@ class VintageTable private (
           else Seq("deletionVectors" -> plan.dvFiles.size.toString,
                    "rewrittenFiles" -> plan.rewriteFiles.size.toString)))
     commitOp(snap, op, params, plan.grown ++ updatedAdds ++ rewriteAdds,
-      removesForFiles(plan.touched), None, PredicateRead(ColumnExpr.expr(condition)))
+      removesForFiles(plan.touched), None, PredicateRead(ColumnExpr.expr(condition)),
+      idBases = updatedBases ++ rewriteBases): Unit
   }
 
   // ------------------------------------------------------------ overwrite
@@ -239,55 +242,31 @@ class VintageTable private (
     * [[append(df:org\.apache\.spark\.sql\.DataFrame,txn:Option[(String,Long)])*]].
     */
   def overwrite(df0: DataFrame, dataChange: Boolean,
-      txn: Option[(String, Long)]): Unit = {
-    // bounded re-allocation loop for identity tables, as in [[append]]
-    // (the mark stays MONOTONIC across overwrites, Delta's semantics:
-    // replaced rows never free their ids — time travel still shows them)
-    var attempt = 0
-    while (true) {
-      val snap = snapshot
-      val t = txn.map { case (a, v) => Txn(a, v) }
-      if (t.exists(x => snap.txns.get(x.appId).exists(_ >= x.version))) return
-      // ingest-side completion of generated columns the writer omitted
+      txn: Option[(String, Long)]): Unit = reallocating("overwrite") {
+    val snap = snapshot
+    val t = txn.map { case (a, v) => Txn(a, v) }
+    if (!t.exists(x => snap.txns.get(x.appId).exists(_ >= x.version))) {
+      // ingest-side completion of generated columns the writer omitted;
+      // a layout-only rewrite's rows already carry their ids
       val df1 = GeneratedColumns.complete(df0, snap.properties, Some(snap.schema))
-      val (df, genIds) =
-        if (dataChange) IdentityColumns.complete(df1, snap.properties)
-        else (df1, Nil) // layout-only rewrite: rows already carry ids
+      val df = if (dataChange) withIdentity(snap, df1) else df1
       // overwrite replaces the schema with the frame's; under column
       // mapping, same-named fields keep their physical names and new
       // fields get fresh ones, so history stays readable
       val newSchema = ColumnMapping.evolve(snap.schema, df.schema,
         ColumnMapping.active(snap.properties))
-      val adds = writeFiles(spark, df, path, dataChange, snap.partitionColumns,
-        tableSchema = newSchema)
-      val idProps =
-        if (dataChange) IdentityColumns.advance(spark, path, newSchema,
-          snap.properties, adds, genIds)
-        else Map.empty[String, String]
-      val meta = Metadata(newSchema.json, snap.properties ++ idProps,
-        snap.partitionColumns)
+      val (adds, idBases) = writeFiles(spark, df, path, dataChange,
+        snap.partitionColumns, snap.properties, newSchema)
       val params = Map("mode" -> "Overwrite",
         "partitionBy" -> snap.partitionColumns.mkString("[", ",", "]")) ++
         (if (dataChange) Map.empty else Map("dataChange" -> "false"))
       val now = System.currentTimeMillis()
-      try {
-        // a dataChange=false overwrite is compaction: layout-only, so a
-        // concurrent append survives it; a real overwrite conflicts with one
-        commitOp(snap, "WRITE", params, adds,
-          snap.files.map(f => RemoveFile(f.path, now, dataChange)), Some(meta),
-          if (dataChange) FullRead else LayoutOnly, txn = t)
-        return
-      } catch {
-        // METADATA conflicts only (the identity-mark race): a
-        // concurrent data add is a genuine overwrite conflict and
-        // must surface — silently retrying would remove the other
-        // writer's just-committed files
-        case e: VintageTable.MetadataConflictException
-            if (genIds.nonEmpty || idProps.nonEmpty) && attempt < 5 =>
-          attempt += 1
-          logWarning(s"identity overwrite re-allocating after commit " +
-            s"conflict (attempt $attempt): ${e.getMessage}")
-      }
+      // a dataChange=false overwrite is compaction: layout-only, so a
+      // concurrent append survives it; a real overwrite conflicts with one
+      commitOp(snap, "WRITE", params, adds,
+        snap.files.map(f => RemoveFile(f.path, now, dataChange)),
+        Some(Metadata(newSchema.json, snap.properties, snap.partitionColumns)),
+        if (dataChange) FullRead else LayoutOnly, txn = t, idBases = idBases): Unit
     }
   }
 
@@ -311,103 +290,78 @@ class VintageTable private (
     * as nullable fields in the same commit; existing files read the
     * new columns as null. Columns the TABLE has but the source lacks
     * are still an error — silently null-filling a forgotten column is
-    * the bug this check exists to catch.
+    * the bug this check exists to catch. Identity columns are the
+    * exception: the writer fills one the frame lacks (see
+    * [[withIdentity]]), and the append re-runs if a racing commit
+    * reached the ids it allocated ([[reallocating]]).
     */
   def append(df0: DataFrame, txn: Option[(String, Long)],
-      mergeSchema: Boolean): Unit = {
-    // identity allocation reads the high-water mark from the snapshot
-    // this attempt plans against; losing the commit race to a writer
-    // that moved any table property (the mark included) surfaces as
-    // the commit loop's metadata conflict, and the fix is to re-plan —
-    // re-allocate from the fresh mark and rewrite. Bounded: identity
-    // contention costs rewrites, never wrong ids. Non-identity appends
-    // keep the single-attempt behavior (their conflict is real).
+      mergeSchema: Boolean): Unit = reallocating("append") {
+    val snap = snapshot
+    val t = txn.map { case (a, v) => Txn(a, v) }
+    if (!t.exists(x => snap.txns.get(x.appId).exists(_ >= x.version))) {
+      // ingest-side completion of generated columns the writer omitted
+      val df = withIdentity(snap,
+        GeneratedColumns.complete(df0, snap.properties, Some(snap.schema)))
+      val missing = snap.schema.fieldNames
+        .filterNot(c => df.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
+      val extra = df.schema.fields
+        .filterNot(f => snap.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
+      require(missing.isEmpty && (extra.isEmpty || mergeSchema),
+        s"append schema mismatch: missing=${missing.mkString(",")} " +
+        s"extra=${extra.map(_.name).mkString(",")}" +
+        (if (extra.nonEmpty) " (set mergeSchema=true to widen the table)" else ""))
+      val finalSchema =
+        if (extra.isEmpty) snap.schema
+        else ColumnMapping.evolve(snap.schema,
+          StructType(snap.schema.fields ++ extra.map(_.copy(nullable = true))),
+          ColumnMapping.active(snap.properties))
+      val (adds, idBases) = writeFiles(spark,
+        df.select(finalSchema.fieldNames.map(col).toIndexedSeq: _*),
+        path, dataChange = true, snap.partitionColumns, snap.properties, finalSchema)
+      val params =
+        Map("mode" -> "Append",
+            "partitionBy" -> snap.partitionColumns.mkString("[", ",", "]")) ++
+          (if (extra.isEmpty) Map.empty
+           else Map("newColumns" -> extra.map(_.name).mkString(",")))
+      val meta =
+        if (extra.isEmpty) None
+        else Some(Metadata(finalSchema.json, snap.properties, snap.partitionColumns))
+      commitOp(snap, "WRITE", params, adds, Nil, meta, NoRead,
+        txn = t, freshAdds = true, idBases = idBases)
+      maybeAutoCompact()
+    }
+  }
+
+  /** `df` with each identity column of `snap` it lacks added as NULL,
+    * which the writer fills. A frame may carry a GENERATED BY DEFAULT
+    * identity column, never a GENERATED ALWAYS one.
+    */
+  private def withIdentity(snap: Snapshot, df: DataFrame): DataFrame = {
+    val ids = IdentityColumns.specs(snap.properties)
+    def carried(c: String) = df.schema.fieldNames.exists(_.equalsIgnoreCase(c))
+    val always = ids.collect { case (c, s) if !s.allowExplicit && carried(c) => c }
+    require(always.isEmpty,
+      s"identity column ${always.mkString(",")} is GENERATED ALWAYS — writers cannot " +
+      s"supply it (declare it GENERATED BY DEFAULT to allow explicit values)")
+    ids.keys.filterNot(carried).foldLeft(df)((d, c) => d.withColumn(c, lit(null).cast(LongType)))
+  }
+
+  /** Run a fluent write (plan, write, commit) again when its commit
+    * fails with [[VintageTable.IdentityConflictException]]: the ids it
+    * allocated may collide with a racing writer's, so it re-allocates
+    * from the fresh mark (the failed attempt's files become
+    * vacuum-pending orphans). At most 5 re-runs.
+    */
+  private def reallocating(op: String)(write: => Unit): Unit = {
     var attempt = 0
-    // explicit-identity retries carry (adds, planning schema, final
-    // schema, params) — the written files are correct as-is, only the
-    // mark advance raced. Reuse is valid ONLY while the table schema
-    // still equals the one the attempt planned against: a concurrent
-    // ALTER means recommitting the carried Metadata would silently
-    // revert it, so such a retry falls back to a full re-plan.
-    var carried: Option[(Seq[AddFile], StructType, StructType,
-      Map[String, String])] = None
     while (true) {
-      val snap = snapshot
-      val t = txn.map { case (a, v) => Txn(a, v) }
-      if (t.exists(x => snap.txns.get(x.appId).exists(_ >= x.version))) return
-      carried match {
-        case Some((_, plannedSchema, _, _))
-            if plannedSchema != snap.schema =>
-          carried = None // schema moved underneath: full re-plan
-        case Some((adds, _, finalSchema, params)) =>
-          val idProps = IdentityColumns.advance(spark, path, finalSchema,
-            snap.properties, adds, generated = Nil)
-          val meta =
-            if (finalSchema == snap.schema && idProps.isEmpty) None
-            else Some(Metadata(finalSchema.json, snap.properties ++ idProps,
-              snap.partitionColumns))
-          try {
-            commitOp(snap, "WRITE", params, adds, Nil, meta, NoRead,
-              txn = t, freshAdds = true)
-            maybeAutoCompact()
-            return
-          } catch {
-            case e: java.util.ConcurrentModificationException
-                if idProps.nonEmpty && attempt < 5 =>
-              attempt += 1
-              logWarning(s"identity append recommitting after mark race " +
-                s"(attempt $attempt): ${e.getMessage}")
-          }
-        case None =>
-          // ingest-side completion of generated columns the writer omitted
-          val df1 = GeneratedColumns.complete(df0, snap.properties, Some(snap.schema))
-          val (df, genIds) = IdentityColumns.complete(df1, snap.properties)
-          val missing = snap.schema.fieldNames
-            .filterNot(c => df.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-          val extra = df.schema.fields
-            .filterNot(f => snap.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
-          require(missing.isEmpty && (extra.isEmpty || mergeSchema),
-            s"append schema mismatch: missing=${missing.mkString(",")} " +
-            s"extra=${extra.map(_.name).mkString(",")}" +
-            (if (extra.nonEmpty) " (set mergeSchema=true to widen the table)" else ""))
-          val finalSchema =
-            if (extra.isEmpty) snap.schema
-            else ColumnMapping.evolve(snap.schema,
-              StructType(snap.schema.fields ++ extra.map(_.copy(nullable = true))),
-              ColumnMapping.active(snap.properties))
-          val adds = writeFiles(spark,
-            df.select(finalSchema.fieldNames.map(col).toIndexedSeq: _*),
-            path, dataChange = true, snap.partitionColumns,
-            tableSchema = finalSchema)
-          val idProps = IdentityColumns.advance(spark, path, finalSchema,
-            snap.properties, adds, genIds)
-          val params =
-            Map("mode" -> "Append",
-                "partitionBy" -> snap.partitionColumns.mkString("[", ",", "]")) ++
-              (if (extra.isEmpty) Map.empty
-               else Map("newColumns" -> extra.map(_.name).mkString(",")))
-          val meta =
-            if (extra.isEmpty && idProps.isEmpty) None
-            else Some(Metadata(finalSchema.json, snap.properties ++ idProps,
-              snap.partitionColumns))
-          try {
-            commitOp(snap, "WRITE", params, adds, Nil, meta, NoRead,
-              txn = t, freshAdds = true)
-            maybeAutoCompact()
-            return
-          } catch {
-            case e: java.util.ConcurrentModificationException
-                if (genIds.nonEmpty || idProps.nonEmpty) && attempt < 5 =>
-              attempt += 1
-              logWarning(s"identity append re-planning after commit " +
-                s"conflict (attempt $attempt): ${e.getMessage}")
-              // GENERATED values came from the stale mark: re-allocate
-              // and rewrite (the attempt's files become vacuum-pending
-              // orphans). EXPLICIT values are mark-independent: keep
-              // the files, recommit with a freshly computed advance.
-              if (genIds.isEmpty)
-                carried = Some((adds, snap.schema, finalSchema, params))
-          }
+      try { write; return }
+      catch {
+        case e: VintageTable.IdentityConflictException if attempt < 5 =>
+          attempt += 1
+          logWarning(s"identity $op re-allocating after commit conflict " +
+            s"(attempt $attempt): ${e.getMessage}")
       }
     }
   }
@@ -501,13 +455,13 @@ class VintageTable private (
     // vectorized reader can no longer decode under the table schema
     val aligned = df.select(snap.schema.fields.toIndexedSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    val adds = writeFiles(spark, aligned, path, dataChange = true,
-      snap.partitionColumns)
+    val (adds, idBases) = writeFiles(spark, aligned, path, dataChange = true,
+      snap.partitionColumns, snap.properties)
     val markers = fresh.map(f => IngestedFile(VintageTable.canonicalKey(f)))
     commitOp(snap, "COPY INTO",
       Map("source" -> srcAbs, "numFiles" -> fresh.size.toString,
           "format" -> format),
-      adds, Nil, None, NoRead, extra = markers)
+      adds, Nil, None, NoRead, extra = markers, idBases = idBases)
     fresh.size.toLong
   }
 
@@ -650,37 +604,23 @@ class VintageTable private (
     require(snap.partitionColumns.isEmpty,
       "shallow clone of hive-partitioned tables is not supported; " +
       "deep-copy with create(spark, dest, source.toDF, partitionBy = ...)")
-    val abs = absolutize(destPath)
-    require(VintageLog.latestVersion(abs) < 0, s"table already exists: $abs")
-    val dir = new HPath(abs)
-    dir.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dir)
-    VintageLog.invalidate(abs)
-    val now = System.currentTimeMillis()
     // dataChange=true regardless of the source flag: this IS the
     // clone's creating write — cloning a freshly-compacted source
     // (whose live files are dataChange=false) must still emit every
     // row to the clone's change feed and streaming readers
     // dvRef paths absolutize like data paths: the clone's reads must
-    // find the SOURCE's sidecars (same lifetime caveat as the data)
-    val adds = snap.files.map(f =>
-      f.copy(path = f.absolutePath(path), dataChange = true,
-        dvRef = f.dvRef.map(r => r.copy(path = AddFile.resolve(path, r.path)))))
-    val info = CommitInfo(0L, now, "CLONE",
+    // find the SOURCE's sidecars (same lifetime caveat as the data).
+    // The clone reads the source's files (DVs, mapping, …), so it takes
+    // the source's protocol and row-id mark (see [[createTable]]).
+    createTable(spark, destPath, "CLONE",
       Map("source" -> path, "sourceVersion" -> snap.version.toString,
-          "mode" -> "shallow"))
-    // the clone reads the source's files (DVs, mapping, …) — it needs
-    // the source's protocol, not just what its metadata would imply.
-    // The row-id high watermark carries over too: cloned files keep
-    // their baseRowId, so a fresh-starting watermark would hand the
-    // clone's first append ids the cloned rows already own.
-    VintageLog.commit(abs, 0L,
-      Seq(info,
-        snap.protocol.union(Protocol.required(snap.schema, snap.properties)),
-        Metadata(snap.schema.json, snap.properties,
-          snap.partitionColumns)) ++
-      (if (snap.rowIdHwm > 0) Seq(RowIdHighWaterMark(snap.rowIdHwm)) else Nil) ++
-      adds)
-    VintageTable.forPath(spark, abs)
+          "mode" -> "shallow"),
+      Metadata(snap.schema.json, snap.properties, snap.partitionColumns),
+      cloneOf = Some(snap)) { _ =>
+      snap.files.map(f =>
+        f.copy(path = f.absolutePath(path), dataChange = true,
+          dvRef = f.dvRef.map(r => r.copy(path = AddFile.resolve(path, r.path)))))
+    }
   }
 
   /** DEEP CLONE: create an independent table at `destPath` with its own
@@ -698,78 +638,70 @@ class VintageTable private (
     */
   def deepClone(destPath: String): VintageTable = {
     val snap = snapshot
-    val abs = absolutize(destPath)
-    require(VintageLog.latestVersion(abs) < 0, s"table already exists: $abs")
-    val dir = new HPath(abs)
-    dir.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dir)
-    VintageLog.invalidate(abs)
-    // dest-relative name per file: relative names keep their layout
-    // (partition dirs included); absolute paths — inherited through a
-    // SHALLOW clone — get fresh names, which is exactly the repair
-    // that decouples the deep clone from the shallow source's storage
-    val named: Seq[(AddFile, String)] = snap.files.map { f =>
-      val rel =
-        if (f.absolutePath(path) == f.path)
-          s"part-clone-${java.util.UUID.randomUUID().toString}.parquet"
-        else f.path
-      (f, rel)
-    }
-    if (named.nonEmpty) {
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
-      val destStr = abs
-      val copies = named.map { case (f, rel) => (f.absolutePath(path), rel) }
-      spark.sparkContext
-        .parallelize(copies, math.min(copies.size, 256))
-        .foreach { case (src, rel) =>
-          val conf = confBc.value.value
-          val sp = new HPath(src)
-          val tp = new HPath(destStr, rel)
-          val dfs = tp.getFileSystem(conf)
-          if (rel.contains('/')) dfs.mkdirs(tp.getParent)
-          if (!org.apache.hadoop.fs.FileUtil.copy(
-              sp.getFileSystem(conf), sp, dfs, tp,
-              false, true, conf))
-            throw new java.io.IOException(s"copy $sp -> $tp failed")
-        }
-    }
-    // sidecar vectors: one distributed rewrite into the clone's own
-    // _vintage_dv dir, each file's vector re-keyed to the clone's file
-    val withRef = named.filter(_._1.dvRef.isDefined)
-    val dvRel: Option[String] = if (withRef.isEmpty) None else {
-      import spark.implicits._
-      Some(DeletionVectors.writeSidecar(spark.emptyDataset[(String, Long)]
-          .toDF("file_key", "pos"), abs,
-        withRef.map { case (f, rel) =>
-          DeletionVectors.PriorVector(path, f)
-            .copy(key = DeletionVectors.fileKey(s"$abs/$rel"))
-        }))
-    }
-    val now = System.currentTimeMillis()
-    val adds = named.map { case (f, rel) =>
-      f.copy(path = rel, dataChange = true,
-        dvRef = f.dvRef.map(r => DvRef(dvRel.get, r.count)))
-    }
-    val info = CommitInfo(0L, now, "CLONE",
+    createTable(spark, destPath, "CLONE",
       Map("source" -> path, "sourceVersion" -> snap.version.toString,
-          "mode" -> "deep"))
-    VintageLog.commit(abs, 0L,
-      Seq(info,
-        snap.protocol.union(Protocol.required(snap.schema, snap.properties)),
-        Metadata(snap.schema.json, snap.properties,
-          snap.partitionColumns)) ++
-      (if (snap.rowIdHwm > 0) Seq(RowIdHighWaterMark(snap.rowIdHwm)) else Nil) ++
-      adds)
-    VintageTable.forPath(spark, abs)
+          "mode" -> "deep"),
+      Metadata(snap.schema.json, snap.properties, snap.partitionColumns),
+      cloneOf = Some(snap)) { abs =>
+      // dest-relative name per file: relative names keep their layout
+      // (partition dirs included); absolute paths — inherited through a
+      // SHALLOW clone — get fresh names, which is exactly the repair
+      // that decouples the deep clone from the shallow source's storage
+      val named: Seq[(AddFile, String)] = snap.files.map { f =>
+        val rel =
+          if (f.absolutePath(path) == f.path)
+            s"part-clone-${java.util.UUID.randomUUID().toString}.parquet"
+          else f.path
+        (f, rel)
+      }
+      if (named.nonEmpty) {
+        val confBc = spark.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(
+            spark.sessionState.newHadoopConf()))
+        val destStr = abs
+        val copies = named.map { case (f, rel) => (f.absolutePath(path), rel) }
+        spark.sparkContext
+          .parallelize(copies, math.min(copies.size, 256))
+          .foreach { case (src, rel) =>
+            val conf = confBc.value.value
+            val sp = new HPath(src)
+            val tp = new HPath(destStr, rel)
+            val dfs = tp.getFileSystem(conf)
+            if (rel.contains('/')) dfs.mkdirs(tp.getParent)
+            if (!org.apache.hadoop.fs.FileUtil.copy(
+                sp.getFileSystem(conf), sp, dfs, tp,
+                false, true, conf))
+              throw new java.io.IOException(s"copy $sp -> $tp failed")
+          }
+      }
+      // sidecar vectors: one distributed rewrite into the clone's own
+      // _vintage_dv dir, each file's vector re-keyed to the clone's file
+      val withRef = named.filter(_._1.dvRef.isDefined)
+      val dvRel: Option[String] = if (withRef.isEmpty) None else {
+        import spark.implicits._
+        Some(DeletionVectors.writeSidecar(spark.emptyDataset[(String, Long)]
+            .toDF("file_key", "pos"), abs,
+          withRef.map { case (f, rel) =>
+            DeletionVectors.PriorVector(path, f)
+              .copy(key = DeletionVectors.fileKey(s"$abs/$rel"))
+          }))
+      }
+      named.map { case (f, rel) =>
+        f.copy(path = rel, dataChange = true,
+          dvRef = f.dvRef.map(r => DvRef(dvRel.get, r.count)))
+      }
+    }
   }
 
   /** Commit files that executors already wrote into the table
-    * directory (the native DSv2 write path): one optimistic log
-    * commit, no data movement. Mirrors [[append]]/[[overwrite]]
-    * semantics — an overwrite removes every current file and conflicts
-    * with concurrent writers (FullRead); an append commits blind
-    * (NoRead).
+    * directory (the native DSv2 write path: SQL INSERT [OVERWRITE] and
+    * streaming epochs): one optimistic log commit, no data movement.
+    * Mirrors [[append]]/[[overwrite]] semantics — an overwrite removes
+    * every current file and conflicts with concurrent writers
+    * (FullRead); an append commits blind (NoRead). `idBases` are the
+    * identity bases the writer filled from; a race that reached one
+    * surfaces as [[VintageTable.IdentityConflictException]] (see
+    * [[commitOp]]), and the statement re-runs.
     *
     * `txn` is the idempotence watermark (`appId`, `version`) the
     * streaming sink rides: a replayed epoch whose version the log
@@ -779,7 +711,7 @@ class VintageTable private (
     */
   def commitFiles(adds: Seq[AddFile], overwrite: Boolean,
       txn: Option[(String, Long)] = None,
-      idFilledBases: Map[String, Long] = Map.empty): Unit = {
+      idBases: Map[String, Long] = Map.empty): Unit = {
     val snap = snapshot
     val t = txn.map { case (a, v) => Txn(a, v) }
     if (t.exists(x => snap.txns.get(x.appId).exists(_ >= x.version))) {
@@ -791,69 +723,16 @@ class VintageTable private (
       }
       return
     }
-    // native SQL writes always carry the full schema, so identity
-    // values here are writer-supplied: legal only under BY DEFAULT
-    // (the write builder rejects GENERATED ALWAYS earlier), and the
-    // high-water mark must advance past them in the same commit. The
-    // mark is a table property, so two concurrent explicit-id INSERTs
-    // race on metadata — the loser RE-PLANS from the fresh snapshot
-    // and recommits the SAME files (they are correct as written; only
-    // the property advance was stale), instead of failing the user.
-    var attempt = 0
-    var s = snap
-    while (true) {
-      val partParam = Map(
-        "partitionBy" -> s.partitionColumns.mkString("[", ",", "]"))
-      val idProps = IdentityColumns.advance(spark, path, s.schema,
-        s.properties, adds, generated = Nil)
-      val meta =
-        if (idProps.isEmpty) None
-        else Some(Metadata(s.schema.json, s.properties ++ idProps,
-          s.partitionColumns))
-      try {
-        if (overwrite) {
-          val now = System.currentTimeMillis()
-          commitOp(s, "WRITE", Map("mode" -> "Overwrite") ++ partParam, adds,
-            s.files.map(f => RemoveFile(f.path, now, dataChange = true)),
-            meta, FullRead, txn = t, freshAdds = true)
-        } else {
-          commitOp(s, "WRITE", Map("mode" -> "Append") ++ partParam, adds,
-            Nil, meta, NoRead, txn = t, freshAdds = true)
-        }
-        maybeAutoCompact()
-        return
-      } catch {
-        // append (NoRead) cannot data-conflict, so any CME there is a
-        // version/metadata race and re-planning is safe; an OVERWRITE
-        // retries only on the metadata race — its add conflicts are
-        // genuine and must surface, not remove the other writer's files
-        case e: java.util.ConcurrentModificationException
-            if idProps.nonEmpty && attempt < 5 &&
-              (!overwrite || e.isInstanceOf[VintageTable.MetadataConflictException]) =>
-          attempt += 1
-          logWarning(s"identity-marked native write re-planning after " +
-            s"commit conflict (attempt $attempt): ${e.getMessage}")
-          s = snapshot
-          // EXPLICIT identity values are correct as written — only the
-          // mark bookkeeping raced, and recommitting the same files is
-          // safe. ALLOCATED values (task-side NULL fill) are not: a
-          // racing writer that advanced the mark across this write's
-          // allocation base may own the same ids, and silently
-          // recommitting would record the collision. Fail loudly; a
-          // re-run replans from the fresh mark.
-          val raced = idFilledBases.filter { case (c, base) =>
-            IdentityColumns.specs(s.properties).get(c).exists { spec =>
-              IdentityColumns.hwm(s.properties, c)
-                .exists(h => !spec.beyond(base, h)) // fresh mark reached base
-            }
-          }
-          if (raced.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"identity allocation for ${raced.keys.mkString(",")} raced a " +
-              s"concurrent writer past this write's base — allocated ids may " +
-              s"collide; re-run the statement (caused by: ${e.getMessage})")
+    val (mode, removes, scope) =
+      if (!overwrite) ("Append", Nil, NoRead)
+      else {
+        val now = System.currentTimeMillis()
+        ("Overwrite", snap.files.map(f => RemoveFile(f.path, now, dataChange = true)), FullRead)
       }
-    }
+    commitOp(snap, "WRITE",
+      Map("mode" -> mode, "partitionBy" -> snap.partitionColumns.mkString("[", ",", "]")),
+      adds, removes, None, scope, txn = t, freshAdds = true, idBases = idBases)
+    maybeAutoCompact()
   }
 
   /** Commit one native row-level (delta-based) operation: grow
@@ -868,7 +747,8 @@ class VintageTable private (
     */
   private[vintage] def commitDeltaRowLevel(
       scanVersion: Long, op: String, insertAdds: Seq[AddFile],
-      positionFiles: Seq[String], countsByKey: Map[String, Long]): Unit = {
+      positionFiles: Seq[String], countsByKey: Map[String, Long],
+      idBases: Map[String, Long]): Unit = {
     val snap = snapshotAt(scanVersion)
     val params = Map("mode" -> "merge-on-read", "planner" -> "row-level")
     if (countsByKey.isEmpty && insertAdds.isEmpty) {
@@ -886,20 +766,11 @@ class VintageTable private (
       .parquet(positionFiles: _*)
     val grown = DeletionVectors.grow(snap, path,
       countsByKey.keys.map(k => k -> byKey(k)).toMap, positions, countsByKey)
-    // SQL UPDATE/MERGE re-inserted rows may carry identity values past
-    // the high-water mark (BY DEFAULT explicit inserts ride this path
-    // too) — advance it in the same commit or later allocation collides
-    val idProps = IdentityColumns.advance(spark, path, snap.schema,
-      snap.properties, insertAdds, generated = Nil)
-    val meta =
-      if (idProps.isEmpty) None
-      else Some(Metadata(snap.schema.json, snap.properties ++ idProps,
-        snap.partitionColumns))
     commitOp(snap, op,
       params + ("deletionVectors" -> grown.size.toString,
                 "insertedFiles" -> insertAdds.size.toString),
       grown ++ insertAdds,
-      removesForFiles(grown), meta, FullRead): Unit
+      removesForFiles(grown), None, FullRead, idBases = idBases): Unit
   }
 
   // --------------------------------------------------- maintenance utils
@@ -1021,7 +892,7 @@ class VintageTable private (
     val rows = rewriteSourceExact(snap, files)._1
     val arranged =
       if (Bucketing.spec(snap.properties).isDefined) rows else arrange(rows)
-    val adds = writeFiles(spark, arranged, path, dataChange = false,
+    val (adds, _) = writeFiles(spark, arranged, path, dataChange = false,
       snap.partitionColumns)
     val now = System.currentTimeMillis()
     commitOp(snap, op, params, adds,
@@ -1676,7 +1547,18 @@ class VintageTable private (
     *    silently undo the other writer's property change (lost
     *    update). A concurrent commit whose Metadata equals the
     *    snapshot's (a plain overwrite re-stamping identical metadata)
-    *    does NOT conflict.
+    *    does NOT conflict, nor does one that moved only identity
+    *    marks: those this commit re-reads, like the row-id mark;
+    *  - no concurrent commit moved an identity mark to a base this
+    *    commit's writer allocated from (`idBases`, column -> base):
+    *    its ids may collide, which fails with
+    *    [[VintageTable.IdentityConflictException]].
+    *
+    * Identity marks are recorded here: each attempt moves the mark of
+    * every identity column past the values of this commit's new data
+    * files, and never behind the mark of the snapshot it commits over —
+    * so no commit, metadata-carrying ones included, lowers a mark
+    * another commit recorded.
     *  - no file was concurrently ADDED that this operation should have
     *    read (read/write conflict, Delta's ConcurrentAppendException):
     *    an overwrite/restore conflicts with any concurrent data add, a
@@ -1689,7 +1571,8 @@ class VintageTable private (
       adds: Seq[AddFile], removes: Seq[RemoveFile],
       meta: Option[Metadata], scope: ReadScope = FullRead,
       maxRetries: Int = 20, txn: Option[Txn] = None,
-      extra: Seq[Action] = Nil, freshAdds: Boolean = false): Long = {
+      extra: Seq[Action] = Nil, freshAdds: Boolean = false,
+      idBases: Map[String, Long] = Map.empty): Long = {
     // WRITER-FEATURE GATE: committing to a table whose protocol
     // demands features this generation does not implement would
     // corrupt invariants those features maintain
@@ -1741,6 +1624,29 @@ class VintageTable private (
     // commits without materializing the file list at all
     lazy val livePaths = snap.files.map(_.path).toSet
     var rowIdBase = snap.rowIdHwm
+    // identity marks: the edges of this commit's new values, observed
+    // once; `seen` is the snapshot the attempt commits over, whose
+    // marks are the floor
+    val idEdges = identityEdges(spark, path, meta.fold(snap.schema)(_.schema),
+      meta.fold(snap.properties)(_.properties), adds, removes)
+    var seen = snap
+    def marked: Option[Metadata] = meta match {
+      case Some(m) =>
+        Some(m.copy(properties = IdentityColumns.marked(m.properties, idEdges, seen.properties)))
+      case None =>
+        val props = IdentityColumns.marked(seen.properties, idEdges, Map.empty)
+        if (props == seen.properties) None
+        else Some(Metadata(seen.schema.json, props, seen.partitionColumns))
+    }
+    def requireUnreached(): Unit = {
+      val raced = IdentityColumns.reached(idBases, seen.properties)
+      if (raced.nonEmpty)
+        throw new VintageTable.IdentityConflictException(
+          s"identity allocation for ${raced.mkString(",")} raced a concurrent " +
+          s"writer past this write's base on $path — allocated ids may collide; " +
+          "re-run the write")
+    }
+    requireUnreached()
     // a NoRead commit (blind append) can lose a version race but can
     // never semantically conflict, so pure races get a much higher
     // budget than genuinely conflict-prone scopes — a fleet of
@@ -1768,7 +1674,7 @@ class VintageTable private (
       try {
         VintageLog.commit(path, v,
           Seq(info) ++ txn.toSeq ++ protoGrown ++ hwmAction ++ extra ++
-            meta.toSeq ++ removes ++ finalAdds)
+            marked.toSeq ++ removes ++ finalAdds)
         return v
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -1814,7 +1720,8 @@ class VintageTable private (
           // (no extra per-version file reads — a NoRead append's retry
           // must not race readers against a commit file mid-publish)
           val metaChanged = current.schema != snap.schema ||
-            current.properties != snap.properties ||
+            IdentityColumns.unmarked(current.properties) !=
+              IdentityColumns.unmarked(snap.properties) ||
             current.partitionColumns != snap.partitionColumns
           val addConflict = conflictingAdds(snap.version, current.version,
             snap.schema, scope)
@@ -1825,11 +1732,10 @@ class VintageTable private (
                else s"files were concurrently added that this ${op.toLowerCase} " +
                  s"should have read: ${addConflict.take(3).mkString(",")}") +
               s" (caused by: $e)")
+          seen = current
+          requireUnreached()
           if (metaChanged)
-            // typed so property-race retry loops (identity marks) can
-            // re-plan on METADATA conflicts without also swallowing
-            // genuine data conflicts like the two branches above
-            throw new VintageTable.MetadataConflictException(
+            throw new java.util.ConcurrentModificationException(
               s"conflicting concurrent update to $path: table metadata " +
               s"(schema, properties, or partitioning) changed " +
               s"concurrently (caused by: $e)")
@@ -1866,12 +1772,12 @@ class VintageTable private (
 }
 
 object VintageTable {
-  /** Concurrent-commit conflict caused ONLY by a metadata change —
-    * retry loops that re-plan around property races (identity
-    * high-water marks) catch this subtype so they never swallow
-    * genuine data conflicts (concurrent adds/removes).
+  /** A racing commit moved an identity mark to a base this commit's
+    * writer allocated from, so its ids may collide: fluent writes
+    * re-run and re-allocate, SQL statements and streaming epochs fail
+    * and re-run.
     */
-  private[graft] class MetadataConflictException(msg: String)
+  class IdentityConflictException(msg: String)
       extends java.util.ConcurrentModificationException(msg)
 
   /** Open an existing table (README.md:125 `DeltaTable.forPath`). */
@@ -1928,14 +1834,6 @@ object VintageTable {
              properties: Map[String, String] = Map.empty,
              partitionBy: Seq[String] = Nil,
              txn: Option[(String, Long)] = None): VintageTable = {
-    val abs = absolutize(path)
-    val dir = new HPath(abs)
-    dir.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dir)
-    require(VintageLog.latestVersion(abs) < 0, s"table already exists: $abs")
-    // a previous table at this path may have been removed with raw FS
-    // calls (not DROP TABLE); its cached (dir, version) snapshots must
-    // not be served for the new table
-    VintageLog.invalidate(abs)
     // generated columns missing from the input are computed here
     // (their consistency constraints then validate every later write)
     val df1 = GeneratedColumns.complete(df, properties)
@@ -1948,33 +1846,66 @@ object VintageTable {
     val schema0 =
       if (ColumnMapping.active(properties)) ColumnMapping.stamp(df1.schema)
       else df1.schema
-    val adds0 = writeFiles(spark, df1, abs, dataChange = true, partitionBy,
-      tableProps = properties, tableSchema = schema0)
-    val (adds, hwm) = assignRowIds(adds0, properties, from = 0L)
-    val info = CommitInfo(0L, System.currentTimeMillis(), "WRITE",
-      Map("mode" -> "Overwrite",
-          "partitionBy" -> partitionBy.mkString("[", ",", "]")))
-    VintageLog.commit(abs, 0L,
-      Seq(info, Protocol.required(schema0, properties),
-        Metadata(schema0.json, properties, partitionBy)) ++ hwm ++
-        txn.map { case (a, v) => Txn(a, v) }.toSeq ++ adds)
-    new VintageTable(spark, abs, None)
+    createTable(spark, path, "WRITE",
+      Map("mode" -> "Overwrite", "partitionBy" -> partitionBy.mkString("[", ",", "]")),
+      Metadata(schema0.json, properties, partitionBy),
+      txn = txn.map { case (a, v) => Txn(a, v) }) { abs =>
+      writeFiles(spark, df1, abs, dataChange = true, partitionBy, properties, schema0)._1
+    }
   }
 
-  /** Initial row-id assignment for v0 commits (single writer by
-    * construction — the create wins or fails, no retry re-read needed).
+  /** Version 0 of the table at `path`, the one creation commit of
+    * [[create]], [[createWithFiles]], [[convert]] and both clones. Fails
+    * when a table exists there, and forgets cached snapshots of one
+    * removed from that path with raw FS calls; then `write` makes the
+    * data files into the absolute path, and one commit records `op`,
+    * the protocol `meta` requires, `meta` with its identity marks moved
+    * past the files' values, the row-id mark and the files. New files
+    * take row-id ranges from 0; a clone's files keep theirs, under
+    * `cloneOf`'s protocol and row-id mark.
     */
-  private def assignRowIds(adds: Seq[AddFile], props: Map[String, String],
-      from: Long): (Seq[AddFile], Seq[Action]) =
-    if (!RowTracking.enabled(props)) (adds, Nil)
-    else {
-      var next = from
-      val assigned = adds.map { a =>
+  private def createTable(spark: SparkSession, path: String, op: String,
+      params: Map[String, String], meta: Metadata,
+      cloneOf: Option[Snapshot] = None, txn: Option[Txn] = None)(
+      write: String => Seq[AddFile]): VintageTable = {
+    val abs = absolutize(path)
+    require(VintageLog.latestVersion(abs) < 0, s"table already exists: $abs")
+    val dir = new HPath(abs)
+    dir.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dir)
+    VintageLog.invalidate(abs)
+    val written = write(abs)
+    var next = cloneOf.fold(0L)(_.rowIdHwm)
+    val adds =
+      if (cloneOf.nonEmpty || !RowTracking.enabled(meta.properties)) written
+      else written.map { a =>
         if (a.dataChange && a.baseRowId.isEmpty && a.numRecords.isDefined) {
           val w = a.copy(baseRowId = Some(next)); next += a.numRecords.get; w
         } else a
       }
-      (assigned, if (next != from) Seq(RowIdHighWaterMark(next)) else Nil)
+    val required = Protocol.required(meta.schema, meta.properties)
+    val props = IdentityColumns.marked(meta.properties,
+      identityEdges(spark, abs, meta.schema, meta.properties, adds, Nil), Map.empty)
+    VintageLog.commit(abs, 0L,
+      Seq(CommitInfo(0L, System.currentTimeMillis(), op, params),
+        cloneOf.fold(required)(_.protocol.union(required)),
+        meta.copy(properties = props)) ++
+      (if (next > 0) Seq(RowIdHighWaterMark(next)) else Nil) ++ txn.toSeq ++ adds)
+    new VintageTable(spark, abs, None)
+  }
+
+  /** The edge of each identity column's values in a commit's new data
+    * files ([[IdentityColumns.advance]]), what its marks move past: its
+    * data-changing adds, less re-adds of a path it also removes (a
+    * deletion vector grown over old ids).
+    */
+  private def identityEdges(spark: SparkSession, path: String, schema: => StructType,
+      props: Map[String, String], adds: Seq[AddFile],
+      removes: Seq[RemoveFile]): Map[String, Long] =
+    if (IdentityColumns.specs(props).isEmpty) Map.empty
+    else {
+      val removed = removes.map(_.path).toSet
+      IdentityColumns.advance(spark, path, schema, props,
+        adds.filter(a => a.dataChange && !removed(a.path)))
     }
 
   /** Create version 0 from ALREADY-WRITTEN data files (the staged-CTAS
@@ -1985,18 +1916,10 @@ object VintageTable {
   private[graft] def createWithFiles(
       spark: SparkSession, path: String, schema: StructType,
       properties: Map[String, String], partitionBy: Seq[String],
-      adds: Seq[AddFile]): VintageTable = {
-    val abs = absolutize(path)
-    require(VintageLog.latestVersion(abs) < 0, s"table already exists: $abs")
-    VintageLog.invalidate(abs)
-    val info = CommitInfo(0L, System.currentTimeMillis(), "CREATE TABLE AS SELECT",
-      Map("partitionBy" -> partitionBy.mkString("[", ",", "]")))
-    val (assigned, hwm) = assignRowIds(adds, properties, from = 0L)
-    VintageLog.commit(abs, 0L,
-      Seq(info, Protocol.required(schema, properties),
-        Metadata(schema.json, properties, partitionBy)) ++ hwm ++ assigned)
-    new VintageTable(spark, abs, None)
-  }
+      adds: Seq[AddFile]): VintageTable =
+    createTable(spark, path, "CREATE TABLE AS SELECT",
+      Map("partitionBy" -> partitionBy.mkString("[", ",", "]")),
+      Metadata(schema.json, properties, partitionBy))(_ => adds)
 
   /** In-place conversion of an existing Parquet directory into a
     * vintage table (Delta's `CONVERT TO DELTA`): commits AddFiles that
@@ -2013,8 +1936,6 @@ object VintageTable {
               partitionSchema: StructType = new StructType(),
               properties: Map[String, String] = Map.empty): VintageTable = {
     val abs = absolutize(path)
-    require(!VintageLog.exists(abs), s"already a vintage table: $abs")
-    VintageLog.invalidate(abs)
     val dir = new HPath(abs)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(dir) && fs.getFileStatus(dir).isDirectory,
@@ -2062,31 +1983,27 @@ object VintageTable {
         s"inconsistent partition layout at $rel (expected ${partCols.mkString(",")})")
     }
 
-    // distributed footer-stat read — the only per-file work, never a
-    // row scan and never a driver loop
-    val statCols = ParquetStats.statsColumns(schema)
-    val absStr = abs
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    val adds = spark.sparkContext
-      .parallelize(rels, math.min(rels.size, 256))
-      .map { case (rel, size, modTime) =>
-        val conf = confBc.value.value
-        val (numRecords, stats) =
-          ParquetStats.read(new HPath(absStr, rel), conf, statCols)
-        AddFile(rel, size, modTime, dataChange = true, Some(numRecords),
-          stats, PartitionPaths.parsePartitionValues(rel))
-      }.collect().toSeq
-
-    val info = CommitInfo(0L, System.currentTimeMillis(), "CONVERT",
-      Map("numFiles" -> adds.size.toString,
-          "partitionBy" -> partCols.mkString("[", ",", "]")))
-    val (assigned, hwm) = assignRowIds(adds, properties, from = 0L)
-    VintageLog.commit(abs, 0L,
-      Seq(info, Protocol.required(schema, properties),
-        Metadata(schema.json, properties, partCols)) ++ hwm ++ assigned)
-    new VintageTable(spark, abs, None)
+    createTable(spark, abs, "CONVERT",
+      Map("numFiles" -> rels.size.toString,
+          "partitionBy" -> partCols.mkString("[", ",", "]")),
+      Metadata(schema.json, properties, partCols)) { _ =>
+      // distributed footer-stat read — the only per-file work, never a
+      // row scan and never a driver loop
+      val statCols = ParquetStats.statsColumns(schema)
+      val absStr = abs
+      val confBc = spark.sparkContext.broadcast(
+        new org.apache.spark.util.SerializableConfiguration(
+          spark.sessionState.newHadoopConf()))
+      spark.sparkContext
+        .parallelize(rels, math.min(rels.size, 256))
+        .map { case (rel, size, modTime) =>
+          val conf = confBc.value.value
+          val (numRecords, stats) =
+            ParquetStats.read(new HPath(absStr, rel), conf, statCols)
+          AddFile(rel, size, modTime, dataChange = true, Some(numRecords),
+            stats, PartitionPaths.parsePartitionValues(rel))
+        }.collect().toSeq
+    }
   }
 
   /** Create if absent, else overwrite as a new version. */
@@ -2096,25 +2013,27 @@ object VintageTable {
     } else create(spark, path, df)
 
   /** Write `df` as data files of the table at `tableDir` and return
-    * their AddFiles, uncommitted. The frame is planned as Spark's
-    * `AppendData` into a [[VintageFileSink]], so executors write final
-    * parquet files through the table's one writer,
+    * their AddFiles, uncommitted, with the identity bases the writer
+    * filled NULL slots from (column -> base, for [[commitOp]]'s race
+    * check). The frame is planned as Spark's `AppendData` into a
+    * [[VintageFileSink]], so executors write final parquet files
+    * through the table's one writer,
     * [[org.apache.spark.sql.graftshim.VintageWrite]] (bucket clustering
     * and in-bucket sort, hive partition directories, physical column
-    * names, CHECK constraints, bloom filters), and each task reports its
-    * files with their footer stats. Columns resolve by name against the
-    * table schema (`tableSchema`, else the log's), plus
-    * `_vintage_row_id` when a row-tracked table's frame carries it;
-    * types and nullability stay the frame's. Identity values are
-    * completed by the callers, and layout-only rewrites
-    * (`dataChange = false`) skip the constraint check: their rows were
-    * validated when first written.
+    * names, CHECK constraints, bloom filters, identity allocation from
+    * the marks in the properties), and each task reports its files with
+    * their footer stats. Columns resolve by name against the table
+    * schema (`tableSchema`, else the log's), plus `_vintage_row_id` when
+    * a row-tracked table's frame carries it; types and nullability stay
+    * the frame's. The properties are `tableProps`, else the log's;
+    * layout-only rewrites (`dataChange = false`) skip the constraint
+    * check: their rows were validated when first written.
     */
   private[vintage] def writeFiles(
       spark: SparkSession, df: DataFrame, tableDir: String,
       dataChange: Boolean, partitionBy: Seq[String] = Nil,
       tableProps: Map[String, String] = null,
-      tableSchema: StructType = null): Seq[AddFile] = {
+      tableSchema: StructType = null): (Seq[AddFile], Map[String, Long]) = {
     lazy val logged = VintageLog.replay(tableDir)
     val props =
       if (tableProps != null) tableProps
@@ -2132,17 +2051,16 @@ object VintageTable {
     val writeSchema = StructType(target.zip(frame.schema.fields).map {
       case (t, f) => f.copy(name = t.name, metadata = t.metadata)
     })
-    val writeProps = props.filterNot { case (k, _) =>
-      k.startsWith(IdentityColumns.Prefix) ||
-        (!dataChange && k.startsWith(Constraints.Prefix))
-    }
+    val writeProps =
+      if (dataChange) props else props.filterNot(_._1.startsWith(Constraints.Prefix))
     val parts = partitionBy.map(c =>
       schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(c))
     var adds = Seq.empty[AddFile]
+    var idBases = Map.empty[String, Long]
     val sink = new VintageFileSink(tableDir, writeSchema, parts, writeProps,
-      written => adds = written)
+      (written, bases) => { adds = written; idBases = bases })
     DatasetOps.ofRows(spark, AppendData.byName(
       DataSourceV2Relation.create(sink, None, None), frame.queryExecution.analyzed))
-    adds.map(_.copy(dataChange = dataChange))
+    (adds.map(_.copy(dataChange = dataChange)), idBases)
   }
 }

@@ -552,7 +552,7 @@ class VintageSqlTable(
       // GENERATED ALWAYS identity column those values are necessarily
       // writer-supplied, which the contract forbids; the fluent
       // append/overwrite path allocates them instead. BY DEFAULT
-      // columns pass, and commitFiles advances the high-water mark.
+      // columns pass, and the commit advances the high-water mark.
       graft.vintage.IdentityColumns.specs(snapshot.properties)
         .foreach { case (c, s) =>
           require(s.allowExplicit,

@@ -206,7 +206,8 @@ private[connector] case class VintageDeltaCommitMessage(
   */
 class VintageDeltaBatchWrite(
     tablePath: String, scanVersion: Long, op: String,
-    insertBatch: BatchWrite, conf: SerializableConfiguration,
+    insertBatch: org.apache.spark.sql.graftshim.VintageBatchWrite,
+    conf: SerializableConfiguration,
     tracked: Boolean = false)
     extends DeltaBatchWrite {
 
@@ -217,14 +218,15 @@ class VintageDeltaBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: VintageDeltaCommitMessage => m }
-    val insertAdds =
-      org.apache.spark.sql.graftshim.VintageCommitMessage.adds(msgs.map(_.inner))
+    val inserts = msgs.map(_.inner)
+    val insertAdds = org.apache.spark.sql.graftshim.VintageCommitMessage.adds(inserts)
     val posFiles = msgs.flatMap(_.positionFile)
     val counts = msgs.flatMap(_.counts.toSeq)
       .groupMapReduce(_._1)(_._2)(_ + _)
     val spark = SparkSession.active
     try VintageTable.forPath(spark, tablePath)
-      .commitDeltaRowLevel(scanVersion, op, insertAdds, posFiles, counts)
+      .commitDeltaRowLevel(scanVersion, op, insertAdds, posFiles, counts,
+        insertBatch.idBases(inserts))
     finally cleanupPositionFiles(posFiles)
   }
 

@@ -59,7 +59,7 @@ class VintageStagedTable(
       // as one atomic unit: the write only collects the AddFiles
       override def build(): Write = new VintageCollectWrite(
         new VintageWrite(path, tableSchema, partCols, overwrite = false,
-          tableProperties, info.queryId()), staged ++= _)
+          tableProperties, info.queryId()), (adds, _) => staged ++= adds)
     }
 
   override def commitStagedChanges(): Unit = {

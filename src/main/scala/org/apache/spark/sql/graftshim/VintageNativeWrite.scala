@@ -83,7 +83,7 @@ class VintageWrite(
         expressions.SortDirection.ASCENDING)
     }.toArray
 
-  override def toBatch: BatchWrite = prepared
+  override def toBatch: VintageBatchWrite = prepared
 
   /** Native streaming sink: identical executor write path (one task
     * wave straight into final parquet files, footer stats in commit
@@ -153,12 +153,11 @@ class VintageWrite(
           (name, sql, BindReferences.bindReference(
             Coalesce(Seq(cond, Literal(true))), out))
         }
-    // GENERATED BY DEFAULT identity columns may legally arrive NULL
-    // from a native INSERT/MERGE clause that omitted them — the task
-    // writer fills those slots with generated values (same
-    // per-partition id spacing as the fluent allocation), so the
-    // commit's high-water-mark advance sees allocated ids, not a
-    // NULL-rejection after the files were already written
+    // identity columns: every NULL slot (a fluent write's missing
+    // column, an INSERT/MERGE clause that omitted it) is filled by the
+    // task writer from one step past the mark these properties hold
+    // (see graft.vintage.IdentityColumns); the commit moves the mark
+    // past the filled values
     val idFills: Seq[(String, Int, Long, Long)] =
       graft.vintage.IdentityColumns.specs(tableProperties).toSeq.flatMap {
         case (c, spec) =>
@@ -183,9 +182,8 @@ class VintageWrite(
 
 // public: the native row-level delta write (graft.vintage.connector)
 // unwraps these from its wrapped insert writer's commits. `idFilled`
-// reports that the task ALLOCATED identity values for NULL slots —
-// the driver's commit retry must then treat a raced high-water mark
-// as a collision hazard, not bookkeeping (see VintageTable.commitFiles)
+// reports that the task ALLOCATED identity values for NULL slots (see
+// VintageBatchWrite.idBases)
 case class VintageCommitMessage(adds: Seq[AddFile], idFilled: Boolean = false)
     extends WriterCommitMessage
 
@@ -225,12 +223,15 @@ case class VintageStreamingWriterFactory(delegate: DataWriterFactory)
 }
 
 /** A [[VintageWrite]] whose batch commit hands the task-reported
-  * `AddFile`s to `collect` instead of committing them: CTAS/RTAS
-  * staging publishes them at `commitStagedChanges`, fluent writes in
-  * their own log commit. Distribution, partition count and ordering
-  * are the inner write's, so bucket layout and sort order hold.
+  * `AddFile`s and the write's identity bases
+  * ([[VintageBatchWrite.idBases]]) to `collect` instead of committing
+  * them: CTAS/RTAS staging publishes them at `commitStagedChanges`,
+  * fluent writes in their own log commit. Distribution, partition count
+  * and ordering are the inner write's, so bucket layout and sort order
+  * hold.
   */
-class VintageCollectWrite(inner: VintageWrite, collect: Seq[AddFile] => Unit)
+class VintageCollectWrite(inner: VintageWrite,
+    collect: (Seq[AddFile], Map[String, Long]) => Unit)
     extends Write with RequiresDistributionAndOrdering {
   override def requiredDistribution(): distributions.Distribution =
     inner.requiredDistribution()
@@ -242,7 +243,7 @@ class VintageCollectWrite(inner: VintageWrite, collect: Seq[AddFile] => Unit)
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
       delegate.createBatchWriterFactory(info)
     override def commit(messages: Array[WriterCommitMessage]): Unit =
-      collect(VintageCommitMessage.adds(messages.toSeq))
+      collect(VintageCommitMessage.adds(messages.toSeq), delegate.idBases(messages.toSeq))
     override def abort(messages: Array[WriterCommitMessage]): Unit =
       delegate.abort(messages)
   }
@@ -257,7 +258,8 @@ class VintageCollectWrite(inner: VintageWrite, collect: Seq[AddFile] => Unit)
   */
 class VintageFileSink(
     tablePath: String, writeSchema: StructType, partitionCols: Seq[String],
-    tableProperties: Map[String, String], collect: Seq[AddFile] => Unit)
+    tableProperties: Map[String, String],
+    collect: (Seq[AddFile], Map[String, Long]) => Unit)
     extends Table with SupportsWrite {
   override def name(): String = tablePath
   override def schema(): StructType = writeSchema
@@ -285,16 +287,32 @@ class VintageBatchWrite(
     bucketed: Boolean = false)
     extends BatchWrite {
 
-  /** (column -> allocation base) of this write's identity fills — the
-    * collision horizon the commit retry checks a raced mark against.
+  /** (column -> allocation base) of this write's identity fills when a
+    * task filled any, else empty: the bases the commit checks a raced
+    * mark against (see graft.vintage.IdentityColumns.reached).
     */
-  private def idFillBases: Map[String, Long] =
-    idFills.map(f => f._1 -> f._3).toMap
+  def idBases(messages: Seq[WriterCommitMessage]): Map[String, Long] =
+    if (messages.exists { case VintageCommitMessage(_, f) => f; case _ => false })
+      fills.map(f => f._1 -> f._3).toMap
+    else Map.empty
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+  // fills start at least one step past the mark the log holds when the
+  // tasks are planned: a streaming query plans its write once, and each
+  // epoch must allocate past the ids the previous one committed
+  @volatile private var fills = idFills
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    if (idFills.nonEmpty && graft.vintage.VintageLog.exists(tablePath)) {
+      val props = graft.vintage.VintageLog.replay(tablePath).properties
+      fills = idFills.map { case (c, ord, base, step) =>
+        val next = graft.vintage.IdentityColumns.hwm(props, c).map(_ + step)
+        (c, ord, next.filter(n => if (step > 0) n > base else n < base).getOrElse(base), step)
+      }
+    }
     new VintageWriterFactory(tablePath, tableSchemaJson, dataSchemaJson,
       physDataSchemaJson, partitionCols, physPartitionCols, factory, conf,
-      constraints, idFills, logBloomCols, logBloomBits, bucketed)
+      constraints, fills, logBloomCols, logBloomBits, bucketed, info.numPartitions())
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commit(messages, None)
@@ -303,15 +321,10 @@ class VintageBatchWrite(
     * `txn` when given (a streaming epoch).
     */
   private[graftshim] def commit(messages: Array[WriterCommitMessage],
-      txn: Option[(String, Long)]): Unit = {
-    val filled = messages.exists {
-      case VintageCommitMessage(_, f) => f
-      case _ => false
-    }
+      txn: Option[(String, Long)]): Unit =
     VintageTable.forPath(SparkSession.active, tablePath)
       .commitFiles(VintageCommitMessage.adds(messages.toSeq), overwrite, txn,
-        idFilledBases = if (filled) idFillBases else Map.empty)
-  }
+        idBases(messages.toSeq))
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val hconf = conf.value
@@ -333,7 +346,7 @@ class VintageWriterFactory(
     idFills: Seq[(String, Int, Long, Long)] = Nil,
     logBloomCols: Seq[String] = Nil,
     logBloomBits: Int = graft.vintage.StatsBloom.DefaultBits,
-    bucketed: Boolean = false)
+    bucketed: Boolean, numPartitions: Int)
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -342,7 +355,7 @@ class VintageWriterFactory(
       DataType.fromJson(dataSchemaJson).asInstanceOf[StructType],
       DataType.fromJson(physDataSchemaJson).asInstanceOf[StructType],
       partitionCols, physPartitionCols, factory, conf, partitionId, taskId,
-      constraints, idFills, logBloomCols, logBloomBits, bucketed)
+      constraints, idFills, logBloomCols, logBloomBits, bucketed, numPartitions)
 }
 
 /** Task-side writer: one open parquet `OutputWriter` per partition
@@ -360,7 +373,7 @@ class VintageDataWriter(
     idFills: Seq[(String, Int, Long, Long)] = Nil,
     logBloomCols: Seq[String] = Nil,
     logBloomBits: Int = graft.vintage.StatsBloom.DefaultBits,
-    bucketed: Boolean = false)
+    bucketed: Boolean, numPartitions: Int)
     extends DataWriter[InternalRow] {
 
   private val hconf = conf.value
@@ -453,11 +466,11 @@ class VintageDataWriter(
     }
   }
 
-  // identity NULL fill (GENERATED BY DEFAULT columns a native
-  // INSERT/MERGE clause omitted): per-row counter under the same
-  // (partition << 33) + row spacing the fluent allocation uses, so
-  // values are unique without coordination and the commit's mark
-  // advance records them like any explicit value
+  // identity NULL fill, the one allocator: the n-th fill of task
+  // partition p takes slot p + numPartitions * n (Delta's interleave),
+  // so values are unique without coordination and dense when tasks
+  // fill evenly; exact arithmetic fails the task rather than wrap past
+  // BIGINT into ids another write owns
   private var idFillCount: Long = 0L
   private def fillIdentity(row: InternalRow): InternalRow = {
     if (idFills.isEmpty) return row
@@ -474,10 +487,14 @@ class VintageDataWriter(
       g.update(i, if (row.isNullAt(i)) null else row.get(i, tableSchema(i).dataType))
       i += 1
     }
-    idFills.foreach { case (_, ord, base, step) =>
+    idFills.foreach { case (c, ord, base, step) =>
       if (g.isNullAt(ord))
-        g.update(ord, base + step *
-          ((partitionId.toLong << 33) + idFillCount))
+        g.update(ord, try Math.addExact(base, Math.multiplyExact(step, Math.addExact(
+            partitionId.toLong, Math.multiplyExact(numPartitions.toLong, idFillCount))))
+          catch { case _: ArithmeticException =>
+            throw new IllegalArgumentException(s"identity allocation for $c overflowed " +
+              s"BIGINT (base $base, step $step) — the id space is exhausted")
+          })
     }
     idFillCount += 1
     g

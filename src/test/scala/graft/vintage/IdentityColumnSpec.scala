@@ -201,6 +201,11 @@ class IdentityColumnSpec extends AnyFunSuite {
     val ids3 = t.toDF.select("id").as[Long].collect().toSeq
     assert(ids3.size == 5 && ids3.distinct.size == 5,
       s"MERGE-inserted row must get an allocated id: $ids3")
+    // a fluent append's explicit NULLs are allocated the same way
+    t.append(Seq((None: Option[Long], "f"), (Some(888888L), "g")).toDF("id", "name"))
+    val ids4 = t.toDF.select("id").as[Long].collect().toSeq
+    assert(ids4.size == 7 && ids4.distinct.size == 7 && ids4.contains(888888L),
+      s"a fluent NULL identity slot must be filled: $ids4")
   }
 
   test("MERGE allocates for inserted rows, keeps matched ids") {
@@ -295,6 +300,108 @@ class IdentityColumnSpec extends AnyFunSuite {
       spark.sql("ALTER TABLE idc.sync ALTER COLUMN name SYNC IDENTITY").collect()
     }
     assert(e.getMessage.contains("not an identity column"))
+  }
+
+  /** Every message in `e`'s cause chain. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+
+  test("allocation past BIGINT fails the write and commits nothing") {
+    spark.sql("""CREATE TABLE idc.top (
+      |  id BIGINT GENERATED BY DEFAULT AS IDENTITY (START WITH 9223372036854775806),
+      |  name STRING)""".stripMargin)
+    val t = VintageTable.forPath(spark, s"$wh/top")
+    val v0 = t.version
+    def mark = IdentityColumns.hwm(t.snapshot.properties, "id")
+    val mark0 = mark
+    val e1 = intercept[Exception] {
+      spark.sql("INSERT INTO idc.top VALUES (NULL, 'a'), (NULL, 'b'), (NULL, 'c')")
+    }
+    assert(messages(e1).contains("overflowed BIGINT"), messages(e1))
+    assert(t.version == v0 && mark == mark0)
+    val e2 = intercept[Exception](t.append(Seq("a", "b", "c").toDF("name")))
+    assert(messages(e2).contains("overflowed BIGINT"), messages(e2))
+    assert(t.version == v0 && mark == mark0)
+  }
+
+  test("the commit records the mark: races on a stale snapshot") {
+    spark.sql("""CREATE TABLE idc.marks (
+      |  id BIGINT GENERATED BY DEFAULT AS IDENTITY,
+      |  name STRING)""".stripMargin)
+    val t = VintageTable.forPath(spark, s"$wh/marks")
+    def mark = IdentityColumns.hwm(t.snapshot.properties, "id")
+    t.append(Seq("a").toDF("name"))
+    def written(stale: Snapshot, df: org.apache.spark.sql.DataFrame) =
+      VintageTable.writeFiles(spark, df, t.path, dataChange = true, Nil,
+        stale.properties, stale.schema)
+    def commit(stale: Snapshot, w: (Seq[AddFile], Map[String, Long])): Long =
+      t.commitOp(stale, "WRITE", Map("mode" -> "Append"), w._1, Nil, None, NoRead,
+        freshAdds = true, idBases = w._2)
+
+    // explicit ids committed after another append moved the mark: the
+    // commit retries over the winner's mark and records the max
+    val stale1 = t.snapshot
+    t.append(Seq("b", "c").toDF("name"))
+    val winner = mark.get
+    val explicit = written(stale1, Seq((5L << 40, "x")).toDF("id", "name"))
+    assert(explicit._2.isEmpty, "explicit ids allocate nothing")
+    commit(stale1, explicit)
+    assert(mark.contains(math.max(winner, 5L << 40)))
+    assert(t.toDF.count() == 4)
+
+    // filled ids whose base the winner's mark reached: the typed
+    // conflict, and nothing committed
+    val stale2 = t.snapshot
+    val filled = written(stale2,
+      Seq("y").toDF("name").withColumn("id", lit(null).cast("bigint")))
+    assert(filled._2 == Map("id" -> (IdentityColumns.hwm(stale2.properties, "id").get + 1L)))
+    t.append(Seq("d").toDF("name"))
+    val v = t.version
+    intercept[VintageTable.IdentityConflictException](commit(stale2, filled))
+    assert(t.version == v && t.toDF.count() == 5)
+
+    // a SET TBLPROPERTIES built on a snapshot older than an identity
+    // append keeps the winner's mark
+    val stale3 = t.snapshot
+    t.append(Seq("e").toDF("name"))
+    val winner3 = mark.get
+    t.commitOp(stale3, "SET TBLPROPERTIES", Map("properties" -> "k"), Nil, Nil,
+      Some(Metadata(stale3.schema.json, stale3.properties + ("k" -> "v"),
+        stale3.partitionColumns)), NoRead)
+    assert(mark.contains(winner3) && t.snapshot.properties.get("k").contains("v"))
+    // ...and one that sets a lower mark on the fresh snapshot cannot
+    // lower it either; only out-of-band log edits can, which SYNC
+    // IDENTITY repairs
+    t.setProperties(Map(IdentityColumns.hwmKey("id") -> "1"))
+    assert(mark.contains(winner3))
+    val s = t.snapshot
+    VintageLog.commit(t.path, s.version + 1, Seq(
+      CommitInfo(s.version + 1, System.currentTimeMillis(), "SURGERY", Map.empty),
+      Metadata(s.schema.json, s.properties + (IdentityColumns.hwmKey("id") -> "1"),
+        s.partitionColumns)))
+    assert(mark.contains(1L))
+    assert(t.syncIdentity("id").contains(winner3))
+  }
+
+  test("writeStream.toTable epochs allocate past the previous epoch") {
+    // the streaming write is planned once per query; each epoch's fills
+    // must still start past the mark the last epoch committed
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    spark.sql("""CREATE TABLE idc.stream (
+      |  id BIGINT GENERATED BY DEFAULT AS IDENTITY,
+      |  name STRING)""".stripMargin)
+    val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val q = src.toDF().selectExpr("CAST(NULL AS BIGINT) AS id", "value AS name")
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("idc-stream-cp").toString)
+      .toTable("idc.stream")
+    try {
+      src.addData("a", "b"); q.processAllAvailable()
+      src.addData("c"); q.processAllAvailable()
+    } finally q.stop()
+    val ids = spark.table("idc.stream").select("id").as[Long].collect().toSeq
+    assert(ids.size == 3 && ids.distinct.size == 3, s"epochs reused ids: $ids")
   }
 
   test("identity columns must be BIGINT") {

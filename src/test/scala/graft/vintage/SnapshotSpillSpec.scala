@@ -76,6 +76,13 @@ class SnapshotSpillSpec extends AnyFunSuite {
       assert(spark.read.format("vintage").load(dir)
         .filter(col("k") === 1001L).count() == 0)
 
+      // one-key fluent upsert: candidates prune distributed, and the
+      // rewrite's key clustering reads the touched files' own stats
+      t.as("t").merge(Seq((2003L, "up")).toDF("k", "v").as("s"), "t.k = s.k")
+        .whenMatched().updateAll().whenNotMatched().insertAll().execute()
+      assert(spark.read.format("vintage").load(dir)
+        .filter(col("k") === 2003L).as[(Long, String)].collect().toSeq == Seq((2003L, "up")))
+
       // blind append on the spilled snapshot
       t.append(Seq((99999L, "fresh")).toDF("k", "v").coalesce(1))
       assert(spark.read.format("vintage").load(dir)

@@ -19,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * copy-on-write or deletion vectors is read by the fluent row-level
   * planner alone, so the choice cannot fork again. Every session is
   * built by `graft.GraftSession`, so session configs cannot drift
-  * apart again. Reads `src/main` (and `src/test` for the session
+  * apart again. Identity values have one allocator, the writer, and
+  * their mark one update, in `VintageTable.commitOp`. Reads `src/main` (and `src/test` for the session
   * builder); comment lines are ignored.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -80,6 +81,20 @@ class SourceGuardSpec extends AnyFunSuite {
       s"src/main session builder sites: $found")
     val inTests = sites(builder, load(new File("src/test")))
     assert(inTests.isEmpty, s"src/test session builder sites: $inTests")
+  }
+
+  test("one identity allocator and one mark update") {
+    // the table writer allocates every identity value; commitOp records
+    // the mark, and one fluent helper re-runs a write on the typed race
+    val advance = sites("""IdentityColumns\s*\.\s*advance\s*\(""")
+    assert(advance.size == 1 && advance.head.startsWith("scala/graft/vintage/VintageTable.scala:"),
+      s"IdentityColumns.advance( sites: $advance")
+    val allocators = sites("monotonically_increasing_id",
+      sources.filter(_._1.startsWith("scala/graft/vintage/")))
+    assert(allocators.isEmpty, s"identity allocation outside the writer: $allocators")
+    val retries = sites("""case\s+\w+\s*:\s*(VintageTable\s*\.\s*)?IdentityConflictException""")
+    assert(retries.size == 1 && retries.head.startsWith("scala/graft/vintage/VintageTable.scala:"),
+      s"identity retry sites: $retries")
   }
 
   test("no read uses the file source's _metadata columns") {
