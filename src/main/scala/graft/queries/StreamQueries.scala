@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Tables
 import graft.vintage.{RowTracking, VintageTable}
@@ -85,6 +86,23 @@ object StreamQueries {
     try body finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Run a stateful gate's query, started by `start` on a checkpoint
+    * dir of its own, through `feed`; then stop it, unload the state
+    * stores and delete the dir, in that order. Given no checkpoint, a
+    * memory sink's temporary one is deleted inside `stop` while the
+    * state-store providers stay loaded, and their next maintenance run
+    * fails on the missing dir.
+    */
+  private def runGate(start: String => StreamingQuery)(feed: StreamingQuery => Unit): Unit = {
+    val cp = Files.createTempDirectory("graft-gate-cp").toFile
+    val q = start(cp.toString)
+    try feed(q) finally {
+      q.stop()
+      org.apache.spark.sql.graftshim.StreamingShim.unloadStateStores()
+      org.apache.commons.io.FileUtils.deleteQuietly(cp)
     }
   }
 
@@ -195,9 +213,8 @@ object StreamQueries {
       gap = "30 minutes", delayThreshold = "1 minute")
     val sink = "q50_sessions_" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val q = sessions.writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    try {
+    runGate(cp => sessions.writeStream.format("memory").queryName(sink)
+      .outputMode("append").option("checkpointLocation", cp).start()) { q =>
       val batchSize = feed.length / 5 + 1
       feed.grouped(batchSize).foreach { g =>
         mem.addData(g.toSeq: _*); q.processAllAvailable()
@@ -207,7 +224,7 @@ object StreamQueries {
       val far = new Timestamp((micros(feed.last._2) / 1000) + 90L * 24 * 3600 * 1000)
       mem.addData((-1L, far)); q.processAllAvailable()
       mem.addData((-1L, far)); q.processAllAvailable()
-    } finally q.stop()
+    }
 
     spark.table(sink)
       .filter(col("user_id") >= 0)
@@ -260,14 +277,13 @@ object StreamQueries {
       delayThreshold = "400 days")
     val sink = "q52_dedup_" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val q = deduped.writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    try {
+    runGate(cp => deduped.writeStream.format("memory").queryName(sink)
+      .outputMode("append").option("checkpointLocation", cp).start()) { q =>
       val batchSize = feed.length / 3 + 1
       feed.grouped(batchSize).foreach { g =>
         mem.addData(g.toSeq: _*); q.processAllAvailable()
       }
-    } finally q.stop()
+    }
 
     spark.table(sink).select(col("text")).orderBy("text")
   }
@@ -351,9 +367,8 @@ object StreamQueries {
       widthSeconds = 600, delayThreshold = "40 days")
     val sink = "q58_band_" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val q = joined.writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    try {
+    runGate(cp => joined.writeStream.format("memory").queryName(sink)
+      .outputMode("append").option("checkpointLocation", cp).start()) { q =>
       // both sides advance together so neither watermark outruns the
       // other's in-flight rows; 3 rounds = 2 cross-batch boundaries
       // (cross-batch state is the contract under test; each extra
@@ -366,7 +381,7 @@ object StreamQueries {
         if (e.nonEmpty) eMem.addData(e.toSeq: _*)
         q.processAllAvailable()
       }
-    } finally q.stop()
+    }
 
     spark.table(sink)
       .groupBy(col("p_id").as("event_id"))
@@ -458,9 +473,8 @@ object StreamQueries {
       windowSeconds = 600, delayThreshold = "30 minutes")
     val sink = "q78_outer_" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val q = joined.writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    try {
+    runGate(cp => joined.writeStream.format("memory").queryName(sink)
+      .outputMode("append").option("checkpointLocation", cp).start()) { q =>
       val batchSize = feed.length / 3 + 1
       feed.grouped(batchSize).foreach { g =>
         val p = g.collect { case ("purchase", id, u, t) => (id, u, t) }
@@ -483,7 +497,7 @@ object StreamQueries {
       pMem.addData((-1L, -1L, flushTs2))
       eMem.addData((-1L, -1L, flushTs2))
       q.processAllAvailable()
-    } finally q.stop()
+    }
 
     spark.table(sink)
       .filter(col("p_id") =!= -1L)

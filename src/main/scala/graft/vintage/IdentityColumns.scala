@@ -44,11 +44,21 @@ object IdentityColumns {
 
   case class IdentitySpec(start: Long, step: Long, allowExplicit: Boolean) {
     require(step != 0, "identity INCREMENT must be non-zero")
-    /** First value to allocate when the mark is `hwm`. */
-    def nextBase(hwm: Option[Long]): Long = hwm.map(_ + step).getOrElse(start)
+    /** First value to allocate when the mark is `hwm`; None once the
+      * mark is the last BIGINT value in step direction.
+      */
+    def nextBase(hwm: Option[Long]): Option[Long] =
+      hwm.fold(Option(start))(stepPast(_, step))
     /** True when `a` is strictly beyond `b` in step direction. */
     def beyond(a: Long, b: Long): Boolean = if (step > 0) a > b else a < b
   }
+
+  /** The value one `step` past `mark`, or None when that leaves
+    * BIGINT: the column's id space is exhausted.
+    */
+  def stepPast(mark: Long, step: Long): Option[Long] =
+    try Some(Math.addExact(mark, step))
+    catch { case _: ArithmeticException => None }
 
   /** (col -> spec) of every identity column in the table properties. */
   def specs(props: Map[String, String]): Map[String, IdentitySpec] =

@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.StructType
 
 /** Reconstructed table state as of a version: live files + schema.
-  * Produced by log replay; the read path scans exactly `files`.
+  * Produced by log replay, or by the commit that published the version
+  * in this process; the read path scans exactly `files`.
   */
 case class Snapshot(
     version: Long,
@@ -168,11 +169,31 @@ object VintageLog {
       .minOption
 
   /** Atomically publish version `v`; fails if `v` already exists.
-    * Writes a checkpoint when `v` crosses the checkpoint interval.
+    * Caches the published snapshot for the next reader ([[handOff]]),
+    * then writes a checkpoint when `v` crosses the checkpoint interval.
     */
   def commit(tableDir: String, v: Long, actions: Seq[Action]): Unit = {
     store.writeExclusive(versionFile(tableDir, v), actions.map(Action.toJsonLine))
+    handOff(tableDir, v, actions)
     if (v > 0 && v % checkpointInterval == 0) checkpoint(tableDir, v)
+  }
+
+  /** Cache version `v`, just published by this process, as its own
+    * `actions` folded onto the cached `v - 1` (onto the empty table at
+    * version 0) — Delta's post-commit snapshot — so the first reader of
+    * `v` replays nothing. A spilled or uncached base caches nothing:
+    * the next reader replays as before.
+    */
+  private def handOff(tableDir: String, v: Long, actions: Seq[Action]): Unit = {
+    val base =
+      if (v == 0) Some(new SnapshotState)
+      else snapshotCache.synchronized(Option(snapshotCache.get((tableDir, v - 1))))
+        .filter(_.spilled.isEmpty).map(SnapshotState.of)
+    base.foreach { state =>
+      actions.foreach(state.fold(_, checkpoint = false))
+      if (state.problem(tableDir).isEmpty)
+        snapshotCache.synchronized(snapshotCache.put((tableDir, v), state.snapshot(tableDir, v)))
+    }
   }
 
   /** Write the full-snapshot checkpoint for version `v` as Parquet
@@ -203,6 +224,10 @@ object VintageLog {
           store.hadoopConf)
       case None =>
         val adds: Seq[Action] = snap.files
+        // a reader of `v` now loads this checkpoint spilled: drop the
+        // in-memory snapshot so the cache serves what a replay would
+        if (metaActions.size + adds.size >= spillThreshold)
+          snapshotCache.synchronized(snapshotCache.remove((tableDir, v)))
         if (metaActions.size + adds.size <= multiPartThreshold) {
           CheckpointCodec.write(checkpointFile(tableDir, v),
             metaActions ++ adds, store.hadoopConf)
@@ -306,8 +331,12 @@ object VintageLog {
     * immutably identifies a snapshot — committed versions are never
     * rewritten — so entries cannot go stale; what keeps concurrent
     * writers visible is that [[replay]] still resolves the LATEST
-    * version from the log listing on every call, and a fresh commit
-    * simply misses the cache at its new version. LRU-bounded small:
+    * version from the log listing on every call. Entries come from
+    * two places: a replay caches what it read, and [[commit]] caches
+    * the version it published ([[handOff]]), so the reader that
+    * follows a commit in this process hits. A version another process
+    * committed misses and replays. Keys are path strings: one table
+    * under two spellings is two sets of entries. LRU-bounded small:
     * at scale a snapshot's file list is the dominant driver-memory
     * cost, so hold only a handful of hot (table, version) states.
     */
@@ -353,8 +382,39 @@ object VintageLog {
   }
 
   private def doReplay(tableDir: String, until: Long): Snapshot = {
+    val state = new SnapshotState
+    val start: Long = checkpointVersionFor(tableDir, until) match {
+      case Some(cp) =>
+        val parts = checkpointParquetParts(tableDir, cp)
+        val spill = parts.nonEmpty && parts.iterator
+          .map(CheckpointCodec.recordCount(_, store.hadoopConf))
+          .sum >= spillThreshold
+        if (spill) {
+          state.spillBase = Some(parts)
+          // writer contract: every non-add action lives in part 1
+          CheckpointCodec.readMeta(parts.head, store.hadoopConf)
+            .foreach(state.fold(_, checkpoint = true))
+        } else
+          readCheckpointActions(tableDir, cp).foreach(state.fold(_, checkpoint = true))
+        cp + 1
+      case None => 0L
+    }
+    (start to until).foreach { v =>
+      readVersion(tableDir, v).foreach(state.fold(_, checkpoint = false))
+    }
+    state.snapshot(tableDir, until)
+  }
+
+  /** Table state folded from a base — the empty table, a checkpoint's
+    * actions or a cached non-spilled [[Snapshot]] — plus commits in
+    * version order: the one fold behind [[replay]] and [[handOff]], so
+    * a replayed and a handed-off snapshot of a version cannot differ.
+    */
+  private final class SnapshotState {
     val files = scala.collection.mutable.LinkedHashMap[String, AddFile]()
-    var meta: Option[Metadata] = None
+    var schema: Option[StructType] = None
+    var properties = Map.empty[String, String]
+    var partitionColumns = Seq.empty[String]
     var proto: Protocol = Protocol.base
     var rowIdHwm = 0L
     val commits = scala.collection.mutable.ArrayBuffer[CommitInfo]()
@@ -365,13 +425,16 @@ object VintageLog {
     // recorded so the index can subtract it from the checkpoint rows
     var spillBase: Option[Seq[Path]] = None
     val tailRemoves = scala.collection.mutable.LinkedHashSet[String]()
+
     def fold(a: Action, checkpoint: Boolean): Unit = a match {
       case a: AddFile    => files(a.path) = a
       case r: RemoveFile => if (!checkpoint) {
         files.remove(r.path)
         if (spillBase.isDefined) tailRemoves += r.path
       }
-      case m: Metadata   => meta = Some(m)
+      case m: Metadata   =>
+        schema = Some(m.schema); properties = m.properties
+        partitionColumns = m.partitionColumns
       case c: CommitInfo => commits += c
       case t: Txn        =>
         txns(t.appId) = math.max(t.version, txns.getOrElse(t.appId, Long.MinValue))
@@ -379,48 +442,51 @@ object VintageLog {
       case p: Protocol   => proto = p
       case h: RowIdHighWaterMark => rowIdHwm = math.max(rowIdHwm, h.next)
     }
-    val start: Long = checkpointVersionFor(tableDir, until) match {
-      case Some(cp) =>
-        val parts = checkpointParquetParts(tableDir, cp)
-        val spill = parts.nonEmpty && parts.iterator
-          .map(CheckpointCodec.recordCount(_, store.hadoopConf))
-          .sum >= spillThreshold
-        if (spill) {
-          spillBase = Some(parts)
-          // writer contract: every non-add action lives in part 1
-          CheckpointCodec.readMeta(parts.head, store.hadoopConf)
-            .foreach(fold(_, checkpoint = true))
-        } else
-          readCheckpointActions(tableDir, cp).foreach(fold(_, checkpoint = true))
-        cp + 1
-      case None => 0L
+
+    /** Why this state is no snapshot a reader may use, if it is not.
+      * The READER-FEATURE GATE: refusing here is what keeps both
+      * unknown features and skipped unknown actions from producing
+      * silently wrong reads (e.g. a DV format this generation cannot
+      * subtract).
+      */
+    def problem(tableDir: String): Option[String] = {
+      val unreadable = proto.readerFeatures.filterNot(Protocol.SupportedReader)
+      if (unreadable.nonEmpty)
+        Some(s"table $tableDir requires reader features ${unreadable.mkString(", ")} " +
+          s"this engine does not support (supported: " +
+          s"${Protocol.SupportedReader.toSeq.sorted.mkString(", ")})")
+      else if (schema.isEmpty) Some(s"no metaData action in log of $tableDir")
+      else None
     }
-    (start to until).foreach { v =>
-      readVersion(tableDir, v).foreach(fold(_, checkpoint = false))
+
+    def snapshot(tableDir: String, version: Long): Snapshot = {
+      problem(tableDir).foreach(p => throw new IOException(p))
+      spillBase match {
+        case None =>
+          Snapshot(version, schema.get, files.values.toSeq, properties,
+            commits.toSeq, partitionColumns, txns.toMap, ingested.toSet,
+            proto, rowIdHwm)
+        case Some(cpPaths) =>
+          val idx = SpilledIndex(cpPaths.map(_.toString), files.values.toSeq,
+            tailRemoves.toSet)
+          val conf = store.hadoopConf
+          Snapshot(version, schema.get, new LazyFileList(() => idx.materialize(conf)),
+            properties, commits.toSeq, partitionColumns, txns.toMap,
+            ingested.toSet, proto, rowIdHwm, Some(idx))
+      }
     }
-    // READER-FEATURE GATE: refusing here is what keeps both unknown
-    // features and skipped unknown actions from producing silently
-    // wrong reads (e.g. a DV format this generation cannot subtract)
-    val unreadable = proto.readerFeatures.filterNot(Protocol.SupportedReader)
-    if (unreadable.nonEmpty)
-      throw new IOException(
-        s"table $tableDir requires reader features ${unreadable.mkString(", ")} " +
-        s"this engine does not support (supported: " +
-        s"${Protocol.SupportedReader.toSeq.sorted.mkString(", ")})")
-    val m = meta.getOrElse(
-      throw new IOException(s"no metaData action in log of $tableDir"))
-    spillBase match {
-      case None =>
-        Snapshot(until, m.schema, files.values.toSeq, m.properties,
-          commits.toSeq, m.partitionColumns, txns.toMap, ingested.toSet,
-          proto, rowIdHwm)
-      case Some(cpPaths) =>
-        val idx = SpilledIndex(cpPaths.map(_.toString), files.values.toSeq,
-          tailRemoves.toSet)
-        val conf = store.hadoopConf
-        Snapshot(until, m.schema, new LazyFileList(() => idx.materialize(conf)),
-          m.properties, commits.toSeq, m.partitionColumns, txns.toMap,
-          ingested.toSet, proto, rowIdHwm, Some(idx))
+  }
+
+  private object SnapshotState {
+    /** The state of non-spilled `s`, ready to fold its successor onto. */
+    def of(s: Snapshot): SnapshotState = {
+      val st = new SnapshotState
+      s.files.foreach(st.fold(_, checkpoint = true))
+      st.schema = Some(s.schema); st.properties = s.properties
+      st.partitionColumns = s.partitionColumns
+      st.proto = s.protocol; st.rowIdHwm = s.rowIdHwm
+      st.commits ++= s.commits; st.txns ++= s.txns; st.ingested ++= s.ingested
+      st
     }
   }
 

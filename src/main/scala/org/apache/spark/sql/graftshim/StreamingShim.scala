@@ -16,4 +16,12 @@ object StreamingShim {
     classic.sparkSession.internalCreateDataFrame(
       classic.queryExecution.toRdd, classic.schema, isStreaming = false)
   }
+
+  /** Unload every state-store provider loaded in this JVM. A provider
+    * outlives its stopped query until the next maintenance run, which
+    * works on the query's checkpoint dir; call this between stopping a
+    * query and deleting that dir, with no other stateful query running.
+    */
+  def unloadStateStores(): Unit =
+    org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
 }

@@ -158,7 +158,7 @@ class VintageWrite(
     // task writer from one step past the mark these properties hold
     // (see graft.vintage.IdentityColumns); the commit moves the mark
     // past the filled values
-    val idFills: Seq[(String, Int, Long, Long)] =
+    val idFills: Seq[(String, Int, Option[Long], Long)] =
       graft.vintage.IdentityColumns.specs(tableProperties).toSeq.flatMap {
         case (c, spec) =>
           val ord = tableSchema.fields.indexWhere(_.name.equalsIgnoreCase(c))
@@ -281,7 +281,7 @@ class VintageBatchWrite(
     overwrite: Boolean,
     factory: OutputWriterFactory, conf: SerializableConfiguration,
     constraints: Seq[(String, String, Expression)] = Nil,
-    idFills: Seq[(String, Int, Long, Long)] = Nil,
+    idFills: Seq[(String, Int, Option[Long], Long)] = Nil,
     logBloomCols: Seq[String] = Nil,
     logBloomBits: Int = graft.vintage.StatsBloom.DefaultBits,
     bucketed: Boolean = false)
@@ -293,7 +293,7 @@ class VintageBatchWrite(
     */
   def idBases(messages: Seq[WriterCommitMessage]): Map[String, Long] =
     if (messages.exists { case VintageCommitMessage(_, f) => f; case _ => false })
-      fills.map(f => f._1 -> f._3).toMap
+      fills.flatMap(f => f._3.map(f._1 -> _)).toMap
     else Map.empty
 
   // fills start at least one step past the mark the log holds when the
@@ -305,8 +305,11 @@ class VintageBatchWrite(
     if (idFills.nonEmpty && graft.vintage.VintageLog.exists(tablePath)) {
       val props = graft.vintage.VintageLog.replay(tablePath).properties
       fills = idFills.map { case (c, ord, base, step) =>
-        val next = graft.vintage.IdentityColumns.hwm(props, c).map(_ + step)
-        (c, ord, next.filter(n => if (step > 0) n > base else n < base).getOrElse(base), step)
+        val next = graft.vintage.IdentityColumns.hwm(props, c)
+          .map(graft.vintage.IdentityColumns.stepPast(_, step))
+        // the later base; None, a mark at the end of BIGINT, is latest
+        (c, ord, next.fold(base)(n => for (b <- base; x <- n)
+          yield if (step > 0) math.max(b, x) else math.min(b, x)), step)
       }
     }
     new VintageWriterFactory(tablePath, tableSchemaJson, dataSchemaJson,
@@ -343,7 +346,7 @@ class VintageWriterFactory(
     factory: OutputWriterFactory,
     conf: SerializableConfiguration,
     constraints: Seq[(String, String, Expression)] = Nil,
-    idFills: Seq[(String, Int, Long, Long)] = Nil,
+    idFills: Seq[(String, Int, Option[Long], Long)] = Nil,
     logBloomCols: Seq[String] = Nil,
     logBloomBits: Int = graft.vintage.StatsBloom.DefaultBits,
     bucketed: Boolean, numPartitions: Int)
@@ -370,7 +373,7 @@ class VintageDataWriter(
     factory: OutputWriterFactory,
     conf: SerializableConfiguration, partitionId: Int, taskId: Long,
     constraints: Seq[(String, String, Expression)] = Nil,
-    idFills: Seq[(String, Int, Long, Long)] = Nil,
+    idFills: Seq[(String, Int, Option[Long], Long)] = Nil,
     logBloomCols: Seq[String] = Nil,
     logBloomBits: Int = graft.vintage.StatsBloom.DefaultBits,
     bucketed: Boolean, numPartitions: Int)
@@ -488,13 +491,13 @@ class VintageDataWriter(
       i += 1
     }
     idFills.foreach { case (c, ord, base, step) =>
+      // no base: the mark is already the last value in step direction
       if (g.isNullAt(ord))
-        g.update(ord, try Math.addExact(base, Math.multiplyExact(step, Math.addExact(
-            partitionId.toLong, Math.multiplyExact(numPartitions.toLong, idFillCount))))
-          catch { case _: ArithmeticException =>
-            throw new IllegalArgumentException(s"identity allocation for $c overflowed " +
-              s"BIGINT (base $base, step $step) — the id space is exhausted")
-          })
+        g.update(ord, base.flatMap(b => try Some(Math.addExact(b, Math.multiplyExact(step,
+            Math.addExact(partitionId.toLong, Math.multiplyExact(numPartitions.toLong,
+              idFillCount))))) catch { case _: ArithmeticException => None })
+          .getOrElse(throw new IllegalArgumentException(s"identity column $c exhausted " +
+            s"its BIGINT range: allocation overflowed BIGINT (step $step)")))
     }
     idFillCount += 1
     g

@@ -36,7 +36,8 @@ object GoldenSubmissions {
   def dirOr(dir: String): String =
     if (Files.isRegularFile(Paths.get(dir, "data.0.csv"))) dir else generated
 
-  private lazy val generated: String = {
+  /** A temp directory with the generated CSVs (written once per JVM). */
+  lazy val generated: String = {
     val d = Files.createTempDirectory("golden-submissions")
     files.zipWithIndex.foreach { case (lines, i) => write(d.resolve(s"data.$i.csv"), lines) }
     d.toString

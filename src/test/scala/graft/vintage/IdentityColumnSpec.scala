@@ -325,6 +325,30 @@ class IdentityColumnSpec extends AnyFunSuite {
     assert(t.version == v0 && mark == mark0)
   }
 
+  test("an explicit last BIGINT id exhausts the column: fills fail once, nothing commits") {
+    spark.sql("""CREATE TABLE idc.last (
+      |  id BIGINT GENERATED BY DEFAULT AS IDENTITY,
+      |  name STRING)""".stripMargin)
+    val t = VintageTable.forPath(spark, s"$wh/last")
+    spark.sql("INSERT INTO idc.last VALUES (9223372036854775807, 'a')")
+    assert(IdentityColumns.hwm(t.snapshot.properties, "id").contains(Long.MaxValue))
+    val v = t.version
+    val exhausted = "identity column id exhausted its BIGINT range"
+    val e1 = intercept[Exception](spark.sql("INSERT INTO idc.last VALUES (NULL, 'b')"))
+    assert(messages(e1).contains(exhausted), messages(e1))
+    assert(!e1.isInstanceOf[VintageTable.IdentityConflictException])
+    assert(t.version == v)
+    // the fluent append fails on its first run: no re-run on a conflict
+    val e2 = intercept[Exception](
+      t.append(Seq((None: Option[Long], "c")).toDF("id", "name")))
+    assert(messages(e2).contains(exhausted), messages(e2))
+    assert(!e2.isInstanceOf[VintageTable.IdentityConflictException])
+    assert(t.version == v)
+    // writes that fill no id still pass
+    spark.sql("INSERT INTO idc.last VALUES (-5, 'd')")
+    assert(t.version == v + 1 && t.toDF.count() == 2)
+  }
+
   test("the commit records the mark: races on a stale snapshot") {
     spark.sql("""CREATE TABLE idc.marks (
       |  id BIGINT GENERATED BY DEFAULT AS IDENTITY,

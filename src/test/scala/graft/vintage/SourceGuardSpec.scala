@@ -20,7 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * planner alone, so the choice cannot fork again. Every session is
   * built by `graft.GraftSession`, so session configs cannot drift
   * apart again. Identity values have one allocator, the writer, and
-  * their mark one update, in `VintageTable.commitOp`. Reads `src/main` (and `src/test` for the session
+  * their mark one update, in `VintageTable.commitOp`. One fold builds
+  * snapshot state, for log replay and the commit handoff alike. Reads `src/main` (and `src/test` for the session
   * builder); comment lines are ignored.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -95,6 +96,13 @@ class SourceGuardSpec extends AnyFunSuite {
     val retries = sites("""case\s+\w+\s*:\s*(VintageTable\s*\.\s*)?IdentityConflictException""")
     assert(retries.size == 1 && retries.head.startsWith("scala/graft/vintage/VintageTable.scala:"),
       s"identity retry sites: $retries")
+  }
+
+  test("one snapshot fold: replay and the commit handoff share it") {
+    // the match that applies a log RemoveFile to the snapshot's file map
+    val found = sites("""case\s+(\w+)\s*:\s*RemoveFile\s*=>[^\n]*(\n[^\n]*)?\.\s*remove\s*\(\s*\1\s*\.\s*path""")
+    assert(found.size == 1 && found.head.startsWith("scala/graft/vintage/VintageLog.scala:"),
+      s"snapshot fold sites: $found")
   }
 
   test("no read uses the file source's _metadata columns") {
