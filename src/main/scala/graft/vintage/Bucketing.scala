@@ -13,11 +13,14 @@ import org.apache.spark.sql.types.StructType
   * partition index IS the bucket id — the identical
   * `pmod(murmur3(k), n)` Spark's planner assumes for bucketed
   * relations), and names each file with the `_NNNNN` suffix
-  * `BucketingUtils` parses. The read path then declares a `BucketSpec`
-  * on its `HadoopFsRelation`, and Spark plans joins/aggregations on
-  * the bucket columns WITHOUT an Exchange on the table's side — at
-  * 100 TB this converts every fact⋈fact join on the bucket key from
-  * two full shuffles into zero.
+  * `BucketingUtils` parses. The read path
+  * ([[connector.VintageNativeScan]]) then reports the layout as Spark's
+  * key-grouped partitioning on `bucket(n, k)`, and Spark plans
+  * joins/aggregations on the bucket column WITHOUT an Exchange on the
+  * table's side — at 100 TB this converts every fact⋈fact join on the
+  * bucket key from two full shuffles into zero. Spark groups scan
+  * partitions by a single-column transform only, so a table bucketed
+  * on several columns keeps the aligned files but reads unclaimed.
   *
   * Invariants:
   *  - Bucketing is fixed at CREATE (see [[VintageTable.setProperties]]):
@@ -35,10 +38,9 @@ import org.apache.spark.sql.types.StructType
   *    requirement).
   *  - The `bucketing` WRITER feature gates foreign writers that would
   *    break the alignment; readers ignoring the layout stay correct.
-  *  - While a row-level op's deletion vectors are outstanding, reads
-  *    go through the DV merge-on-read relation, which does not claim
-  *    the BucketSpec — joins shuffle again until OPTIMIZE purges the
-  *    DVs (the layout itself stays aligned throughout).
+  *  - Deletion vectors do not change the layout: the scan drops deleted
+  *    positions inside each file's task, so a table with deletion
+  *    vectors outstanding claims its buckets like any other.
   */
 object Bucketing {
 
@@ -59,8 +61,8 @@ object Bucketing {
     }
 
   /** In-bucket sort columns (optional): files are written sorted by
-    * these within each bucket and the read-side BucketSpec declares
-    * them — a merge join on a freshly written (one-file-per-bucket)
+    * these within each bucket and the scan reports them as its
+    * ordering — a merge join on a freshly written (one-file-per-bucket)
     * table then needs neither Exchange NOR Sort. After appends a
     * bucket holds several files and Spark correctly stops claiming
     * the ordering (compaction restores it).

@@ -197,21 +197,6 @@ object DeletionVectors {
     marked ++ sidecarMarked
   }
 
-  def hasDvs(files: Seq[AddFile]): Boolean = files.exists(_.hasDv)
-
-  /** Whether reads of `snap` must subtract deletion vectors. A SPILLED
-    * snapshot does not walk its file list (that would materialize
-    * exactly what spilling avoids): a DV-feature table conservatively
-    * answers true, and any other asks the index in one distributed
-    * pass, because row-level SQL commits once added deletion vectors
-    * without growing the protocol.
-    */
-  def mayHave(snap: Snapshot): Boolean = snap.spilled match {
-    case Some(ix) => snap.protocol.readerFeatures.contains(Protocol.DeletionVectors) ||
-      ix.hasDvs(org.apache.spark.sql.SparkSession.active)
-    case None => hasDvs(snap.files)
-  }
-
   /** Canonical file key — the `_vintage_file` value, and the key a
     * sidecar's rows carry: [[VintageTable.canonicalKey]] of the file's
     * absolute path.

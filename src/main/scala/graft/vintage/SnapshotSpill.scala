@@ -115,28 +115,6 @@ final case class SpilledIndex(
     foldCheckpointAdds(spark, 0L)(_.map(_.dv.size.toLong).sum, _ + _) +
       tailAdds.iterator.map(_.dv.size.toLong).sum
 
-  /** Whether any live file carries a deletion vector, inline or
-    * sidecar: the tail, else one distributed pass over the checkpoint.
-    */
-  def hasDvs(spark: SparkSession): Boolean =
-    tailAdds.exists(_.hasDv) ||
-      foldCheckpointAdds(spark, false)(_.exists(_.hasDv), _ || _)
-
-  /** Approximate table size for plan statistics (sum of live add
-    * sizes from the typed checkpoint column; tail adjustments applied,
-    * removed-but-superseded rows excluded).
-    */
-  def approxSizeInBytes(spark: SparkSession): Long = {
-    val dead = supersededPaths
-    val fromCheckpoint = spark.read.parquet(checkpointPaths: _*)
-      .filter(col("action_type") === "add").select("path", "size")
-      .rdd.mapPartitions { it =>
-        Iterator.single(
-          it.filter(r => !dead(r.getString(0))).map(_.getLong(1)).sum)
-      }.fold(0L)(_ + _)
-    fromCheckpoint + tailAdds.iterator.map(_.size).sum
-  }
-
   /** Full materialization (the compatibility tier): reproduce exactly
     * what the in-memory replay would have built. Driver-side streaming
     * read of the checkpoint — O(list) memory only here, and only for

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.AppendData
 import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.graftshim.{ColumnExpr, DatasetOps, VintageFileSink, VintageRelation}
+import org.apache.spark.sql.graftshim.{ColumnExpr, DatasetOps, VintageFileSink}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -49,33 +49,18 @@ class VintageTable private (
   def version: Long = VintageLog.latestVersion(path)
 
   /** Current state as a DataFrame (README.md:136 `exrTable.toDF`), in
-    * the declared column order. A filter on it (the paper's confirm read
-    * `toDF.filter(CURRENCY = ...)`) opens only the files whose log stats
-    * may match.
+    * the declared column order, read through [[nativeFrame]]. A filter
+    * on it (the paper's confirm read `toDF.filter(CURRENCY = ...)`)
+    * opens only the files whose log stats may match.
     */
-  def toDF: DataFrame = dfForRead(snapshot)
+  def toDF: DataFrame = nativeFrame(snapshot)
 
   /** State as of a past version (README.md:169 `versionAsOf`). */
-  def toDFAsOf(version: Long): DataFrame = dfForRead(snapshotAt(version))
+  def toDFAsOf(version: Long): DataFrame = nativeFrame(snapshotAt(version))
 
   /** State as of a timestamp (README.md:166,321 `timestampAsOf`). */
   def toDFAsOfTimestamp(ts: Long): DataFrame =
-    dfForRead(snapshotAt(VintageLog.versionAtTimestamp(path, ts)))
-
-  /** The `format("vintage")` relation, which prunes files by stats at
-    * plan time, unless the snapshot may carry deletion vectors: those
-    * read through [[nativeFrame]], which prunes by the same stats from
-    * the filters Spark pushes into it. The relation puts partition
-    * columns last; the select restores the declared order.
-    */
-  private def dfForRead(s: Snapshot): DataFrame =
-    if (DeletionVectors.mayHave(s)) nativeFrame(s)
-    else {
-      val df = spark.baseRelationToDataFrame(VintageRelation(spark, path, s))
-      if (s.partitionColumns.isEmpty) df
-      else df.select(s.schema.fieldNames.toIndexedSeq
-        .map(n => df.col(QuotingUtils.quoteIdentifier(n))): _*)
-    }
+    nativeFrame(snapshotAt(VintageLog.versionAtTimestamp(path, ts)))
 
   private[graft] def dfForSnapshot(s: Snapshot): DataFrame =
     readFiles(s, s.files)
@@ -531,9 +516,13 @@ class VintageTable private (
         if (adds.isEmpty || removedFiles.isEmpty || !tracked) {
           val a = readFiles(snapV, adds)
           val r = readFiles(snapV, removedFiles)
+          // a side with no files has no rows: a pure append reads its
+          // adds alone, with no diff against an empty set
           val ins = if (removedFiles.isEmpty) a else a.exceptAll(r)
           val del = if (adds.isEmpty) r else r.exceptAll(a)
-          Some(tag(ins, "insert").unionByName(tag(del, "delete")))
+          Some(Seq((adds, ins, "insert"), (removedFiles, del, "delete"))
+            .collect { case (fs, df, kind) if fs.nonEmpty => tag(df, kind) }
+            .reduce(_ unionByName _))
         } else {
           // ROW-TRACKED commit with both sides: classify UPDATES. The
           // stable id IS the row identity across the rewrite, so a
@@ -1518,9 +1507,16 @@ class VintageTable private (
     * scan, which opens only their stats-pruned candidate files.
     */
   private[vintage] def nativeFrame(s: Snapshot, rowIds: Seq[String] = Nil): DataFrame =
-    DatasetOps.ofRows(spark, DataSourceV2Relation.create(
-        new VintageSqlTable(path, path, s, timeTravel = true), None, None))
+    DatasetOps.ofRows(spark, nativeRelation(s))
       .select((s.schema.fieldNames.toIndexedSeq ++ rowIds).map(quoted): _*)
+
+  /** The read-only V2 relation of `s` that [[nativeFrame]] and
+    * `format("vintage")` reads plan. It carries the function catalog
+    * that resolves a bucketed scan's `bucket` transform.
+    */
+  private[graft] def nativeRelation(s: Snapshot): DataSourceV2Relation =
+    DataSourceV2Relation.create(new VintageSqlTable(path, path, s, timeTravel = true),
+      Some(connector.PathFunctions), None)
 
   /** Removes for AddFiles the caller already holds (pruned DML plans)
     * — never walks the snapshot file list, so merge-on-read DML on a

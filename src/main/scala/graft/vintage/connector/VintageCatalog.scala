@@ -39,8 +39,11 @@ import graft.vintage.{Snapshot, VintageLog, VintageTable}
   * the table's row-level operation ([[VintageRowLevelOperation]]), and
   * OPTIMIZE / VACUUM / RESTORE / DESCRIBE HISTORY parse through the
   * delegating parser of [[VintageSqlExtension]] ([[VintageMaintenance]]).
+  * As a [[BucketFunctionCatalog]] it resolves the `bucket` transform of
+  * its bucketed tables' scans.
   */
-class VintageCatalog extends TableCatalog with StagingTableCatalog {
+class VintageCatalog extends TableCatalog with StagingTableCatalog
+    with BucketFunctionCatalog {
   private var catalogName: String = _
   private var warehouse: String = _
 

@@ -2,35 +2,54 @@ package graft.vintage.connector
 
 import java.util.OptionalLong
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, GenericInternalRow, JoinedRow, Literal, UnsafeProjection}
+import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportOrdering, SupportsReportPartitioning, SupportsReportStatistics}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.graftshim.ColumnExpr
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.parquet.hadoop.ParquetInputFormat
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
-import graft.vintage.{AddFile, ColumnMapping, DeletionVectors, FileSkipping, PartitionPaths, RowTracking, Snapshot}
+import graft.vintage.{AddFile, Bucketing, ColumnMapping, DeletionVectors, FileSkipping, PartitionPaths, RowTracking, Snapshot}
 
-/** Native DSv2 scan over a vintage snapshot: plans one task set from
-  * the log-derived, stats-pruned file list and reads through Spark's
-  * own [[ParquetPartitionReaderFactory]] — vectorized columnar batches
-  * end-to-end, so a SQL-catalog `SELECT` keeps whole-stage codegen.
+/** Native DSv2 scan over a vintage snapshot, and the one reader of
+  * table data: fluent `toDF`/`toDFAsOf*`, `format("vintage")`, streaming
+  * batches, the change feed, the SQL catalog's reads, the row-level
+  * DELETE/UPDATE/MERGE scan ([[VintageRowLevelOperation]]) and every
+  * internal `VintageTable` read of a file set (fluent DML touch discovery
+  * and rewrites, layout rewrites) plan here. It plans one task set from
+  * the log-derived, stats-pruned file list and reads through Spark's own
+  * [[ParquetPartitionReaderFactory]]: vectorized columnar batches
+  * end-to-end, so reads keep whole-stage codegen.
   *
   * File pruning reuses [[FileSkipping]] over `Snapshot.statFiles`
   * (partition values included as synthetic stats); files are split
-  * and packed with Spark's own split size and bin-packing, as in the
-  * DSv1 scan.
+  * and packed with Spark's own split size and bin-packing.
+  *
+  * Bucketed tables ([[Bucketing]]): when the table is bucketed on one
+  * column, the scan reads that column and every candidate file carries a
+  * bucket id, the scan reports Spark's key-grouped partitioning on
+  * `bucket(n, col)` ([[BucketFunction]]) and the in-bucket sort columns
+  * as its ordering, and plans one unsplit partition per file keyed by
+  * the file's bucket id. Joins and aggregations on the bucket column then
+  * plan without an Exchange on this side (a storage-partitioned join),
+  * and a merge join over freshly sorted buckets without a Sort: Spark
+  * groups the files of a bucket into one task and drops the ordering
+  * once a bucket holds two files. A pushed `EqualTo`/`In` on the bucket
+  * column prunes the candidates to the buckets its values hash to.
   *
   * Deletion vectors and the row-id metadata columns (`_vintage_file`,
   * `_vintage_pos`, `_vintage_row_id`) are served by the same scan, per
@@ -42,17 +61,13 @@ import graft.vintage.{AddFile, ColumnMapping, DeletionVectors, FileSkipping, Par
   * file's vector and emits the positions and ids beside the data
   * ([[VintageDvReaderFactory]]); that path reads rows instead of
   * columnar batches. This is the only code that applies deletion
-  * vectors or derives row positions and row ids: the SQL catalog's
-  * reads, the row-level DELETE/UPDATE/MERGE scan
-  * ([[VintageRowLevelOperation]]) and every internal `VintageTable`
-  * read of a file set (fluent `toDF` of a DV snapshot,
-  * `format("vintage")` and streaming reads of DV files, change feed,
-  * fluent DML touch discovery and rewrites, layout rewrites) plan here.
+  * vectors or derives row positions and row ids.
   */
 class VintageNativeScan(
     spark: SparkSession, tablePath: String, snapshot: Snapshot,
     requiredSchema: StructType, pushedFilters: Array[Filter])
-    extends Scan with Batch with SupportsReportStatistics {
+    extends Scan with Batch with SupportsReportStatistics
+    with SupportsReportPartitioning with SupportsReportOrdering {
 
   import VintageNativeScan._
 
@@ -91,16 +106,85 @@ class VintageNativeScan(
   override def description(): String =
     s"VintageNativeScan $tablePath v${snapshot.version} " +
     s"files=${pruned.size}/${filesTotal.fold("?")(_.toString)} " +
-    s"dvFiles=$dvFiles filters=[${pushedFilters.mkString(", ")}]"
+    s"dvFiles=$dvFiles " +
+    bucketIds.fold("")(ids => s"buckets=${ids.distinct.size}/${bucketing.get._2} ") +
+    s"filters=[${pushedFilters.mkString(", ")}]"
 
-  /** Stats-pruned candidate files for the pushed filters — shared by
+  /** Stats-pruned candidate files for the pushed filters, narrowed to
+    * the buckets their bucket-column values hash to — shared by
     * partition planning and the statistics report.
     */
-  private lazy val pruned = Filters.toColumnAll(pushedFilters.toSeq) match {
-    case Some(cond) => graft.vintage.SnapshotPruning.candidates(
-      spark, snapshot, ColumnExpr.expr(cond))
-    case None => snapshot.statFiles
+  private lazy val pruned = {
+    val candidates = Filters.toColumnAll(pushedFilters.toSeq) match {
+      case Some(cond) => graft.vintage.SnapshotPruning.candidates(
+        spark, snapshot, ColumnExpr.expr(cond))
+      case None => snapshot.statFiles
+    }
+    wantedBuckets match {
+      case Some(ids) if candidates.forall(bucketOf(_).isDefined) =>
+        candidates.filter(f => ids(bucketOf(f).get))
+      case _ => candidates
+    }
   }
+
+  /** The bucket column (as the table schema names it) and bucket count
+    * of a table bucketed on one column: Spark groups scan partitions by
+    * a transform of one column only.
+    */
+  private val bucketing: Option[(String, Int)] =
+    Bucketing.spec(snapshot.properties).collect { case (Seq(c), n) =>
+      snapshot.schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(c) -> n
+    }
+
+  private def bucketOf(f: AddFile): Option[Int] =
+    Bucketing.bucketId(new Path(f.path).getName)
+
+  /** Buckets the pushed `EqualTo`/`In` filters on the bucket column
+    * allow, hashed as the writer hashed them. A value whose type is not
+    * the column's prunes nothing.
+    */
+  private def wantedBuckets: Option[Set[Int]] = bucketing.flatMap { case (c, n) =>
+    val attr = AttributeReference(c, snapshot.schema(c).dataType)()
+    def ids(values: Seq[Any]): Option[Set[Int]] = {
+      val lits = values.map(Literal.create(_))
+      if (!lits.forall(_.dataType == attr.dataType)) None
+      else Some(lits.map(l => BucketingUtils.getBucketIdFromValue(attr, n, l.value)).toSet)
+    }
+    pushedFilters.toSeq.flatMap {
+      case EqualTo(a, v) if a.equalsIgnoreCase(c) => ids(Seq(v))
+      case In(a, vs) if a.equalsIgnoreCase(c) => ids(vs.toSeq)
+      case _ => None
+    }.reduceOption(_ intersect _)
+  }
+
+  /** The bucket id of each candidate file, in order, when the scan
+    * claims the bucket layout: it reads the bucket column and every
+    * candidate carries a bucket id.
+    */
+  private lazy val bucketIds: Option[Seq[Int]] = bucketing.flatMap { case (c, _) =>
+    val ids = pruned.map(bucketOf)
+    if (requiredSchema.fieldNames.contains(c) && ids.forall(_.isDefined)) Some(ids.flatten)
+    else None
+  }
+
+  override def outputPartitioning(): Partitioning = (bucketing, bucketIds) match {
+    case (Some((c, n)), Some(ids)) =>
+      new KeyGroupedPartitioning(Array(Expressions.bucket(n, c)), ids.size)
+    case _ => new UnknownPartitioning(0)
+  }
+
+  /** The leading in-bucket sort columns the scan reads, ascending with
+    * nulls first as the writer sorts them; Spark keeps the claim only
+    * while every bucket is one file.
+    */
+  override def outputOrdering(): Array[SortOrder] =
+    if (bucketIds.isEmpty) Array.empty
+    else Bucketing.sortCols(snapshot.properties)
+      .map(c => requiredSchema.fieldNames.find(_.equalsIgnoreCase(c)))
+      .takeWhile(_.isDefined).flatten
+      .map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING,
+        NullOrdering.NULLS_FIRST))
+      .toArray
 
   /** Files in the snapshot; unknown for a spilled snapshot, whose file
     * list a pruned scan never materializes.
@@ -144,27 +228,39 @@ class VintageNativeScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val openCost = spark.sessionState.conf.filesOpenCostInBytes
-    val maxSplit = FilePartition.maxSplitBytes(spark,
-      pruned.map(_.size + openCost).sum)
     val files = pruned.map(f =>
       SparkPath.fromPathString(f.absolutePath(tablePath)) -> f)
-    val splits = files.flatMap { case (path, f) =>
+    def split(path: SparkPath, f: AddFile, off: Long, len: Long) = {
       val pv = InternalRow.fromSeq(readPartitionSchema.map { field =>
         f.partitionValues.get(field.name)
           .map(PartitionPaths.castValue(_, field.dataType)).orNull
       } ++ (if (fileKeyWanted) Seq(UTF8String.fromString(keyOf(f))) else Nil))
-      (0L until math.max(f.size, 1L) by maxSplit).map { off =>
-        PartitionedFile(pv, path, off, math.min(maxSplit, f.size - off),
-          Array.empty, f.modificationTime, f.size)
-      }
+      PartitionedFile(pv, path, off, len, Array.empty, f.modificationTime, f.size)
     }
-    val parts = FilePartition.getFilePartitions(spark, splits, maxSplit)
+    val parts: Seq[FilePartition] = bucketIds match {
+      case Some(ids) =>
+        files.zip(ids).zipWithIndex.map { case (((path, f), b), i) =>
+          new BucketFilePartition(i, split(path, f, 0, f.size), b)
+        }
+      case None =>
+        val openCost = spark.sessionState.conf.filesOpenCostInBytes
+        val maxSplit = FilePartition.maxSplitBytes(spark,
+          pruned.map(_.size + openCost).sum)
+        FilePartition.getFilePartitions(spark, files.flatMap { case (path, f) =>
+          (0L until math.max(f.size, 1L) by maxSplit).map(off =>
+            split(path, f, off, math.min(maxSplit, f.size - off)))
+        }, maxSplit)
+    }
     if (!positional) parts.toArray
     else {
       val byPath = files.toMap
-      parts.map(p => VintageFilePartition(p,
-        p.files.map(pf => fileDv(byPath(pf.filePath))))).toArray
+      parts.map { p =>
+        val dvs = p.files.map(pf => fileDv(byPath(pf.filePath)))
+        p match {
+          case b: BucketFilePartition => new BucketDvPartition(b, dvs)
+          case _ => VintageFilePartition(p, dvs)
+        }
+      }.toArray
     }
   }
 
@@ -294,10 +390,24 @@ class VintageScanMetric(metricName: String, desc: String) extends CustomSumMetri
 private[connector] final case class FileDv(key: String, dv: Array[Long],
     sidecar: Option[String], baseRowId: Option[Long])
 
+/** One whole data file of a bucketed scan, keyed by its bucket id. */
+private[connector] final class BucketFilePartition(
+    index: Int, file: PartitionedFile, bucket: Int)
+    extends FilePartition(index, Array(file)) with HasPartitionKey {
+  override def partitionKey(): InternalRow = InternalRow(bucket)
+}
+
 /** A file partition plus the [[FileDv]] of each of its files, in order. */
-private[connector] final case class VintageFilePartition(
+private[connector] case class VintageFilePartition(
     part: FilePartition, files: Array[FileDv]) extends InputPartition {
   override def preferredLocations(): Array[String] = part.preferredLocations()
+}
+
+/** The [[VintageFilePartition]] of a bucketed scan, keyed by its file's bucket. */
+private[connector] final class BucketDvPartition(
+    part: BucketFilePartition, files: Array[FileDv])
+    extends VintageFilePartition(part, files) with HasPartitionKey {
+  override def partitionKey(): InternalRow = part.partitionKey()
 }
 
 /** Row reader factory for positional scans: per file it opens the

@@ -150,11 +150,11 @@ class VintageRowLevelOperation(
         override def requiredNumPartitions(): Int =
           bucketing.map(_._2).getOrElse(0)
         // Mirror VintageNativeWrite: files written by the delta path
-        // carry bucket-id names, and the read-side BucketSpec declares
-        // sortColumnNames — if the delta path skipped the in-bucket
-        // sort, a bucket whose only live file came from UPDATE/MERGE
-        // would be consumed as sorted (merge join → wrong rows) under
-        // bucketedTableScan.outputOrdering. DELETE verdict rows carry
+        // carry bucket-id names, and the scan reports the in-bucket
+        // sort columns as its ordering — if the delta path skipped the
+        // in-bucket sort, a bucket whose only live file came from
+        // UPDATE/MERGE would be consumed as sorted (merge join → wrong
+        // rows). DELETE verdict rows carry
         // NULL data columns and sort harmlessly to one end.
         override def requiredOrdering()
             : Array[org.apache.spark.sql.connector.expressions.SortOrder] =

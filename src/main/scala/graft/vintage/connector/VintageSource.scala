@@ -1,8 +1,9 @@
 package graft.vintage.connector
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.streaming.{Sink => StreamSink, Source => StreamSource}
-import org.apache.spark.sql.graftshim.VintageRelation
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider, TableScan}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
@@ -23,10 +24,11 @@ import graft.vintage.{VintageLog, VintageTable}
   *   .option("dataChange", "false").save(path)   // compaction
   * }}}
   *
-  * Reads resolve the transaction log to a version-pinned file list and
-  * execute through Spark's native vectorized parquet path (see
-  * [[org.apache.spark.sql.graftshim.VintageRelation]]); writes commit
-  * through [[VintageTable]] so every save is an atomic log commit.
+  * Reads resolve the transaction log to a version-pinned snapshot and
+  * plan [[VintageNativeScan]]: the provider returns a
+  * [[VintagePlanRelation]], whose plan [[VintageReads]] substitutes at
+  * analysis. Writes commit through [[VintageTable]], so every save is
+  * an atomic log commit.
   */
 class VintageSource extends DataSourceRegister
     with RelationProvider with CreatableRelationProvider
@@ -133,40 +135,28 @@ class VintageSource extends DataSourceRegister
       sqlContext: SQLContext, parameters: Map[String, String]): BaseRelation = {
     val abs = pathOf(parameters)
     require(VintageLog.exists(abs), s"not a vintage table: $abs")
+    val table = VintageTable.forPath(sqlContext.sparkSession, abs)
     // change-data-feed read (Delta's option surface):
     //   spark.read.format("vintage").option("readChangeFeed", "true")
     //     .option("startingVersion", 1).option("endingVersion", 5).load(p)
     // startingVersion is INCLUSIVE and defaults to 0 (the creating
     // write reports as inserts); endingVersion defaults to latest.
-    if (parameters.get("readChangeFeed").exists(_.toBoolean)) {
-      val starting = parameters.get("startingVersion").map(_.toLong).getOrElse(0L)
-      val ending = parameters.get("endingVersion").map(_.toLong).getOrElse(-1L)
-      val df = VintageTable.forPath(sqlContext.sparkSession, abs)
-        .changes(starting - 1L, ending)
-      val ctx = sqlContext
-      return new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = ctx
-        override def schema: StructType = df.schema
-        override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-          df.rdd
-      }
-    }
-    val snap = (parameters.get("versionAsOf"), parameters.get("timestampAsOf")) match {
-      case (Some(_), Some(_)) =>
-        throw new IllegalArgumentException(
-          "specify either versionAsOf or timestampAsOf, not both")
-      case (Some(v), None) => VintageLog.replay(abs, Some(v.toLong))
-      case (None, Some(ts)) =>
-        VintageLog.replay(abs, Some(VintageLog.versionAtTimestamp(abs, parseTs(ts))))
-      case (None, None) => VintageLog.replay(abs)
-    }
-    // merge-on-read: a snapshot with deletion vectors reads through the
-    // native scan, which drops deleted positions (file pruning via the
-    // pushed filters, residual re-check by Spark).
-    // Compaction/OPTIMIZE purges DVs and restores the plain relation.
-    if (graft.vintage.DeletionVectors.mayHave(snap))
-      return DvRelations.pruned(sqlContext, abs, snap)
-    VintageRelation(sqlContext.sparkSession, abs, snap)
+    val plan =
+      if (parameters.get("readChangeFeed").exists(_.toBoolean)) {
+        val starting = parameters.get("startingVersion").map(_.toLong).getOrElse(0L)
+        val ending = parameters.get("endingVersion").map(_.toLong).getOrElse(-1L)
+        table.changes(starting - 1L, ending).queryExecution.analyzed
+      } else table.nativeRelation(
+        (parameters.get("versionAsOf"), parameters.get("timestampAsOf")) match {
+          case (Some(_), Some(_)) =>
+            throw new IllegalArgumentException(
+              "specify either versionAsOf or timestampAsOf, not both")
+          case (Some(v), None) => VintageLog.replay(abs, Some(v.toLong))
+          case (None, Some(ts)) =>
+            VintageLog.replay(abs, Some(VintageLog.versionAtTimestamp(abs, parseTs(ts))))
+          case (None, None) => VintageLog.replay(abs)
+        })
+    new VintagePlanRelation(sqlContext, plan)
   }
 
   override def createRelation(
@@ -215,6 +205,22 @@ class VintageSource extends DataSourceRegister
       throw new IllegalArgumentException("'path' is required for format(\"vintage\")")))
 
   private def parseTs(s: String): Long = VintageSource.parseTs(s)
+}
+
+/** What a `format("vintage")` batch read returns through the V1
+  * provider API: a schema-only relation holding the plan that reads it,
+  * the snapshot's native V2 relation or the change feed's plan.
+  * [[VintageReads]] puts that plan in its place at analysis, so no
+  * `format("vintage")` read executes through this relation; a session
+  * without [[VintageSqlExtension]] fails its read with that advice.
+  */
+private[connector] final class VintagePlanRelation(
+    override val sqlContext: SQLContext, val plan: LogicalPlan)
+    extends BaseRelation with TableScan {
+  override def schema: StructType = plan.schema
+  override def buildScan(): RDD[Row] = throw new IllegalStateException(
+    "format(\"vintage\") reads need spark.sql.extensions=" +
+      classOf[VintageSqlExtension].getName)
 }
 
 object VintageSource {

@@ -1,6 +1,11 @@
 package graft.vintage.connector
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Session extension for vintage tables. SQL DML (`DELETE` /
   * `UPDATE` / `MERGE INTO`) needs NO extension rule: [[VintageSqlTable]]
@@ -8,6 +13,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   * rewrites plan them natively ([[VintageRowLevelOperation]]). What
   * remains here:
   *
+  *  - `format("vintage")` batch reads resolve to their plan
+  *    ([[VintageReads]]);
   *  - maintenance statements (OPTIMIZE / VACUUM / RESTORE / DESCRIBE
   *    HISTORY) are not Spark grammar — a delegating parser adds them;
   *  - SQL registrations of the codegen'd pipeline expressions.
@@ -17,6 +24,7 @@ import org.apache.spark.sql.SparkSessionExtensions
   */
 class VintageSqlExtension extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectResolutionRule(_ => VintageReads)
     ext.injectParser((session, delegate) =>
       new VintageMaintenanceParser(session, delegate))
     VintageFunctions.registrations.foreach(ext.injectFunction)
@@ -25,6 +33,22 @@ class VintageSqlExtension extends (SparkSessionExtensions => Unit) {
     // the fluent paths' GENERATED ALWAYS identity validation never
     // runs for them — this closes that gap at the analyzer
     ext.injectCheckRule(_ => VintageIdentityCheck.check)
+  }
+}
+
+/** Puts the plan of a `format("vintage")` read in place of its
+  * [[VintagePlanRelation]], under the relation's own output attributes:
+  * the snapshot's V2 relation takes them as its output, and the change
+  * feed's plan is projected onto them.
+  */
+object VintageReads extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
+    case l: LogicalRelation if l.relation.isInstanceOf[VintagePlanRelation] =>
+      l.relation.asInstanceOf[VintagePlanRelation].plan match {
+        case v2: DataSourceV2Relation => v2.copy(output = l.output)
+        case p => Project(p.output.zip(l.output).map { case (a, o) =>
+          Alias(a, o.name)(exprId = o.exprId) }, p)
+      }
   }
 }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow, Offset => OffsetV2}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-import org.apache.spark.sql.graftshim.{StreamingOps, VintageRelation}
+import org.apache.spark.sql.graftshim.StreamingOps
 import org.apache.spark.sql.types.StructType
 
 import graft.vintage.{AddFile, CommitInfo, Metadata, RemoveFile, Snapshot, VintageLog}
@@ -309,16 +309,12 @@ class VintageStreamSource(
     toStreamingDF(snap.copy(schema = schema, files = adds.result()))
   }
 
-  /** Rows of the batch's files. Deletion vectors (the initial
-    * snapshot, a RESTORE-re-added file) must not emit deleted
-    * positions, so files with one read through the native scan, the
-    * same as batch reads.
+  /** Rows of the batch's files through the native scan, the same read
+    * as batch reads; a file's deletion vector (the initial snapshot, a
+    * RESTORE-re-added file) drops its deleted positions.
     */
   private def toStreamingDF(snap: Snapshot): DataFrame =
-    if (!graft.vintage.DeletionVectors.hasDvs(snap.files))
-      StreamingOps.ofRowsStreaming(spark,
-        VintageRelation(spark, tablePath, snap.copy(schema = schema)))
-    else StreamingOps.ofComputedStreaming(spark,
+    StreamingOps.ofComputedStreaming(spark,
       graft.vintage.VintageTable.forPath(spark, tablePath)
         .readFiles(snap.copy(schema = schema), snap.files))
 

@@ -1,23 +1,16 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.sources.BaseRelation
 
 /** Bridge for DSv1 streaming sources: `getBatch` must return a
-  * DataFrame whose logical plan is tagged `isStreaming = true` (the
-  * same construction Spark's own FileStreamSource uses), which requires
-  * the private[sql] `LogicalRelation` factory.
+  * DataFrame whose logical plan is tagged `isStreaming = true`.
   */
 object StreamingOps {
-  def ofRowsStreaming(spark: SparkSession, relation: BaseRelation): DataFrame =
-    DatasetOps.ofRows(spark, LogicalRelation(relation, isStreaming = true))
-
-  /** Streaming-tagged frame over an arbitrary batch DataFrame's rows
-    * (the change-feed batches are diff plans — unions + exceptAll —
-    * not relations): the batch plan's RDD is wrapped lazily via the
-    * private[sql] `internalCreateDataFrame`, the same construction
-    * Spark sources use for computed batches.
+  /** Streaming-tagged frame over a batch DataFrame's rows (a native
+    * scan of the batch's files, or a change-feed diff plan): the batch
+    * plan's RDD is wrapped lazily via the private[sql]
+    * `internalCreateDataFrame`, the same construction Spark sources use
+    * for computed batches.
     */
   def ofComputedStreaming(spark: SparkSession, df: DataFrame): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -126,9 +126,10 @@ class IndexedNearDupSpec extends AnyFunSuite {
       .filter(col("bucket").isin(keys.map(java.lang.Long.valueOf): _*))
     q.collect()
     val scan = q.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("expected a FileSourceScanExec over the vintage index"))
-    val numFiles = scan.metrics("numFiles").value
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if s.scan.isInstanceOf[graft.vintage.connector.VintageNativeScan] => s
+    }.getOrElse(fail("expected a BatchScanExec over VintageNativeScan"))
+    val numFiles = scan.metrics(graft.vintage.connector.VintageNativeScan.FilesCandidate).value
     assert(numFiles <= keys.size.toLong,
       s"executed scan opened $numFiles files for ${keys.size} probe keys")
     assert(numFiles < snap.files.size / 2,

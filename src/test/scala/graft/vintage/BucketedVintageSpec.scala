@@ -2,14 +2,19 @@ package graft.vintage
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, TransformExpression}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.vintage.connector.VintageNativeScan
 
 /** Bucketed vintage tables: hash-bucket layout declared at CREATE,
-  * preserved by every write path, and surfaced to the planner as a
-  * BucketSpec so joins on the bucket columns plan without an Exchange.
+  * preserved by every write path, and reported by the native scan as a
+  * key-grouped partitioning on `bucket(n, key)`, so joins and
+  * aggregations on the bucket column plan without an Exchange.
   */
 class BucketedVintageSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -26,7 +31,32 @@ class BucketedVintageSpec extends AnyFunSuite {
 
   private def readV(p: String) = spark.read.format("vintage").load(p)
 
-  test("create writes bucket-suffixed files; read declares the BucketSpec") {
+  private def nativeScans(df: DataFrame): Seq[BatchScanExec] =
+    df.queryExecution.executedPlan.collect {
+      case s: BatchScanExec if s.scan.isInstanceOf[VintageNativeScan] => s
+    }
+
+  /** (bucket count, column) of the key-grouped partitioning the native
+    * scan of `df` reports, if any.
+    */
+  private def claimedBuckets(df: DataFrame): Option[(Int, String)] =
+    nativeScans(df).headOption.flatMap(_.keyGroupedPartitioning).collect {
+      case Seq(TransformExpression(_, Seq(a: Attribute), Some(n))) => (n, a.name)
+    }
+
+  /** Runs `body` with AQE off and, when `noBroadcast`, broadcast joins off. */
+  private def planned[T](noBroadcast: Boolean)(body: => T): T = {
+    val keys = Seq("spark.sql.adaptive.enabled") ++
+      (if (noBroadcast) Seq("spark.sql.autoBroadcastJoinThreshold") else Nil)
+    val prev = keys.map(k => k -> spark.conf.get(k))
+    try {
+      keys.foreach(k => spark.conf.set(k,
+        if (k == "spark.sql.adaptive.enabled") "false" else "-1"))
+      body
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("create writes bucket-suffixed files; the native scan reports the bucket layout") {
     val p = tmp()
     VintageTable.create(spark, p, fact(2000), bucketProps)
     val snap = VintageLog.replay(p)
@@ -38,12 +68,9 @@ class BucketedVintageSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(f.path).getName)).forall(b => b >= 0 && b < 8))
     // protocol gates foreign writers
     assert(snap.protocol.writerFeatures.contains("bucketing"))
-    // logical plan exposes the bucketed relation
-    val rel = readV(p).queryExecution.optimizedPlan.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
-    }.get.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-    assert(rel.bucketSpec.exists(b => b.numBuckets == 8 &&
-      b.bucketColumnNames == Seq("key")))
+    // the read plans the native scan, keyed by bucket(8, key)
+    assert(claimedBuckets(readV(p)) == Some((8, "key")))
+    assert(claimedBuckets(VintageTable.forPath(spark, p).toDF) == Some((8, "key")))
   }
 
   test("bucketed vintage ⋈ bucketed vintage on the key: zero Exchange, right rows") {
@@ -51,11 +78,7 @@ class BucketedVintageSpec extends AnyFunSuite {
     VintageTable.create(spark, pa, fact(2000), bucketProps)
     VintageTable.create(spark, pb,
       (0L to 96L).map(k => (k, s"label_$k")).toDF("key", "label"), bucketProps)
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    planned(noBroadcast = true) {
       val j = readV(pa).join(readV(pb), "key")
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
@@ -67,9 +90,6 @@ class BucketedVintageSpec extends AnyFunSuite {
       assert(j.count() == plain.count())
       assert(j.select("id", "v", "label")
         .exceptAll(plain.select("id", "v", "label")).isEmpty)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
 
@@ -83,14 +103,12 @@ class BucketedVintageSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(f.path).getName).isDefined),
       s"post-DML files must stay bucketed: ${snap.files.map(_.path)}")
     // groupBy on the bucket key also plans without a shuffle
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    planned(noBroadcast = false) {
       val agg = readV(p).groupBy("key").agg(sum("v"))
       val plan = agg.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"groupBy on bucket key must not shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     // content check vs a locally-replayed model
     val expect = fact(1000).unionByName(
         fact(200).withColumn("id", col("id") + 10000))
@@ -171,7 +189,7 @@ class BucketedVintageSpec extends AnyFunSuite {
     // read each file's rows with their file name and re-hash the key
     val byFile = readV(p)
       .select(col("key"),
-        element_at(split(col("_metadata.file_path"), "/"), -1).as("fname"))
+        element_at(split(col("_vintage_file"), "/"), -1).as("fname"))
       .collect()
     byFile.foreach { r =>
       val expect = Bucketing.bucketId(r.getString(1)).get
@@ -197,9 +215,8 @@ class BucketedVintageSpec extends AnyFunSuite {
     assert(snap3.files.forall(f => Bucketing.bucketId(
       new org.apache.hadoop.fs.Path(f.path).getName).isDefined),
       s"post-UPDATE files must stay bucketed: ${snap3.files.map(_.path)}")
-    // per-file raw check (the UPDATE's position deletes put the table
-    // on the DV merge-on-read path, which hides _metadata): every key
-    // in every live file must hash to the file's named bucket
+    // per-file raw check: every key in every live file (deleted rows
+    // included) must hash to the file's named bucket
     snap3.files.foreach { f =>
       val fname = new org.apache.hadoop.fs.Path(f.path).getName
       val expect = Bucketing.bucketId(fname).get
@@ -227,18 +244,9 @@ class BucketedVintageSpec extends AnyFunSuite {
     VintageTable.create(spark, pa, fact(2000), sortedProps)
     VintageTable.create(spark, pb,
       (0L to 96L).map(k => (k, s"label_$k")).toDF("key", "label"), sortedProps)
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    // claiming scan output ordering from sorted buckets sits behind
-    // Spark's legacy flag (off by default: the claim requires a
-    // one-file-per-bucket check); the files ARE written sorted, so
-    // enabling it is sound and drops the SMJ's Sort
-    val orderingKey = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    val prevOrd = spark.conf.getOption(orderingKey)
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set(orderingKey, "true")
+    // the scan reports the in-bucket order while every bucket is one
+    // file, which drops the SMJ's Sort
+    planned(noBroadcast = true) {
       val j = readV(pa).join(readV(pb), "key")
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"must not shuffle:\n$plan")
@@ -256,13 +264,6 @@ class BucketedVintageSpec extends AnyFunSuite {
           fact(100).withColumn("id", col("id") + 9000))
         .join((0L to 96L).map(k => (k, s"label_$k")).toDF("key", "label"), "key")
         .count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      prevOrd match {
-        case Some(v) => spark.conf.set(orderingKey, v)
-        case None => spark.conf.unset(orderingKey)
-      }
     }
   }
 
@@ -270,39 +271,36 @@ class BucketedVintageSpec extends AnyFunSuite {
     val p = tmp()
     val t = VintageTable.create(spark, p, fact(800),
       bucketProps + ("vintage.deletionVectors.enabled" -> "true"))
-    t.delete("id % 3 = 0") // DV delete → merge-on-read read path
+    t.delete("id % 3 = 0") // DV delete
     assert(t.optimize() > 0, "optimize must rewrite the DV-carrying files")
     val snap = VintageLog.replay(p)
     assert(snap.files.forall(f => Bucketing.bucketId(
       new org.apache.hadoop.fs.Path(f.path).getName).isDefined),
       s"post-OPTIMIZE files must stay bucketed: ${snap.files.map(_.path)}")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    planned(noBroadcast = false) {
       val agg = readV(p).groupBy("key").agg(sum("v"))
       val plan = agg.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"after DV purge the bucketed agg must not shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     assert(readV(p).count() == fact(800).filter(col("id") % 3 =!= 0).count())
   }
 
   test("point lookup on the bucket key prunes to a single bucket") {
     val p = tmp()
     VintageTable.create(spark, p, fact(2000), bucketProps)
-    // the auto heuristic may disable bucketed scans when no join/agg
-    // needs the partitioning — turning it off shows the pruning a
-    // point lookup gets from the declared layout
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "false")
-      val q = readV(p).filter(col("key") === 41L)
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
-        s"equality on the bucket column must prune 7 of 8 buckets:\n$plan")
-      assert(q.count() == fact(2000).filter(col("key") === 41L).count())
-    } finally spark.conf.set(key, prev)
+    assert(VintageLog.replay(p).files.size == 8, "one file per bucket")
+    val q = readV(p).filter(col("key") === 41L)
+    // executes q's own plan → metrics populated
+    assert(q.collect().length == fact(2000).filter(col("key") === 41L).count())
+    val scan = nativeScans(q).head
+    assert(scan.metrics(VintageNativeScan.FilesCandidate).value == 1,
+      s"equality on the bucket column must prune 7 of 8 buckets:\n${scan.scan.description()}")
+    assert(scan.scan.description().contains("buckets=1/8"), scan.scan.description())
+    // an IN list keeps the buckets of its values
+    val in = readV(p).filter(col("key").isin(41L, 42L))
+    assert(in.collect().length == fact(2000).filter(col("key").isin(41L, 42L)).count())
+    assert(nativeScans(in).head.metrics(VintageNativeScan.FilesCandidate).value <= 2)
   }
 
   test("time travel on a bucketed table stays bucket-planned and version-exact") {
@@ -311,9 +309,53 @@ class BucketedVintageSpec extends AnyFunSuite {
     t.append(fact(100).withColumn("id", col("id") + 5000))
     val v0 = spark.read.format("vintage").option("versionAsOf", "0").load(p)
     assert(v0.count() == 300)
-    val rel = v0.queryExecution.optimizedPlan.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
-    }.get.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-    assert(rel.bucketSpec.isDefined)
+    assert(claimedBuckets(v0) == Some((8, "key")))
+    assert(claimedBuckets(t.toDFAsOf(0)) == Some((8, "key")))
+  }
+
+  test("SQL join of two bucketed catalog tables on the key plans no Exchange") {
+    spark.conf.set("spark.sql.catalog.bvint", "graft.vintage.connector.VintageCatalog")
+    if (spark.conf.getOption("spark.sql.catalog.bvint.warehouse").isEmpty)
+      spark.conf.set("spark.sql.catalog.bvint.warehouse",
+        Files.createTempDirectory("graft-bvint-wh").toString)
+    val props =
+      "TBLPROPERTIES ('vintage.bucketing.columns'='key', 'vintage.bucketing.buckets'='8')"
+    spark.sql("DROP TABLE IF EXISTS bvint.ja")
+    spark.sql("DROP TABLE IF EXISTS bvint.jb")
+    spark.sql(s"CREATE TABLE bvint.ja (id BIGINT, key BIGINT, v DOUBLE) $props")
+    spark.sql(s"CREATE TABLE bvint.jb (key BIGINT, label STRING) $props")
+    fact(2000).createOrReplaceTempView("bvint_ja_src")
+    (0L to 96L).map(k => (k, s"label_$k")).toDF("key", "label")
+      .createOrReplaceTempView("bvint_jb_src")
+    spark.sql("INSERT INTO bvint.ja SELECT id, key, v FROM bvint_ja_src")
+    spark.sql("INSERT INTO bvint.jb SELECT key, label FROM bvint_jb_src")
+    planned(noBroadcast = true) {
+      val j = spark.sql("SELECT id, v, label FROM bvint.ja JOIN bvint.jb USING (key)")
+      val plan = j.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"bucketed SQL join must not shuffle:\n$plan")
+      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
+      val plain = fact(2000).join(
+        (0L to 96L).map(k => (k, s"label_$k")).toDF("key", "label"), "key")
+        .select("id", "v", "label")
+      assert(j.exceptAll(plain).isEmpty && plain.exceptAll(j).isEmpty)
+    }
+  }
+
+  test("outstanding deletion vectors keep the shuffle-free bucketed aggregation") {
+    val p = tmp()
+    val t = VintageTable.create(spark, p, fact(800),
+      bucketProps + ("vintage.deletionVectors.enabled" -> "true"))
+    t.delete("id % 3 = 0")
+    assert(VintageLog.replay(p).files.exists(_.hasDv), "expected deletion vectors")
+    val expect = fact(800).filter(col("id") % 3 =!= 0).groupBy("key").agg(sum("v"))
+    Seq(readV(p), t.toDF).foreach { df =>
+      planned(noBroadcast = false) {
+        val agg = df.groupBy("key").agg(sum("v"))
+        val plan = agg.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"),
+          s"groupBy on the bucket key of a DV table must not shuffle:\n$plan")
+        assert(agg.exceptAll(expect).isEmpty && expect.exceptAll(agg).isEmpty)
+      }
+    }
   }
 }

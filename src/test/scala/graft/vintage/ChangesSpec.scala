@@ -146,6 +146,34 @@ class ChangesSpec extends AnyFunSuite {
     assert(collectChanges(v1only) == Set((3L, "insert", 1L)))
   }
 
+  test("connector change feed plans the feed itself: no RDD bridge, pruned native scans") {
+    val dir = Files.createTempDirectory("vintage-cdc").toString + "/p"
+    val t = VintageTable.create(spark, dir,
+      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "amount").coalesce(1))
+    t.append(Seq((3L, "c", 30.0)).toDF("id", "name", "amount").coalesce(1)) // v1
+    t.delete(col("id") === 1)                                               // v2
+    def load(ending: Long) = spark.read.format("vintage")
+      .option("readChangeFeed", "true").option("endingVersion", ending.toString).load(dir)
+
+    val feed = load(2)
+    val want = t.changes(-1, 2)
+    assert(feed.columns.toSeq == want.columns.toSeq)
+    assert(feed.exceptAll(want).isEmpty && want.exceptAll(feed).isEmpty)
+    val plan = feed.queryExecution.executedPlan.toString
+    assert(!plan.contains("ExistingRDD") && !plan.contains("Scan Vintage") &&
+      plan.contains("VintageNativeScan"), s"change feed read through an RDD:\n$plan")
+
+    // appends only: a one-column select prunes every native scan to it
+    val ids = load(1).select("id")
+    assert(ids.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    val scans = ids.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if s.scan.isInstanceOf[graft.vintage.connector.VintageNativeScan] => s.scan
+    }
+    assert(scans.size == 2 && scans.forall(_.readSchema().fieldNames.toSeq == Seq("id")),
+      s"read schemas: ${scans.map(_.readSchema().simpleString)}")
+  }
+
   test("table_changes TVF: SQL batch CDF by path and by catalog name") {
     val dir = Files.createTempDirectory("vintage-cdc").toString + "/tvf"
     val t = VintageTable.create(spark, dir,

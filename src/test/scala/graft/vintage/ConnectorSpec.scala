@@ -3,7 +3,7 @@ package graft.vintage
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,24 +86,23 @@ class ConnectorSpec extends AnyFunSuite {
     (201 to 300).map(i => (i.toLong, s"n$i")).toDF("id", "s").coalesce(1)
       .write.format("vintage").mode("append").save(dir)
 
+    def nativeScans(df: DataFrame) = df.queryExecution.executedPlan.collect {
+      case s: BatchScanExec if s.scan.isInstanceOf[graft.vintage.connector.VintageNativeScan] => s
+    }
     val q = load(dir).filter(col("id") === 150)
     assert(q.collect().length == 1) // executes q's own plan → metrics populated
-    val scans = q.queryExecution.executedPlan.collect {
-      case s: FileSourceScanExec => s
-    }
-    assert(scans.nonEmpty, "expected a FileSourceScanExec (native parquet path)")
-    assert(scans.head.metrics("numFiles").value == 1,
-      s"stats skipping must scan 1 of 3 files, got ${scans.head.metrics("numFiles").value}")
-    // filter is pushed into the parquet scan (row-group level)
-    assert(scans.head.metadata("PushedFilters").contains("EqualTo"),
-      s"expected pushed filters, got ${scans.head.metadata("PushedFilters")}")
+    val scans = nativeScans(q)
+    assert(scans.nonEmpty, "expected a BatchScanExec over VintageNativeScan")
+    val opened = scans.head.metrics(graft.vintage.connector.VintageNativeScan.FilesCandidate).value
+    assert(opened == 1, s"stats skipping must scan 1 of 3 files, got $opened")
+    // filter is pushed into the native scan (file pruning and row groups)
+    assert(scans.head.scan.description().contains("EqualTo(id,150)"),
+      s"expected pushed filters, got ${scans.head.scan.description()}")
 
     // column pruning reaches the scan
-    val proj = load(dir).select("s").queryExecution.executedPlan.collect {
-      case s: FileSourceScanExec => s
-    }.head
-    assert(proj.schema.fieldNames.sameElements(Array("s")),
-      s"expected pruned read schema [s], got ${proj.schema.fieldNames.mkString(",")}")
+    val proj = nativeScans(load(dir).select("s")).head
+    assert(proj.scan.readSchema().fieldNames.sameElements(Array("s")),
+      s"expected pruned read schema [s], got ${proj.scan.readSchema().fieldNames.mkString(",")}")
   }
 
   test("mergeSchema append widens the table; old rows read null") {

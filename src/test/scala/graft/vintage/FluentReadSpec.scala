@@ -3,7 +3,6 @@ package graft.vintage
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -13,9 +12,8 @@ import graft.SparkTestSession
 import graft.vintage.connector.VintageNativeScan
 
 /** The fluent read path: `toDF`, `toDFAsOf` and `toDFAsOfTimestamp`
-  * read a snapshot without deletion vectors through the same file index
-  * as `format("vintage")`, and one with them through the native scan;
-  * either way filters on the frame prune files by log stats. The rows
+  * read every snapshot, with or without deletion vectors, through the
+  * native scan, and filters on the frame prune files by log stats. The rows
   * and the declared column order are those of the snapshot's file read
   * ([[VintageTable.dfForSnapshot]], a native scan of every file), or,
   * for deletion-vector tables, of the generator's rows minus the
@@ -51,15 +49,17 @@ class FluentReadSpec extends AnyFunSuite {
 
     val q = t.toDF.filter(cond)
     assert(q.collect().length == 11) // executes q's own plan → metrics populated
-    val scans = q.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
-    assert(scans.size == 1, "expected one native parquet scan")
-    assert(scans.head.metrics("numFiles").value == expected,
-      s"scan must open the $expected candidate file(s), " +
-      s"got ${scans.head.metrics("numFiles").value} of 4")
+    val scans = q.queryExecution.executedPlan.collect {
+      case s: BatchScanExec if s.scan.isInstanceOf[VintageNativeScan] => s
+    }
+    assert(scans.size == 1, "expected one native scan")
+    def candidates(s: BatchScanExec) = s.metrics(VintageNativeScan.FilesCandidate).value
+    assert(candidates(scans.head) == expected,
+      s"scan must open the $expected candidate file(s), got ${candidates(scans.head)} of 4")
     val asOf = t.toDFAsOf(0).filter(cond)
     assert(asOf.collect().length == 11)
     assert(asOf.queryExecution.executedPlan.collect {
-      case s: FileSourceScanExec => s.metrics("numFiles").value
+      case s: BatchScanExec if s.scan.isInstanceOf[VintageNativeScan] => candidates(s)
     } == Seq(expected.toLong))
   }
 
@@ -68,7 +68,7 @@ class FluentReadSpec extends AnyFunSuite {
       (0L until 40L).map(i => (i, s"v$i", i % 3)).toDF("k", "v", "g").repartition(2),
       Map(DeletionVectors.EnabledProp -> "true"))
     t.delete(col("g") === 1)
-    assert(DeletionVectors.hasDvs(t.snapshot.files))
+    assert(t.snapshot.files.exists(_.hasDv))
     assert(t.toDF.count() == 27)
     // oracle: the generator's rows, minus the deleted predicate
     def generated(keep: Long => Boolean): Seq[String] =

@@ -240,7 +240,7 @@ class NativeDvScanSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(ColumnMapping.mapped(pcm.snapshot.schema))
     Seq(plain -> "id", pcm -> "ident").foreach { case (t, id) =>
       val s = t.snapshot
-      assert(s.files.size > 1 && !DeletionVectors.hasDvs(s.files))
+      assert(s.files.size > 1 && !s.files.exists(_.hasDv))
       val idCol = ColumnMapping.physicalName(s.schema(id))
       // each file read on its own: (id, the log key of its file)
       val want = s.files.flatMap { f =>

@@ -15,6 +15,14 @@ class PartitionedTableSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** Files the executed native scan of `df` opened. */
+  private def nativeFilesCandidate(df: org.apache.spark.sql.DataFrame): Long =
+    df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if s.scan.isInstanceOf[graft.vintage.connector.VintageNativeScan] =>
+        s.metrics(graft.vintage.connector.VintageNativeScan.FilesCandidate).value
+    }.head
+
   private def sampleDf = Seq(
     (1L, "2024-01-01", "a"), (2L, "2024-01-01", "b"),
     (3L, "2024-01-02", "c"), (4L, "2024-01-02", "d"),
@@ -49,12 +57,9 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(df.select("id").as[Long].collect().sorted.toSeq == Seq(3L, 4L))
     // plan-level: the executed scan must list only that partition's files
     df.collect()
-    val scan = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
+    val opened = nativeFilesCandidate(df)
     val expected = t.snapshot.files.count(_.partitionValues("day") == "2024-01-02")
-    assert(scan.metrics("numFiles").value == expected,
-      s"scan read ${scan.metrics("numFiles").value} files, expected $expected")
+    assert(opened == expected, s"scan read $opened files, expected $expected")
   }
 
   test("compactWhere rewrites only the selected partition's files") {
@@ -255,10 +260,7 @@ class PartitionedTableSpec extends AnyFunSuite {
     val filtered = read.filter(col("bucket") >= 20)
     assert(filtered.select("id").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
     filtered.collect()
-    val scan = filtered.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
-    assert(scan.metrics("numFiles").value == 2,
-      s"int range must prune to 2 partitions, read ${scan.metrics("numFiles").value}")
+    val opened = nativeFilesCandidate(filtered)
+    assert(opened == 2, s"int range must prune to 2 partitions, read $opened")
   }
 }

@@ -65,7 +65,7 @@ class SnapshotSpillSpec extends AnyFunSuite {
       assert(cands.nonEmpty && cands.size < 88,
         s"stats pruning must narrow the candidate set, got ${cands.size}")
 
-      // pruned read through the V1 relation path (format("vintage"))
+      // pruned read through format("vintage"), which plans the native scan
       val rows = spark.read.format("vintage").load(dir)
         .filter(col("k") === 3000L).collect()
       assert(rows.length == 1 && rows(0).getString(1) == "a3")

@@ -21,8 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * built by `graft.GraftSession`, so session configs cannot drift
   * apart again. Identity values have one allocator, the writer, and
   * their mark one update, in `VintageTable.commitOp`. One fold builds
-  * snapshot state, for log replay and the commit handoff alike. Reads `src/main` (and `src/test` for the session
-  * builder); comment lines are ignored.
+  * snapshot state, for log replay and the commit handoff alike. Every
+  * read of table data plans the native scan, so no V1 relation, file
+  * format or streaming relation comes back. Reads `src/main` (and
+  * `src/test` for the session builder); comment lines are ignored.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -103,6 +105,12 @@ class SourceGuardSpec extends AnyFunSuite {
     val found = sites("""case\s+(\w+)\s*:\s*RemoveFile\s*=>[^\n]*(\n[^\n]*)?\.\s*remove\s*\(\s*\1\s*\.\s*path""")
     assert(found.size == 1 && found.head.startsWith("scala/graft/vintage/VintageLog.scala:"),
       s"snapshot fold sites: $found")
+  }
+
+  test("one read path: no V1 relation reads table data") {
+    val found = sites(
+      """baseRelationToDataFrame|HadoopFsRelation|extends\s+ParquetFileFormat|ofRowsStreaming""")
+    assert(found.isEmpty, s"V1 read sites: $found")
   }
 
   test("no read uses the file source's _metadata columns") {
