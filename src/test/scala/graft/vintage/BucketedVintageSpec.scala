@@ -56,7 +56,7 @@ class BucketedVintageSpec extends AnyFunSuite {
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  test("create writes bucket-suffixed files; the native scan reports the bucket layout") {
+  test("create writes bucket-suffixed files; scan reports the buckets") {
     val p = tmp()
     VintageTable.create(spark, p, fact(2000), bucketProps)
     val snap = VintageLog.replay(p)
